@@ -1,17 +1,30 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.optimizer.JoinSelectionHelper
+import org.apache.spark.sql.catalyst.plans.logical.Join
 import org.apache.spark.sql.functions._
 
 /** Explicit Bloom-filter join pruning — the scan-stage lever for
-  * selective fact⋈dim joins at 100 TB: when the dim side keeps few
-  * keys, most fact rows shuffle only to be dropped by the join. A
-  * Bloom filter of the dim keys, baked into the fact scan as a
-  * literal, drops (1−ε) of the non-matching rows BEFORE the exchange,
-  * so the shuffle carries ~matches instead of ~|fact|. False positives
-  * only ever ADD rows to the shuffle — the exact join behind the
-  * filter keeps the result identical, so this composes with any
-  * downstream operator unchanged.
+  * selective fact⋈dim joins that SHUFFLE the fact side: when the dim
+  * side keeps few keys, most fact rows cross the exchange only to be
+  * dropped by the join. A Bloom filter of the dim keys, baked into the
+  * fact scan as a literal, drops (1−ε) of the non-matching rows BEFORE
+  * the exchange, so the shuffle carries ~matches instead of ~|fact|.
+  * False positives only ever ADD rows to the shuffle — the exact join
+  * behind the filter keeps the result identical, so this composes with
+  * any downstream operator unchanged.
+  *
+  * Break-even: a Bloom filter can only cut an exchange. When the dim
+  * broadcasts, the hash join already drops non-matching fact rows in
+  * the scan stage and no fact exchange exists, so the filter is pure
+  * cost: a build job, three probes per fact row against the literal,
+  * and, because constraint inference copies the filter across the join
+  * equality, a probe of the dim scan too. `bloomJoin` therefore decides
+  * per join with Spark's own test (`InjectRuntimeFilter`'s
+  * `isProbablyShuffleJoin`, over the `JoinSelection` helpers): explicit
+  * join hints first, then the optimizer's size estimates against
+  * `spark.sql.autoBroadcastJoinThreshold`.
   *
   * Engineering shape: both sides are pure codegen'd built-ins — the
   * build is one distinct-key aggregate folding (word, bit-mask) pairs
@@ -20,9 +33,14 @@ import org.apache.spark.sql.functions._
   * bit tests against that ARRAY LITERAL (`xxhash64` twice, k
   * derived probes), riding in the fact scan stage with predicate
   * pushdown intact. No custom expression, no UDF, nothing
-  * non-deterministic. (Spark's AQE injects the same idea as a runtime
-  * filter when statistics justify it; this is the explicit,
-  * plan-stable form with the build amortizable across queries.)
+  * non-deterministic.
+  *
+  * Where the filter is kept, two costs remain: the probe that
+  * constraint inference copies onto the dim scan (it drops nothing
+  * there), and the literal itself, which every plan description prints
+  * in full (16,384 words, ~170 KB of text per filter at the default
+  * 2^20 bits) and the SQL status store keeps on the driver heap with
+  * each execution's description.
   */
 object Prune {
 
@@ -84,4 +102,33 @@ object Prune {
                      numBits: Int = 1 << 20, numHashes: Int = 3): DataFrame =
     fact.filter(mightContain(buildBloom(dim, dimKey, numBits, numHashes),
       factKey))
+
+  /** Inner equi-join of `fact` and `dim` on `factKey = dimKey`, Bloom-
+    * prefiltered only when the plain join would shuffle the fact side.
+    * Below the broadcast break-even it is exactly the plain join. */
+  def bloomJoin(fact: DataFrame, factKey: Column,
+                dim: DataFrame, dimKey: Column): DataFrame = {
+    val plain = fact.join(dim, factKey === dimKey)
+    if (!ShuffleGate.probablyShuffles(plain)) plain
+    else bloomPrefilter(fact, factKey, dim, dimKey)
+      .join(dim, factKey === dimKey)
+  }
+
+  /** `JoinSelection`'s order, decided on the plain join's optimized
+    * plan: a broadcast hint on either side broadcasts; a merge or
+    * shuffle-hash hint shuffles; otherwise the join shuffles unless
+    * either side's size estimate is within the broadcast threshold
+    * (`isProbablyShuffleJoin`). */
+  private object ShuffleGate extends JoinSelectionHelper {
+    def probablyShuffles(joined: DataFrame): Boolean = {
+      val conf = joined.sparkSession.sessionState.conf
+      val j = joined.queryExecution.optimizedPlan
+        .collectFirst { case j: Join => j }.get
+      val h = j.hint
+      !hintToBroadcastLeft(h) && !hintToBroadcastRight(h) &&
+        (hintToSortMergeJoin(h) || hintToShuffleHashJoin(h) ||
+          (!canBroadcastBySize(j.left, conf) &&
+            !canBroadcastBySize(j.right, conf)))
+    }
+  }
 }
