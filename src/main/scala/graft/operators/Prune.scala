@@ -118,17 +118,19 @@ object Prune {
     * plan: a broadcast hint on either side broadcasts; a merge or
     * shuffle-hash hint shuffles; otherwise the join shuffles unless
     * either side's size estimate is within the broadcast threshold
-    * (`isProbablyShuffleJoin`). */
+    * (`isProbablyShuffleJoin`). A join the optimizer removed (a side
+    * known to be empty) shuffles nothing. */
   private object ShuffleGate extends JoinSelectionHelper {
     def probablyShuffles(joined: DataFrame): Boolean = {
       val conf = joined.sparkSession.sessionState.conf
-      val j = joined.queryExecution.optimizedPlan
-        .collectFirst { case j: Join => j }.get
-      val h = j.hint
-      !hintToBroadcastLeft(h) && !hintToBroadcastRight(h) &&
-        (hintToSortMergeJoin(h) || hintToShuffleHashJoin(h) ||
-          (!canBroadcastBySize(j.left, conf) &&
-            !canBroadcastBySize(j.right, conf)))
+      joined.queryExecution.optimizedPlan.collectFirst { case j: Join => j }
+        .exists { j =>
+          val h = j.hint
+          !hintToBroadcastLeft(h) && !hintToBroadcastRight(h) &&
+            (hintToSortMergeJoin(h) || hintToShuffleHashJoin(h) ||
+              (!canBroadcastBySize(j.left, conf) &&
+                !canBroadcastBySize(j.right, conf)))
+        }
     }
   }
 }

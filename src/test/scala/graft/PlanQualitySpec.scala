@@ -185,12 +185,13 @@ class PlanQualitySpec extends SparkSpec {
     df.queryExecution.sparkPlan.collect {
       case j: BaseJoinExec => j.nodeName }
 
-  private def smallPartsJoin(dimHint: Option[String] = None) = {
-    val dim = Tables.load(spark, sf, "part")
-      .filter(col("p_size") <= 2).select(col("p_partkey"))
+  private def smallParts = Tables.load(spark, sf, "part")
+    .filter(col("p_size") <= 2).select(col("p_partkey"))
+
+  private def smallPartsJoin(dimHint: Option[String] = None,
+                             dim: DataFrame = smallParts) =
     Prune.bloomJoin(Tables.load(spark, sf, "lineitem"), col("l_partkey"),
       dimHint.fold(dim)(dim.hint(_)), col("p_partkey"))
-  }
 
   test("q_bloom_join broadcasts below the break-even, with no Bloom probe on either scan") {
     val df = RelationalQueriesAccess.q("q_bloom_join")
@@ -207,6 +208,9 @@ class PlanQualitySpec extends SparkSpec {
         s"expected a shuffle join:\n${df.queryExecution.sparkPlan}")
       assert(probedSides(df).contains("l_partkey"),
         s"no Bloom probe on the fact scan:\n${df.queryExecution.sparkPlan}")
+      // a join the optimizer removes (provably empty dim) shuffles nothing
+      val empty = smallPartsJoin(dim = smallParts.limit(0))
+      assert(probedSides(empty).isEmpty && empty.count() == 0)
     }
   }
 
