@@ -1,8 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.catalyst.optimizer.JoinSelectionHelper
-import org.apache.spark.sql.catalyst.plans.logical.Join
 import org.apache.spark.sql.functions._
 
 /** Explicit Bloom-filter join pruning — the scan-stage lever for
@@ -20,11 +18,10 @@ import org.apache.spark.sql.functions._
   * the scan stage and no fact exchange exists, so the filter is pure
   * cost: a build job, three probes per fact row against the literal,
   * and, because constraint inference copies the filter across the join
-  * equality, a probe of the dim scan too. `bloomJoin` therefore decides
-  * per join with Spark's own test (`InjectRuntimeFilter`'s
-  * `isProbablyShuffleJoin`, over the `JoinSelection` helpers): explicit
-  * join hints first, then the optimizer's size estimates against
-  * `spark.sql.autoBroadcastJoinThreshold`.
+  * equality, a probe of the dim scan too. Use `bloomPrefilter` only in
+  * front of a join that shuffles the fact side (neither side within
+  * `spark.sql.autoBroadcastJoinThreshold`, or a merge / shuffle_hash
+  * hint); below that, plan the plain join.
   *
   * Engineering shape: both sides are pure codegen'd built-ins — the
   * build is one distinct-key aggregate folding (word, bit-mask) pairs
@@ -102,35 +99,4 @@ object Prune {
                      numBits: Int = 1 << 20, numHashes: Int = 3): DataFrame =
     fact.filter(mightContain(buildBloom(dim, dimKey, numBits, numHashes),
       factKey))
-
-  /** Inner equi-join of `fact` and `dim` on `factKey = dimKey`, Bloom-
-    * prefiltered only when the plain join would shuffle the fact side.
-    * Below the broadcast break-even it is exactly the plain join. */
-  def bloomJoin(fact: DataFrame, factKey: Column,
-                dim: DataFrame, dimKey: Column): DataFrame = {
-    val plain = fact.join(dim, factKey === dimKey)
-    if (!ShuffleGate.probablyShuffles(plain)) plain
-    else bloomPrefilter(fact, factKey, dim, dimKey)
-      .join(dim, factKey === dimKey)
-  }
-
-  /** `JoinSelection`'s order, decided on the plain join's optimized
-    * plan: a broadcast hint on either side broadcasts; a merge or
-    * shuffle-hash hint shuffles; otherwise the join shuffles unless
-    * either side's size estimate is within the broadcast threshold
-    * (`isProbablyShuffleJoin`). A join the optimizer removed (a side
-    * known to be empty) shuffles nothing. */
-  private object ShuffleGate extends JoinSelectionHelper {
-    def probablyShuffles(joined: DataFrame): Boolean = {
-      val conf = joined.sparkSession.sessionState.conf
-      joined.queryExecution.optimizedPlan.collectFirst { case j: Join => j }
-        .exists { j =>
-          val h = j.hint
-          !hintToBroadcastLeft(h) && !hintToBroadcastRight(h) &&
-            (hintToSortMergeJoin(h) || hintToShuffleHashJoin(h) ||
-              (!canBroadcastBySize(j.left, conf) &&
-                !canBroadcastBySize(j.right, conf)))
-        }
-    }
-  }
 }

@@ -459,20 +459,17 @@ object RelationalQueries {
         .withColumnRenamed("O", "o_sum")
         .withColumnRenamed("P", "p_sum")),
 
-    // Selective join behind a Bloom gate: the dim side (small parts)
-    // keeps ~4% of part keys. A Bloom filter of those keys can only cut
-    // an exchange, so `bloomJoin` uses it only when the fact side would
-    // shuffle; here the dim's estimate is within the broadcast
-    // threshold, the hash join drops non-matching lineitem rows in the
-    // scan stage, and the plan is the plain broadcast join. Either way
-    // the exact join keeps the result identical to the plain join (the
-    // oracle).
+    // Selective join (the dim keeps ~4% of part keys), planned as the
+    // plain join. A Bloom prefilter of the dim keys
+    // (`Prune.bloomPrefilter`) can only cut an exchange, and here the
+    // dim's estimate is within the broadcast threshold: the hash join
+    // already drops non-matching lineitem rows in the scan stage, so a
+    // Bloom would add a build job and per-row probes and cut nothing.
     "q_bloom_join" -> ((s, dir) => {
       val dim = Tables.load(s, dir, "part")
         .filter(col("p_size") <= 2).select(col("p_partkey"))
-      graft.operators.Prune.bloomJoin(
-        Tables.load(s, dir, "lineitem"), col("l_partkey"),
-        dim, col("p_partkey"))
+      Tables.load(s, dir, "lineitem")
+        .join(dim, col("l_partkey") === col("p_partkey"))
         .groupBy(col("l_returnflag"))
         .agg(count(lit(1)).as("n"),
           sum(col("l_quantity").cast("decimal(18,2)")).cast("double")

@@ -1,12 +1,9 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.{ElementAt, Literal}
 import org.apache.spark.sql.execution.FilterExec
 import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.functions._
-
-import graft.operators.Prune
 
 /** Plan-quality guards for the scale-critical properties: predicate
   * pushdown and column pruning must reach the parquet scan, small-dim
@@ -170,64 +167,19 @@ class PlanQualitySpec extends SparkSpec {
     assert(offenders.isEmpty, s"cartesian products in: $offenders")
   }
 
-  // Bloom join gate: a Bloom probe is an `element_at` over the packed
-  // word literal in a Filter; it belongs on the fact scan only when the
-  // join shuffles the fact side.
-  private def probedSides(df: DataFrame): Seq[String] =
-    df.queryExecution.sparkPlan.collect {
+  test("q_bloom_join broadcasts below the break-even, with no Bloom probe on either scan") {
+    val plan = RelationalQueriesAccess.q("q_bloom_join").queryExecution.sparkPlan
+    assert(plan.collect { case j: BaseJoinExec => j.nodeName } ==
+      Seq("BroadcastHashJoin"), s"expected a broadcast join:\n$plan")
+    // a Bloom probe is an `element_at` over the packed word literal; it
+    // can only cut an exchange, so a join whose dim broadcasts has none
+    val probes = plan.collect {
       case f: FilterExec if f.condition.exists {
         case e: ElementAt => e.left.isInstanceOf[Literal]
         case _ => false
-      } => f.output.map(_.name).find(Set("l_partkey", "p_partkey")).get
+      } => f
     }
-
-  private def joins(df: DataFrame): Seq[String] =
-    df.queryExecution.sparkPlan.collect {
-      case j: BaseJoinExec => j.nodeName }
-
-  private def smallParts = Tables.load(spark, sf, "part")
-    .filter(col("p_size") <= 2).select(col("p_partkey"))
-
-  private def smallPartsJoin(dimHint: Option[String] = None,
-                             dim: DataFrame = smallParts) =
-    Prune.bloomJoin(Tables.load(spark, sf, "lineitem"), col("l_partkey"),
-      dimHint.fold(dim)(dim.hint(_)), col("p_partkey"))
-
-  test("q_bloom_join broadcasts below the break-even, with no Bloom probe on either scan") {
-    val df = RelationalQueriesAccess.q("q_bloom_join")
-    assert(joins(df) == Seq("BroadcastHashJoin"),
-      s"expected a broadcast join:\n${df.queryExecution.sparkPlan}")
-    assert(probedSides(df).isEmpty,
-      s"Bloom probe in a broadcast join:\n${df.queryExecution.sparkPlan}")
-  }
-
-  test("bloomJoin keeps the Bloom probe on the fact scan when the join shuffles") {
-    withConf("spark.sql.autoBroadcastJoinThreshold", "-1") {
-      val df = smallPartsJoin()
-      assert(joins(df) == Seq("SortMergeJoin"),
-        s"expected a shuffle join:\n${df.queryExecution.sparkPlan}")
-      assert(probedSides(df).contains("l_partkey"),
-        s"no Bloom probe on the fact scan:\n${df.queryExecution.sparkPlan}")
-      // a join the optimizer removes (provably empty dim) shuffles nothing
-      val empty = smallPartsJoin(dim = smallParts.limit(0))
-      assert(probedSides(empty).isEmpty && empty.count() == 0)
-    }
-  }
-
-  test("bloomJoin gate honours join hints: broadcast skips the Bloom, merge and shuffle_hash keep it") {
-    withConf("spark.sql.autoBroadcastJoinThreshold", "-1") {
-      val df = smallPartsJoin(Some("broadcast"))
-      assert(joins(df) == Seq("BroadcastHashJoin"))
-      assert(probedSides(df).isEmpty,
-        s"Bloom probe under a broadcast hint:\n${df.queryExecution.sparkPlan}")
-    }
-    Seq("merge" -> "SortMergeJoin", "shuffle_hash" -> "ShuffledHashJoin")
-      .foreach { case (hint, join) =>
-        val df = smallPartsJoin(Some(hint))
-        assert(joins(df) == Seq(join), s"$hint:\n${df.queryExecution.sparkPlan}")
-        assert(probedSides(df).contains("l_partkey"),
-          s"no Bloom probe under a $hint hint:\n${df.queryExecution.sparkPlan}")
-      }
+    assert(probes.isEmpty, s"Bloom probe in a broadcast join:\n$plan")
   }
 
   private object RelationalQueriesAccess {

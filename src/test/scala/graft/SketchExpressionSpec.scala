@@ -54,9 +54,7 @@ class SketchExpressionSpec extends SparkSpec {
     // Same affine family from independent primitives: xxhash64(x) +
     // s·xxhash64(x, Seed2). Wrap-around long arithmetic → ANSI off for
     // the duration (the native kernel itself has no such constraint).
-    val prev = spark.conf.get("spark.sql.ansi.enabled", "true")
-    spark.conf.set("spark.sql.ansi.enabled", "false")
-    try {
+    withConf("spark.sql.ansi.enabled" -> "false") {
       val d = docs()
         .filter(col("text") =!= "") // empty set: native=MaxValue, HOF=null
         .select(col("doc_id"),
@@ -66,7 +64,7 @@ class SketchExpressionSpec extends SparkSpec {
           Dedup.minhashSignatureHof(col("sh"), 64).as("hof"))
       assert(d.count() == 3)
       assert(d.filter(col("native") =!= col("hof")).count() == 0)
-    } finally spark.conf.set("spark.sql.ansi.enabled", prev)
+    }
   }
 
   test("minhash interpreted eval agrees with codegen eval") {

@@ -15,7 +15,7 @@ class SkewSpec extends SparkSpec {
 
   test("AQE splits a skewed join partition; result matches salted join") {
     import spark.implicits._
-    val withConf = Seq(
+    withConf(
       "spark.sql.adaptive.enabled" -> "true",
       // fixture-scaled thresholds: the hot key's partition (~1 MB of
       // rows) is >5x the median and above the skew floor
@@ -24,12 +24,7 @@ class SkewSpec extends SparkSpec {
       "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "64KB",
       "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "32KB",
       "spark.sql.adaptive.coalescePartitions.enabled" -> "false",
-      "spark.sql.autoBroadcastJoinThreshold" -> "-1")
-    val prior = withConf.map { case (k, _) =>
-      k -> spark.conf.getOption(k)
-    }
-    withConf.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       // 100k rows, 90% on one hot key, payload padding to trip the
       // byte thresholds; dim side has every key once.
       val fact = spark.range(100000)
@@ -74,9 +69,6 @@ class SkewSpec extends SparkSpec {
       val b = salted.df.select(col("k"), col("pay"), col("dv")).collect()
         .map(r => (r.getLong(0), r.getString(1), r.getString(2))).sorted
       assert(a.sameElements(b))
-    } finally prior.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
     }
   }
 }

@@ -23,13 +23,16 @@ object TestSpark {
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
 
-  /** Run `body` with one session conf set, restoring the previous value
-    * (or unsetting it) afterwards — the session is shared by every
-    * suite. */
-  def withConf[T](key: String, value: String)(body: => T): T = {
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, value)
+  /** Run `body` with the given session confs set, restoring each
+    * previous value (or unsetting it) afterwards — the session is
+    * shared by every suite. */
+  def withConf[T](kvs: (String, String)*)(body: => T): T = {
+    val prior = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
     try body
-    finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    finally prior.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
   }
 }
