@@ -32,7 +32,7 @@ import org.apache.spark.sql.functions._
   * pushdown intact. No custom expression, no UDF, nothing
   * non-deterministic.
   *
-  * Where the filter is kept, two costs remain: the probe that
+  * Where the filter is used, two costs remain: the probe that
   * constraint inference copies onto the dim scan (it drops nothing
   * there), and the literal itself, which every plan description prints
   * in full (16,384 words, ~170 KB of text per filter at the default
