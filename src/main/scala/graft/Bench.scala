@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: times every registry query at the target scale
   * factor and prints ONE JSON line for the driver.
@@ -33,20 +32,24 @@ object Bench {
     * line. BenchLineSpec pins this invariant as the registry grows. */
   val LineBudget = 1700
 
-  private def f(v: Double): String = "%.3f".format(v)
+  /** Seconds with three decimals in `Locale.ROOT`: the default-locale
+    * `"%.3f".format` writes `0,123` under a comma-decimal locale, and
+    * the summary line and every JSON artifact would stop parsing. */
+  private[graft] def fmt(v: Double): String =
+    String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
 
-  /** JSON string escaping for the error list. Entries today are
-    * registry query names (always safe), but the summary line is the
-    * round's artifact-loss protection — a future entry carrying an
-    * exception message with a quote/backslash/control char must not be
-    * able to make the line unparseable. */
-  private[graft] def jsonEscape(s: String): String =
-    s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => "\\u%04x".format(c.toInt)
-      case c => c.toString
-    }
+  /** `s` as a quoted JSON string: quote, backslash and every control
+    * char escaped. Error entries and oracle SQL must never be able to
+    * make the driver's `json.loads` fail. */
+  private[graft] def jsonString(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => "\\u%04x".format(c.toInt)
+    case c => c.toString
+  } + "\""
 
   /** Outlier re-run rule: a query's rep set is SUSPECT when the
     * max/min spread exceeds `factor` AND the max rep is material
@@ -74,12 +77,11 @@ object Bench {
   private[graft] def summaryLine(medians: Map[String, Double],
                                  errors: Seq[String],
                                  sfDir: String): String = {
-    val errs = errors.map(e => "\"" + jsonEscape(e) + "\"")
-      .mkString("[", ",", "]")
+    val errs = errors.map(jsonString).mkString("[", ",", "]")
     val total = if (medians.nonEmpty) medians.values.sum else 0.0
     val byCost = medians.toSeq.sortBy { case (k, v) => (-v, k) }
-    val entries = byCost.map { case (k, v) => "\"" + k + "\":" + f(v) }
-    val fixedLen = (s"""{"metric":"total","value":${f(total)},""" +
+    val entries = byCost.map { case (k, v) => "\"" + k + "\":" + fmt(v) }
+    val fixedLen = (s"""{"metric":"total","value":${fmt(total)},""" +
       s""""unit":"sec","queries":{},""" +
       s""""omitted":{"n":99999,"sec":99999.999},""" +
       s""""errors":$errs,"sf":"$sfDir"}""").length
@@ -92,22 +94,15 @@ object Bench {
     val qs = entries.take(nIncl).mkString("{", ",", "}")
     val omittedSec = byCost.drop(nIncl).map(_._2).sum
     val omitted =
-      s"""{"n":${entries.size - nIncl},"sec":${f(omittedSec)}}"""
-    s"""{"metric":"total","value":${f(total)},"unit":"sec",""" +
+      s"""{"n":${entries.size - nIncl},"sec":${fmt(omittedSec)}}"""
+    s"""{"metric":"total","value":${fmt(total)},"unit":"sec",""" +
       s""""queries":$qs,"omitted":$omitted,"errors":$errs,"sf":"$sfDir"}"""
   }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val nReps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session()
     spark.range(1000000).selectExpr("sum(id)").collect()
     Tables.load(spark, sfDir, "region").count()
     SparkEntry.entry(spark).count()
@@ -140,23 +135,12 @@ object Bench {
     // its cost is recorded, not invisible. Per-rep GC delta rides
     // alongside so a slow rep is attributable: gc_ms ≈ wall ⇒ heap
     // pressure, gc_ms ≈ 0 ⇒ plan cost or steal.
-    // Timed action: the NOOP SINK (guide §1.4), not count(). A count()
-    // lets the optimizer prune every output column whose value does
-    // not affect cardinality — and for value-producing queries that
-    // prunes REAL work out of the measurement: q_triangles' count plan
-    // drops both the collect_list adjacency build and the
-    // array_intersect (measured +0.9 s of honest work at sf0.1), and a
-    // grouped aggregate's sum/avg expressions vanish the same way. The
-    // noop sink evaluates every column of every row and discards it.
-    // This is a MEASUREMENT-BUG fix (disclosed in OPTIMIZATION_r08.md;
-    // old count-based artifacts BENCH_r0*.json are retained, and
-    // SPARK_GRAFT_BENCH_ACTION=count reproduces the old action for
-    // crosswalk runs); affected queries read slower because more of
-    // their declared work is now actually timed.
-    val useNoop = sys.env.getOrElse("SPARK_GRAFT_BENCH_ACTION", "noop") != "count"
+    // Timed action: the noop sink, which evaluates every column of
+    // every row. A count() lets the optimizer prune every column that
+    // does not affect cardinality, and with it real work: q_triangles'
+    // adjacency build and array_intersect, a grouped sum's arithmetic.
     def consume(df: org.apache.spark.sql.DataFrame): Unit =
-      if (useNoop) df.write.format("noop").mode("overwrite").save()
-      else { df.count(); () }
+      df.write.format("noop").mode("overwrite").save()
     val settleSec = scala.collection.mutable.Map[String, Double]()
     def measure(name: String): (Seq[Double], Seq[Long]) = {
       val fn = SparkEntry.queries(name)
@@ -195,19 +179,18 @@ object Bench {
     def repMap(m: Map[String, (Seq[Double], Seq[Long])]): String =
       m.toSeq.sortBy(_._1)
         .map { case (k, (t, _)) =>
-          "\"" + k + "\":[" + t.map(f).mkString(",") + "]" }
+          "\"" + k + "\":[" + t.map(fmt).mkString(",") + "]" }
         .mkString("{", ",", "}")
     def gcMap(m: Map[String, (Seq[Double], Seq[Long])]): String =
       m.toSeq.sortBy(_._1)
         .map { case (k, (_, g)) =>
           "\"" + k + "\":[" + g.mkString(",") + "]" }
         .mkString("{", ",", "}")
-    val errs = errors.map(e => "\"" + jsonEscape(e) + "\"")
-      .mkString("[", ",", "]")
+    val errs = errors.map(jsonString).mkString("[", ",", "]")
     val mediansJson = medians.toSeq.sortBy(_._1)
-      .map { case (k, v) => "\"" + k + "\":" + f(v) }.mkString("{", ",", "}")
+      .map { case (k, v) => "\"" + k + "\":" + fmt(v) }.mkString("{", ",", "}")
     val settleJson = settleSec.toSeq.sortBy(_._1)
-      .map { case (k, v) => "\"" + k + "\":" + f(v) }.mkString("{", ",", "}")
+      .map { case (k, v) => "\"" + k + "\":" + fmt(v) }.mkString("{", ",", "}")
     val repsJson =
       s"""{"reps":${repMap(firstPass)},"gc_ms":${gcMap(firstPass)},""" +
         s""""reruns":${repMap(reruns)},"rerun_gc_ms":${gcMap(reruns)},""" +

@@ -738,24 +738,12 @@ object Similarity {
       cellIds ++ assignedIds)
   }
 
-  /** [[knnJoinHier]] against a [[HierIvfTableIndex]] — the documented
-    * beyond-literal probe pick: per query the √k super scores stay a
-    * narrow literal pass (identical comparator), but candidate cells
-    * come from a sup-keyed JOIN against the distributed cell table and
-    * the nprobe cut is the bounded-heap [[graft.functions.TopKPairs]]
-    * aggregate ((ccos desc, cell asc) — the same tie-break as the
-    * literal array_sort comparator), so no plan ships Θ(k) centroid
-    * state. Shuffles: queries×nsp probe rows by sup, the heap's
-    * O(q·nprobe·partitions) entries, probes by cell, and the final
-    * top-k heap — all corpus-sublinear. Results equal [[knnJoinHier]]
-    * exactly for identical parameters (SimilaritySpec law). */
   /** The two-stage pick of [[knnJoinHierTable]]: (query_id, qv, cell)
-    * probe rows — exposed package-private for the stage-attribution
-    * dev probe ([[graft.tools.AnnTableProbe]]). */
-  private[graft] def hierTablePick(index: HierIvfTableIndex,
-                                   queries: DataFrame,
-                                   id: String, vec: String,
-                                   nprobe: Int, nsp: Int): DataFrame = {
+    * probe rows. */
+  private def hierTablePick(index: HierIvfTableIndex,
+                            queries: DataFrame,
+                            id: String, vec: String,
+                            nprobe: Int, nsp: Int): DataFrame = {
     // Super pick = the codegen'd flat kernel over the super matrix
     // (supers are always driver-small — √nCells — even when the cell
     // layer is distributed state): same (cos desc, index asc)
@@ -781,6 +769,17 @@ object Similarity {
         col("p.id").cast("int").as("cell"))
   }
 
+  /** [[knnJoinHier]] against a [[HierIvfTableIndex]] — the documented
+    * beyond-literal probe pick: per query the √k super scores stay a
+    * narrow literal pass (identical comparator), but candidate cells
+    * come from a sup-keyed JOIN against the distributed cell table and
+    * the nprobe cut is the bounded-heap [[graft.functions.TopKPairs]]
+    * aggregate ((ccos desc, cell asc) — the same tie-break as the
+    * literal array_sort comparator), so no plan ships Θ(k) centroid
+    * state. Shuffles: queries×nsp probe rows by sup, the heap's
+    * O(q·nprobe·partitions) entries, probes by cell, and the final
+    * top-k heap — all corpus-sublinear. Results equal [[knnJoinHier]]
+    * exactly for identical parameters (SimilaritySpec law). */
   def knnJoinHierTable(index: HierIvfTableIndex, queries: DataFrame,
                        id: String, vec: String, k: Int,
                        nprobe: Int = 4, nsp: Int = 4): DataFrame = {

@@ -3,6 +3,8 @@ package graft.tools
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Session
+
 /** Dev tool: synthesize a k× scale-up of a fixture directory for
   * scaling audits (`runMain graft.tools.ScaleUp <srcDir> <dstDir> <k>`).
   * TPC-H-style: dimension tables region/nation stay fixed; every other
@@ -71,20 +73,14 @@ object ScaleUp {
 
   def main(args: Array[String]): Unit = {
     // optional 4th arg: comma-separated table subset (e.g. just
-    // "embeddings" for the ANN-only three-point scaling probe, where
-    // replicating lineitem 100× would be pure write cost)
+    // "documents" for the text family, where replicating lineitem
+    // 100× would be pure write cost)
     val (Array(src, dst, kStr), tables) = args match {
       case Array(s, d, k) => (Array(s, d, k), shiftCols.keySet)
       case Array(s, d, k, ts) =>
         (Array(s, d, k), ts.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     }
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session()
     run(spark, src, dst, kStr.toInt, tables)
     spark.stop()
   }

@@ -27,6 +27,18 @@ class BenchLineSpec extends AnyFunSuite {
     assert(line.length <= Bench.LineBudget, s"${line.length} chars")
   }
 
+  test("summary line parses as JSON under a comma-decimal default locale") {
+    val prior = java.util.Locale.getDefault
+    java.util.Locale.setDefault(java.util.Locale.GERMANY)
+    val line =
+      try Bench.summaryLine(Map("q_a" -> 1.5, "q_b" -> 0.25), Seq("q_\"c\n"), "sf")
+      finally java.util.Locale.setDefault(prior)
+    val json = new com.fasterxml.jackson.databind.ObjectMapper().readTree(line)
+    assert(json.get("value").asDouble() == 1.75)
+    assert(json.get("queries").get("q_b").asDouble() == 0.25)
+    assert(json.get("errors").get(0).asText() == "q_\"c\n")
+  }
+
   test("outlier re-run rule: fires on material spread, not on noise") {
     // the r6 failure modes — a single degradation window poisoning
     // later reps — must trigger a re-measurement

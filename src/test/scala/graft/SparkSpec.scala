@@ -5,19 +5,10 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared single session per JVM (suites run in one forked JVM). */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir", "/tmp/graft_test_warehouse")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  /** Fixed at 4 cores: specs must not follow `SPARK_GRAFT_CPUS`. */
+  lazy val spark: SparkSession = Session(4, Map(
+    "spark.app.name" -> "graft-test",
+    "spark.sql.warehouse.dir" -> "/tmp/graft_test_warehouse"))
 }
 
 abstract class SparkSpec extends AnyFunSuite {
