@@ -39,8 +39,8 @@ object Bench {
     String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
 
   /** `s` as a quoted JSON string: quote, backslash and every control
-    * char escaped. Error entries and oracle SQL must never be able to
-    * make the driver's `json.loads` fail. */
+    * char escaped, so no error entry or oracle SQL text can make the
+    * summary line or `oracle_sql.json` unparseable. */
   private[graft] def jsonString(s: String): String = "\"" + s.flatMap {
     case '"'  => "\\\""
     case '\\' => "\\\\"
