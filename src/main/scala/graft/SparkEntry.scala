@@ -1,13 +1,8 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
-import graft.queries.{BasketQueries, CorpusQueries, DedupQueries,
-  EncodeQueries, GraphQueries, LayoutQueries, LinalgQueries, MLQueries,
-  ProfileQueries, RelationalQueries, SampleQueries, SearchQueries,
-  SeriesQueries, SimilarityQueries, SketchQueries, SourceQueries,
-  StreamTextQueries, TextQueries}
+import graft.queries._
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt. */
 object SparkEntry {
@@ -17,30 +12,23 @@ object SparkEntry {
     * (/root/reference/test/q26_test.jl:63-88).
     */
   def entry(spark: SparkSession): DataFrame =
-    RelationalQueries.queries("q26_shape")(spark, "/root/testdata/sf0.001")
+    queries("q26_shape")(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    RelationalQueries.queries ++ SeriesQueries.queries ++
-      TextQueries.queries ++ DedupQueries.queries ++
-      SimilarityQueries.queries ++ MLQueries.queries ++
-      StreamTextQueries.queries ++ SourceQueries.queries ++
-      SampleQueries.queries ++ BasketQueries.queries ++
-      LinalgQueries.queries ++ SearchQueries.queries ++
-      CorpusQueries.queries ++ SketchQueries.queries ++
-      LayoutQueries.queries ++ GraphQueries.queries ++
-      ProfileQueries.queries ++ EncodeQueries.queries
+  /** Every query with its oracle; adding a query is adding one spec. */
+  val registry: Seq[QuerySpec] =
+    RelationalQueries.specs ++ SeriesQueries.specs ++ TextQueries.specs ++
+      DedupQueries.specs ++ SimilarityQueries.specs ++ MLQueries.specs ++
+      StreamTextQueries.specs ++ SourceQueries.specs ++
+      SampleQueries.specs ++ BasketQueries.specs ++ LinalgQueries.specs ++
+      SearchQueries.specs ++ CorpusQueries.specs ++ SketchQueries.specs ++
+      LayoutQueries.specs ++ GraphQueries.specs ++ ProfileQueries.specs ++
+      EncodeQueries.specs
+
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    registry.map(q => q.name -> q.body).toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] =
-    RelationalQueries.oracles ++ SeriesQueries.oracles ++
-      TextQueries.oracles ++ DedupQueries.oracles ++
-      SimilarityQueries.oracles ++ MLQueries.oracles ++
-      StreamTextQueries.oracles ++ SourceQueries.oracles ++
-      SampleQueries.oracles ++ BasketQueries.oracles ++
-      LinalgQueries.oracles ++ SearchQueries.oracles ++
-      CorpusQueries.oracles ++ SketchQueries.oracles ++
-      LayoutQueries.oracles ++ GraphQueries.oracles ++
-      ProfileQueries.oracles ++ EncodeQueries.oracles
+  val oracleSql: Map[String, String] =
+    registry.flatMap(q => q.oracle.map(q.name -> _)).toMap
 }

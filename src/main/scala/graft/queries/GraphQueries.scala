@@ -74,47 +74,6 @@ object GraphQueries {
         oddOf(col("l_partkey")).as("dst"))
       .distinct()
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // symmetric edges ⇒ no dangling nodes ⇒ skip the per-iteration
-    // node-list left join
-    "q_pagerank" -> ((s, dir) =>
-      Graph.pageRank(edges(s, dir), Iters, danglingFree = true)
-        .select(decodeNode(col("node"), "p", "s").as("node"), col("rank"))),
-
-    // Exact triangle count of the part co-purchase graph —
-    // degree-ordered orientation bounds the wedge join at O(m^1.5)
-    // regardless of hub skew.
-    "q_triangles" -> ((s, dir) =>
-      Graph.triangleCount(coPurchase(s, dir))),
-
-    // Weakly connected components of the SPARSE high-quantity
-    // order↔part graph: min-label propagation, O(diameter) rounds;
-    // oracle = the same bounded min-label recurrence on the same
-    // long keys.
-    "q_components" -> ((s, dir) =>
-      Graph.connectedComponents(sparseOrderPart(s, dir))
-        .select(decodeNode(col("node"), "o", "p").as("node"),
-          decodeNode(col("component"), "o", "p").as("component"))),
-
-    // k-hop contamination spread over the same sparse order↔part
-    // graph: sources = parts with partkey % 500 == 0 ("flagged"),
-    // BFS out to 6 hops, symmetric edges. Frontier-only shuffles —
-    // each round moves the newly-discovered nodes, never the graph.
-    // Oracle: bounded recursive CTE (UNION-deduped, so rows are
-    // capped at nodes × hops, never path-enumerated) + MIN(dist).
-    "q_khop" -> ((s, dir) => {
-      val e0 = sparseOrderPart(s, dir)
-      val edges = e0.union(
-        e0.select(col("dst").as("src"), col("src").as("dst")))
-      val sources = Tables.load(s, dir, "lineitem")
-        .filter(col("l_quantity") > 48 && col("l_partkey") % 500 === 0)
-        .select(oddOf(col("l_partkey")).as("node"))
-        .distinct()
-      Graph.hopDistance(edges, sources, maxHops = 6)
-        .select(decodeNode(col("node"), "o", "p").as("node"), col("dist"))
-    })
-  )
-
   /** SQL mirror of [[decodeNode]] (DuckDB `//` is integer division on
     * BIGINTs, exact). */
   private def decodeSql(c: String, left: String, right: String): String =
@@ -143,27 +102,90 @@ object GraphQueries {
       |         CAST(l_partkey AS BIGINT) * 2 + 1 AS b
       |  FROM lineitem WHERE l_quantity > 48)""".stripMargin
 
-  val oracles: Map[String, String] = Map(
-    "q_pagerank" ->
-      s"""SELECT ${decodeSql("node", "p", "s")} AS node, rank
-         |FROM (${Graph.pageRankSql(edgesSql, Iters)})""".stripMargin,
+  val specs: Seq[QuerySpec] = Seq(
+    // symmetric edges ⇒ no dangling nodes ⇒ skip the per-iteration
+    // node-list left join
+    QuerySpec("q_pagerank", (s, dir) =>
+      Graph.pageRank(edges(s, dir), Iters, danglingFree = true)
+        .select(decodeNode(col("node"), "p", "s").as("node"), col("rank")),
+      Some(
+        s"""SELECT ${decodeSql("node", "p", "s")} AS node, rank
+           |FROM (${Graph.pageRankSql(edgesSql, Iters)})""".stripMargin)),
 
-    // Bounded pointer-doubled min-label rounds, NOT a recursive
-    // reachability CTE: the closure form is exact but materializes
-    // Σ component² rows (hours of DuckDB at sf0.1); this mirror runs
-    // the Spark loop's own recurrence 32 rounds, on the same long
-    // keys (the min-label representative depends on key order).
-    "q_components" ->
-      s"""SELECT ${decodeSql("node", "o", "p")} AS node,
-         |       ${decodeSql("component", "o", "p")} AS component
-         |FROM (${Graph.componentsSql(sparseEdgesSql)})""".stripMargin,
+    // Exact triangle count of the part co-purchase graph —
+    // degree-ordered orientation bounds the wedge join at O(m^1.5)
+    // regardless of hub skew.
+    QuerySpec("q_triangles", (s, dir) =>
+      Graph.triangleCount(coPurchase(s, dir)),
+      // Mirror of Graph.triangleCount on the co-purchase projection:
+      // same (degree, id) orientation, wedge join, closure semi-join.
+      Some(
+        """WITH und AS (
+          |  SELECT DISTINCT l.l_partkey AS u, r.l_partkey AS v
+          |  FROM lineitem l JOIN lineitem r
+          |    ON l.l_orderkey = r.l_orderkey AND l.l_partkey < r.l_partkey),
+          |deg AS (
+          |  SELECT n, CAST(COUNT(*) AS BIGINT) AS d FROM (
+          |    SELECT u AS n FROM und UNION ALL SELECT v FROM und)
+          |  GROUP BY 1),
+          |keyed AS (
+          |  SELECT und.u, und.v, du.d AS du, dv.d AS dv
+          |  FROM und JOIN deg du ON und.u = du.n JOIN deg dv ON und.v = dv.n),
+          |orient AS (
+          |  SELECT
+          |   CASE WHEN du < dv OR (du = dv AND u < v) THEN u ELSE v END AS a,
+          |   CASE WHEN du < dv OR (du = dv AND u < v) THEN v ELSE u END AS b,
+          |   CASE WHEN du < dv OR (du = dv AND u < v) THEN dv ELSE du END AS db
+          |  FROM keyed),
+          |wedges AS (
+          |  SELECT e1.b AS x, e2.b AS y
+          |  FROM orient e1 JOIN orient e2 ON e1.a = e2.a
+          |  WHERE e1.db < e2.db OR (e1.db = e2.db AND e1.b < e2.b))
+          |SELECT CAST(COUNT(*) AS BIGINT) AS n_triangles
+          |FROM wedges w
+          |WHERE EXISTS (SELECT 1 FROM orient e
+          |              WHERE e.a = w.x AND e.b = w.y)""".stripMargin)),
 
-    // Bounded-depth BFS as a recursive CTE: UNION (not UNION ALL)
-    // dedupes (node, dist) rows per step, so the working set is capped
-    // at nodes × (hops+1) — never the path enumeration a closure
-    // would do — and MIN(dist) is exactly the frontier BFS's
-    // first-discovery distance.
-    "q_khop" ->
+    // Weakly connected components of the SPARSE high-quantity
+    // order↔part graph: min-label propagation, O(diameter) rounds;
+    // oracle = the same bounded min-label recurrence on the same
+    // long keys.
+    QuerySpec("q_components", (s, dir) =>
+      Graph.connectedComponents(sparseOrderPart(s, dir))
+        .select(decodeNode(col("node"), "o", "p").as("node"),
+          decodeNode(col("component"), "o", "p").as("component")),
+      // Bounded pointer-doubled min-label rounds, NOT a recursive
+      // reachability CTE: the closure form is exact but materializes
+      // Σ component² rows (hours of DuckDB at sf0.1); this mirror runs
+      // the Spark loop's own recurrence 32 rounds, on the same long
+      // keys (the min-label representative depends on key order).
+      Some(
+        s"""SELECT ${decodeSql("node", "o", "p")} AS node,
+           |       ${decodeSql("component", "o", "p")} AS component
+           |FROM (${Graph.componentsSql(sparseEdgesSql)})""".stripMargin)),
+
+    // k-hop contamination spread over the same sparse order↔part
+    // graph: sources = parts with partkey % 500 == 0 ("flagged"),
+    // BFS out to 6 hops, symmetric edges. Frontier-only shuffles —
+    // each round moves the newly-discovered nodes, never the graph.
+    // Oracle: bounded recursive CTE (UNION-deduped, so rows are
+    // capped at nodes × hops, never path-enumerated) + MIN(dist).
+    QuerySpec("q_khop", (s, dir) => {
+      val e0 = sparseOrderPart(s, dir)
+      val edges = e0.union(
+        e0.select(col("dst").as("src"), col("src").as("dst")))
+      val sources = Tables.load(s, dir, "lineitem")
+        .filter(col("l_quantity") > 48 && col("l_partkey") % 500 === 0)
+        .select(oddOf(col("l_partkey")).as("node"))
+        .distinct()
+      Graph.hopDistance(edges, sources, maxHops = 6)
+        .select(decodeNode(col("node"), "o", "p").as("node"), col("dist"))
+    }, Some(
+      // Bounded-depth BFS as a recursive CTE: UNION (not UNION ALL)
+      // dedupes (node, dist) rows per step, so the working set is capped
+      // at nodes × (hops+1) — never the path enumeration a closure
+      // would do — and MIN(dist) is exactly the frontier BFS's
+      // first-discovery distance.
       s"""WITH RECURSIVE eb AS MATERIALIZED (
          |  $sparseEdgesSql),
          |walk(node, dist) AS (
@@ -177,35 +199,6 @@ object GraphQueries {
          |  WHERE w.dist < 6)
          |SELECT ${decodeSql("node", "o", "p")} AS node,
          |       CAST(MIN(dist) AS INT) AS dist
-         |FROM walk GROUP BY 1""".stripMargin,
-
-    // Mirror of Graph.triangleCount on the co-purchase projection:
-    // same (degree, id) orientation, wedge join, closure semi-join.
-    "q_triangles" ->
-      """WITH und AS (
-        |  SELECT DISTINCT l.l_partkey AS u, r.l_partkey AS v
-        |  FROM lineitem l JOIN lineitem r
-        |    ON l.l_orderkey = r.l_orderkey AND l.l_partkey < r.l_partkey),
-        |deg AS (
-        |  SELECT n, CAST(COUNT(*) AS BIGINT) AS d FROM (
-        |    SELECT u AS n FROM und UNION ALL SELECT v FROM und)
-        |  GROUP BY 1),
-        |keyed AS (
-        |  SELECT und.u, und.v, du.d AS du, dv.d AS dv
-        |  FROM und JOIN deg du ON und.u = du.n JOIN deg dv ON und.v = dv.n),
-        |orient AS (
-        |  SELECT
-        |   CASE WHEN du < dv OR (du = dv AND u < v) THEN u ELSE v END AS a,
-        |   CASE WHEN du < dv OR (du = dv AND u < v) THEN v ELSE u END AS b,
-        |   CASE WHEN du < dv OR (du = dv AND u < v) THEN dv ELSE du END AS db
-        |  FROM keyed),
-        |wedges AS (
-        |  SELECT e1.b AS x, e2.b AS y
-        |  FROM orient e1 JOIN orient e2 ON e1.a = e2.a
-        |  WHERE e1.db < e2.db OR (e1.db = e2.db AND e1.b < e2.b))
-        |SELECT CAST(COUNT(*) AS BIGINT) AS n_triangles
-        |FROM wedges w
-        |WHERE EXISTS (SELECT 1 FROM orient e
-        |              WHERE e.a = w.x AND e.b = w.y)""".stripMargin
+         |FROM walk GROUP BY 1""".stripMargin))
   )
 }

@@ -12,140 +12,6 @@ import graft.operators.ML
   */
 object MLQueries {
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-
-    // Closed-form OLS: l_extendedprice ~ l_quantity from exact decimal
-    // sufficient statistics (one distributed aggregate). Output rounded
-    // to 6 decimals: the normal-equation subtraction cancels ~15 of the
-    // inputs' significant digits at sf0.1, so the engines' (both
-    // correct) decimal→double cast rounding diverges in the last ulps;
-    // rounding keeps the compare meaningful without asserting ulp-level
-    // agreement through catastrophic cancellation.
-    "q_ml_ols" -> ((s, dir) => {
-      val r = ML.olsExact(Tables.load(s, dir, "lineitem"),
-        col("l_quantity"), col("l_extendedprice"))
-      r.select(round(col("slope"), 6).as("slope"),
-        round(col("intercept"), 6).as("intercept"))
-    }),
-
-    // Per-group OLS ("a model per segment" in ONE aggregate pass):
-    // value regressed on hour-of-day per event type. Exact-decimal
-    // sufficient statistics make every group's fit bit-reproducible;
-    // outputs rounded 6 dp for the same cancellation reason as
-    // q_ml_ols.
-    "q_grouped_ols" -> ((s, dir) => {
-      val ev = Tables.load(s, dir, "events")
-      ML.olsByGroup(ev, col("event_type"),
-        expr("ts div 3600000000000") % 24, // ns → hour-of-day, exact
-        col("value"))
-        .select(col("event_type"), col("n"),
-          round(col("slope"), 6).as("slope"),
-          round(col("intercept"), 6).as("intercept"))
-    }),
-
-    // Kmeans(points, k, iters) on the embeddings table.
-    "q_ml_kmeans" -> ((s, dir) =>
-      ML.kmeans(Tables.load(s, dir, "embeddings"), "embedding",
-        k = 8, iters = 10)
-        .select(col("cluster"), col("size"))),
-
-    // Engine-native Lloyd k-means (no spark.ml): deterministic init,
-    // codegen'd assignment, partial-aggregated centroid update.
-    "q_ml_kmeans_native" -> ((s, dir) =>
-      ML.kmeansLloyd(Tables.load(s, dir, "embeddings"), "embedding",
-        "vec_id", k = 8, iters = 5)
-        .select(col("cluster"), col("size"))),
-
-    // NaiveBayes(points, responses, classes) — gaussian, per-row preds.
-    "q_ml_nb" -> ((s, dir) =>
-      ML.naiveBayes(Tables.load(s, dir, "embeddings"),
-        "embedding", "label", "vec_id")),
-
-    // Engine-native Gaussian NB fit: exact-decimal sufficient
-    // statistics → (prior, mean, variance) per (class, dim),
-    // oracle-exact (the library path above stays rows-only: spark.ml
-    // accumulates in floats, so its params are summation-order noise
-    // at the ulp level).
-    "q_ml_nb_native" -> ((s, dir) =>
-      ML.naiveBayesExact(Tables.load(s, dir, "embeddings"),
-        "embedding", "label")),
-
-    // Monte-Carlo Pi (reference README.md:88-105 benchmark): a pure
-    // generated-parfor + reduction, no table input. The point stream is
-    // a deterministic 31-bit LCG with an xor-shift mix (a plain affine
-    // LCG would make x and y perfectly correlated mod 1), so every
-    // double is exact (value/2^31 is a power-of-two division) and the
-    // DuckDB oracle reproduces the count bit-for-bit.
-    "q_pi_mc" -> ((s, dir) => {
-      val n = 1000000L
-      val m = 2147483648L // 2^31
-      def mix(t: org.apache.spark.sql.Column) = {
-        val u = (lit(1103515245L) * t + 12345L) % m
-        (lit(1103515245L) * u.bitwiseXOR(shiftright(u, 15)) + 12345L) % m
-      }
-      s.range(n).toDF("i")
-        .select(
-          (mix(col("i")).cast("double") / lit(m.toDouble)).as("x"),
-          (mix(col("i") + n).cast("double") / lit(m.toDouble)).as("y"))
-        .agg(sum(when(col("x") * col("x") + col("y") * col("y") < 1.0, 1)
-          .otherwise(0)).cast("long").as("n_inside"))
-        .select(col("n_inside"),
-          (lit(4.0) * col("n_inside") / lit(n.toDouble)).as("pi_est"))
-    }),
-
-    // Black-Scholes (examples/blackscholes.jl): the reference's
-    // element-wise parfor + allreduce benchmark, generated data. erf
-    // is not built into either engine, so cndf uses the
-    // Abramowitz–Stegun 7.1.26 rational approximation with the SAME
-    // nesting on both sides; row-independent constants (den, exp of
-    // -rate·time, (rate+powterm)·time) are folded to Scala doubles and
-    // interpolated into BOTH plans, leaving log10 + two exp calls as
-    // the only per-row libm exposure (≤1 ulp each, invisible under the
-    // decimal-staged sum's 6 dp cut).
-    "q_blackscholes" -> ((s, dir) => {
-      val n = 100000L
-      def erfAs(x: org.apache.spark.sql.Column) = {
-        val ax = abs(x)
-        val t = lit(1.0) / (lit(1.0) + lit(0.3275911) * ax)
-        val poly = t * (lit(0.254829592) + t * (lit(-0.284496736) +
-          t * (lit(1.421413741) + t * (lit(-1.453152027) +
-            t * lit(1.061405429)))))
-        signum(x) * (lit(1.0) - poly * exp(-(x * x)))
-      }
-      def cndf(x: org.apache.spark.sql.Column) =
-        lit(0.5) + lit(0.5) * erfAs(lit(0.707106781) * x)
-      val den = 0.2 * math.sqrt(0.5)           // vol · sqrt(time)
-      val num = (0.5 + 0.5 * 0.2 * 0.2) * 0.5  // (rate + powterm) · time
-      val fvF = math.exp(-(0.5 * 0.5))         // exp(−rate · time)
-      val iD = (col("id") + 1).cast("double")
-      val strike = lit(40.0) + iD / lit(n.toDouble)
-      val d1 = (lit(num) + log10(lit(42.0) / strike)) / lit(den)
-      val d2 = d1 - lit(den)
-      val fv = strike * lit(fvF)
-      val call = lit(42.0) * cndf(d1) - fv * cndf(d2)
-      val put = call - fv + lit(42.0)
-      s.range(n)
-        .select(put.as("put"))
-        .agg(count(lit(1)).as("n"),
-          (round(sum(col("put").cast("decimal(38,18)")).cast("double"), 6)
-            + lit(0.0)).as("put_sum"))
-    }),
-
-    // Iterative logistic regression (reference flagship loop shape):
-    // binary label = (label % 2), 5 gradient-descent iterations.
-    // Weights rounded to 6dp for the oracle compare: the gradient sums
-    // are decimal-exact (order-independent), leaving libm exp()'s
-    // last-ulp variation across engines as the only divergence source.
-    "q_ml_logreg" -> ((s, dir) => {
-      val e = Tables.load(s, dir, "embeddings")
-        .withColumn("y", (col("label") % 2).cast("double"))
-      ML.logisticRegression(e, "embedding", "y", dim = 64,
-        iters = 5, lr = 0.5)
-        .select(posexplode(col("weights")).as(Seq("idx", "w")))
-        .select(col("idx"), round(col("w"), 6).as("w"))
-    })
-  )
-
   /** DuckDB mirror of [[ML.kmeansLloyd]] with the loop UNROLLED as
     * chained CTEs — one assignment CTE per iteration under the previous
     * centroids, one exact-decimal mean CTE per update, carrying empty
@@ -265,31 +131,183 @@ object MLQueries {
        |FROM w$iters, range(1, ${dim + 1}) r(dim)""".stripMargin
   }
 
-  val oracles: Map[String, String] = Map(
-    "q_ml_kmeans_native" -> kmeansNativeOracle(k = 8, iters = 5, dim = 64),
+  val specs: Seq[QuerySpec] = Seq(
 
-    // Same op order as naiveBayesExact: decimal-exact s/ss, then
-    // mean = s/n, var = ss/n - (s/n)^2, prior = n/total, ROUND 6dp.
-    "q_ml_nb_native" ->
-      """WITH pts AS (
-        | SELECT CAST(label AS INT) AS y,
-        |  list_transform(embedding, v -> CAST(v AS DOUBLE)) AS x
-        | FROM embeddings),
-        |tot AS (SELECT CAST(COUNT(*) AS DOUBLE) AS t FROM pts),
-        |st AS (
-        | SELECT y, dim,
-        |  CAST(COUNT(*) AS BIGINT) AS n,
-        |  CAST(SUM(CAST(x[dim] AS DECIMAL(27,18))) AS DOUBLE) AS s,
-        |  CAST(SUM(CAST(x[dim] * x[dim] AS DECIMAL(27,18))) AS DOUBLE) AS ss
-        | FROM pts, range(1, 65) r(dim) GROUP BY y, dim)
-        |SELECT y, CAST(dim - 1 AS INT) AS dim,
-        | ROUND(n / t, 6) + 0.0 AS prior,
-        | ROUND(s / n, 6) + 0.0 AS mean,
-        | ROUND(ss / n - (s / n) * (s / n), 6) + 0.0 AS variance
-        |FROM st, tot""".stripMargin,
-    "q_ml_logreg" -> logregOracle(iters = 5, dim = 64, lr = 0.5),
+    // Closed-form OLS: l_extendedprice ~ l_quantity from exact decimal
+    // sufficient statistics (one distributed aggregate). Output rounded
+    // to 6 decimals: the normal-equation subtraction cancels ~15 of the
+    // inputs' significant digits at sf0.1, so the engines' (both
+    // correct) decimal→double cast rounding diverges in the last ulps;
+    // rounding keeps the compare meaningful without asserting ulp-level
+    // agreement through catastrophic cancellation.
+    QuerySpec("q_ml_ols", (s, dir) => {
+      val r = ML.olsExact(Tables.load(s, dir, "lineitem"),
+        col("l_quantity"), col("l_extendedprice"))
+      r.select(round(col("slope"), 6).as("slope"),
+        round(col("intercept"), 6).as("intercept"))
+    }, Some(
+      """WITH s AS (SELECT
+        |  CAST(COUNT(*) AS DOUBLE) AS n,
+        |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE) AS sx,
+        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,4))) AS DOUBLE) AS sy,
+        |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,4)) * CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE) AS sxx,
+        |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,4)) * CAST(l_extendedprice AS DECIMAL(18,4))) AS DOUBLE) AS sxy
+        | FROM lineitem),
+        |sl AS (SELECT (n * sxy - sx * sy) / (n * sxx - sx * sx) AS slope,
+        |  n, sx, sy FROM s)
+        |SELECT ROUND(slope, 6) AS slope,
+        |  ROUND(sy / n - slope * (sx / n), 6) AS intercept FROM sl""".stripMargin)),
 
-    "q_blackscholes" -> {
+    // Per-group OLS ("a model per segment" in ONE aggregate pass):
+    // value regressed on hour-of-day per event type. Exact-decimal
+    // sufficient statistics make every group's fit bit-reproducible;
+    // outputs rounded 6 dp for the same cancellation reason as
+    // q_ml_ols.
+    QuerySpec("q_grouped_ols", (s, dir) => {
+      val ev = Tables.load(s, dir, "events")
+      ML.olsByGroup(ev, col("event_type"),
+        expr("ts div 3600000000000") % 24, // ns → hour-of-day, exact
+        col("value"))
+        .select(col("event_type"), col("n"),
+          round(col("slope"), 6).as("slope"),
+          round(col("intercept"), 6).as("intercept"))
+    }, Some(
+      """WITH s AS (SELECT event_type,
+        |  CAST(COUNT(*) AS DOUBLE) AS n,
+        |  CAST(SUM(CAST(h AS DECIMAL(18,4))) AS DOUBLE) AS sx,
+        |  CAST(SUM(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS sy,
+        |  CAST(SUM(CAST(h AS DECIMAL(18,4)) * CAST(h AS DECIMAL(18,4)))
+        |    AS DOUBLE) AS sxx,
+        |  CAST(SUM(CAST(h AS DECIMAL(18,4)) * CAST(value AS DECIMAL(18,4)))
+        |    AS DOUBLE) AS sxy
+        | FROM (SELECT event_type, value,
+        |   (epoch_ns(ts) // 3600000000000) % 24 AS h FROM events)
+        | GROUP BY event_type),
+        |sl AS (SELECT event_type, n, sx, sy,
+        |  (n * sxy - sx * sy) / (n * sxx - sx * sx) AS slope FROM s)
+        |SELECT event_type, CAST(n AS BIGINT) AS n,
+        | ROUND(slope, 6) AS slope,
+        | ROUND(sy / n - slope * (sx / n), 6) AS intercept FROM sl""".stripMargin)),
+
+    // Kmeans(points, k, iters) on the embeddings table.
+    QuerySpec("q_ml_kmeans", (s, dir) =>
+      ML.kmeans(Tables.load(s, dir, "embeddings"), "embedding",
+        k = 8, iters = 10)
+        .select(col("cluster"), col("size"))),
+
+    // Engine-native Lloyd k-means (no spark.ml): deterministic init,
+    // codegen'd assignment, partial-aggregated centroid update.
+    QuerySpec("q_ml_kmeans_native", (s, dir) =>
+      ML.kmeansLloyd(Tables.load(s, dir, "embeddings"), "embedding",
+        "vec_id", k = 8, iters = 5)
+        .select(col("cluster"), col("size")),
+      Some(kmeansNativeOracle(k = 8, iters = 5, dim = 64))),
+
+    // NaiveBayes(points, responses, classes) — gaussian, per-row preds.
+    QuerySpec("q_ml_nb", (s, dir) =>
+      ML.naiveBayes(Tables.load(s, dir, "embeddings"),
+        "embedding", "label", "vec_id")),
+
+    // Engine-native Gaussian NB fit: exact-decimal sufficient
+    // statistics → (prior, mean, variance) per (class, dim),
+    // oracle-exact (the library path above stays rows-only: spark.ml
+    // accumulates in floats, so its params are summation-order noise
+    // at the ulp level).
+    QuerySpec("q_ml_nb_native", (s, dir) =>
+      ML.naiveBayesExact(Tables.load(s, dir, "embeddings"),
+        "embedding", "label"),
+      // Same op order as naiveBayesExact: decimal-exact s/ss, then
+      // mean = s/n, var = ss/n - (s/n)^2, prior = n/total, ROUND 6dp.
+      Some(
+        """WITH pts AS (
+          | SELECT CAST(label AS INT) AS y,
+          |  list_transform(embedding, v -> CAST(v AS DOUBLE)) AS x
+          | FROM embeddings),
+          |tot AS (SELECT CAST(COUNT(*) AS DOUBLE) AS t FROM pts),
+          |st AS (
+          | SELECT y, dim,
+          |  CAST(COUNT(*) AS BIGINT) AS n,
+          |  CAST(SUM(CAST(x[dim] AS DECIMAL(27,18))) AS DOUBLE) AS s,
+          |  CAST(SUM(CAST(x[dim] * x[dim] AS DECIMAL(27,18))) AS DOUBLE) AS ss
+          | FROM pts, range(1, 65) r(dim) GROUP BY y, dim)
+          |SELECT y, CAST(dim - 1 AS INT) AS dim,
+          | ROUND(n / t, 6) + 0.0 AS prior,
+          | ROUND(s / n, 6) + 0.0 AS mean,
+          | ROUND(ss / n - (s / n) * (s / n), 6) + 0.0 AS variance
+          |FROM st, tot""".stripMargin)),
+
+    // Monte-Carlo Pi (reference README.md:88-105 benchmark): a pure
+    // generated-parfor + reduction, no table input. The point stream is
+    // a deterministic 31-bit LCG with an xor-shift mix (a plain affine
+    // LCG would make x and y perfectly correlated mod 1), so every
+    // double is exact (value/2^31 is a power-of-two division) and the
+    // DuckDB oracle reproduces the count bit-for-bit.
+    QuerySpec("q_pi_mc", (s, dir) => {
+      val n = 1000000L
+      val m = 2147483648L // 2^31
+      def mix(t: org.apache.spark.sql.Column) = {
+        val u = (lit(1103515245L) * t + 12345L) % m
+        (lit(1103515245L) * u.bitwiseXOR(shiftright(u, 15)) + 12345L) % m
+      }
+      s.range(n).toDF("i")
+        .select(
+          (mix(col("i")).cast("double") / lit(m.toDouble)).as("x"),
+          (mix(col("i") + n).cast("double") / lit(m.toDouble)).as("y"))
+        .agg(sum(when(col("x") * col("x") + col("y") * col("y") < 1.0, 1)
+          .otherwise(0)).cast("long").as("n_inside"))
+        .select(col("n_inside"),
+          (lit(4.0) * col("n_inside") / lit(n.toDouble)).as("pi_est"))
+    }, Some(
+      """WITH p AS (
+        |  SELECT
+        |   CAST((1103515245 * xor((1103515245*i + 12345) % 2147483648,
+        |        ((1103515245*i + 12345) % 2147483648) >> 15) + 12345)
+        |     % 2147483648 AS DOUBLE) / 2147483648.0 AS x,
+        |   CAST((1103515245 * xor((1103515245*(i+1000000) + 12345) % 2147483648,
+        |        ((1103515245*(i+1000000) + 12345) % 2147483648) >> 15) + 12345)
+        |     % 2147483648 AS DOUBLE) / 2147483648.0 AS y
+        |  FROM range(0, 1000000) t(i))
+        |SELECT CAST(SUM(CASE WHEN x*x + y*y < 1.0 THEN 1 ELSE 0 END) AS BIGINT) AS n_inside,
+        |  4.0 * SUM(CASE WHEN x*x + y*y < 1.0 THEN 1 ELSE 0 END) / 1000000.0 AS pi_est
+        |FROM p""".stripMargin)),
+
+    // Black-Scholes (examples/blackscholes.jl): the reference's
+    // element-wise parfor + allreduce benchmark, generated data. erf
+    // is not built into either engine, so cndf uses the
+    // Abramowitz–Stegun 7.1.26 rational approximation with the SAME
+    // nesting on both sides; row-independent constants (den, exp of
+    // -rate·time, (rate+powterm)·time) are folded to Scala doubles and
+    // interpolated into BOTH plans, leaving log10 + two exp calls as
+    // the only per-row libm exposure (≤1 ulp each, invisible under the
+    // decimal-staged sum's 6 dp cut).
+    QuerySpec("q_blackscholes", (s, dir) => {
+      val n = 100000L
+      def erfAs(x: org.apache.spark.sql.Column) = {
+        val ax = abs(x)
+        val t = lit(1.0) / (lit(1.0) + lit(0.3275911) * ax)
+        val poly = t * (lit(0.254829592) + t * (lit(-0.284496736) +
+          t * (lit(1.421413741) + t * (lit(-1.453152027) +
+            t * lit(1.061405429)))))
+        signum(x) * (lit(1.0) - poly * exp(-(x * x)))
+      }
+      def cndf(x: org.apache.spark.sql.Column) =
+        lit(0.5) + lit(0.5) * erfAs(lit(0.707106781) * x)
+      val den = 0.2 * math.sqrt(0.5)           // vol · sqrt(time)
+      val num = (0.5 + 0.5 * 0.2 * 0.2) * 0.5  // (rate + powterm) · time
+      val fvF = math.exp(-(0.5 * 0.5))         // exp(−rate · time)
+      val iD = (col("id") + 1).cast("double")
+      val strike = lit(40.0) + iD / lit(n.toDouble)
+      val d1 = (lit(num) + log10(lit(42.0) / strike)) / lit(den)
+      val d2 = d1 - lit(den)
+      val fv = strike * lit(fvF)
+      val call = lit(42.0) * cndf(d1) - fv * cndf(d2)
+      val put = call - fv + lit(42.0)
+      s.range(n)
+        .select(put.as("put"))
+        .agg(count(lit(1)).as("n"),
+          (round(sum(col("put").cast("decimal(38,18)")).cast("double"), 6)
+            + lit(0.0)).as("put_sum"))
+    }, Some {
       def D(x: Double) = s"CAST($x AS DOUBLE)"
       val den = 0.2 * math.sqrt(0.5)
       val num = (0.5 + 0.5 * 0.2 * 0.2) * 0.5
@@ -327,51 +345,20 @@ object MLQueries {
          | round(CAST(SUM(CAST(put AS DECIMAL(38,18))) AS DOUBLE), 6)
          |  + 0.0 AS put_sum
          |FROM pv""".stripMargin
-    },
+    }),
 
-    "q_pi_mc" ->
-      """WITH p AS (
-        |  SELECT
-        |   CAST((1103515245 * xor((1103515245*i + 12345) % 2147483648,
-        |        ((1103515245*i + 12345) % 2147483648) >> 15) + 12345)
-        |     % 2147483648 AS DOUBLE) / 2147483648.0 AS x,
-        |   CAST((1103515245 * xor((1103515245*(i+1000000) + 12345) % 2147483648,
-        |        ((1103515245*(i+1000000) + 12345) % 2147483648) >> 15) + 12345)
-        |     % 2147483648 AS DOUBLE) / 2147483648.0 AS y
-        |  FROM range(0, 1000000) t(i))
-        |SELECT CAST(SUM(CASE WHEN x*x + y*y < 1.0 THEN 1 ELSE 0 END) AS BIGINT) AS n_inside,
-        |  4.0 * SUM(CASE WHEN x*x + y*y < 1.0 THEN 1 ELSE 0 END) / 1000000.0 AS pi_est
-        |FROM p""".stripMargin,
-
-    "q_grouped_ols" ->
-      """WITH s AS (SELECT event_type,
-        |  CAST(COUNT(*) AS DOUBLE) AS n,
-        |  CAST(SUM(CAST(h AS DECIMAL(18,4))) AS DOUBLE) AS sx,
-        |  CAST(SUM(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS sy,
-        |  CAST(SUM(CAST(h AS DECIMAL(18,4)) * CAST(h AS DECIMAL(18,4)))
-        |    AS DOUBLE) AS sxx,
-        |  CAST(SUM(CAST(h AS DECIMAL(18,4)) * CAST(value AS DECIMAL(18,4)))
-        |    AS DOUBLE) AS sxy
-        | FROM (SELECT event_type, value,
-        |   (epoch_ns(ts) // 3600000000000) % 24 AS h FROM events)
-        | GROUP BY event_type),
-        |sl AS (SELECT event_type, n, sx, sy,
-        |  (n * sxy - sx * sy) / (n * sxx - sx * sx) AS slope FROM s)
-        |SELECT event_type, CAST(n AS BIGINT) AS n,
-        | ROUND(slope, 6) AS slope,
-        | ROUND(sy / n - slope * (sx / n), 6) AS intercept FROM sl""".stripMargin,
-
-    "q_ml_ols" ->
-      """WITH s AS (SELECT
-        |  CAST(COUNT(*) AS DOUBLE) AS n,
-        |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE) AS sx,
-        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,4))) AS DOUBLE) AS sy,
-        |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,4)) * CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE) AS sxx,
-        |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,4)) * CAST(l_extendedprice AS DECIMAL(18,4))) AS DOUBLE) AS sxy
-        | FROM lineitem),
-        |sl AS (SELECT (n * sxy - sx * sy) / (n * sxx - sx * sx) AS slope,
-        |  n, sx, sy FROM s)
-        |SELECT ROUND(slope, 6) AS slope,
-        |  ROUND(sy / n - slope * (sx / n), 6) AS intercept FROM sl""".stripMargin
+    // Iterative logistic regression (reference flagship loop shape):
+    // binary label = (label % 2), 5 gradient-descent iterations.
+    // Weights rounded to 6dp for the oracle compare: the gradient sums
+    // are decimal-exact (order-independent), leaving libm exp()'s
+    // last-ulp variation across engines as the only divergence source.
+    QuerySpec("q_ml_logreg", (s, dir) => {
+      val e = Tables.load(s, dir, "embeddings")
+        .withColumn("y", (col("label") % 2).cast("double"))
+      ML.logisticRegression(e, "embedding", "y", dim = 64,
+        iters = 5, lr = 0.5)
+        .select(posexplode(col("weights")).as(Seq("idx", "w")))
+        .select(col("idx"), round(col("w"), 6).as("w"))
+    }, Some(logregOracle(iters = 5, dim = 64, lr = 0.5)))
   )
 }

@@ -12,58 +12,6 @@ object ProfileQueries {
 
   private val ProfCols = Seq("event_id", "user_id", "event_type", "props")
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-
-    "q_profile" -> ((s, dir) =>
-      Profile.tableProfile(Tables.load(s, dir, "events"), ProfCols)),
-
-    "q_histogram" -> ((s, dir) =>
-      Profile.histogram(Tables.load(s, dir, "orders"),
-        col("o_totalprice"), lo = 0.0, hi = 600000.0, bins = 12)),
-
-    // Association screening: is event type independent of time-of-day
-    // quadrant? One contingency-table scan; the statistic's term sum is
-    // decimal-staged (order-free) so both engines agree at 6 dp.
-    "q_chi2" -> ((s, dir) =>
-      Profile.chiSquare(Tables.load(s, dir, "events"),
-        col("event_type"),
-        expr("((ts div 3600000000000) % 24) div 6"))),
-
-    // Ingest constraint suite: every row-level check on a table fused
-    // into ONE aggregate scan, plus key-uniqueness (one exact
-    // count-distinct) and two referential-integrity anti-joins.
-    "q_dq_report" -> ((s, dir) => {
-      val orders = Tables.load(s, dir, "orders")
-      val lineitem = Tables.load(s, dir, "lineitem")
-      val customer = Tables.load(s, dir, "customer")
-      Profile.dqRowChecks(orders, Seq(
-          "orders.custkey_not_null" -> col("o_custkey").isNull,
-          "orders.status_accepted" ->
-            !col("o_orderstatus").isin("O", "F", "P"),
-          "orders.price_range" ->
-            (col("o_totalprice") <= 0.0 || col("o_totalprice") > 600000.0)))
-        .unionAll(Profile.dqRowChecks(lineitem, Seq(
-          "lineitem.qty_range" ->
-            (col("l_quantity") < 1.0 || col("l_quantity") > 30.0))))
-        .unionAll(Profile.dqUnique(orders, Seq("o_orderkey"),
-          "orders.orderkey_unique"))
-        .unionAll(Profile.dqReferential(orders, col("o_custkey"),
-          customer, col("c_custkey"), "orders.custkey_in_customer"))
-        .unionAll(Profile.dqReferential(lineitem, col("l_orderkey"),
-          orders, col("o_orderkey"), "lineitem.orderkey_in_orders"))
-    }),
-
-    // Distribution-drift monitor: PSI of the order-price distribution,
-    // pre-1998 slice vs the rest, over the q_histogram bin grid.
-    "q_drift" -> ((s, dir) => {
-      val orders = Tables.load(s, dir, "orders")
-      Profile.psiDrift(
-        orders.filter(col("o_orderdate") < to_timestamp(lit("1998-01-01"))),
-        orders.filter(col("o_orderdate") >= to_timestamp(lit("1998-01-01"))),
-        col("o_totalprice"), lo = 0.0, hi = 600000.0, bins = 12)
-    })
-  )
-
   /** Mirror of the two-scan profile: a stats UNION ALL branch per
     * column, plus the stacked-pairs HLL pipeline (same registers as
     * [[Sketch.estimateSql]], grouped by col_name). */
@@ -112,10 +60,81 @@ object ProfileQueries {
        |FROM stats st JOIN ndv n USING (col_name)""".stripMargin
   }
 
-  val oracles: Map[String, String] = Map(
-    "q_profile" -> profileOracle,
+  val specs: Seq[QuerySpec] = Seq(
 
-    "q_dq_report" ->
+    QuerySpec("q_profile", (s, dir) =>
+      Profile.tableProfile(Tables.load(s, dir, "events"), ProfCols),
+      Some(profileOracle)),
+
+    QuerySpec("q_histogram", (s, dir) =>
+      Profile.histogram(Tables.load(s, dir, "orders"),
+        col("o_totalprice"), lo = 0.0, hi = 600000.0, bins = 12),
+      // All literals cast to DOUBLE: bare 50000.0 is DECIMAL in DuckDB
+      // and would change the arithmetic type (and the hash) vs Spark.
+      Some(
+        """SELECT bin,
+          | CAST(0.0 AS DOUBLE) + bin * CAST(50000.0 AS DOUBLE) AS lo_edge,
+          | CAST(COUNT(*) AS BIGINT) AS n_rows
+          |FROM (SELECT LEAST(GREATEST(
+          |   CAST(FLOOR((o_totalprice - CAST(0.0 AS DOUBLE))
+          |     / CAST(50000.0 AS DOUBLE)) AS BIGINT), 0), 11)
+          |   AS bin FROM orders)
+          |GROUP BY bin""".stripMargin)),
+
+    // Association screening: is event type independent of time-of-day
+    // quadrant? One contingency-table scan; the statistic's term sum is
+    // decimal-staged (order-free) so both engines agree at 6 dp.
+    QuerySpec("q_chi2", (s, dir) =>
+      Profile.chiSquare(Tables.load(s, dir, "events"),
+        col("event_type"),
+        expr("((ts div 3600000000000) % 24) div 6")),
+      Some(
+        """WITH p AS (
+          |  SELECT event_type AS a,
+          |   ((epoch_ns(ts) // 3600000000000) % 24) // 6 AS b FROM events),
+          |obs AS (SELECT a, b, COUNT(*) AS o FROM p GROUP BY 1, 2),
+          |ra AS (SELECT a, SUM(o) AS ra FROM obs GROUP BY 1),
+          |rb AS (SELECT b, SUM(o) AS rb FROM obs GROUP BY 1),
+          |nn AS (SELECT CAST(SUM(o) AS DOUBLE) AS n FROM obs),
+          |grid AS (
+          |  SELECT ra.a, rb.b, ra.ra, rb.rb, COALESCE(obs.o, 0) AS o
+          |  FROM ra CROSS JOIN rb
+          |  LEFT JOIN obs ON obs.a = ra.a AND obs.b = rb.b),
+          |terms AS (
+          |  SELECT a, b,
+          |   CAST((CAST(o AS DOUBLE) - CAST(ra * rb AS DOUBLE) / nn.n)
+          |     * (CAST(o AS DOUBLE) - CAST(ra * rb AS DOUBLE) / nn.n)
+          |     / (CAST(ra * rb AS DOUBLE) / nn.n) AS DECIMAL(38,18)) AS t
+          |  FROM grid, nn)
+          |SELECT CAST((SELECT n FROM nn) AS BIGINT) AS n,
+          | CAST((COUNT(DISTINCT a) - 1) * (COUNT(DISTINCT b) - 1) AS BIGINT)
+          |   AS dof,
+          | ROUND(CAST(SUM(t) AS DOUBLE), 6) AS chi2
+          |FROM terms""".stripMargin)),
+
+    // Ingest constraint suite: every row-level check on a table fused
+    // into ONE aggregate scan, plus key-uniqueness (one exact
+    // count-distinct) and two referential-integrity anti-joins.
+    QuerySpec("q_dq_report", (s, dir) => {
+      val orders = Tables.load(s, dir, "orders")
+      val lineitem = Tables.load(s, dir, "lineitem")
+      val customer = Tables.load(s, dir, "customer")
+      Profile.dqRowChecks(orders, Seq(
+          "orders.custkey_not_null" -> col("o_custkey").isNull,
+          "orders.status_accepted" ->
+            !col("o_orderstatus").isin("O", "F", "P"),
+          "orders.price_range" ->
+            (col("o_totalprice") <= 0.0 || col("o_totalprice") > 600000.0)))
+        .unionAll(Profile.dqRowChecks(lineitem, Seq(
+          "lineitem.qty_range" ->
+            (col("l_quantity") < 1.0 || col("l_quantity") > 30.0))))
+        .unionAll(Profile.dqUnique(orders, Seq("o_orderkey"),
+          "orders.orderkey_unique"))
+        .unionAll(Profile.dqReferential(orders, col("o_custkey"),
+          customer, col("c_custkey"), "orders.custkey_in_customer"))
+        .unionAll(Profile.dqReferential(lineitem, col("l_orderkey"),
+          orders, col("o_orderkey"), "lineitem.orderkey_in_orders"))
+    }, Some(
       """SELECT 'orders.custkey_not_null' AS check_name,
         | CAST(SUM(CASE WHEN o_custkey IS NULL THEN 1 ELSE 0 END)
         |   AS BIGINT) AS violations,
@@ -154,12 +173,20 @@ object ProfileQueries {
         |   WHERE l.l_orderkey IS NOT NULL
         |    AND l.l_orderkey NOT IN (SELECT o_orderkey FROM orders))
         |  AS BIGINT),
-        | CAST((SELECT COUNT(*) FROM lineitem) AS BIGINT)""".stripMargin,
+        | CAST((SELECT COUNT(*) FROM lineitem) AS BIGINT)""".stripMargin)),
 
-    // Mirrors psiDrift's op order: same floor/clamp bin, completed
-    // 0..11 grid, eps-clamped proportions, (pa−pb)·ln(pa/pb) term,
-    // decimal-staged total, 6dp + signed-zero canonicalization.
-    "q_drift" ->
+    // Distribution-drift monitor: PSI of the order-price distribution,
+    // pre-1998 slice vs the rest, over the q_histogram bin grid.
+    QuerySpec("q_drift", (s, dir) => {
+      val orders = Tables.load(s, dir, "orders")
+      Profile.psiDrift(
+        orders.filter(col("o_orderdate") < to_timestamp(lit("1998-01-01"))),
+        orders.filter(col("o_orderdate") >= to_timestamp(lit("1998-01-01"))),
+        col("o_totalprice"), lo = 0.0, hi = 600000.0, bins = 12)
+    }, Some(
+      // Mirrors psiDrift's op order: same floor/clamp bin, completed
+      // 0..11 grid, eps-clamped proportions, (pa−pb)·ln(pa/pb) term,
+      // decimal-staged total, 6dp + signed-zero canonicalization.
       """WITH binned AS (
         | SELECT LEAST(GREATEST(CAST(FLOOR((o_totalprice
         |     - CAST(0.0 AS DOUBLE)) / CAST(50000.0 AS DOUBLE))
@@ -188,42 +215,6 @@ object ProfileQueries {
         |   AS DOUBLE), 6) AS psi FROM terms)
         |SELECT bin, CAST(na AS BIGINT) AS na, CAST(nb AS BIGINT) AS nb,
         | round(term_raw, 6) + 0.0 AS term, psi + 0.0 AS psi
-        |FROM terms, total""".stripMargin,
-
-    // All literals cast to DOUBLE: bare 50000.0 is DECIMAL in DuckDB
-    // and would change the arithmetic type (and the hash) vs Spark.
-    "q_histogram" ->
-      """SELECT bin,
-        | CAST(0.0 AS DOUBLE) + bin * CAST(50000.0 AS DOUBLE) AS lo_edge,
-        | CAST(COUNT(*) AS BIGINT) AS n_rows
-        |FROM (SELECT LEAST(GREATEST(
-        |   CAST(FLOOR((o_totalprice - CAST(0.0 AS DOUBLE))
-        |     / CAST(50000.0 AS DOUBLE)) AS BIGINT), 0), 11)
-        |   AS bin FROM orders)
-        |GROUP BY bin""".stripMargin,
-
-    "q_chi2" ->
-      """WITH p AS (
-        |  SELECT event_type AS a,
-        |   ((epoch_ns(ts) // 3600000000000) % 24) // 6 AS b FROM events),
-        |obs AS (SELECT a, b, COUNT(*) AS o FROM p GROUP BY 1, 2),
-        |ra AS (SELECT a, SUM(o) AS ra FROM obs GROUP BY 1),
-        |rb AS (SELECT b, SUM(o) AS rb FROM obs GROUP BY 1),
-        |nn AS (SELECT CAST(SUM(o) AS DOUBLE) AS n FROM obs),
-        |grid AS (
-        |  SELECT ra.a, rb.b, ra.ra, rb.rb, COALESCE(obs.o, 0) AS o
-        |  FROM ra CROSS JOIN rb
-        |  LEFT JOIN obs ON obs.a = ra.a AND obs.b = rb.b),
-        |terms AS (
-        |  SELECT a, b,
-        |   CAST((CAST(o AS DOUBLE) - CAST(ra * rb AS DOUBLE) / nn.n)
-        |     * (CAST(o AS DOUBLE) - CAST(ra * rb AS DOUBLE) / nn.n)
-        |     / (CAST(ra * rb AS DOUBLE) / nn.n) AS DECIMAL(38,18)) AS t
-        |  FROM grid, nn)
-        |SELECT CAST((SELECT n FROM nn) AS BIGINT) AS n,
-        | CAST((COUNT(DISTINCT a) - 1) * (COUNT(DISTINCT b) - 1) AS BIGINT)
-        |   AS dof,
-        | ROUND(CAST(SUM(t) AS DOUBLE), 6) AS chi2
-        |FROM terms""".stripMargin
+        |FROM terms, total""".stripMargin))
   )
 }

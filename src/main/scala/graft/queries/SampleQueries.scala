@@ -11,158 +11,113 @@ import graft.operators.Sampling
   * both engines. */
 object SampleQueries {
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  private val pfx = Sampling.prefixSql("doc_id")
+
+  val specs: Seq[QuerySpec] = Seq(
 
     // ~10% reproducible sample of documents by doc_id.
-    "q_sample" -> ((s, dir) =>
+    QuerySpec("q_sample", (s, dir) =>
       Sampling.hashSample(Tables.load(s, dir, "documents"),
         col("doc_id"), num = 6554)
-        .select(col("doc_id"), col("lang"), col("n_chars"))),
+        .select(col("doc_id"), col("lang"), col("n_chars")),
+      Some(
+        s"""SELECT doc_id, lang, n_chars FROM documents
+           |WHERE $pfx < '${"%04x".format(6554)}'""".stripMargin)),
 
     // Leakage-safe split: the gate hashes each exact-dup group's
     // representative (min doc_id over the md5 text fingerprint), so a
     // duplicated document can never straddle train/holdout. Output:
     // per-split doc counts, char sizes, and distinct dup-groups.
-    "q_split_safe" -> ((s, dir) =>
+    QuerySpec("q_split_safe", (s, dir) =>
       Sampling.groupSafeSplit(Tables.load(s, dir, "documents"),
         col("doc_id"), graft.functions.Text.fingerprint(col("text")),
         Seq(("test", 6554), ("val", 13108)))
         .groupBy(col("split"))
         .agg(count(lit(1)).as("n"), sum(col("n_chars")).as("chars"),
           countDistinct(graft.functions.Text.fingerprint(col("text")))
-            .as("groups"))),
+            .as("groups")),
+      Some {
+        val rpfx = Sampling.prefixSql("r.rep")
+        s"""WITH f AS (SELECT doc_id, n_chars,
+           |    md5(array_to_string(regexp_split_to_array(trim(lower(text)),
+           |      '\\s+'), ' ')) AS fp
+           |  FROM documents),
+           |r AS (SELECT fp, MIN(doc_id) AS rep FROM f GROUP BY 1)
+           |SELECT CASE WHEN $rpfx < '${"%04x".format(6554)}' THEN 'test'
+           |  WHEN $rpfx < '${"%04x".format(13108)}' THEN 'val'
+           |  ELSE 'train' END AS split,
+           | CAST(COUNT(*) AS BIGINT) AS n,
+           | CAST(SUM(f.n_chars) AS BIGINT) AS chars,
+           | CAST(COUNT(DISTINCT f.fp) AS BIGINT) AS groups
+           |FROM f JOIN r ON f.fp = r.fp GROUP BY 1""".stripMargin
+      }),
 
     // Deterministic train/val/test split: per-split doc counts + sizes.
-    "q_split" -> ((s, dir) =>
+    QuerySpec("q_split", (s, dir) =>
       Tables.load(s, dir, "documents")
         .withColumn("split", Sampling.splitColumn(col("doc_id"),
           Seq(("test", 6554), ("val", 13108))))
         .groupBy(col("split"))
         .agg(count(lit(1)).as("n"),
-          sum(col("n_chars")).as("chars"))),
+          sum(col("n_chars")).as("chars")),
+      Some(
+        s"""SELECT CASE WHEN $pfx < '${"%04x".format(6554)}' THEN 'test'
+           |  WHEN $pfx < '${"%04x".format(13108)}' THEN 'val'
+           |  ELSE 'train' END AS split,
+           | CAST(COUNT(*) AS BIGINT) AS n,
+           | CAST(SUM(n_chars) AS BIGINT) AS chars
+           |FROM documents GROUP BY 1""".stripMargin)),
 
     // Corpus mixing: per-language sampling rates (down-weight the
     // dominant language, keep the rest whole), then the per-language
     // doc/char budget actually achieved. The mix predicate is a
     // codegen'd when-chain in the scan stage — one pass over the
     // corpus, no join, no shuffle beyond the final small aggregate.
-    "q_mix" -> ((s, dir) =>
+    QuerySpec("q_mix", (s, dir) =>
       Sampling.stratifiedSample(Tables.load(s, dir, "documents"),
         col("doc_id"), col("lang"),
         rates = Seq("en" -> 16384, "de" -> 49152), defaultNum = 65536)
         .groupBy(col("lang"))
         .agg(count(lit(1)).as("n_docs"),
-          sum(col("n_chars")).as("chars"))),
+          sum(col("n_chars")).as("chars")),
+      Some(
+        s"""SELECT lang, CAST(COUNT(*) AS BIGINT) AS n_docs,
+           | CAST(SUM(n_chars) AS BIGINT) AS chars
+           |FROM documents
+           |WHERE CASE WHEN lang = 'en' THEN $pfx < '${"%04x".format(16384)}'
+           |  WHEN lang = 'de' THEN $pfx < '${"%04x".format(49152)}'
+           |  ELSE TRUE END
+           |GROUP BY lang""".stripMargin)),
 
     // Quota sampling: exactly 5 docs per language, drawn by content-hash
     // priority on the native bounded-heap aggregate (no window sort).
-    "q_reservoir" -> ((s, dir) =>
+    QuerySpec("q_reservoir", (s, dir) =>
       Sampling.reservoirPerGroup(Tables.load(s, dir, "documents"),
         col("lang"), col("doc_id"), k = 5)
-        .select(col("grp").as("lang"), col("pick").as("doc_id"))),
+        .select(col("grp").as("lang"), col("pick").as("doc_id")),
+      // 12 hex chars compare lexicographically == numerically (fixed
+      // width), mirroring the Spark side's negated 48-bit priority.
+      Some(
+        """SELECT lang, doc_id FROM (
+          | SELECT lang, doc_id,
+          |  row_number() OVER (PARTITION BY lang
+          |   ORDER BY substring(md5(CAST(doc_id AS VARCHAR)), 1, 12),
+          |            doc_id) AS rn
+          | FROM documents)
+          |WHERE rn <= 5""".stripMargin)),
 
     // DSIR importance weights: target = the src1/src2 slice (standing
     // in for a curated high-quality sample), raw = the whole corpus;
     // per-doc hashed-bigram log importance ratio.
-    "q_dsir" -> ((s, dir) => {
+    QuerySpec("q_dsir", (s, dir) => {
       val d = Tables.load(s, dir, "documents")
       Sampling.dsirWeights(d,
         d.filter(col("source").isin("src1", "src2")), "doc_id", "text")
-    }),
-
-    // Sequential Poisson weighted sample: 60 docs drawn ∝ n_chars
-    // (size-proportional πps) on integer-exact hash priorities — the
-    // bounded-heap top-k, no global sort.
-    "q_weighted_sample" -> ((s, dir) =>
-      Sampling.weightedOrderSample(Tables.load(s, dir, "documents"),
-        col("doc_id"), col("n_chars"), k = 60)
-        .select(col("id").as("doc_id"), col("w"), col("pri"))),
-
-    // Token-budget mixing: cap every source at 4000 whitespace tokens;
-    // report the per-source keep-rate and what the deterministic
-    // hash-threshold sample actually kept.
-    "q_token_budget" -> ((s, dir) => {
-      val d = Tables.load(s, dir, "documents")
-        .withColumn("nt",
-          size(graft.functions.Text.tokens(col("text"))).cast("long"))
-      Sampling.tokenBudgetMix(d, col("doc_id"), col("source"), col("nt"),
-        budget = 4000L)
-        .groupBy(col("source"))
-        .agg(count(lit(1)).as("n_docs"), sum(col("nt")).as("tokens_kept"),
-          max(col("__rate_num")).as("rate_num"))
-    }),
-
-    // Temperature (α=0.5) mixture over languages: low-resource langs
-    // get a budget share ∝ √tokens — the multilingual up-sampling
-    // rates, derived and applied deterministically.
-    "q_temperature_mix" -> ((s, dir) => {
-      val d = Tables.load(s, dir, "documents")
-        .withColumn("nt",
-          size(graft.functions.Text.tokens(col("text"))).cast("long"))
-      Sampling.temperatureMix(d, col("doc_id"), col("lang"), col("nt"),
-        budget = 8000L, alphaQuarters = 2)
-        .groupBy(col("lang"))
-        .agg(count(lit(1)).as("n_docs"), sum(col("nt")).as("tokens_kept"),
-          max(col("__rate_num")).as("rate_num"))
-    })
-  )
-
-  private val pfx = Sampling.prefixSql("doc_id")
-
-  val oracles: Map[String, String] = Map(
-    "q_sample" ->
-      s"""SELECT doc_id, lang, n_chars FROM documents
-         |WHERE $pfx < '${"%04x".format(6554)}'""".stripMargin,
-
-    "q_split" ->
-      s"""SELECT CASE WHEN $pfx < '${"%04x".format(6554)}' THEN 'test'
-         |  WHEN $pfx < '${"%04x".format(13108)}' THEN 'val'
-         |  ELSE 'train' END AS split,
-         | CAST(COUNT(*) AS BIGINT) AS n,
-         | CAST(SUM(n_chars) AS BIGINT) AS chars
-         |FROM documents GROUP BY 1""".stripMargin,
-
-    "q_split_safe" -> {
-      val rpfx = Sampling.prefixSql("r.rep")
-      s"""WITH f AS (SELECT doc_id, n_chars,
-         |    md5(array_to_string(regexp_split_to_array(trim(lower(text)),
-         |      '\\s+'), ' ')) AS fp
-         |  FROM documents),
-         |r AS (SELECT fp, MIN(doc_id) AS rep FROM f GROUP BY 1)
-         |SELECT CASE WHEN $rpfx < '${"%04x".format(6554)}' THEN 'test'
-         |  WHEN $rpfx < '${"%04x".format(13108)}' THEN 'val'
-         |  ELSE 'train' END AS split,
-         | CAST(COUNT(*) AS BIGINT) AS n,
-         | CAST(SUM(f.n_chars) AS BIGINT) AS chars,
-         | CAST(COUNT(DISTINCT f.fp) AS BIGINT) AS groups
-         |FROM f JOIN r ON f.fp = r.fp GROUP BY 1""".stripMargin
-    },
-
-    "q_mix" ->
-      s"""SELECT lang, CAST(COUNT(*) AS BIGINT) AS n_docs,
-         | CAST(SUM(n_chars) AS BIGINT) AS chars
-         |FROM documents
-         |WHERE CASE WHEN lang = 'en' THEN $pfx < '${"%04x".format(16384)}'
-         |  WHEN lang = 'de' THEN $pfx < '${"%04x".format(49152)}'
-         |  ELSE TRUE END
-         |GROUP BY lang""".stripMargin,
-
-    // 12 hex chars compare lexicographically == numerically (fixed
-    // width), mirroring the Spark side's negated 48-bit priority.
-    "q_reservoir" ->
-      """SELECT lang, doc_id FROM (
-        | SELECT lang, doc_id,
-        |  row_number() OVER (PARTITION BY lang
-        |   ORDER BY substring(md5(CAST(doc_id AS VARCHAR)), 1, 12),
-        |            doc_id) AS rn
-        | FROM documents)
-        |WHERE rn <= 5""".stripMargin,
-
-    // DSIR mirror: same bigram split as shinglesOfTokens(·,2), bucket
-    // = first 2 md5 hex chars as an int (strpos arithmetic ≡ Spark's
-    // conv(hex,16,10)), add-one smoothed log-ratio per bucket summed
-    // as DECIMAL, n·const term in the same double op order, 6dp cut.
-    "q_dsir" -> {
+    }, Some {
+      // DSIR mirror: same bigram split as shinglesOfTokens(·,2), bucket
+      // = first 2 md5 hex chars as an int (strpos arithmetic ≡ Spark's
+      // conv(hex,16,10)), add-one smoothed log-ratio per bucket summed
+      // as DECIMAL, n·const term in the same double op order, 6dp cut.
       val toks = """regexp_split_to_array(trim(lower(text)), '\s+')"""
       s"""WITH tt AS (SELECT doc_id, source, $toks AS ts FROM documents),
          |bi AS (
@@ -193,22 +148,41 @@ object SampleQueries {
          |   - ln(CAST(ANY_VALUE(t_tot) AS DOUBLE) + 256.0)), 6) + 0.0 AS logw
          |FROM bk JOIN lr ON bk.b = lr.b, tot
          |GROUP BY bk.doc_id""".stripMargin
-    },
+    }),
 
-    // Integer-exact order-sampling priorities: (u24·2^20) floor-div
-    // weight, smallest k win, ties toward the smaller id — both
-    // engines compute the identical BIGINT.
-    "q_weighted_sample" ->
-      s"""WITH pr AS (
-         | SELECT doc_id, CAST(n_chars AS BIGINT) AS w,
-         |  CAST((${Sampling.u24Sql("doc_id")} * 1048576)
-         |       // CAST(n_chars AS BIGINT) AS BIGINT) AS pri
-         | FROM documents WHERE n_chars > 0)
-         |SELECT doc_id, w, pri FROM pr ORDER BY pri, doc_id LIMIT 60""".stripMargin,
+    // Sequential Poisson weighted sample: 60 docs drawn ∝ n_chars
+    // (size-proportional πps) on integer-exact hash priorities — the
+    // bounded-heap top-k, no global sort.
+    QuerySpec("q_weighted_sample", (s, dir) =>
+      Sampling.weightedOrderSample(Tables.load(s, dir, "documents"),
+        col("doc_id"), col("n_chars"), k = 60)
+        .select(col("id").as("doc_id"), col("w"), col("pri")),
+      // Integer-exact order-sampling priorities: (u24·2^20) floor-div
+      // weight, smallest k win, ties toward the smaller id — both
+      // engines compute the identical BIGINT.
+      Some(
+        s"""WITH pr AS (
+           | SELECT doc_id, CAST(n_chars AS BIGINT) AS w,
+           |  CAST((${Sampling.u24Sql("doc_id")} * 1048576)
+           |       // CAST(n_chars AS BIGINT) AS BIGINT) AS pri
+           | FROM documents WHERE n_chars > 0)
+           |SELECT doc_id, w, pri FROM pr ORDER BY pri, doc_id LIMIT 60""".stripMargin)),
 
-    // Two-pass budget mirror: per-source token totals → integer
-    // floor keep-rate in 1/65536 units → 16-bit hash membership.
-    "q_token_budget" ->
+    // Token-budget mixing: cap every source at 4000 whitespace tokens;
+    // report the per-source keep-rate and what the deterministic
+    // hash-threshold sample actually kept.
+    QuerySpec("q_token_budget", (s, dir) => {
+      val d = Tables.load(s, dir, "documents")
+        .withColumn("nt",
+          size(graft.functions.Text.tokens(col("text"))).cast("long"))
+      Sampling.tokenBudgetMix(d, col("doc_id"), col("source"), col("nt"),
+        budget = 4000L)
+        .groupBy(col("source"))
+        .agg(count(lit(1)).as("n_docs"), sum(col("nt")).as("tokens_kept"),
+          max(col("__rate_num")).as("rate_num"))
+    }, Some(
+      // Two-pass budget mirror: per-source token totals → integer
+      // floor keep-rate in 1/65536 units → 16-bit hash membership.
       s"""WITH tc AS (
          | SELECT doc_id, source,
          |  CAST(len(regexp_split_to_array(trim(lower(text)), '\\s+'))
@@ -224,11 +198,23 @@ object SampleQueries {
          |SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs,
          | CAST(SUM(nt) AS BIGINT) AS tokens_kept,
          | CAST(MAX(num) AS BIGINT) AS rate_num
-         |FROM kept GROUP BY source""".stripMargin,
+         |FROM kept GROUP BY source""".stripMargin)),
 
-    // √/· chains and one fixed double op sequence per stratum keep the
-    // floor'd α=0.5 rate numerator bit-identical to the Spark side.
-    "q_temperature_mix" ->
+    // Temperature (α=0.5) mixture over languages: low-resource langs
+    // get a budget share ∝ √tokens — the multilingual up-sampling
+    // rates, derived and applied deterministically.
+    QuerySpec("q_temperature_mix", (s, dir) => {
+      val d = Tables.load(s, dir, "documents")
+        .withColumn("nt",
+          size(graft.functions.Text.tokens(col("text"))).cast("long"))
+      Sampling.temperatureMix(d, col("doc_id"), col("lang"), col("nt"),
+        budget = 8000L, alphaQuarters = 2)
+        .groupBy(col("lang"))
+        .agg(count(lit(1)).as("n_docs"), sum(col("nt")).as("tokens_kept"),
+          max(col("__rate_num")).as("rate_num"))
+    }, Some(
+      // √/· chains and one fixed double op sequence per stratum keep the
+      // floor'd α=0.5 rate numerator bit-identical to the Spark side.
       s"""WITH tc AS (
          | SELECT doc_id, lang,
          |  CAST(len(regexp_split_to_array(trim(lower(text)), '\\s+'))
@@ -249,6 +235,6 @@ object SampleQueries {
          |SELECT lang, CAST(COUNT(*) AS BIGINT) AS n_docs,
          | CAST(SUM(nt) AS BIGINT) AS tokens_kept,
          | CAST(MAX(num) AS BIGINT) AS rate_num
-         |FROM kept GROUP BY lang""".stripMargin
+         |FROM kept GROUP BY lang""".stripMargin))
   )
 }

@@ -16,25 +16,6 @@ object SearchQueries {
   private val terms = Seq("spark", "join", "vector")
   private val termList = terms.map(t => s"'$t'").mkString(", ")
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-
-    // Smoothed TF-IDF weight per (doc, query-term).
-    "q_tfidf" -> ((s, dir) =>
-      Search.tfIdf(Tables.load(s, dir, "documents"), "doc_id", "text", terms)
-        .select(col("doc_id"), col("term"),
-          round(col("tfidf"), 6).as("tfidf"))),
-
-    // BM25 score of every matching document for a fixed 3-term query.
-    "q_bm25" -> ((s, dir) =>
-      Search.bm25(Tables.load(s, dir, "documents"), "doc_id", "text", terms)
-        .select(col("doc_id"), round(col("score"), 6).as("score"))),
-
-    // Top-k retrieval: ranked on the rounded score, doc_id tie-break.
-    "q_bm25_topk" -> ((s, dir) =>
-      Search.bm25TopK(Tables.load(s, dir, "documents"), "doc_id", "text",
-        terms, k = 20))
-  )
-
   private val toks = """regexp_split_to_array(trim(lower(text)), '\s+')"""
 
   /** Shared posting/df/stat CTEs: postings restricted to the query
@@ -52,41 +33,54 @@ object SearchQueries {
        | SELECT COUNT(*) AS n_docs,
        |  CAST(SUM(len(ts)) AS DOUBLE) / COUNT(*) AS avgdl FROM tt)""".stripMargin
 
-  val oracles: Map[String, String] = Map(
+  val specs: Seq[QuerySpec] = Seq(
 
-    "q_tfidf" ->
-      s"""WITH $base
-         |SELECT p.doc_id, p.term,
-         | ROUND(CAST(p.tf AS DOUBLE)
-         |   * (ln((1.0 + s.n_docs) / (1.0 + d.df)) + 1.0), 6) AS tfidf
-         |FROM post p JOIN dfreq d ON p.term = d.term, stats s""".stripMargin,
+    // Smoothed TF-IDF weight per (doc, query-term).
+    QuerySpec("q_tfidf", (s, dir) =>
+      Search.tfIdf(Tables.load(s, dir, "documents"), "doc_id", "text", terms)
+        .select(col("doc_id"), col("term"),
+          round(col("tfidf"), 6).as("tfidf")),
+      Some(
+        s"""WITH $base
+           |SELECT p.doc_id, p.term,
+           | ROUND(CAST(p.tf AS DOUBLE)
+           |   * (ln((1.0 + s.n_docs) / (1.0 + d.df)) + 1.0), 6) AS tfidf
+           |FROM post p JOIN dfreq d ON p.term = d.term, stats s""".stripMargin)),
 
-    "q_bm25" ->
-      s"""WITH $base,
-         |sc AS (
-         | SELECT p.doc_id,
-         |  ln(1.0 + (s.n_docs - d.df + 0.5) / (d.df + 0.5))
-         |   * (p.tf * 2.2)
-         |   / (p.tf + 1.2 * (0.25 + 0.75 * p.dl / s.avgdl)) AS sterm
-         | FROM post p JOIN dfreq d ON p.term = d.term, stats s)
-         |SELECT doc_id,
-         | ROUND(CAST(SUM(CAST(sterm AS DECIMAL(27,18))) AS DOUBLE), 6)
-         |   AS score
-         |FROM sc GROUP BY doc_id""".stripMargin,
+    // BM25 score of every matching document for a fixed 3-term query.
+    QuerySpec("q_bm25", (s, dir) =>
+      Search.bm25(Tables.load(s, dir, "documents"), "doc_id", "text", terms)
+        .select(col("doc_id"), round(col("score"), 6).as("score")),
+      Some(
+        s"""WITH $base,
+           |sc AS (
+           | SELECT p.doc_id,
+           |  ln(1.0 + (s.n_docs - d.df + 0.5) / (d.df + 0.5))
+           |   * (p.tf * 2.2)
+           |   / (p.tf + 1.2 * (0.25 + 0.75 * p.dl / s.avgdl)) AS sterm
+           | FROM post p JOIN dfreq d ON p.term = d.term, stats s)
+           |SELECT doc_id,
+           | ROUND(CAST(SUM(CAST(sterm AS DECIMAL(27,18))) AS DOUBLE), 6)
+           |   AS score
+           |FROM sc GROUP BY doc_id""".stripMargin)),
 
-    "q_bm25_topk" ->
-      s"""WITH $base,
-         |sc AS (
-         | SELECT p.doc_id,
-         |  ln(1.0 + (s.n_docs - d.df + 0.5) / (d.df + 0.5))
-         |   * (p.tf * 2.2)
-         |   / (p.tf + 1.2 * (0.25 + 0.75 * p.dl / s.avgdl)) AS sterm
-         | FROM post p JOIN dfreq d ON p.term = d.term, stats s)
-         |SELECT doc_id, score FROM (
-         | SELECT doc_id,
-         |  ROUND(CAST(SUM(CAST(sterm AS DECIMAL(27,18))) AS DOUBLE), 6)
-         |    AS score
-         | FROM sc GROUP BY doc_id)
-         |ORDER BY score DESC, doc_id ASC LIMIT 20""".stripMargin
+    // Top-k retrieval: ranked on the rounded score, doc_id tie-break.
+    QuerySpec("q_bm25_topk", (s, dir) =>
+      Search.bm25TopK(Tables.load(s, dir, "documents"), "doc_id", "text",
+        terms, k = 20),
+      Some(
+        s"""WITH $base,
+           |sc AS (
+           | SELECT p.doc_id,
+           |  ln(1.0 + (s.n_docs - d.df + 0.5) / (d.df + 0.5))
+           |   * (p.tf * 2.2)
+           |   / (p.tf + 1.2 * (0.25 + 0.75 * p.dl / s.avgdl)) AS sterm
+           | FROM post p JOIN dfreq d ON p.term = d.term, stats s)
+           |SELECT doc_id, score FROM (
+           | SELECT doc_id,
+           |  ROUND(CAST(SUM(CAST(sterm AS DECIMAL(27,18))) AS DOUBLE), 6)
+           |    AS score
+           | FROM sc GROUP BY doc_id)
+           |ORDER BY score DESC, doc_id ASC LIMIT 20""".stripMargin))
   )
 }

@@ -15,165 +15,6 @@ object SimilarityQueries {
   private def emb(s: SparkSession, dir: String) =
     Tables.load(s, dir, "embeddings")
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-
-    // Exact cosine top-10 via broadcast + bounded-heap partial top-k.
-    "q_ann_brute" -> ((s, dir) => {
-      val e = emb(s, dir)
-      Similarity.bruteForceTopK(e, e.filter(col("vec_id") < 16),
-        "vec_id", "embedding", k = 10)
-    }),
-
-    // IVF (k-means cells, nprobe=4) approximate top-10. Approximate vs
-    // the TRUE top-k (recall floor in SimilaritySpec), but fully
-    // deterministic as a computation — the DuckDB oracle replays the
-    // whole pipeline (Lloyd index build, position-indexed cells, probe
-    // ranking, exact cosine inside probed cells) and hash-matches.
-    // Build/probe split: the index is built once per (corpus, params)
-    // via the process-level cache and every subsequent invocation —
-    // notably each timed bench rep — pays probe cost only, which is the
-    // amortization IVF exists to buy.
-    "q_ann_ivf" -> ((s, dir) => {
-      val e = emb(s, dir)
-      val idx = Similarity.cachedIvfIndex(e, cacheKey = dir,
-        "vec_id", "embedding", nCells = 16)
-      Similarity.probeIvf(idx, e.filter(col("vec_id") < 16),
-        "vec_id", "embedding", k = 10, nprobe = 4)
-    }),
-
-    // Incremental index maintenance: the index is TRAINED on the 80%
-    // "historic" slice (vec_id % 5 <> 0) and the 20% delta is appended
-    // WITHOUT re-clustering — assigned under the frozen centroids, the
-    // segment-append pattern that amortizes the cluster pass across an
-    // index's lifetime at 100 TB (a nightly ingest pays one narrow
-    // assignment pass + a delta-sized shuffle; the main segment's
-    // bytes never move). Probes then serve old+new uniformly. The
-    // oracle trains the k-means chain on the SLICE and assigns the
-    // FULL corpus under those centroids — exactly what append did.
-    "q_ann_incr" -> ((s, dir) => {
-      val e = emb(s, dir)
-      val idx = Similarity.cachedAppendedIndex(
-        e.filter(col("vec_id") % 5 =!= 0),
-        e.filter(col("vec_id") % 5 === 0),
-        cacheKey = dir, "vec_id", "embedding", nCells = 16)
-      Similarity.probeIvf(idx, e.filter(col("vec_id") < 16),
-        "vec_id", "embedding", k = 10, nprobe = 4)
-    }),
-
-    // Filtered vector search: top-5 neighbors restricted to the
-    // query's own label (the block joins before any cosine — scoring
-    // cost is the post-filter candidate count, with exact recall where
-    // an unfiltered-probe-then-filter loses it).
-    "q_ann_blocked" -> ((s, dir) => {
-      val e = emb(s, dir)
-      Similarity.blockedTopK(e, e.filter(col("vec_id") < 16),
-        "vec_id", "embedding", "label", k = 5)
-    }),
-
-    // kNN-graph construction: EVERY corpus vector is a query (top-10
-    // neighbors each) through the shuffle-join KNN path — queries are
-    // never broadcast (narrow cell pick, probes shuffled by cell
-    // against the cell-partitioned index). Unlike the probe-set
-    // queries (q_ann_ivf etc., whose cost is bounded by their 16
-    // queries), this workload sizes its OWN index: nCells =
-    // cellsFor(n) ∝ corpus so per-probe candidates stay constant, and
-    // the probe pick is two-level (√nCells super-cells) so picking
-    // doesn't become the new O(nCells) per-query term — the r5 sf1
-    // audit measured the fixed-16-cell variant at 39.5× for 10× data;
-    // this shape is ~linear. At sf0.01 (500 vectors) the sizing rule
-    // yields the same 16 cells and nsp=4 opens all 4 supers, so
-    // results there equal the flat pick exactly (SimilaritySpec law).
-    "q_ann_knn" -> ((s, dir) => {
-      val e = emb(s, dir)
-      val idx = Similarity.cachedHierIvfIndex(e, cacheKey = dir,
-        "vec_id", "embedding")
-      Similarity.knnJoinHier(idx, e, "vec_id", "embedding",
-        k = 10, nprobe = 4, nsp = 4)
-    }),
-
-    // The SAME kNN-graph workload through the beyond-MaxLiteralCells
-    // TABLE-path index (distributed cell-centroid state, sup-keyed
-    // pick join, bounded-heap nprobe cut, aggregate-driven salt) —
-    // the shape a >10⁷-vector corpus MUST use. The paths are
-    // bit-identical by the SimilaritySpec equality law, so the oracle
-    // is q_ann_knn's verbatim; this row exists so the driver's gate
-    // actually EXECUTES the distributed-centroid code every round —
-    // before it, a regression there was invisible to CORRECTNESS
-    // (spec-covered only).
-    "q_ann_knn_table" -> ((s, dir) => {
-      val e = emb(s, dir)
-      val idx = Similarity.cachedHierIvfTableIndex(e, cacheKey = dir,
-        "vec_id", "embedding")
-      Similarity.knnJoinHierTable(idx, e, "vec_id", "embedding",
-        k = 10, nprobe = 4, nsp = 4)
-    }),
-
-    // Symmetric int8 quantization of the corpus (the 4× ANN memory
-    // lever) — pure IEEE arithmetic, exact oracle. The code array is
-    // serialized to a CSV string for the registry output: the driver's
-    // comparator sorts result columns with pandas, which cannot hash
-    // ARRAY cells (r4 verdict item 1).
-    "q_quantize" -> ((s, dir) =>
-      Similarity.quantizeInt8(emb(s, dir), "vec_id", "embedding")
-        .select(col("vec_id"), col("scale"),
-          concat_ws(",",
-            transform(col("qvec"), _.cast("string"))).as("qvec"))),
-
-    // Top-10 by quantized integer dot product — all-integer scoring,
-    // so the oracle compare needs no float discipline at all.
-    "q_ann_quant" -> ((s, dir) => {
-      val e = emb(s, dir)
-      Similarity.quantizedTopK(e, e.filter(col("vec_id") < 16),
-        "vec_id", "embedding", k = 10)
-    }),
-
-    // Product quantization (IVF-PQ's compression half): 8 subspace
-    // codebooks of 16 cells (32× corpus memory cut vs float32), ADC
-    // scan over the 8-byte codes, exact re-rank of the top-40
-    // candidates to k=10. Build/probe split via the process cache,
-    // like q_ann_ivf. Approximate vs the true top-k (recall floor in
-    // SimilaritySpec) but fully deterministic — the oracle replays the
-    // 8 per-subspace k-means chains, the code assignment, the
-    // left-associated ADC term sum, and the re-rank bit-for-bit.
-    "q_ann_pq" -> ((s, dir) => {
-      val e = emb(s, dir)
-      val idx = Similarity.cachedPqIndex(e, cacheKey = dir,
-        "vec_id", "embedding", m = 8, ksub = 16)
-      Similarity.probePq(idx, e, e.filter(col("vec_id") < 16),
-        "vec_id", "embedding", k = 10, refine = 4)
-    }),
-
-    // Composed IVF-PQ — the production ANN shape: coarse cells bound
-    // WHICH codes a probe touches (nprobe/nCells of the corpus), PQ
-    // bounds what each touch costs (8 LUT lookups over 8 bytes), then
-    // exact re-rank. Shares the cached IVF cells AND PQ codebooks with
-    // q_ann_ivf / q_ann_pq — each cluster pass is built once per
-    // corpus. Fully deterministic; the oracle replays cells + 8
-    // subspace chains + probe pick + in-cell ADC + re-rank.
-    "q_ann_ivfpq" -> ((s, dir) => {
-      val e = emb(s, dir)
-      val idx = Similarity.cachedIvfPqIndex(e, cacheKey = dir,
-        "vec_id", "embedding", nCells = 16, m = 8, ksub = 16)
-      Similarity.probeIvfPq(idx, e, e.filter(col("vec_id") < 16),
-        "vec_id", "embedding", k = 10, nprobe = 4, refine = 4)
-    }),
-
-    // Semantic dedup (SemDeDup): k-means cells as the blocking key,
-    // within-cell cosine ≥ 0.30 against any smaller id ⇒ duplicate.
-    // Shares the ADAPTIVE index with q_ann_knn (one cluster pass buys
-    // search AND dedup): cellsFor(n) cells keep each cell ~64 vectors
-    // regardless of corpus size, so the within-cell quadratic — the
-    // term that decides whether SemDeDup survives 100 TB — is bounded
-    // by construction, not by caller discipline.
-    "q_semantic_dedup" -> ((s, dir) => {
-      val e = emb(s, dir)
-      val idx = Similarity.cachedHierIvfIndex(e, cacheKey = dir,
-        "vec_id", "embedding").base
-      graft.operators.Dedup.semanticDedup(idx, "vec_id",
-        threshold = 0.30)
-    })
-  )
-
   private def cosSql(a: String, b: String): String = {
     def dot(x: String, y: String) =
       s"""list_reduce(list_transform(list_zip($x, $y),
@@ -411,58 +252,58 @@ object SimilarityQueries {
        |${hassign("F", iters + 1, "fpts")}""".stripMargin
   }
 
-  private val oraclesBase: Map[String, String] = Map(
-    "q_ann_pq" ->
-      pqOracle(m = 8, ksub = 16, ds = 8, iters = 5, kCand = 40, k = 10),
+  // knnJoinHier replay over the r6 SCALE-SAFE build: the full
+  // sampled + super-restricted training trajectory (hierBuildCtes —
+  // sample gate, sampled super chain, 5 hierarchical cell-Lloyd
+  // iterations, final full-corpus assignment haF), then the
+  // unchanged two-level probe pick: per query top-4 supers by
+  // (scos DESC, super ASC) over ALL supers (empty ones burn a slot,
+  // matching the array-sort literal), top-4 cells among the picked
+  // supers' members (hm6), in-cell scoring with q_ann_brute's
+  // tie-breaks.
+  // q_ann_knn_table shares this oracle verbatim: the table-path
+  // build/probe is bit-identical to the literal path by the
+  // SimilaritySpec equality law.
+  private val annKnnOracle =
+    s"""WITH ${hierBuildCtes(iters = 5, dim = 64)},
+       |cellsup AS (SELECT cell, sup FROM hm6),
+       |q AS (SELECT vec_id AS query_id,
+       |   list_transform(embedding, v -> CAST(v AS DOUBLE)) AS qv
+       |  FROM embeddings),
+       |spick AS (
+       | SELECT query_id, qv, sup FROM (
+       |  SELECT q.query_id, q.qv, s.cell AS sup,
+       |   ROW_NUMBER() OVER (PARTITION BY q.query_id
+       |    ORDER BY ${cosSql("q.qv", "s.c")} DESC, s.cell ASC)
+       |    AS srank
+       |  FROM q, sup_c5 s) t WHERE srank <= 4),
+       |probes AS (
+       | SELECT query_id, qv, cell FROM (
+       |  SELECT sp.query_id, sp.qv, c.cell,
+       |   ROW_NUMBER() OVER (PARTITION BY sp.query_id
+       |    ORDER BY ${cosSql("sp.qv", "c.c")} DESC, c.cell ASC)
+       |    AS prank
+       |  FROM spick sp JOIN cellsup cs ON cs.sup = sp.sup
+       |   JOIN hc5 c ON c.cell = cs.cell) t WHERE prank <= 4),
+       |s AS (
+       | SELECT p.query_id, a.vec_id AS neighbor_id,
+       |  ${cosSql("p.qv", "a.x")} AS cos
+       | FROM haF a JOIN probes p
+       |  ON a.cell = p.cell AND a.vec_id <> p.query_id)
+       |SELECT query_id, neighbor_id, rank, cos FROM (
+       | SELECT query_id, neighbor_id, cos,
+       |  CAST(ROW_NUMBER() OVER (PARTITION BY query_id
+       |   ORDER BY cos DESC, neighbor_id ASC) AS INT) AS rank
+       | FROM s) WHERE rank <= 10""".stripMargin
 
-    "q_ann_ivfpq" ->
-      ivfPqOracle(nCells = 16, m = 8, ksub = 16, ds = 8, iters = 5,
-        nprobe = 4, kCand = 40, k = 10),
+  val specs: Seq[QuerySpec] = Seq(
 
-    "q_quantize" ->
-      """WITH pts AS (
-        | SELECT vec_id,
-        |  list_transform(embedding, v -> CAST(v AS DOUBLE)) AS x
-        | FROM embeddings),
-        |sc AS (
-        | SELECT vec_id, x,
-        |  list_max(list_transform(x, v -> abs(v))) / 127.0 AS scale
-        | FROM pts)
-        |SELECT vec_id, scale,
-        | array_to_string(list_transform(
-        |  CASE WHEN scale = 0 THEN list_transform(x, v -> 0)
-        |   ELSE list_transform(x, v -> CAST(floor(v / scale + 0.5) AS INT))
-        |   END, v -> CAST(v AS VARCHAR)), ',') AS qvec
-        |FROM sc""".stripMargin,
-
-    "q_ann_quant" ->
-      """WITH pts AS (
-        | SELECT vec_id,
-        |  list_transform(embedding, v -> CAST(v AS DOUBLE)) AS x
-        | FROM embeddings),
-        |sc AS (
-        | SELECT vec_id, x,
-        |  list_max(list_transform(x, v -> abs(v))) / 127.0 AS scale
-        | FROM pts),
-        |qv AS (
-        | SELECT vec_id,
-        |  CASE WHEN scale = 0 THEN list_transform(x, v -> 0)
-        |   ELSE list_transform(x, v -> CAST(floor(v / scale + 0.5) AS INT))
-        |   END AS q
-        | FROM sc),
-        |pairs AS (
-        | SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
-        |  CAST(list_reduce(list_transform(list_zip(a.q, b.q),
-        |    p -> p[1] * p[2]), (x, y) -> x + y) AS BIGINT) AS dot
-        | FROM qv a JOIN qv b
-        |  ON a.vec_id < 16 AND b.vec_id <> a.vec_id)
-        |SELECT query_id, neighbor_id, rank, dot FROM (
-        | SELECT query_id, neighbor_id, dot,
-        |  CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-        |   ORDER BY dot DESC, neighbor_id) AS INT) AS rank
-        | FROM pairs) t WHERE rank <= 10""".stripMargin,
-
-    "q_ann_brute" ->
+    // Exact cosine top-10 via broadcast + bounded-heap partial top-k.
+    QuerySpec("q_ann_brute", (s, dir) => {
+      val e = emb(s, dir)
+      Similarity.bruteForceTopK(e, e.filter(col("vec_id") < 16),
+        "vec_id", "embedding", k = 10)
+    }, Some(
       s"""WITH q AS (SELECT vec_id AS query_id, embedding AS qv
          |  FROM embeddings WHERE vec_id < 16),
          |s AS (SELECT query_id, e.vec_id AS neighbor_id,
@@ -472,73 +313,30 @@ object SimilarityQueries {
          | SELECT query_id, neighbor_id, cos,
          |  CAST(ROW_NUMBER() OVER (PARTITION BY query_id
          |   ORDER BY cos DESC, neighbor_id ASC) AS INT) AS rank
-         | FROM s) WHERE rank <= 10""".stripMargin,
+         | FROM s) WHERE rank <= 10""".stripMargin)),
 
-    "q_ann_blocked" ->
-      s"""WITH q AS (SELECT vec_id AS query_id, embedding AS qv, label
-         |  FROM embeddings WHERE vec_id < 16),
-         |s AS (SELECT query_id, e.vec_id AS neighbor_id,
-         |  ${cosSql("qv", "e.embedding")} AS cos
-         | FROM embeddings e JOIN q
-         |  ON e.label = q.label AND e.vec_id <> q.query_id)
-         |SELECT query_id, neighbor_id, rank, cos FROM (
-         | SELECT query_id, neighbor_id, cos,
-         |  CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-         |   ORDER BY cos DESC, neighbor_id ASC) AS INT) AS rank
-         | FROM s) WHERE rank <= 5""".stripMargin,
-
-    // knnJoinHier replay over the r6 SCALE-SAFE build: the full
-    // sampled + super-restricted training trajectory (hierBuildCtes —
-    // sample gate, sampled super chain, 5 hierarchical cell-Lloyd
-    // iterations, final full-corpus assignment haF), then the
-    // unchanged two-level probe pick: per query top-4 supers by
-    // (scos DESC, super ASC) over ALL supers (empty ones burn a slot,
-    // matching the array-sort literal), top-4 cells among the picked
-    // supers' members (hm6), in-cell scoring with q_ann_brute's
-    // tie-breaks.
-    // q_ann_knn_table shares this oracle verbatim (appended to the
-    // map below): the table-path build/probe is bit-identical to the
-    // literal path by the SimilaritySpec equality law.
-    "q_ann_knn" -> {
-      s"""WITH ${hierBuildCtes(iters = 5, dim = 64)},
-         |cellsup AS (SELECT cell, sup FROM hm6),
-         |q AS (SELECT vec_id AS query_id,
-         |   list_transform(embedding, v -> CAST(v AS DOUBLE)) AS qv
-         |  FROM embeddings),
-         |spick AS (
-         | SELECT query_id, qv, sup FROM (
-         |  SELECT q.query_id, q.qv, s.cell AS sup,
-         |   ROW_NUMBER() OVER (PARTITION BY q.query_id
-         |    ORDER BY ${cosSql("q.qv", "s.c")} DESC, s.cell ASC)
-         |    AS srank
-         |  FROM q, sup_c5 s) t WHERE srank <= 4),
-         |probes AS (
-         | SELECT query_id, qv, cell FROM (
-         |  SELECT sp.query_id, sp.qv, c.cell,
-         |   ROW_NUMBER() OVER (PARTITION BY sp.query_id
-         |    ORDER BY ${cosSql("sp.qv", "c.c")} DESC, c.cell ASC)
-         |    AS prank
-         |  FROM spick sp JOIN cellsup cs ON cs.sup = sp.sup
-         |   JOIN hc5 c ON c.cell = cs.cell) t WHERE prank <= 4),
-         |s AS (
-         | SELECT p.query_id, a.vec_id AS neighbor_id,
-         |  ${cosSql("p.qv", "a.x")} AS cos
-         | FROM haF a JOIN probes p
-         |  ON a.cell = p.cell AND a.vec_id <> p.query_id)
-         |SELECT query_id, neighbor_id, rank, cos FROM (
-         | SELECT query_id, neighbor_id, cos,
-         |  CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-         |   ORDER BY cos DESC, neighbor_id ASC) AS INT) AS rank
-         | FROM s) WHERE rank <= 10""".stripMargin
-    },
-
-    // Mirror of cachedIvfIndex(nCells=16, 5 Lloyd iters) + probeIvf
-    // (nprobe=4, k=10): the index build reuses the exact k-means CTE
-    // chain that q_ml_kmeans_native already hash-matches; cells are the
-    // final centroids c5, the corpus assignment is a6, the probe pick
-    // is (ccos DESC, cell ASC) row_number <= nprobe, and the in-cell
-    // scoring + top-k tie-breaks match q_ann_brute.
-    "q_ann_ivf" ->
+    // IVF (k-means cells, nprobe=4) approximate top-10. Approximate vs
+    // the TRUE top-k (recall floor in SimilaritySpec), but fully
+    // deterministic as a computation — the DuckDB oracle replays the
+    // whole pipeline (Lloyd index build, position-indexed cells, probe
+    // ranking, exact cosine inside probed cells) and hash-matches.
+    // Build/probe split: the index is built once per (corpus, params)
+    // via the process-level cache and every subsequent invocation —
+    // notably each timed bench rep — pays probe cost only, which is the
+    // amortization IVF exists to buy.
+    QuerySpec("q_ann_ivf", (s, dir) => {
+      val e = emb(s, dir)
+      val idx = Similarity.cachedIvfIndex(e, cacheKey = dir,
+        "vec_id", "embedding", nCells = 16)
+      Similarity.probeIvf(idx, e.filter(col("vec_id") < 16),
+        "vec_id", "embedding", k = 10, nprobe = 4)
+    }, Some(
+      // Mirror of cachedIvfIndex(nCells=16, 5 Lloyd iters) + probeIvf
+      // (nprobe=4, k=10): the index build reuses the exact k-means CTE
+      // chain that q_ml_kmeans_native already hash-matches; cells are the
+      // final centroids c5, the corpus assignment is a6, the probe pick
+      // is (ccos DESC, cell ASC) row_number <= nprobe, and the in-cell
+      // scoring + top-k tie-breaks match q_ann_brute.
       s"""WITH ${MLQueries.kmeansCtePrefix(k = 16, iters = 5, dim = 64)},
          |cells AS (SELECT cell, c FROM c5),
          |q AS (SELECT vec_id AS query_id,
@@ -560,15 +358,32 @@ object SimilarityQueries {
          | SELECT query_id, neighbor_id, cos,
          |  CAST(ROW_NUMBER() OVER (PARTITION BY query_id
          |   ORDER BY cos DESC, neighbor_id ASC) AS INT) AS rank
-         | FROM s) WHERE rank <= 10""".stripMargin,
+         | FROM s) WHERE rank <= 10""".stripMargin)),
 
-    // Incremental-append replay: the k-means chain trains on the 80%
-    // slice (table = the train CTE), then ONE assignment pass of the
-    // FULL corpus under those frozen centroids (afull — the same
-    // ROW_NUMBER-over-squared-distance mirror of NearestCell the
-    // chain's own assignment steps use). Probe/score/tie-breaks are
-    // the q_ann_ivf replay over afull.
-    "q_ann_incr" -> {
+    // Incremental index maintenance: the index is TRAINED on the 80%
+    // "historic" slice (vec_id % 5 <> 0) and the 20% delta is appended
+    // WITHOUT re-clustering — assigned under the frozen centroids, the
+    // segment-append pattern that amortizes the cluster pass across an
+    // index's lifetime at 100 TB (a nightly ingest pays one narrow
+    // assignment pass + a delta-sized shuffle; the main segment's
+    // bytes never move). Probes then serve old+new uniformly. The
+    // oracle trains the k-means chain on the SLICE and assigns the
+    // FULL corpus under those centroids — exactly what append did.
+    QuerySpec("q_ann_incr", (s, dir) => {
+      val e = emb(s, dir)
+      val idx = Similarity.cachedAppendedIndex(
+        e.filter(col("vec_id") % 5 =!= 0),
+        e.filter(col("vec_id") % 5 === 0),
+        cacheKey = dir, "vec_id", "embedding", nCells = 16)
+      Similarity.probeIvf(idx, e.filter(col("vec_id") < 16),
+        "vec_id", "embedding", k = 10, nprobe = 4)
+    }, Some {
+      // Incremental-append replay: the k-means chain trains on the 80%
+      // slice (table = the train CTE), then ONE assignment pass of the
+      // FULL corpus under those frozen centroids (afull — the same
+      // ROW_NUMBER-over-squared-distance mirror of NearestCell the
+      // chain's own assignment steps use). Probe/score/tie-breaks are
+      // the q_ann_ivf replay over afull.
       val chain = MLQueries.kmeansCteGeneric("16", iters = 5, dim = 64,
         table = "train")
       s"""WITH train AS (
@@ -604,15 +419,179 @@ object SimilarityQueries {
          |  CAST(ROW_NUMBER() OVER (PARTITION BY query_id
          |   ORDER BY cos DESC, neighbor_id ASC) AS INT) AS rank
          | FROM s) WHERE rank <= 10""".stripMargin
-    },
+    }),
 
-    // SemDeDup replay: the same r6 scale-safe hierarchical build as
-    // q_ann_knn (shared adaptive index — one training trajectory buys
-    // search AND dedup), then the within-cell smaller-id cosine test
-    // over the final full-corpus assignment haF. Cosine is the
-    // bit-exact cosSql mirror, so the 0.30 threshold cut agrees
-    // exactly; cells stay ~64 vectors by construction at any n.
-    "q_semantic_dedup" ->
+    // Filtered vector search: top-5 neighbors restricted to the
+    // query's own label (the block joins before any cosine — scoring
+    // cost is the post-filter candidate count, with exact recall where
+    // an unfiltered-probe-then-filter loses it).
+    QuerySpec("q_ann_blocked", (s, dir) => {
+      val e = emb(s, dir)
+      Similarity.blockedTopK(e, e.filter(col("vec_id") < 16),
+        "vec_id", "embedding", "label", k = 5)
+    }, Some(
+      s"""WITH q AS (SELECT vec_id AS query_id, embedding AS qv, label
+         |  FROM embeddings WHERE vec_id < 16),
+         |s AS (SELECT query_id, e.vec_id AS neighbor_id,
+         |  ${cosSql("qv", "e.embedding")} AS cos
+         | FROM embeddings e JOIN q
+         |  ON e.label = q.label AND e.vec_id <> q.query_id)
+         |SELECT query_id, neighbor_id, rank, cos FROM (
+         | SELECT query_id, neighbor_id, cos,
+         |  CAST(ROW_NUMBER() OVER (PARTITION BY query_id
+         |   ORDER BY cos DESC, neighbor_id ASC) AS INT) AS rank
+         | FROM s) WHERE rank <= 5""".stripMargin)),
+
+    // kNN-graph construction: EVERY corpus vector is a query (top-10
+    // neighbors each) through the shuffle-join KNN path — queries are
+    // never broadcast (narrow cell pick, probes shuffled by cell
+    // against the cell-partitioned index). Unlike the probe-set
+    // queries (q_ann_ivf etc., whose cost is bounded by their 16
+    // queries), this workload sizes its OWN index: nCells =
+    // cellsFor(n) ∝ corpus so per-probe candidates stay constant, and
+    // the probe pick is two-level (√nCells super-cells) so picking
+    // doesn't become the new O(nCells) per-query term — the r5 sf1
+    // audit measured the fixed-16-cell variant at 39.5× for 10× data;
+    // this shape is ~linear. At sf0.01 (500 vectors) the sizing rule
+    // yields the same 16 cells and nsp=4 opens all 4 supers, so
+    // results there equal the flat pick exactly (SimilaritySpec law).
+    QuerySpec("q_ann_knn", (s, dir) => {
+      val e = emb(s, dir)
+      val idx = Similarity.cachedHierIvfIndex(e, cacheKey = dir,
+        "vec_id", "embedding")
+      Similarity.knnJoinHier(idx, e, "vec_id", "embedding",
+        k = 10, nprobe = 4, nsp = 4)
+    }, Some(annKnnOracle)),
+
+    // The SAME kNN-graph workload through the beyond-MaxLiteralCells
+    // TABLE-path index (distributed cell-centroid state, sup-keyed
+    // pick join, bounded-heap nprobe cut, aggregate-driven salt) —
+    // the shape a >10⁷-vector corpus MUST use. The paths are
+    // bit-identical by the SimilaritySpec equality law, so the oracle
+    // is q_ann_knn's verbatim; this row exists so the driver's gate
+    // actually EXECUTES the distributed-centroid code every round —
+    // before it, a regression there was invisible to CORRECTNESS
+    // (spec-covered only).
+    QuerySpec("q_ann_knn_table", (s, dir) => {
+      val e = emb(s, dir)
+      val idx = Similarity.cachedHierIvfTableIndex(e, cacheKey = dir,
+        "vec_id", "embedding")
+      Similarity.knnJoinHierTable(idx, e, "vec_id", "embedding",
+        k = 10, nprobe = 4, nsp = 4)
+    }, Some(annKnnOracle)),
+
+    // Symmetric int8 quantization of the corpus (the 4× ANN memory
+    // lever) — pure IEEE arithmetic, exact oracle. The code array is
+    // serialized to a CSV string for the registry output: the driver's
+    // comparator sorts result columns with pandas, which cannot hash
+    // ARRAY cells (r4 verdict item 1).
+    QuerySpec("q_quantize", (s, dir) =>
+      Similarity.quantizeInt8(emb(s, dir), "vec_id", "embedding")
+        .select(col("vec_id"), col("scale"),
+          concat_ws(",",
+            transform(col("qvec"), _.cast("string"))).as("qvec")),
+      Some(
+        """WITH pts AS (
+          | SELECT vec_id,
+          |  list_transform(embedding, v -> CAST(v AS DOUBLE)) AS x
+          | FROM embeddings),
+          |sc AS (
+          | SELECT vec_id, x,
+          |  list_max(list_transform(x, v -> abs(v))) / 127.0 AS scale
+          | FROM pts)
+          |SELECT vec_id, scale,
+          | array_to_string(list_transform(
+          |  CASE WHEN scale = 0 THEN list_transform(x, v -> 0)
+          |   ELSE list_transform(x, v -> CAST(floor(v / scale + 0.5) AS INT))
+          |   END, v -> CAST(v AS VARCHAR)), ',') AS qvec
+          |FROM sc""".stripMargin)),
+
+    // Top-10 by quantized integer dot product — all-integer scoring,
+    // so the oracle compare needs no float discipline at all.
+    QuerySpec("q_ann_quant", (s, dir) => {
+      val e = emb(s, dir)
+      Similarity.quantizedTopK(e, e.filter(col("vec_id") < 16),
+        "vec_id", "embedding", k = 10)
+    }, Some(
+      """WITH pts AS (
+        | SELECT vec_id,
+        |  list_transform(embedding, v -> CAST(v AS DOUBLE)) AS x
+        | FROM embeddings),
+        |sc AS (
+        | SELECT vec_id, x,
+        |  list_max(list_transform(x, v -> abs(v))) / 127.0 AS scale
+        | FROM pts),
+        |qv AS (
+        | SELECT vec_id,
+        |  CASE WHEN scale = 0 THEN list_transform(x, v -> 0)
+        |   ELSE list_transform(x, v -> CAST(floor(v / scale + 0.5) AS INT))
+        |   END AS q
+        | FROM sc),
+        |pairs AS (
+        | SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
+        |  CAST(list_reduce(list_transform(list_zip(a.q, b.q),
+        |    p -> p[1] * p[2]), (x, y) -> x + y) AS BIGINT) AS dot
+        | FROM qv a JOIN qv b
+        |  ON a.vec_id < 16 AND b.vec_id <> a.vec_id)
+        |SELECT query_id, neighbor_id, rank, dot FROM (
+        | SELECT query_id, neighbor_id, dot,
+        |  CAST(ROW_NUMBER() OVER (PARTITION BY query_id
+        |   ORDER BY dot DESC, neighbor_id) AS INT) AS rank
+        | FROM pairs) t WHERE rank <= 10""".stripMargin)),
+
+    // Product quantization (IVF-PQ's compression half): 8 subspace
+    // codebooks of 16 cells (32× corpus memory cut vs float32), ADC
+    // scan over the 8-byte codes, exact re-rank of the top-40
+    // candidates to k=10. Build/probe split via the process cache,
+    // like q_ann_ivf. Approximate vs the true top-k (recall floor in
+    // SimilaritySpec) but fully deterministic — the oracle replays the
+    // 8 per-subspace k-means chains, the code assignment, the
+    // left-associated ADC term sum, and the re-rank bit-for-bit.
+    QuerySpec("q_ann_pq", (s, dir) => {
+      val e = emb(s, dir)
+      val idx = Similarity.cachedPqIndex(e, cacheKey = dir,
+        "vec_id", "embedding", m = 8, ksub = 16)
+      Similarity.probePq(idx, e, e.filter(col("vec_id") < 16),
+        "vec_id", "embedding", k = 10, refine = 4)
+    }, Some(pqOracle(m = 8, ksub = 16, ds = 8, iters = 5, kCand = 40, k = 10))),
+
+    // Composed IVF-PQ — the production ANN shape: coarse cells bound
+    // WHICH codes a probe touches (nprobe/nCells of the corpus), PQ
+    // bounds what each touch costs (8 LUT lookups over 8 bytes), then
+    // exact re-rank. Shares the cached IVF cells AND PQ codebooks with
+    // q_ann_ivf / q_ann_pq — each cluster pass is built once per
+    // corpus. Fully deterministic; the oracle replays cells + 8
+    // subspace chains + probe pick + in-cell ADC + re-rank.
+    QuerySpec("q_ann_ivfpq", (s, dir) => {
+      val e = emb(s, dir)
+      val idx = Similarity.cachedIvfPqIndex(e, cacheKey = dir,
+        "vec_id", "embedding", nCells = 16, m = 8, ksub = 16)
+      Similarity.probeIvfPq(idx, e, e.filter(col("vec_id") < 16),
+        "vec_id", "embedding", k = 10, nprobe = 4, refine = 4)
+    }, Some(
+      ivfPqOracle(nCells = 16, m = 8, ksub = 16, ds = 8, iters = 5,
+        nprobe = 4, kCand = 40, k = 10))),
+
+    // Semantic dedup (SemDeDup): k-means cells as the blocking key,
+    // within-cell cosine ≥ 0.30 against any smaller id ⇒ duplicate.
+    // Shares the ADAPTIVE index with q_ann_knn (one cluster pass buys
+    // search AND dedup): cellsFor(n) cells keep each cell ~64 vectors
+    // regardless of corpus size, so the within-cell quadratic — the
+    // term that decides whether SemDeDup survives 100 TB — is bounded
+    // by construction, not by caller discipline.
+    QuerySpec("q_semantic_dedup", (s, dir) => {
+      val e = emb(s, dir)
+      val idx = Similarity.cachedHierIvfIndex(e, cacheKey = dir,
+        "vec_id", "embedding").base
+      graft.operators.Dedup.semanticDedup(idx, "vec_id",
+        threshold = 0.30)
+    }, Some(
+      // SemDeDup replay: the same r6 scale-safe hierarchical build as
+      // q_ann_knn (shared adaptive index — one training trajectory buys
+      // search AND dedup), then the within-cell smaller-id cosine test
+      // over the final full-corpus assignment haF. Cosine is the
+      // bit-exact cosSql mirror, so the 0.30 threshold cut agrees
+      // exactly; cells stay ~64 vectors by construction at any n.
       s"""WITH ${hierBuildCtes(iters = 5, dim = 64)},
          |d AS (
          | SELECT DISTINCT b.vec_id AS id
@@ -621,9 +600,6 @@ object SimilarityQueries {
          | WHERE ${cosSql("a.x", "b.x")} >= 0.30)
          |SELECT a.vec_id, CAST(a.cell AS INT) AS cell,
          | a.vec_id IN (SELECT id FROM d) AS is_dup
-         |FROM haF a""".stripMargin
+         |FROM haF a""".stripMargin))
   )
-
-  val oracles: Map[String, String] =
-    oraclesBase + ("q_ann_knn_table" -> oraclesBase("q_ann_knn"))
 }

@@ -12,36 +12,19 @@ import graft.operators.Sketch
   * identical). */
 object SketchQueries {
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val specs: Seq[QuerySpec] = Seq(
 
     // Approximate distinct users per event type, with the exact count
     // alongside (exact side shuffles keys; sketch side shuffles ≤64
     // registers per group — the 100 TB trade in one plan).
-    "q_approx_distinct" -> ((s, dir) => {
+    QuerySpec("q_approx_distinct", (s, dir) => {
       val events = Tables.load(s, dir, "events")
       val approx = Sketch.approxCountDistinct(
         events, col("user_id"), "n_approx", Seq(col("event_type")))
       val exact = events.groupBy(col("event_type"))
         .agg(countDistinct(col("user_id")).as("n_exact"))
       exact.join(broadcast(approx), "event_type")
-    }),
-
-    // Count-min word frequencies next to the exact counts: the sketch
-    // side collapses to depth×width counters before the shuffle no
-    // matter the corpus size; estimates only ever overestimate.
-    "q_cms_counts" -> ((s, dir) => {
-      val toks = Tables.load(s, dir, "documents")
-        .select(explode(graft.functions.Text.tokens(col("text"))).as("w"))
-      val sketch = Sketch.cmsSketch(toks, col("w"))
-      val exact = toks.groupBy(col("w")).agg(count(lit(1)).as("n_exact"))
-      val est = Sketch.cmsEstimate(sketch, toks.distinct(), col("w"))
-        .withColumnRenamed("__item", "w")
-      exact.join(est, "w")
-    })
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q_approx_distinct" -> {
+    }, Some {
       val est = Sketch.estimateSql(
         "events", "user_id", "event_type", "n_approx")
       s"""WITH approx AS ($est),
@@ -51,9 +34,20 @@ object SketchQueries {
          | FROM events GROUP BY 1)
          |SELECT e.event_type, e.n_exact, a.n_approx
          |FROM exact e JOIN approx a USING (event_type)""".stripMargin
-    },
+    }),
 
-    "q_cms_counts" -> {
+    // Count-min word frequencies next to the exact counts: the sketch
+    // side collapses to depth×width counters before the shuffle no
+    // matter the corpus size; estimates only ever overestimate.
+    QuerySpec("q_cms_counts", (s, dir) => {
+      val toks = Tables.load(s, dir, "documents")
+        .select(explode(graft.functions.Text.tokens(col("text"))).as("w"))
+      val sketch = Sketch.cmsSketch(toks, col("w"))
+      val exact = toks.groupBy(col("w")).agg(count(lit(1)).as("n_exact"))
+      val est = Sketch.cmsEstimate(sketch, toks.distinct(), col("w"))
+        .withColumnRenamed("__item", "w")
+      exact.join(est, "w")
+    }, Some {
       val toks = """regexp_split_to_array(trim(lower(text)), '\s+')"""
       val cellB = Sketch.cmsBucketSql("w", "r")
       val addrB = Sketch.cmsBucketSql("p.w", "d.r")
@@ -73,6 +67,6 @@ object SketchQueries {
          | SELECT w, CAST(COUNT(*) AS BIGINT) AS n_exact FROM t GROUP BY w)
          |SELECT e.w, e.n_exact, s.est
          |FROM exact e JOIN est s USING (w)""".stripMargin
-    }
+    })
   )
 }
