@@ -21,6 +21,10 @@ object Text {
   def tokens(text: Column): Column =
     split(trim(lower(text)), "\\s+")
 
+  /** DuckDB mirror of [[tokens]] over the SQL expression `textExpr`. */
+  def tokensSql(textExpr: String): String =
+    s"regexp_split_to_array(trim(lower($textExpr)), '\\s+')"
+
   /** Token count (whitespace tokenizer). */
   def tokenCount(text: Column): Column =
     size(tokens(text))

@@ -892,6 +892,26 @@ object VectorFunctions {
       Bridge.expression(a.cast("array<double>")),
       Bridge.expression(b.cast("array<double>"))))
 
+  /** DuckDB mirror of [[dot]]: per-element double cast, double
+    * products, strict left-to-right reduction. */
+  def dotSql(a: String, b: String): String =
+    s"""list_reduce(list_transform(list_zip($a, $b),
+       | p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)),
+       | (acc, v) -> acc + v)""".stripMargin
+
+  /** Bit-exact DuckDB mirror of [[cosine]]: dot/sqrt(na)/sqrt(nb) over
+    * [[dotSql]]. */
+  def cosineSql(a: String, b: String): String =
+    s"${dotSql(a, b)} / sqrt(${dotSql(a, a)}) / sqrt(${dotSql(b, b)})"
+
+  /** DuckDB mirror of [[sqDist]] with the kernel's exact op order — also
+    * the NearestCell assignment distance. */
+  def squaredDistanceSql(x: String, c: String): String =
+    s"""list_reduce(list_transform(list_zip($x, $c),
+       | p -> (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE))
+       |    * (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE))),
+       | (a, b) -> a + b)""".stripMargin
+
   /** Column-API entry for [[ScaleArray]]. */
   def scale(a: Column, s: Column): Column =
     Bridge.column(ScaleArray(

@@ -17,7 +17,7 @@ object CorpusQueries {
   private val STRIDE = 48
   private val CTX = 512
 
-  private val toks = """regexp_split_to_array(trim(lower(text)), '\s+')"""
+  private val toks = graft.functions.Text.tokensSql("text")
 
   val specs: Seq[QuerySpec] = Seq(
 

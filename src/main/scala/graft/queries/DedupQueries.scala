@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.functions.VectorFunctions.cosineSql
 import graft.operators.Dedup
 
 /** Deduplication queries over the `documents` / `embeddings` fixtures.
@@ -19,7 +20,7 @@ import graft.operators.Dedup
   */
 object DedupQueries {
 
-  private val toks = """regexp_split_to_array(trim(lower(text)), '\s+')"""
+  private val toks = graft.functions.Text.tokensSql("text")
   // DuckDB 3-shingle set; range() is end-exclusive so this yields the
   // same n-2 shingles as Spark's sequence(0, n-3).
   private[queries] val shingleSet =
@@ -48,15 +49,6 @@ object DedupQueries {
        |  JOIN ln nb ON nb.doc_id = ix.id_b
        | WHERE CAST(c AS DOUBLE) / (na.n + nb.n - c) >= $threshold)"""
       .stripMargin
-  // Bit-exact cosine mirror of Dedup.cosine: double products, strict
-  // left-to-right reduction, dot/sqrt(na)/sqrt(nb).
-  private def cosSql(a: String, b: String): String = {
-    def dot(x: String, y: String) =
-      s"""list_reduce(list_transform(list_zip($x, $y),
-         | p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)),
-         | (acc, v) -> acc + v)""".stripMargin
-    s"${dot(a, b)} / sqrt(${dot(a, a)}) / sqrt(${dot(b, b)})"
-  }
 
   // q_split_cluster_sketch shares q_split_cluster's oracle verbatim:
   // both pair paths end in exact-Jaccard verification, so the cluster
@@ -158,37 +150,37 @@ object DedupQueries {
       // chunk equality, exact hamming verify — the same pipeline the
       // Spark operator stages.
       Some(
-        """WITH toks AS (
-          | SELECT doc_id,
-          |  unnest(regexp_split_to_array(trim(lower(text)), '\s+')) AS t
-          | FROM documents),
-          |th AS (SELECT doc_id, md5(t) AS h FROM toks WHERE t <> ''),
-          |votes AS (
-          | SELECT doc_id, b.bit,
-          |  SUM(CASE WHEN
-          |    ((strpos('0123456789abcdef',
-          |       substring(h, CAST(b.bit // 4 + 1 AS INT), 1)) - 1)
-          |     >> (b.bit % 4)) & 1 = 1
-          |   THEN 1 ELSE -1 END) AS v
-          | FROM th CROSS JOIN range(0, 64) b(bit)
-          | GROUP BY doc_id, b.bit),
-          |chunks AS (
-          | SELECT doc_id, bit // 16 AS chunk,
-          |  CAST(SUM(CASE WHEN v >= 0
-          |   THEN (1 << CAST(bit % 16 AS INT)) ELSE 0 END) AS INT) AS cval
-          | FROM votes GROUP BY doc_id, bit // 16),
-          |cand AS (
-          | SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-          | FROM chunks a JOIN chunks b
-          |  ON a.chunk = b.chunk AND a.cval = b.cval AND a.doc_id < b.doc_id),
-          |ham AS (
-          | SELECT c.id_a, c.id_b,
-          |  CAST(SUM(bit_count(xor(ca.cval, cb.cval))) AS INT) AS hamming
-          | FROM cand c
-          |  JOIN chunks ca ON ca.doc_id = c.id_a
-          |  JOIN chunks cb ON cb.doc_id = c.id_b AND cb.chunk = ca.chunk
-          | GROUP BY c.id_a, c.id_b)
-          |SELECT id_a, id_b, hamming FROM ham WHERE hamming <= 3""".stripMargin)),
+        s"""WITH toks AS (
+           | SELECT doc_id,
+           |  unnest($toks) AS t
+           | FROM documents),
+           |th AS (SELECT doc_id, md5(t) AS h FROM toks WHERE t <> ''),
+           |votes AS (
+           | SELECT doc_id, b.bit,
+           |  SUM(CASE WHEN
+           |    ((strpos('0123456789abcdef',
+           |       substring(h, CAST(b.bit // 4 + 1 AS INT), 1)) - 1)
+           |     >> (b.bit % 4)) & 1 = 1
+           |   THEN 1 ELSE -1 END) AS v
+           | FROM th CROSS JOIN range(0, 64) b(bit)
+           | GROUP BY doc_id, b.bit),
+           |chunks AS (
+           | SELECT doc_id, bit // 16 AS chunk,
+           |  CAST(SUM(CASE WHEN v >= 0
+           |   THEN (1 << CAST(bit % 16 AS INT)) ELSE 0 END) AS INT) AS cval
+           | FROM votes GROUP BY doc_id, bit // 16),
+           |cand AS (
+           | SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
+           | FROM chunks a JOIN chunks b
+           |  ON a.chunk = b.chunk AND a.cval = b.cval AND a.doc_id < b.doc_id),
+           |ham AS (
+           | SELECT c.id_a, c.id_b,
+           |  CAST(SUM(bit_count(xor(ca.cval, cb.cval))) AS INT) AS hamming
+           | FROM cand c
+           |  JOIN chunks ca ON ca.doc_id = c.id_a
+           |  JOIN chunks cb ON cb.doc_id = c.id_b AND cb.chunk = ca.chunk
+           | GROUP BY c.id_a, c.id_b)
+           |SELECT id_a, id_b, hamming FROM ham WHERE hamming <= 3""".stripMargin)),
 
     // Winnowing (rolling-hash) fingerprint candidates + exact Jaccard
     // verification — same candidates-then-verify architecture as
@@ -218,10 +210,10 @@ object DedupQueries {
         "vec_id", "embedding", "label", threshold = 0.35),
       Some(
         s"""SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-           | ${cosSql("a.embedding", "b.embedding")} AS cos
+           | ${cosineSql("a.embedding", "b.embedding")} AS cos
            |FROM embeddings a JOIN embeddings b
            | ON a.label = b.label AND a.vec_id < b.vec_id
-           |WHERE ${cosSql("a.embedding", "b.embedding")} >= 0.35""".stripMargin)),
+           |WHERE ${cosineSql("a.embedding", "b.embedding")} >= 0.35""".stripMargin)),
 
     // Near-dup clusters: exact J≥0.8 pairs (the q_dedup_ngram
     // operator) → connected components; cluster label = min doc_id =

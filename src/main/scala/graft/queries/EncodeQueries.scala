@@ -55,7 +55,7 @@ object EncodeQueries {
       Some(
         s"""WITH toks AS (
            | SELECT doc_id,
-           |  unnest(regexp_split_to_array(trim(lower(text)), '\\s+')) AS t
+           |  unnest(${graft.functions.Text.tokensSql("text")}) AS t
            | FROM documents)
            |SELECT doc_id,
            | CAST(${md5Prefix6("t")} % 64 AS INT) AS bucket,

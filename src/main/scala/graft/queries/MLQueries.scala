@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.functions.VectorFunctions.squaredDistanceSql
 import graft.operators.ML
 
 /** ML-kernel queries (reference §2.9 surface). Closed-form OLS is
@@ -50,17 +51,12 @@ object MLQueries {
                                         xExpr: String = "embedding",
                                         table: String = "embeddings",
                                         idCol: String = "vec_id"): String = {
-    def dist(x: String, c: String) =
-      s"""list_reduce(list_transform(list_zip($x, $c),
-         | p -> (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE))
-         |    * (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE))),
-         | (a, b) -> a + b)""".stripMargin
     def assign(i: Int) =
       s"""${prefix}a$i AS (
          | SELECT vec_id, x, cell FROM (
          |  SELECT p.vec_id, p.x, c.cell,
          |   ROW_NUMBER() OVER (PARTITION BY p.vec_id
-         |     ORDER BY ${dist("p.x", "c.c")} ASC, c.cell ASC) AS rnk
+         |     ORDER BY ${squaredDistanceSql("p.x", "c.c")} ASC, c.cell ASC) AS rnk
          |  FROM ${prefix}pts p, ${prefix}c${i - 1} c) t
          | WHERE rnk = 1)""".stripMargin
     def update(i: Int) =

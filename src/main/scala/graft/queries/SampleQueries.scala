@@ -12,6 +12,7 @@ import graft.operators.Sampling
 object SampleQueries {
 
   private val pfx = Sampling.prefixSql("doc_id")
+  private val toks = graft.functions.Text.tokensSql("text")
 
   val specs: Seq[QuerySpec] = Seq(
 
@@ -39,8 +40,7 @@ object SampleQueries {
       Some {
         val rpfx = Sampling.prefixSql("r.rep")
         s"""WITH f AS (SELECT doc_id, n_chars,
-           |    md5(array_to_string(regexp_split_to_array(trim(lower(text)),
-           |      '\\s+'), ' ')) AS fp
+           |    md5(array_to_string($toks, ' ')) AS fp
            |  FROM documents),
            |r AS (SELECT fp, MIN(doc_id) AS rep FROM f GROUP BY 1)
            |SELECT CASE WHEN $rpfx < '${"%04x".format(6554)}' THEN 'test'
@@ -118,7 +118,6 @@ object SampleQueries {
       // = first 2 md5 hex chars as an int (strpos arithmetic ≡ Spark's
       // conv(hex,16,10)), add-one smoothed log-ratio per bucket summed
       // as DECIMAL, n·const term in the same double op order, 6dp cut.
-      val toks = """regexp_split_to_array(trim(lower(text)), '\s+')"""
       s"""WITH tt AS (SELECT doc_id, source, $toks AS ts FROM documents),
          |bi AS (
          | SELECT doc_id, source,
@@ -185,8 +184,7 @@ object SampleQueries {
       // floor keep-rate in 1/65536 units → 16-bit hash membership.
       s"""WITH tc AS (
          | SELECT doc_id, source,
-         |  CAST(len(regexp_split_to_array(trim(lower(text)), '\\s+'))
-         |       AS BIGINT) AS nt
+         |  CAST(len($toks) AS BIGINT) AS nt
          | FROM documents),
          |rt AS (
          | SELECT source, LEAST(65536, (65536 * 4000) // SUM(nt)) AS num
@@ -217,8 +215,7 @@ object SampleQueries {
       // floor'd α=0.5 rate numerator bit-identical to the Spark side.
       s"""WITH tc AS (
          | SELECT doc_id, lang,
-         |  CAST(len(regexp_split_to_array(trim(lower(text)), '\\s+'))
-         |       AS BIGINT) AS nt
+         |  CAST(len($toks) AS BIGINT) AS nt
          | FROM documents),
          |tot AS (SELECT lang, CAST(SUM(nt) AS BIGINT) AS t
          |        FROM tc GROUP BY lang),

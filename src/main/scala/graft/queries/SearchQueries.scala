@@ -16,7 +16,7 @@ object SearchQueries {
   private val terms = Seq("spark", "join", "vector")
   private val termList = terms.map(t => s"'$t'").mkString(", ")
 
-  private val toks = """regexp_split_to_array(trim(lower(text)), '\s+')"""
+  private val toks = graft.functions.Text.tokensSql("text")
 
   /** Shared posting/df/stat CTEs: postings restricted to the query
     * terms, document frequencies over those postings, and the exact

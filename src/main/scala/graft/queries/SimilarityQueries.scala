@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.functions.VectorFunctions.{cosineSql, dotSql,
+  squaredDistanceSql}
 import graft.operators.Similarity
 
 /** Similarity-search queries over the `embeddings` fixture. The query
@@ -14,29 +16,6 @@ object SimilarityQueries {
 
   private def emb(s: SparkSession, dir: String) =
     Tables.load(s, dir, "embeddings")
-
-  private def cosSql(a: String, b: String): String = {
-    def dot(x: String, y: String) =
-      s"""list_reduce(list_transform(list_zip($x, $y),
-         | p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)),
-         | (acc, v) -> acc + v)""".stripMargin
-    s"${dot(a, b)} / sqrt(${dot(a, a)}) / sqrt(${dot(b, b)})"
-  }
-
-  /** Squared euclidean distance with the generator's exact op order —
-    * the SQL mirror of the NearestCell assignment kernel. */
-  private def sqDistSql(x: String, c: String): String =
-    s"""list_reduce(list_transform(list_zip($x, $c),
-       | p -> (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE))
-       |    * (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE))),
-       | (a, b) -> a + b)""".stripMargin
-
-  /** Plain dot product with the per-element double cast — the SQL
-    * mirror of the ADC LUT entry / term sum building block. */
-  private def dotSql(a: String, b: String): String =
-    s"""list_reduce(list_transform(list_zip($a, $b),
-       | p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)),
-       | (acc, v) -> acc + v)""".stripMargin
 
   /** DuckDB replay of q_ann_pq: 8 per-subspace k-means chains (the
     * proven kmeansCtePrefix pattern, prefixed s0_..s7_ over
@@ -86,7 +65,7 @@ object SimilarityQueries {
        |  FROM adc) t WHERE rnk <= $kCand),
        |s AS (
        | SELECT c.query_id, c.neighbor_id,
-       |  ${cosSql("q2.embedding", "e.embedding")} AS cos
+       |  ${cosineSql("q2.embedding", "e.embedding")} AS cos
        | FROM cand c JOIN embeddings e ON e.vec_id = c.neighbor_id
        |  JOIN embeddings q2 ON q2.vec_id = c.query_id)
        |SELECT query_id, neighbor_id, rank, cos FROM (
@@ -134,7 +113,7 @@ object SimilarityQueries {
        | SELECT query_id, qv, cell FROM (
        |  SELECT q.query_id, q.qv, cells.cell,
        |   ROW_NUMBER() OVER (PARTITION BY q.query_id
-       |    ORDER BY ${cosSql("q.qv", "cells.c")} DESC, cells.cell ASC)
+       |    ORDER BY ${cosineSql("q.qv", "cells.c")} DESC, cells.cell ASC)
        |    AS prank
        |  FROM q, cells) t WHERE prank <= $nprobe),
        |adc AS (
@@ -150,7 +129,7 @@ object SimilarityQueries {
        |  FROM adc) t WHERE rnk <= $kCand),
        |s AS (
        | SELECT c.query_id, c.neighbor_id,
-       |  ${cosSql("q2.embedding", "e.embedding")} AS cos
+       |  ${cosineSql("q2.embedding", "e.embedding")} AS cos
        | FROM cand c JOIN embeddings e ON e.vec_id = c.neighbor_id
        |  JOIN embeddings q2 ON q2.vec_id = c.query_id)
        |SELECT query_id, neighbor_id, rank, cos FROM (
@@ -196,7 +175,7 @@ object SimilarityQueries {
          | SELECT cell, c, sup FROM (
          |  SELECT h.cell, h.c, s.cell AS sup,
          |   ROW_NUMBER() OVER (PARTITION BY h.cell
-         |     ORDER BY ${sqDistSql("h.c", "s.c")} ASC, s.cell ASC) AS rnk
+         |     ORDER BY ${squaredDistanceSql("h.c", "s.c")} ASC, s.cell ASC) AS rnk
          |  FROM $src h, sup_c$iters s) t WHERE rnk = 1)""".stripMargin
     // two-stage hierarchical assignment of `pts` under map hm$i:
     // nearest non-empty super, then nearest member cell.
@@ -205,7 +184,7 @@ object SimilarityQueries {
          | SELECT vec_id, x, sup FROM (
          |  SELECT p.vec_id, p.x, s.cell AS sup,
          |   ROW_NUMBER() OVER (PARTITION BY p.vec_id
-         |     ORDER BY ${sqDistSql("p.x", "s.c")} ASC, s.cell ASC) AS rnk
+         |     ORDER BY ${squaredDistanceSql("p.x", "s.c")} ASC, s.cell ASC) AS rnk
          |  FROM $pts p,
          |   (SELECT * FROM sup_c$iters
          |    WHERE cell IN (SELECT DISTINCT sup FROM hm$i)) s) t
@@ -214,7 +193,7 @@ object SimilarityQueries {
          | SELECT vec_id, x, cell FROM (
          |  SELECT q.vec_id, q.x, m.cell,
          |   ROW_NUMBER() OVER (PARTITION BY q.vec_id
-         |     ORDER BY ${sqDistSql("q.x", "m.c")} ASC, m.cell ASC) AS rnk
+         |     ORDER BY ${squaredDistanceSql("q.x", "m.c")} ASC, m.cell ASC) AS rnk
          |  FROM hsp$tag q JOIN hm$i m ON m.sup = q.sup) t
          | WHERE rnk = 1)""".stripMargin
     def update(i: Int) =
@@ -274,20 +253,20 @@ object SimilarityQueries {
        | SELECT query_id, qv, sup FROM (
        |  SELECT q.query_id, q.qv, s.cell AS sup,
        |   ROW_NUMBER() OVER (PARTITION BY q.query_id
-       |    ORDER BY ${cosSql("q.qv", "s.c")} DESC, s.cell ASC)
+       |    ORDER BY ${cosineSql("q.qv", "s.c")} DESC, s.cell ASC)
        |    AS srank
        |  FROM q, sup_c5 s) t WHERE srank <= 4),
        |probes AS (
        | SELECT query_id, qv, cell FROM (
        |  SELECT sp.query_id, sp.qv, c.cell,
        |   ROW_NUMBER() OVER (PARTITION BY sp.query_id
-       |    ORDER BY ${cosSql("sp.qv", "c.c")} DESC, c.cell ASC)
+       |    ORDER BY ${cosineSql("sp.qv", "c.c")} DESC, c.cell ASC)
        |    AS prank
        |  FROM spick sp JOIN cellsup cs ON cs.sup = sp.sup
        |   JOIN hc5 c ON c.cell = cs.cell) t WHERE prank <= 4),
        |s AS (
        | SELECT p.query_id, a.vec_id AS neighbor_id,
-       |  ${cosSql("p.qv", "a.x")} AS cos
+       |  ${cosineSql("p.qv", "a.x")} AS cos
        | FROM haF a JOIN probes p
        |  ON a.cell = p.cell AND a.vec_id <> p.query_id)
        |SELECT query_id, neighbor_id, rank, cos FROM (
@@ -307,7 +286,7 @@ object SimilarityQueries {
       s"""WITH q AS (SELECT vec_id AS query_id, embedding AS qv
          |  FROM embeddings WHERE vec_id < 16),
          |s AS (SELECT query_id, e.vec_id AS neighbor_id,
-         |  ${cosSql("qv", "e.embedding")} AS cos
+         |  ${cosineSql("qv", "e.embedding")} AS cos
          | FROM embeddings e JOIN q ON e.vec_id <> q.query_id)
          |SELECT query_id, neighbor_id, rank, cos FROM (
          | SELECT query_id, neighbor_id, cos,
@@ -346,12 +325,12 @@ object SimilarityQueries {
          | SELECT query_id, qv, cell FROM (
          |  SELECT q.query_id, q.qv, cells.cell,
          |   ROW_NUMBER() OVER (PARTITION BY q.query_id
-         |    ORDER BY ${cosSql("q.qv", "cells.c")} DESC, cells.cell ASC)
+         |    ORDER BY ${cosineSql("q.qv", "cells.c")} DESC, cells.cell ASC)
          |    AS prank
          |  FROM q, cells) t WHERE prank <= 4),
          |s AS (
          | SELECT p.query_id, a.vec_id AS neighbor_id,
-         |  ${cosSql("p.qv", "a.x")} AS cos
+         |  ${cosineSql("p.qv", "a.x")} AS cos
          | FROM a6 a JOIN probes p
          |  ON a.cell = p.cell AND a.vec_id <> p.query_id)
          |SELECT query_id, neighbor_id, rank, cos FROM (
@@ -396,7 +375,7 @@ object SimilarityQueries {
          | SELECT vec_id, x, cell FROM (
          |  SELECT p.vec_id, p.x, c.cell,
          |   ROW_NUMBER() OVER (PARTITION BY p.vec_id
-         |     ORDER BY ${sqDistSql("p.x", "c.c")} ASC, c.cell ASC) AS rnk
+         |     ORDER BY ${squaredDistanceSql("p.x", "c.c")} ASC, c.cell ASC) AS rnk
          |  FROM allp p, c5 c) t WHERE rnk = 1),
          |cells AS (SELECT cell, c FROM c5),
          |q AS (SELECT vec_id AS query_id,
@@ -406,12 +385,12 @@ object SimilarityQueries {
          | SELECT query_id, qv, cell FROM (
          |  SELECT q.query_id, q.qv, cells.cell,
          |   ROW_NUMBER() OVER (PARTITION BY q.query_id
-         |    ORDER BY ${cosSql("q.qv", "cells.c")} DESC, cells.cell ASC)
+         |    ORDER BY ${cosineSql("q.qv", "cells.c")} DESC, cells.cell ASC)
          |    AS prank
          |  FROM q, cells) t WHERE prank <= 4),
          |s AS (
          | SELECT p.query_id, a.vec_id AS neighbor_id,
-         |  ${cosSql("p.qv", "a.x")} AS cos
+         |  ${cosineSql("p.qv", "a.x")} AS cos
          | FROM afull a JOIN probes p
          |  ON a.cell = p.cell AND a.vec_id <> p.query_id)
          |SELECT query_id, neighbor_id, rank, cos FROM (
@@ -433,7 +412,7 @@ object SimilarityQueries {
       s"""WITH q AS (SELECT vec_id AS query_id, embedding AS qv, label
          |  FROM embeddings WHERE vec_id < 16),
          |s AS (SELECT query_id, e.vec_id AS neighbor_id,
-         |  ${cosSql("qv", "e.embedding")} AS cos
+         |  ${cosineSql("qv", "e.embedding")} AS cos
          | FROM embeddings e JOIN q
          |  ON e.label = q.label AND e.vec_id <> q.query_id)
          |SELECT query_id, neighbor_id, rank, cos FROM (
@@ -590,14 +569,14 @@ object SimilarityQueries {
       // q_ann_knn (shared adaptive index — one training trajectory buys
       // search AND dedup), then the within-cell smaller-id cosine test
       // over the final full-corpus assignment haF. Cosine is the
-      // bit-exact cosSql mirror, so the 0.30 threshold cut agrees
+      // bit-exact cosineSql mirror, so the 0.30 threshold cut agrees
       // exactly; cells stay ~64 vectors by construction at any n.
       s"""WITH ${hierBuildCtes(iters = 5, dim = 64)},
          |d AS (
          | SELECT DISTINCT b.vec_id AS id
          | FROM haF a JOIN haF b
          |  ON a.cell = b.cell AND a.vec_id < b.vec_id
-         | WHERE ${cosSql("a.x", "b.x")} >= 0.30)
+         | WHERE ${cosineSql("a.x", "b.x")} >= 0.30)
          |SELECT a.vec_id, CAST(a.cell AS INT) AS cell,
          | a.vec_id IN (SELECT id FROM d) AS is_dup
          |FROM haF a""".stripMargin))

@@ -48,7 +48,7 @@ object SketchQueries {
         .withColumnRenamed("__item", "w")
       exact.join(est, "w")
     }, Some {
-      val toks = """regexp_split_to_array(trim(lower(text)), '\s+')"""
+      val toks = graft.functions.Text.tokensSql("text")
       val cellB = Sketch.cmsBucketSql("w", "r")
       val addrB = Sketch.cmsBucketSql("p.w", "d.r")
       s"""WITH t AS (SELECT unnest($toks) AS w FROM documents),

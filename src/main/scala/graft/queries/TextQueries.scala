@@ -90,7 +90,7 @@ object TextQueries {
   // DuckDB mirrors. Token split = regexp_split_to_array on trimmed lower
   // text; every double is produced by the same op sequence as the Spark
   // expression so the full-precision repr compare holds.
-  private val toks = """regexp_split_to_array(trim(lower(text)), '\s+')"""
+  private val toks = Text.tokensSql("text")
 
   private def hits(words: Seq[String]): String =
     s"""len(list_filter($toks, t -> t IN (${words.map(w => s"'$w'").mkString(",")})))"""
