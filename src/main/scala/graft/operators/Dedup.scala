@@ -759,7 +759,8 @@ object Dedup {
     // graph size (32 near-empty tasks per round at sf0.1; the CC
     // queries measured FASTER at 8 cores than 32). Derived from the
     // edge frame's size estimate instead; an unknown estimate falls
-    // back to the conf width. Fewer, fuller partitions also mean each
+    // back to `spark.sql.shuffle.partitions`, which every graft.Session
+    // sets to the core count. Fewer, fuller partitions also mean each
     // partition-local union-find sees MORE of every component, so the
     // loop converges in the same or fewer rounds — the output (the
     // converged min-label fixpoint) is partitioning-independent.

@@ -77,21 +77,17 @@ private[graft] object Frames {
     * estimate is file-size-based for scans, propagates through
     * projections/joins, and survives `localCheckpoint` (LogicalRDD
     * carries originStats); an unknown estimate saturates huge and
-    * falls back to the conf width — exactly today's behavior. At
-    * corpus scale bytes/advisory far exceeds any sane conf width, so
-    * the conf cap governs, as before. Costs one analysis+optimization
-    * pass of `df` (no job). */
+    * falls back to the cap, `spark.sql.shuffle.partitions` (every
+    * [[graft.Session]] sets it to the core count). At corpus scale
+    * bytes/advisory far exceeds any sane conf width, so the cap
+    * governs. Costs one analysis+optimization pass of `df` (no job). */
   def loopWidth(df: DataFrame): Int = {
     val conf = df.sparkSession.sessionState.conf
     val cap = math.max(1, conf.numShufflePartitions)
     val target = math.max(1L, conf.getConf(org.apache.spark.sql.internal
       .SQLConf.COALESCE_PARTITIONS_MIN_PARTITION_SIZE))
     val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    val w = ((bytes + target - 1) / target)
-      .min(BigInt(cap)).max(BigInt(1)).toInt
-    if (sys.env.contains("SPARK_GRAFT_WIDTH_DEBUG"))
-      System.err.println(s"[loopWidth] bytes=$bytes target=$target cap=$cap -> $w")
-    w
+    ((bytes + target - 1) / target).min(BigInt(cap)).max(BigInt(1)).toInt
   }
 
   /** Drop the blocks behind previously tracked checkpoint RDD ids.

@@ -91,6 +91,11 @@ def main():
         else:
             results[name] = f"OK rows={len(a)}"
 
+    # A query whose Spark side threw leaves no dump directory; it was
+    # never compared, so it must not count as a pass.
+    for name in oracles.keys() - set(names):
+        results[name] = "MISSING-SPARK-OUTPUT"
+
     ok = sum(1 for v in results.values() if v.startswith("OK"))
     for k, v in sorted(results.items()):
         print(f"{'PASS' if v.startswith('OK') else 'FAIL':4} {k}: {v}")
