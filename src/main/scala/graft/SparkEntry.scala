@@ -28,7 +28,7 @@ object SparkEntry {
     registry.map(q => q.name -> q.body).toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
+    * the same parquet tables; queries without an oracle are absent. */
   val oracleSql: Map[String, String] =
     registry.flatMap(q => q.oracle.map(q.name -> _)).toMap
 }

@@ -9,7 +9,7 @@ class ContractSpec extends SparkSpec {
     assert(orphans.isEmpty, s"oracles without queries: $orphans")
   }
 
-  test("query names are unique across the registry (no silent overwrite)") {
+  test("query names are unique across modules (no silent map overwrite)") {
     val names = SparkEntry.registry.map(_.name)
     val dups = names.groupBy(identity).filter(_._2.size > 1).keys
     assert(dups.isEmpty, s"duplicate query names: $dups")
