@@ -118,23 +118,17 @@ object Bench {
       gcBeans.forEach(b => t += math.max(0L, b.getCollectionTime))
       t
     }
-    // One full measurement of one query: clearCache + clear the
-    // process-level ANN index memos (so no cached/checkpointed state
-    // survives from one query's measurement into another's — the r7
-    // VERDICT flagged the memo as bench-flattering: without the clear,
-    // an index built during an EARLIER query's reps served every later
-    // q_ann_* row), settle rep (pays Janino compile + JIT at the
-    // TARGET SF — warming at a smaller fixture compiles different
-    // join-strategy codegen; for the index-backed queries the settle
-    // therefore pays the FULL index build, whose cost is disclosed per
-    // query via `settle_sec` in bench_reps.json), System.gc() (so
-    // compile garbage isn't billed to rep 1), then nReps timed reps.
-    // Timed reps still measure steady-state (probe) cost — the
-    // operator's documented build-once/probe-many economics — but the
-    // build now happens inside the same query's measurement window and
-    // its cost is recorded, not invisible. Per-rep GC delta rides
-    // alongside so a slow rep is attributable: gc_ms ≈ wall ⇒ heap
-    // pressure, gc_ms ≈ 0 ⇒ plan cost or steal.
+    // One full measurement of one query: clearCache and IndexCache.clear()
+    // (no cached or checkpointed state survives into another query's
+    // measurement: without the clear, an index built during an EARLIER
+    // query's reps served every later q_ann_* row); a settle rep at the
+    // TARGET SF (Janino compile + JIT — a smaller fixture compiles
+    // different join-strategy codegen — and, for index-backed queries,
+    // the FULL index build, disclosed per query as `settle_sec` in
+    // bench_reps.json); System.gc() (compile garbage is not billed to
+    // rep 1); then nReps timed reps of steady-state (probe) cost. Per-rep
+    // GC delta rides alongside so a slow rep is attributable: gc_ms ≈
+    // wall ⇒ heap pressure, gc_ms ≈ 0 ⇒ plan cost or steal.
     // Timed action: the noop sink, which evaluates every column of
     // every row. A count() lets the optimizer prune every column that
     // does not affect cardinality, and with it real work: q_triangles'
@@ -145,7 +139,7 @@ object Bench {
     def measure(name: String): (Seq[Double], Seq[Long]) = {
       val fn = SparkEntry.queries(name)
       spark.catalog.clearCache()
-      graft.operators.Similarity.clearIndexCaches()
+      graft.operators.IndexCache.clear()
       val s0 = System.nanoTime()
       try { consume(fn(spark, sfDir)) } catch { case _: Throwable => () }
       settleSec(name) = (System.nanoTime() - s0) / 1e9

@@ -629,8 +629,8 @@ object Dedup {
     * no transitive chaining). Returns (id, cell, is_dup).
     *
     * Takes a built [[graft.operators.Similarity.IvfIndex]]: the
-    * expensive k-means runs once per corpus (shared with the ANN
-    * queries via `cachedIvfIndex`) and `assigned` is already
+    * expensive k-means runs once per corpus (q_semantic_dedup shares
+    * q_ann_knn's index through [[IndexCache]]) and `assigned` is already
     * hash-partitioned by cell, so the within-cell self-join introduces
     * NO new exchange on either side. At 100 TB: size `nCells` ≈
     * √corpus so per-cell candidate lists grow as √corpus; the flag join

@@ -58,7 +58,8 @@ object Graph {
     // frame's partitioning is the one exchange AQE cannot coalesce
     // (explicit count) AND it pins every iteration's rank-side
     // exchange to the same width via the persisted co-partitioning.
-    val parts = Frames.loopWidth(edges)
+    val pairs = edges.select(col("src"), col("dst"))
+    val parts = Frames.loopWidth(pairs)
     // e0 is NOT staged in the cache: it feeds the plan twice (the
     // degree aggregate and the join's probe side), but both reads are
     // the SAME repartition exchange subtree, which Spark's
@@ -67,8 +68,7 @@ object Graph {
     // round-trip inside the job that materializes `e` (§1.2 fixed
     // cost; with the folded output rounding below, jobs 25 → 24 and
     // two cache round-trips gone per execution).
-    val e0 = edges.select(col("src"), col("dst"))
-      .repartition(parts, col("src"))
+    val e0 = pairs.repartition(parts, col("src"))
     val deg = e0.groupBy("src").agg(count(lit(1)).as("deg"))
     // out-degree is loop-invariant — join it into the edge set ONCE
     // (same src partitioning, so this is a no-exchange merge), not
@@ -224,9 +224,8 @@ object Graph {
                   maxHops: Int): DataFrame = {
     require(maxHops >= 0, "maxHops must be >= 0")
     // Scale-adaptive loop width — same rationale as [[pageRank]]'s.
-    val parts = Frames.loopWidth(edges)
-    val e = edges.select(col("src"), col("dst"))
-      .repartition(parts, col("src"))
+    val pairs = edges.select(col("src"), col("dst"))
+    val e = pairs.repartition(Frames.loopWidth(pairs), col("src"))
       .persist(StorageLevel.MEMORY_AND_DISK)
     var settled = sources.select(col("node")).distinct()
       .withColumn("dist", lit(0)).localCheckpoint(true)

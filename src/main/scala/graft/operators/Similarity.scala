@@ -125,29 +125,20 @@ object Similarity {
     * nearest centroid cell, plus the centroid table, both keyed by cell
     * POSITION (0..nCells-1, dense — positions, not k-means cluster ids,
     * so an empty training cluster can never desynchronize the
-    * assignment kernel from the probe table).
+    * assignment kernel from the probe table). Built once, probed many
+    * times; `assigned.write.partitionBy("cell")` would persist it.
     *
-    * `assigned` is hash-partitioned by cell and persisted: this is the
-    * artifact a 100 TB deployment builds once (or writes to storage —
-    * both members are plain DataFrames, `assigned.write.partitionBy
-    * ("cell").parquet(...)` round-trips it) and probes many times.
-    * Call [[release]] when done. */
-  /** `assigned` is an EAGER LOCAL CHECKPOINT (flat LogicalRDD), not a
-    * persist: a checkpointed frame has no CacheManager key, so (a) a
-    * later identical build can never plan-match onto a half-dropped
-    * InMemoryRelation (the repeat-execution storm class the r7 round
-    * fixed in pagerank/dedup), (b) an external
-    * `spark.catalog.clearCache()` cannot silently unpin the index
-    * behind its back (the old `ensurePinned` reload dance is gone),
-    * and (c) a query that uses the index leaves ZERO CacheManager
-    * entries behind. `pinned` carries the checkpoint-block RDD ids so
-    * [[release]] drops them promptly; an unreleased index's blocks are
-    * reclaimed by the ContextCleaner once the frame is unreachable. */
+    * `assigned` is hash-partitioned by cell and is an EAGER LOCAL
+    * CHECKPOINT, not a persist: with no CacheManager key, no later
+    * build can plan-match onto a half-dropped InMemoryRelation,
+    * `clearCache()` cannot unpin it, and a query using it leaves no
+    * CacheManager entry. [[release]] drops its blocks (the `pinned`
+    * RDD ids); else the ContextCleaner does once it is unreachable. */
   final case class IvfIndex(
       assigned: DataFrame,           // (neighbor_id, cv, cell)
       centroids: DataFrame,          // (cell, centroid), broadcast-small
       matrix: Array[Array[Double]],
-      pinned: Set[Int] = Set.empty) {
+      pinned: Set[Int] = Set.empty) extends IndexCache.Index {
     /** Per-cell member counts for the skew salt — fixed once the index
       * is built/appended, so they are computed at most once per index
       * instance (recomputing per probe call cost one extra Spark job
@@ -388,7 +379,8 @@ object Similarity {
     * or plan-literal state anywhere. */
   final case class HierIvfIndex(base: IvfIndex,
                                 superMatrix: Array[Array[Double]],
-                                cellToSuper: Array[Int]) {
+                                cellToSuper: Array[Int])
+      extends IndexCache.Index {
     def release(): Unit = base.release()
   }
 
@@ -570,24 +562,20 @@ object Similarity {
     * lives on the driver or in a plan literal. Train/assign/probe all
     * replay the literal path's arithmetic bit-for-bit (SimilaritySpec
     * equality law), so the two paths are one index family with two
-    * state layouts. */
-  /** Both state frames are EAGER LOCAL CHECKPOINTS (flat LogicalRDD
-    * plans), not persists: the build is a 5-iteration chain, and a
-    * persisted result's logical plan still nests every iteration —
-    * every later probe re-ran analysis/optimization/cache-lookup
-    * canonicalization over that whole plan, measured at 2–6 s of pure
-    * DRIVER time per action on a 32-row cell table (size-independent:
-    * the same constant at n=2000 and n=200000, ~15 s per kNN call in
-    * total). Checkpointing cuts per-probe planning to O(1), keeps the
-    * hash partitioning (cells by sup, assigned by cell — the pick and
-    * candidate joins still skip their exchange), and makes the frames
-    * immune to an external `clearCache()` (checkpoint blocks are not
-    * CacheManager entries). `pinned` carries the checkpoint RDD ids
-    * so [[release]] can drop the blocks promptly. */
+    * state layouts.
+    *
+    * Both state frames are EAGER LOCAL CHECKPOINTS, not persists: a
+    * persisted 5-iteration build still nests every iteration in its
+    * plan, and each later probe re-planned it (2–6 s of driver time
+    * per action, at any n). A checkpoint makes planning O(1), keeps
+    * the hash partitioning (the pick and candidate joins skip their
+    * exchange) and is immune to `clearCache()`. [[release]] drops the
+    * blocks (the `pinned` RDD ids). */
   final case class HierIvfTableIndex(assigned: DataFrame,
                                      cells: DataFrame,
                                      superMatrix: Array[Array[Double]],
-                                     pinned: Set[Int] = Set.empty) {
+                                     pinned: Set[Int] = Set.empty)
+      extends IndexCache.Index {
     /** (total rows, biggest cell) for the salt-engage check — fixed at
       * build time, memoized so repeated probes against one index pay
       * the 1-row aggregate once, not per call. O(1) driver state. */
@@ -639,9 +627,9 @@ object Similarity {
     * super-restricted assignment, same exact-decimal update — the
     * per-iteration map/assign/update are joins and aggregates instead
     * of driver arrays, and results are bit-identical to the literal
-    * trainer (equality law in SimilaritySpec). */
-  /** Returns the checkpointed cell table plus its checkpoint-block RDD
-    * ids (for the owning index's release()). */
+    * trainer (equality law in SimilaritySpec). Returns the checkpointed
+    * cell table plus its checkpoint-block RDD ids (for the owning
+    * index's release()). */
   private[graft] def trainHierCellsTable(sample: DataFrame, id: String,
                                          vec: String,
                                          superMatrix: Array[Array[Double]],
@@ -897,65 +885,13 @@ object Similarity {
       index.pinned ++ mergedIds)
   }
 
-  private val hierCache =
-    new java.util.concurrent.ConcurrentHashMap[String, HierIvfIndex]()
-
-  /** Release every memoized index (dropping its checkpoint blocks) and
-    * empty all five process-level memo maps. The bench harness calls
-    * this alongside `spark.catalog.clearCache()` before each query's
-    * measurement, so no index state survives from one query's
-    * measurement into another's: each query's untimed settle rep pays
-    * the FULL index build, and the build cost is disclosed per query
-    * in the bench artifact's settle timings. (Outside the bench the
-    * memos keep their documented build-once/probe-many economics.)
-    * All index state frames are local checkpoints — clearCache cannot
-    * touch them, and they leave zero CacheManager entries — so this
-    * is the one lever that resets them. */
-  def clearIndexCaches(): Unit = {
-    hierCache.values.forEach(_.release())
-    hierCache.clear()
-    hierTableCache.values.forEach(_.release())
-    hierTableCache.clear()
-    indexCache.values.forEach(_.release())
-    indexCache.clear()
-    ivfPqCache.values.forEach(_.release())
-    ivfPqCache.clear()
-    pqCache.values.forEach(_.release())
-    pqCache.clear()
-  }
-
-  /** Process-level cache of [[buildHierIvfIndex]] (the registry/bench
-    * path — the count + both cluster levels are bought once per
-    * corpus). Checkpoint-backed state needs no re-pin check: an
-    * external clearCache cannot unpin it. */
-  def cachedHierIvfIndex(corpus: => DataFrame, cacheKey: String,
-                         id: String, vec: String): HierIvfIndex =
-    hierCache.computeIfAbsent(s"$cacheKey|$id|$vec|hier",
-      _ => buildHierIvfIndex(corpus, id, vec))
-
-  private val hierTableCache =
-    new java.util.concurrent.ConcurrentHashMap[String, HierIvfTableIndex]()
-
-  /** Process-level cache of [[buildHierIvfTableIndex]] — the
-    * beyond-[[MaxLiteralCells]] registry path ([[graft.queries
-    * .SimilarityQueries]] `q_ann_knn_table`). No ensurePinned here ON
-    * PURPOSE: both state frames are local checkpoints, whose blocks an
-    * external `clearCache()` cannot drop (they are not CacheManager
-    * entries) — re-persisting them would just stack a redundant cache
-    * copy on every hit. */
-  def cachedHierIvfTableIndex(corpus: => DataFrame, cacheKey: String,
-                              id: String, vec: String): HierIvfTableIndex =
-    hierTableCache.computeIfAbsent(s"$cacheKey|$id|$vec|hiertable",
-      _ => buildHierIvfTableIndex(corpus, id, vec))
-
   /** One-shot convenience: build + probe + release. Prefer
     * [[buildIvfIndex]]/[[probeIvf]] whenever more than one probe batch
     * hits the same corpus — rebuilding the index per query inverts
-    * IVF's economics. `seed` is accepted for API stability but unused
-    * (the Lloyd build is deterministic). */
+    * IVF's economics. */
   def ivfTopK(corpus: DataFrame, queries: DataFrame,
               id: String, vec: String, k: Int,
-              nCells: Int = 16, nprobe: Int = 4, seed: Long = 42L): DataFrame = {
+              nCells: Int = 16, nprobe: Int = 4): DataFrame = {
     val index = buildIvfIndex(corpus, id, vec, nCells)
     val out = probeIvf(index, queries, id, vec, k, nprobe)
     // Materialize (eager checkpoint — no CacheManager entry for the
@@ -964,13 +900,6 @@ object Similarity {
     index.release()
     res
   }
-
-  /** Process-level index cache for repeated probes of the same corpus
-    * (the registry/bench path): build on first use, then every probe —
-    * including every timed bench rep — pays probe cost only, which is
-    * the economics IVF exists to buy. Keyed by (path, column, cells). */
-  private val indexCache =
-    new java.util.concurrent.ConcurrentHashMap[String, IvfIndex]()
 
   /** Symmetric per-vector int8 quantization: `scale = max|v|/127`,
     * `q_d = floor(v_d/scale + 0.5)` in [-127, 127]. At 100 TB this is
@@ -1020,20 +949,6 @@ object Similarity {
       .select(col("query_id"), col("neighbor_id"), col("rank"), col("dot"))
   }
 
-  def cachedIvfIndex(corpus: => DataFrame, cacheKey: String,
-                     id: String, vec: String, nCells: Int = 16): IvfIndex =
-    indexCache.computeIfAbsent(s"$cacheKey|$id|$vec|$nCells",
-      _ => buildIvfIndex(corpus, id, vec, nCells))
-
-  /** Cache of build-on-historic + [[appendToIndex]](delta) — the
-    * registry/bench path for the incremental-maintenance query. */
-  def cachedAppendedIndex(corpus: => DataFrame, delta: => DataFrame,
-                          cacheKey: String, id: String, vec: String,
-                          nCells: Int = 16): IvfIndex =
-    indexCache.computeIfAbsent(s"$cacheKey|$id|$vec|$nCells|incr",
-      _ => appendToIndex(buildIvfIndex(corpus, id, vec, nCells),
-        delta, id, vec))
-
   /** A built product-quantization (PQ) index: every corpus vector is
     * stored as `m` sub-codebook indices (bytes, carried as ints) — the
     * 100 TB ANN memory lever beyond int8: an m=8 code is 8 bytes where
@@ -1047,7 +962,8 @@ object Similarity {
   final case class PqIndex(codes: DataFrame,
                            codebooks: Array[Array[Array[Double]]],
                            m: Int, ksub: Int, ds: Int,
-                           pinned: Set[Int] = Set.empty) {
+                           pinned: Set[Int] = Set.empty)
+      extends IndexCache.Index {
     def release(): Unit = Frames.free(codes, pinned)
   }
 
@@ -1153,7 +1069,8 @@ object Similarity {
                               matrix: Array[Array[Double]],
                               codebooks: Array[Array[Array[Double]]],
                               m: Int, ksub: Int, ds: Int,
-                              pinned: Set[Int] = Set.empty) {
+                              pinned: Set[Int] = Set.empty)
+      extends IndexCache.Index {
     def release(): Unit = Frames.free(codes, pinned)
   }
 
@@ -1231,29 +1148,40 @@ object Similarity {
     topKByGroup(exact, k)
   }
 
-  private val ivfPqCache =
-    new java.util.concurrent.ConcurrentHashMap[String, IvfPqIndex]()
+  // The registry/bench entry points: each builder through the
+  // [[IndexCache]]. IVF-PQ composes the SHARED cached IVF cells and PQ
+  // codebooks (each built once per corpus), looked up first so that no
+  // lookup runs inside another.
+  def cachedIvfIndex(corpus: DataFrame, id: String, vec: String,
+                     nCells: Int = 16): IvfIndex =
+    IndexCache(s"ivf|$id|$vec|$nCells", corpus)(
+      buildIvfIndex(corpus, id, vec, nCells))
 
-  /** Process-level IVF-PQ cache, composed from the SHARED cached IVF
-    * and PQ component indexes (the cluster pass and the codebooks are
-    * each built once per corpus and reused by search, dedup, and this
-    * composition). */
-  def cachedIvfPqIndex(corpus: => DataFrame, cacheKey: String,
-                       id: String, vec: String, nCells: Int = 16,
-                       m: Int = 8, ksub: Int = 16): IvfPqIndex =
-    ivfPqCache.computeIfAbsent(s"$cacheKey|$id|$vec|$nCells|$m|$ksub",
-      _ => composeIvfPq(
-        cachedIvfIndex(corpus, cacheKey, id, vec, nCells),
-        cachedPqIndex(corpus, cacheKey, id, vec, m, ksub)))
+  def cachedAppendedIndex(corpus: DataFrame, delta: DataFrame, id: String,
+                          vec: String, nCells: Int = 16): IvfIndex =
+    IndexCache(s"appended|$id|$vec|$nCells", corpus, delta)(
+      appendToIndex(buildIvfIndex(corpus, id, vec, nCells), delta, id, vec))
 
-  private val pqCache =
-    new java.util.concurrent.ConcurrentHashMap[String, PqIndex]()
+  def cachedHierIvfIndex(corpus: DataFrame, id: String,
+                         vec: String): HierIvfIndex =
+    IndexCache(s"hier|$id|$vec", corpus)(buildHierIvfIndex(corpus, id, vec))
 
-  /** Process-level PQ index cache (build once, probe many — every
-    * timed bench rep pays encode-scan + re-rank cost only). */
-  def cachedPqIndex(corpus: => DataFrame, cacheKey: String,
-                    id: String, vec: String, m: Int = 8,
-                    ksub: Int = 16): PqIndex =
-    pqCache.computeIfAbsent(s"$cacheKey|$id|$vec|$m|$ksub",
-      _ => buildPqIndex(corpus, id, vec, m, ksub))
+  def cachedHierIvfTableIndex(corpus: DataFrame, id: String,
+                              vec: String): HierIvfTableIndex =
+    IndexCache(s"hiertable|$id|$vec", corpus)(
+      buildHierIvfTableIndex(corpus, id, vec))
+
+  def cachedPqIndex(corpus: DataFrame, id: String, vec: String,
+                    m: Int = 8, ksub: Int = 16): PqIndex =
+    IndexCache(s"pq|$id|$vec|$m|$ksub", corpus)(
+      buildPqIndex(corpus, id, vec, m, ksub))
+
+  def cachedIvfPqIndex(corpus: DataFrame, id: String, vec: String,
+                       nCells: Int = 16, m: Int = 8,
+                       ksub: Int = 16): IvfPqIndex = {
+    val ivf = cachedIvfIndex(corpus, id, vec, nCells)
+    val pq = cachedPqIndex(corpus, id, vec, m, ksub)
+    IndexCache(s"ivfpq|$id|$vec|$nCells|$m|$ksub", corpus)(
+      composeIvfPq(ivf, pq))
+  }
 }

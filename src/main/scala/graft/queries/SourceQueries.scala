@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.Tables
-import graft.sources.TextIO
+import graft.sources.{Scratch, TextIO}
 
 /** Source/sink round-trip queries — the §2.1 DataSource/DataSink surface.
   * Each query writes through a sink format and reads back before
@@ -17,8 +17,9 @@ object SourceQueries {
   private val ordersKeys = StructType(Seq(
     StructField("o_orderkey", LongType), StructField("o_custkey", LongType)))
 
+  /** A sink under the run's scratch root, one per (query, input dir). */
   private def tmp(dir: String, tag: String): String =
-    s"/tmp/graft_io_${tag}_${Integer.toHexString(dir.hashCode)}"
+    Scratch.path(s"io_${tag}_${Integer.toHexString(dir.hashCode)}")
 
   val specs: Seq[QuerySpec] = Seq(
 
@@ -178,7 +179,7 @@ object SourceQueries {
     // granularity.
     QuerySpec("q_hdf5_roundtrip", (s, dir) => {
       val fmt = "graft.sources.hdf5"
-      val path = s"mem:${tmp(dir, "h5")}"
+      val path = tmp(dir, "h5")
       Tables.load(s, dir, "nation")
         .select("n_nationkey", "n_name", "n_regionkey")
         .write.format(fmt).option("path", path).mode("overwrite").save()
@@ -212,7 +213,7 @@ object SourceQueries {
     // the byte round-trip.
     QuerySpec("q_hdf5_matrix", (s, dir) => {
       val fmt = "graft.sources.hdf5"
-      val path = s"mem:${tmp(dir, "h5mat")}"
+      val path = tmp(dir, "h5mat")
       Tables.load(s, dir, "embeddings")
         .select("vec_id", "label", "embedding")
         .write.format(fmt).option("path", path).mode("overwrite").save()

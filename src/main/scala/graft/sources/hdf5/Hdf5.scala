@@ -48,15 +48,14 @@ object Hdf5Store {
     * pruned columns are never read. */
   val opened = new TrieMap[String, Unit]()
 
-  /** Logical path → file. `mem:`-prefixed paths (spec fixtures and the
-    * registry's scratch containers) land in a tmpdir sandbox; anything
-    * else is a filesystem path as given. */
+  /** Logical path → file. `mem:`-prefixed paths (spec fixtures) land
+    * under the run's [[graft.sources.Scratch]] root; anything else is a
+    * filesystem path as given. */
   def resolve(path: String): java.io.File =
     if (path.startsWith("mem:")) {
       val safe = path.drop(4).replaceAll("[^A-Za-z0-9._-]", "_")
-      new java.io.File(
-        new java.io.File(System.getProperty("java.io.tmpdir"), "graft-hdf5"),
-        s"${safe}_${Integer.toHexString(path.hashCode)}.h5")
+      new java.io.File(graft.sources.Scratch.path(
+        s"${safe}_${Integer.toHexString(path.hashCode)}.h5"))
     } else new java.io.File(path)
 
   def put(path: String,

@@ -15,7 +15,7 @@ import graft.{Session, SparkEntry}
   * each rep's wall time to the Spark jobs it launched:
   * `runMain graft.tools.Probe <q1,q2,...> [sfDir] [reps] [--plans]`.
   *
-  * Per query the cache and the ANN index memos are cleared, so rep 0
+  * Per query the cache and the ANN IndexCache are cleared, so rep 0
   * pays codegen and any index build, as Bench's settle rep does. A rep
   * builds the query and writes it to the noop sink (the bench's timed
   * action); it prints wall time, rows and every job with its duration
@@ -65,7 +65,7 @@ object Probe {
     for (name <- names) {
       val fn = SparkEntry.queries(name)
       spark.catalog.clearCache()
-      graft.operators.Similarity.clearIndexCaches()
+      graft.operators.IndexCache.clear()
       for (i <- 0 until reps) {
         val group = s"probe $name rep$i"
         jobs.clear(); actions.clear()

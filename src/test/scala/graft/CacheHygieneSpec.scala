@@ -13,9 +13,9 @@ package graft
   *
   * The sweep runs EVERY registry query against the sf0.001 fixture —
   * the same builders the driver's gate executes — and asserts the
-  * CacheManager is empty after each. Process-level index memos hold
-  * checkpoint blocks, not cache entries, so they do not trip the law;
-  * they are released at the end so the suite leaves no pinned blocks.
+  * CacheManager is empty after each. The IndexCache holds checkpoint
+  * blocks, not cache entries, so it does not trip the law; it is
+  * cleared at the end so the suite leaves no pinned blocks.
   */
 class CacheHygieneSpec extends SparkSpec {
 
@@ -24,7 +24,7 @@ class CacheHygieneSpec extends SparkSpec {
   test("every registry query leaves zero CacheManager entries behind") {
     val cm = spark.sharedState.cacheManager
     spark.catalog.clearCache()
-    graft.operators.Similarity.clearIndexCaches()
+    graft.operators.IndexCache.clear()
     val leaked = scala.collection.mutable.ListBuffer[String]()
     for (name <- SparkEntry.queries.keys.toSeq.sorted) {
       SparkEntry.queries(name)(spark, dir).count()
@@ -33,7 +33,7 @@ class CacheHygieneSpec extends SparkSpec {
         spark.catalog.clearCache() // don't cascade one leak into all
       }
     }
-    graft.operators.Similarity.clearIndexCaches()
+    graft.operators.IndexCache.clear()
     assert(leaked.isEmpty,
       s"queries leaving CacheManager entries: ${leaked.mkString(", ")}")
   }

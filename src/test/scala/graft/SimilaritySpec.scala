@@ -1,7 +1,9 @@
 package graft
 
+import java.nio.file.{Files, Paths, StandardCopyOption}
+
 import org.apache.spark.sql.functions._
-import graft.operators.{Dedup, Similarity}
+import graft.operators.{Dedup, IndexCache, Similarity}
 
 /** ANN tests: brute-force exactness on a tiny golden set, IVF recall on
   * the embeddings fixture. */
@@ -530,5 +532,59 @@ class SimilaritySpec extends SparkSpec {
       assert(out.nonEmpty)
       assert(!out.exists(_.getLong(1) == 999L))
     } finally idx.release()
+  }
+
+  /** A private copy of the sf0.001 fixture, which a spec may rewrite. */
+  private def fixtureCopy(): String = {
+    val d = Files.createTempDirectory("graft_sim_")
+    Files.list(Paths.get("/root/testdata/sf0.001")).forEach(f =>
+      Files.copy(f, d.resolve(f.getFileName)))
+    d.toString
+  }
+
+  test("IndexCache rebuilds after the corpus is rewritten in place") {
+    val dir = fixtureCopy()
+    def annIvf() = SparkEntry.queries("q_ann_ivf")(spark, dir)
+      .collect().map(_.toSeq).toSet
+    IndexCache.clear()
+    val before = annIvf()
+    // Same path, different rows: every vector moves to the next id.
+    val staged = Files.createTempDirectory("graft_sim_rw").resolve("e")
+    Tables.load(spark, dir, "embeddings")
+      .withColumn("vec_id", (col("vec_id") + 1) % 500)
+      .coalesce(1).write.parquet(staged.toString)
+    val part = Files.list(staged).filter(_.toString.endsWith(".parquet"))
+      .findFirst().get
+    Files.move(part, Paths.get(dir, "embeddings.parquet"),
+      StandardCopyOption.REPLACE_EXISTING)
+    val after = annIvf()
+    IndexCache.clear()
+    val rebuilt = annIvf()
+    IndexCache.clear()
+    assert(rebuilt != before, "the rewrite must change the answer")
+    assert(after == rebuilt)
+  }
+
+  test("IndexCache gives two fresh reads of an unchanged corpus one index") {
+    def emb() = Tables.load(spark, "/root/testdata/sf0.001", "embeddings")
+    IndexCache.clear()
+    val a = Similarity.cachedIvfIndex(emb(), "vec_id", "embedding")
+    val b = Similarity.cachedIvfIndex(emb(), "vec_id", "embedding")
+    IndexCache.clear()
+    assert(a eq b)
+  }
+
+  test("IndexCache keeps q_ann_incr's index apart from q_ann_ivf's") {
+    val e = Tables.load(spark, "/root/testdata/sf0.001", "embeddings")
+    val historic = e.filter(col("vec_id") % 5 =!= 0)
+    IndexCache.clear()
+    val ivf = Similarity.cachedIvfIndex(e, "vec_id", "embedding")
+    val incr = Similarity.cachedAppendedIndex(historic,
+      e.filter(col("vec_id") % 5 === 0), "vec_id", "embedding")
+    // a filtered frame is an input of its own, under the same builder
+    val filtered = Similarity.cachedIvfIndex(historic, "vec_id", "embedding")
+    IndexCache.clear()
+    assert(!(incr eq ivf))
+    assert(!(filtered eq ivf))
   }
 }

@@ -223,4 +223,29 @@ class SourceSpec extends SparkSpec {
       .filter(col("_corrupt").isNotNull).select("a", "_corrupt").collect()
     assert(bad.map(_.getString(1)).toSet == Set("oops 20"))
   }
+
+  test("registry sinks write under the run's scratch root, not /tmp") {
+    import graft.sources.Scratch
+    val t0 = System.currentTimeMillis()
+    // two fresh input dirs (copies of sf0.001): no sink of theirs exists yet
+    def roundTrips(): Set[String] = {
+      val dir = Files.createTempDirectory("graft_src_")
+      Files.list(java.nio.file.Paths.get("/root/testdata/sf0.001"))
+        .forEach(f => Files.copy(f, dir.resolve(f.getFileName)))
+      val before = Scratch.root.toFile.list().toSet
+      // building a body runs its sinks; the read-back is not needed here
+      graft.queries.SourceQueries.specs.foreach(_.body(spark, dir.toString))
+      Scratch.root.toFile.list().toSet -- before
+    }
+    val a = roundTrips()
+    val b = roundTrips()
+    // each input gets its own sinks, all of them under the root
+    assert(a.nonEmpty && b.nonEmpty && (a intersect b).isEmpty)
+    val legacy = new java.io.File("/tmp").listFiles().filter(f =>
+      f.getName.startsWith("graft_io_") && f.lastModified() >= t0)
+    assert(legacy.isEmpty, legacy.mkString(", "))
+    // the delete the exit hook runs removes the root and all under it
+    Scratch.deleteRecursively(Scratch.root)
+    assert(!Files.exists(Scratch.root))
+  }
 }
