@@ -50,7 +50,7 @@ object Pca {
     val (sums, n) = sumsAndCount(df, vec, dim)
     val nD = n.toDouble
     val means = sums.map(_ / nD)
-    val meanLit = array(means.map(lit): _*)
+    val meanLit = array(means.toIndexedSeq.map(lit): _*)
     Gemm.gram(df, vec, dim, bs)
       .select(col("i"), col("j"),
         (col("val") / lit(nD) -

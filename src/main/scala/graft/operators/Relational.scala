@@ -155,7 +155,7 @@ final case class Table(df: DataFrame) {
                  outKey: String, factor: Int = 8): Table = {
     val lCols = df.columns
     val l = df.withColumn("__salt",
-      pmod(hash(lCols.map(col): _*), lit(factor))).alias("l")
+      pmod(hash(lCols.toIndexedSeq.map(col): _*), lit(factor))).alias("l")
     val r = other.df.withColumn("__salt",
       explode(sequence(lit(0), lit(factor - 1)))).alias("r")
     val joined = l.join(r,

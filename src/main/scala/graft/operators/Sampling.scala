@@ -386,7 +386,7 @@ object Sampling {
       math.log(ctByB(b).toDouble + 1.0) - math.log(crByB(b).toDouble + 1.0))
     val c0 = math.log(crByB.sum.toDouble + B.toDouble) -
       math.log(ctByB.sum.toDouble + B.toDouble)
-    val lrLit = array(lr.map(lit(_)): _*)
+    val lrLit = array(lr.toIndexedSeq.map(lit(_)): _*)
     // Per-doc sum over gram instances — unchanged decimal discipline
     // (order-free exact sum of the per-term doubles), one scan.
     cg.select(col(id), element_at(lrLit, col("b") + 1).as("lr"))

@@ -296,7 +296,7 @@ object Series {
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     u.withColumn("__m", last(col("__s"), ignoreNulls = true).over(w))
       .filter(col("__side") === 1)
-      .select(left.columns.map(col) ++
+      .select(left.columns.toIndexedSeq.map(col) ++
         fields.map(f => col(s"__m.$f").as(s"$prefix$f")): _*)
   }
 
@@ -344,7 +344,7 @@ object Series {
         expr(s"__rt DIV $delta") + 1)))
     l.join(r, l(key) === r("__rk") && l("__b") === r("__b") &&
         abs(col(time) - col("__rt")) <= delta)
-      .select(left.columns.map(col) ++
+      .select(left.columns.toIndexedSeq.map(col) ++
         payload.distinct.map(p => col(s"__p.$p").as(s"$prefix$p")): _*)
   }
 

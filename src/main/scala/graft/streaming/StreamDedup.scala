@@ -67,7 +67,7 @@ object StreamDedup {
               // which Spark rejects with IllegalArgumentException.
               val base = state.get.tsFirst / 1000L + horizonUs / 1000L
               state.setTimeoutTimestamp(
-                math.max(base, state.getCurrentWatermarkMs + 1L))
+                math.max(base, state.getCurrentWatermarkMs() + 1L))
             }
             out
           }

@@ -150,7 +150,7 @@ object StreamDrift {
             // forget the window once the watermark passes its end
             state.setTimeoutTimestamp(
               math.max(w.getTime + winMs,
-                state.getCurrentWatermarkMs + 1L))
+                state.getCurrentWatermarkMs() + 1L))
             Iterator.single(WinPsi(w, counts.sum, psiOf(counts, ref)))
           }
       }

@@ -44,7 +44,7 @@ object StreamJoin {
         l(key) === r("__rk") &&
           r("__rt") >= l("__lt") - expr(s"INTERVAL $deltaUs MICROSECOND") &&
           r("__rt") <= l("__lt") + expr(s"INTERVAL $deltaUs MICROSECOND"))
-      .select(leftCols.map(col) ++
+      .select(leftCols.toIndexedSeq.map(col) ++
         payload.distinct.map(c => col(s"__p_$c").as(s"$prefix$c")): _*)
   }
 

@@ -105,7 +105,7 @@ object StreamNearDup {
               // otherwise compute a timeout in the past).
               val base = st.lastTs / 1000L + horizonUs / 1000L
               state.setTimeoutTimestamp(
-                math.max(base, state.getCurrentWatermarkMs + 1L))
+                math.max(base, state.getCurrentWatermarkMs() + 1L))
             }
             out.result().iterator
           }

@@ -168,7 +168,7 @@ object ScaleAudit {
     * one codegen'd hash per row, paid alike at every scale, so it
     * cancels out of the between-point ratios. */
   private def force(df: DataFrame): Long =
-    df.select(xxhash64(struct(df.columns.map(col): _*)).as("__h"))
+    df.select(xxhash64(struct(df.columns.toIndexedSeq.map(col): _*)).as("__h"))
       .agg(count(lit(1)).as("n"), bit_xor(col("__h")))
       .head().getLong(0)
 

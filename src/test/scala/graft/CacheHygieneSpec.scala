@@ -11,29 +11,17 @@ package graft
   * key) and every staged persist must be released by its builder
   * before the operator returns.
   *
-  * The sweep runs EVERY registry query against the sf0.001 fixture —
-  * the same builders the driver's gate executes — and asserts the
-  * CacheManager is empty after each. The IndexCache holds checkpoint
-  * blocks, not cache entries, so it does not trip the law; it is
-  * cleared at the end so the suite leaves no pinned blocks.
+  * The check reads RegistrySweep, which runs EVERY registry query
+  * against the sf0.001 fixture — the same builders the driver's gate
+  * executes — and records whether the CacheManager is empty after each
+  * of the query's two full `collect()`s. The IndexCache holds
+  * checkpoint blocks, not cache entries, so it does not trip the law;
+  * the sweep clears it at the end so the suite leaves no pinned blocks.
   */
 class CacheHygieneSpec extends SparkSpec {
 
-  private val dir = "/root/testdata/sf0.001"
-
   test("every registry query leaves zero CacheManager entries behind") {
-    val cm = spark.sharedState.cacheManager
-    spark.catalog.clearCache()
-    graft.operators.IndexCache.clear()
-    val leaked = scala.collection.mutable.ListBuffer[String]()
-    for (name <- SparkEntry.queries.keys.toSeq.sorted) {
-      SparkEntry.queries(name)(spark, dir).count()
-      if (!cm.isEmpty) {
-        leaked += name
-        spark.catalog.clearCache() // don't cascade one leak into all
-      }
-    }
-    graft.operators.IndexCache.clear()
+    val leaked = RegistrySweep.completed.filter(_.leaked).map(_.name)
     assert(leaked.isEmpty,
       s"queries leaving CacheManager entries: ${leaked.mkString(", ")}")
   }

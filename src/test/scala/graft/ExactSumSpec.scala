@@ -15,7 +15,7 @@ class ExactSumSpec extends SparkSpec {
       .toDF("id", "x").repartition(parts)
     val dim = values.head.size
     val native = df.agg(exactVectorSum(col("x")).as("s"))
-      .head.getSeq[Double](0).toSeq
+      .head().getSeq[Double](0).toSeq
     val decimal = df
       .select(posexplode(col("x")).as(Seq("dim", "v")))
       .groupBy("dim")
@@ -52,7 +52,7 @@ class ExactSumSpec extends SparkSpec {
       .toDF("id", "x")
     def run(parts: Int) =
       df.repartition(parts).agg(exactVectorSum(col("x")))
-        .head.getSeq[Double](0).map(java.lang.Double.doubleToRawLongBits).toSeq
+        .head().getSeq[Double](0).map(java.lang.Double.doubleToRawLongBits).toSeq
     assert(run(1) == run(13))
   }
 
@@ -73,6 +73,6 @@ class ExactSumSpec extends SparkSpec {
 
   test("empty input evaluates to null like a decimal sum") {
     val df = Seq(Tuple1(Seq(1.0))).toDF("x").filter(lit(false))
-    assert(df.agg(exactVectorSum(col("x"))).head.isNullAt(0))
+    assert(df.agg(exactVectorSum(col("x"))).head().isNullAt(0))
   }
 }

@@ -24,7 +24,7 @@ class Hdf5Spec extends SparkSpec {
     val df = spark.read.format(fmt).option("path", "mem:t1").load()
     assert(df.schema.fieldNames.toSeq == Seq("userid", "val2"))
     assert(df.count() == 5)
-    assert(df.agg(sum("val2")).head.getDouble(0) == 11.5)
+    assert(df.agg(sum("val2")).head().getDouble(0) == 11.5)
     Hdf5Store.drop("mem:t1")
   }
 
@@ -35,7 +35,7 @@ class Hdf5Spec extends SparkSpec {
       "c" -> (DoubleType -> IndexedSeq[Any](0.1, 0.2, 0.3))))
     Hdf5Store.resetOpened()
     val got = spark.read.format(fmt).option("path", "mem:prune").load()
-      .select("a").agg(sum("a")).head.getLong(0)
+      .select("a").agg(sum("a")).head().getLong(0)
     assert(got == 6L)
     val opened = Hdf5Store.opened.keySet
     assert(opened.exists(_.endsWith("/a")))
@@ -88,7 +88,7 @@ class Hdf5Spec extends SparkSpec {
     assert(raw(8) == 0, "superblock version")
     assert(raw(13) == 8 && raw(14) == 8, "offset/length sizes")
     // reopen from the raw bytes alone (fresh path, zero process state)
-    val copy = java.io.File.createTempFile("graft_reopen", ".h5")
+    val copy = scratchDir("graft_reopen").resolve("f.h5").toFile
     java.nio.file.Files.write(copy.toPath, raw)
     val back = Hdf5Codec.readAll(copy)
     assert(back.map(_._1) == Seq("id", "label", "score"))
@@ -96,13 +96,12 @@ class Hdf5Spec extends SparkSpec {
     assert(back.find(_._1 == "label").get._2._2 ==
       (1 to 20).map(i => s"name$i"))
     assert(back.find(_._1 == "score").get._2._2 == (1 to 20).map(_ * 1.5))
-    copy.delete()
     Hdf5Store.drop("mem:bytes")
   }
 
   test("codec type coverage: long/int/double/float/bool/string round-trip") {
     import org.apache.spark.sql.types._
-    val f = java.io.File.createTempFile("graft_types", ".h5")
+    val f = scratchDir("graft_types").resolve("f.h5").toFile
     val cols: Seq[(String, (DataType, IndexedSeq[Any]))] = Seq(
       "b" -> (BooleanType -> IndexedSeq[Any](true, false, true)),
       "d" -> (DoubleType -> IndexedSeq[Any](1.5, -2.25, 0.0)),
@@ -116,12 +115,11 @@ class Hdf5Spec extends SparkSpec {
     // contiguous block semantics: range read == slice of full read
     assert(Hdf5Codec.readRange(f, "l", 1L, 3L) == IndexedSeq(0L, Long.MaxValue))
     assert(Hdf5Codec.readRange(f, "s", 1L, 2L) == IndexedSeq("héllo"))
-    f.delete()
   }
 
   test("rank-2 (matrix) datasets: row-major contiguous, slab range reads") {
     import org.apache.spark.sql.types._
-    val f = java.io.File.createTempFile("graft_mat", ".h5")
+    val f = scratchDir("graft_mat").resolve("f.h5").toFile
     val m = IndexedSeq[Any](Array(1.0, 2.0, 3.0), Array(4.0, 5.0, 6.0),
       Array(7.0, 8.0, 9.0))
     Hdf5Codec.write(f, Seq(
@@ -139,12 +137,11 @@ class Hdf5Spec extends SparkSpec {
     assert(slab == Seq(Seq(4.0, 5.0, 6.0), Seq(7.0, 8.0, 9.0)))
     // the scalar dataset beside it still reads rank-1
     assert(Hdf5Codec.readRange(f, "id", 0L, 3L) == IndexedSeq(1L, 2L, 3L))
-    f.delete()
   }
 
   test("codec rejects nulls and ragged columns with clear errors") {
     import org.apache.spark.sql.types._
-    val f = java.io.File.createTempFile("graft_bad", ".h5")
+    val f = scratchDir("graft_bad").resolve("f.h5").toFile
     val e1 = intercept[IllegalArgumentException] {
       Hdf5Codec.write(f, Seq("x" -> (LongType -> IndexedSeq[Any](1L, null))))
     }
@@ -155,6 +152,5 @@ class Hdf5Spec extends SparkSpec {
         "y" -> (LongType -> IndexedSeq[Any](1L, 2L))))
     }
     assert(e2.getMessage.contains("ragged"))
-    f.delete()
   }
 }

@@ -240,7 +240,7 @@ class MultimodalSpec extends SparkSpec {
     // literals gets constant-folded — which hides the kernel): the
     // only compute left in the plan should be the codegen'd
     // graft_phash64 expression
-    val dir = java.nio.file.Files.createTempDirectory("phash_plan").toString
+    val dir = scratchDir("phash_plan").toString
     Seq((1L, Multimodal.synthPng(1L)), (2L, Multimodal.synthPng(2L)))
       .toDF("media_id", "bytes").write.mode("overwrite").parquet(dir)
     val pre = spark.read.parquet(dir)

@@ -140,30 +140,15 @@ class PlanQualitySpec extends SparkSpec {
     // aggregates (label dictionaries, bin grids). Add a name here ONLY
     // with a doc comment proving the windowed input is bounded.
     val whitelist: Set[String] = Set()
-    val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-      case (name, fn) if !whitelist.contains(name) =>
-        val plan = fn(spark, sf).queryExecution.optimizedPlan
-        val bad = plan.collect {
-          case w: org.apache.spark.sql.catalyst.plans.logical.Window
-            if w.partitionSpec.isEmpty =>
-            val aggBelow = w.child.collectFirst {
-              case a: org.apache.spark.sql.catalyst.plans.logical.Aggregate => a
-            }
-            if (aggBelow.isEmpty) Some(name) else None
-        }.flatten
-        bad.headOption
-      case _ => None
-    }
+    val offenders = RegistrySweep.completed
+      .filter(r => r.globalWindowOverRawRows && !whitelist.contains(r.name))
+      .map(_.name)
     assert(offenders.isEmpty,
       s"unpartitioned windows over raw rows in: $offenders")
   }
 
   test("no query plans a cartesian product") {
-    val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-      case (name, fn) =>
-        val plan = fn(spark, sf).queryExecution.executedPlan.toString
-        if (plan.contains("CartesianProduct")) Some(name) else None
-    }
+    val offenders = RegistrySweep.completed.filter(_.cartesian).map(_.name)
     assert(offenders.isEmpty, s"cartesian products in: $offenders")
   }
 

@@ -152,7 +152,7 @@ class RelationalSpec extends SparkSpec {
   }
 
   test("checkpoint truncates lineage; Young's interval gates it (checkpoint.jl:179)") {
-    spark.sparkContext.setCheckpointDir("/tmp/graft_ckpt")
+    spark.sparkContext.setCheckpointDir(scratchDir("graft_ckpt").toString)
     // interval = sqrt(2 · cost · mttf)
     assert(math.abs(Table.youngInterval(0.5, 100.0) - 10.0) < 1e-9)
     // elapsed past the interval → checkpointed (lineage becomes an RDD scan)

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
@@ -28,7 +26,7 @@ class ScaleAuditSpec extends SparkSpec {
   }
 
   test("stream audit at 1,2 keeps the committed shape; events double") {
-    val work = Files.createTempDirectory("graft_scale_audit").toString
+    val work = scratchDir("graft_scale_audit").toString
     val got = json.readTree(ScaleAudit.run(spark, "stream",
       "/root/testdata/sf0.001", work, Seq(1, 2)))
     val committed = json.readTree(new java.io.File("bench_stream_scale.json"))
@@ -44,7 +42,7 @@ class ScaleAuditSpec extends SparkSpec {
   }
 
   test("ann names the missing embeddings set instead of generating one") {
-    val work = Files.createTempDirectory("graft_scale_audit_ann").toString
+    val work = scratchDir("graft_scale_audit_ann").toString
     val e = intercept[RuntimeException](ScaleAudit.run(spark, "ann",
       "/root/testdata/sf0.001", work, Seq(1)))
     assert(e.getMessage.contains(s"$work/x1/embeddings.parquet"))

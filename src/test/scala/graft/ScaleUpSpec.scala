@@ -11,8 +11,7 @@ class ScaleUpSpec extends SparkSpec {
 
   test("2x scale-up preserves structure and shifts keys disjointly") {
     val src = "/root/testdata/sf0.001"
-    val dst = java.nio.file.Files
-      .createTempDirectory("graft_scaleup").toString
+    val dst = scratchDir("graft_scaleup").toString
     graft.tools.ScaleUp.run(spark, src, dst, 2)
 
     // dimensions fixed, fact tables doubled
@@ -25,7 +24,7 @@ class ScaleUpSpec extends SparkSpec {
 
     // shifted primary keys never collide across copies
     val o = spark.read.parquet(s"$dst/orders.parquet")
-    assert(o.select(countDistinct(col("o_orderkey"))).head.getLong(0)
+    assert(o.select(countDistinct(col("o_orderkey"))).head().getLong(0)
       == o.count())
 
     // join fan-out is preserved: every scaled lineitem still finds its

@@ -115,7 +115,7 @@ class SimilaritySpec extends SparkSpec {
     // encode once, persist the m-byte codes, probe from storage. The
     // codebooks are KiB-scale driver state — stored as one parquet row
     // of nested arrays.
-    val dir = java.nio.file.Files.createTempDirectory("graft_pq").toString
+    val dir = scratchDir("graft_pq").toString
     val e = Tables.load(spark, "/root/testdata/sf0.001", "embeddings")
     val q = e.filter(col("vec_id") < 4)
     val built = Similarity.buildPqIndex(e, "vec_id", "embedding",
@@ -144,7 +144,7 @@ class SimilaritySpec extends SparkSpec {
     // The 100 TB contract: build once, write the index, probe many
     // times from storage. assigned is partitioned by cell on disk so a
     // probe reads only its cells' files.
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivf").toString
+    val dir = scratchDir("graft_ivf").toString
     val e = Tables.load(spark, "/root/testdata/sf0.001", "embeddings")
     val q = e.filter(col("vec_id") < 8)
     val built = Similarity.buildIvfIndex(e, "vec_id", "embedding", nCells = 8)
@@ -536,7 +536,7 @@ class SimilaritySpec extends SparkSpec {
 
   /** A private copy of the sf0.001 fixture, which a spec may rewrite. */
   private def fixtureCopy(): String = {
-    val d = Files.createTempDirectory("graft_sim_")
+    val d = scratchDir("graft_sim_")
     Files.list(Paths.get("/root/testdata/sf0.001")).forEach(f =>
       Files.copy(f, d.resolve(f.getFileName)))
     d.toString
@@ -549,7 +549,7 @@ class SimilaritySpec extends SparkSpec {
     IndexCache.clear()
     val before = annIvf()
     // Same path, different rows: every vector moves to the next id.
-    val staged = Files.createTempDirectory("graft_sim_rw").resolve("e")
+    val staged = scratchDir("graft_sim_rw").resolve("e")
     Tables.load(spark, dir, "embeddings")
       .withColumn("vec_id", (col("vec_id") + 1) % 500)
       .coalesce(1).write.parquet(staged.toString)

@@ -12,7 +12,7 @@ import graft.sources.TextIO
 class SourceSpec extends SparkSpec {
 
   private def tmpDir(tag: String): String =
-    Files.createTempDirectory(s"graft_$tag").toString + "/out"
+    scratchDir(s"graft_$tag").toString + "/out"
 
   test("delimited text round-trip preserves longs and strings") {
     import spark.implicits._
@@ -192,7 +192,7 @@ class SourceSpec extends SparkSpec {
 
   test("permissive delimited read quarantines malformed rows, keeps partials") {
     import org.apache.spark.sql.types._
-    val dir = java.nio.file.Files.createTempDirectory("graft_badcsv")
+    val dir = scratchDir("graft_badcsv")
     java.nio.file.Files.write(dir.resolve("data.csv"),
       Seq(
         "1 10",        // clean
@@ -229,7 +229,7 @@ class SourceSpec extends SparkSpec {
     val t0 = System.currentTimeMillis()
     // two fresh input dirs (copies of sf0.001): no sink of theirs exists yet
     def roundTrips(): Set[String] = {
-      val dir = Files.createTempDirectory("graft_src_")
+      val dir = scratchDir("graft_src_")
       Files.list(java.nio.file.Paths.get("/root/testdata/sf0.001"))
         .forEach(f => Files.copy(f, dir.resolve(f.getFileName)))
       val before = Scratch.root.toFile.list().toSet

@@ -1,18 +1,27 @@
 package graft
 
+import java.nio.file.{Files, Path}
+
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.sources.Scratch
 
 /** Shared single session per JVM (suites run in one forked JVM). */
 object TestSpark {
   /** Fixed at 4 cores: specs must not follow `SPARK_GRAFT_CPUS`. */
   lazy val spark: SparkSession = Session(4, Map(
     "spark.app.name" -> "graft-test",
-    "spark.sql.warehouse.dir" -> "/tmp/graft_test_warehouse"))
+    "spark.sql.warehouse.dir" -> Scratch.path("warehouse")))
 }
 
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
+
+  /** A fresh directory under the run's scratch root, deleted with it
+    * when the JVM exits; the root is remade if a spec deleted it. */
+  def scratchDir(prefix: String): Path =
+    Files.createTempDirectory(Files.createDirectories(Scratch.root), prefix)
 
   /** Run `body` with the given session confs set, restoring each
     * previous value (or unsetting it) afterwards — the session is

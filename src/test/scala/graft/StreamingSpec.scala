@@ -70,7 +70,7 @@ class StreamingSpec extends SparkSpec {
 
   test("file-source stream: readStream over a growing parquet directory") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream").toString
+    val dir = scratchDir("graft_stream").toString
     val mins = 60L * 1000000L
     Seq(("click", 5 * mins, 1.0), ("view", 10 * mins, 2.0))
       .toDF("event_type", "ts_us", "value")
@@ -547,7 +547,7 @@ class StreamingSpec extends SparkSpec {
   test("upsertStream folds CDC micro-batches into a parquet table") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_cdc").toString
+    val dir = scratchDir("graft_cdc").toString
     val path = s"$dir/table"
     val ckpt = s"$dir/ckpt"
     // seed snapshot

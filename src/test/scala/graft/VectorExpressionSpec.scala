@@ -167,7 +167,7 @@ class VectorExpressionSpec extends SparkSpec {
       .limit(200)
       .select(col("embedding").cast("array<double>").as("x"))
     val w = Array.tabulate(dim)(d => math.cos(0.3 * d) - 0.4)
-    val wCol = array(w.map(lit): _*)
+    val wCol = array(w.toIndexedSeq.map(lit): _*)
     val unrolled = (0 until dim)
       .map(j => element_at(col("x"), j + 1) * element_at(wCol, j + 1))
       .reduce(_ + _)

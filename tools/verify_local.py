@@ -33,7 +33,7 @@ def canon(df: pd.DataFrame) -> pd.DataFrame:
         if hasattr(v, "tolist"):  # numpy arrays / lists
             return str(v.tolist())
         return str(v)
-    out = df.applymap(norm)
+    out = df.map(norm)
     return out.sort_values(by=list(out.columns)).reset_index(drop=True)
 
 
