@@ -3,12 +3,13 @@ package graft.functions
 import java.math.{BigDecimal => JBigDecimal, BigInteger, RoundingMode}
 import java.nio.ByteBuffer
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 
@@ -185,4 +186,34 @@ object ExactSumFunctions {
     * `array<double>` column; result `array<double>`. */
   def exactVectorSum(arr: Column): Column =
     Bridge.column(VectorExactSum(Bridge.expression(arr)).toAggregateExpression())
+
+  /** [[exactVectorSum]] of a one-column `array<double>` frame, plus its
+    * row count, as ONE job with no exchange: each partition folds its
+    * rows into one [[FixedPointVec]], only the 128-bit limbs and the
+    * count return, and the driver merges them. The sum is bit-identical
+    * to the aggregate's (exact, so order-free; a null array adds
+    * nothing; null when no array is non-null). The count covers every
+    * row, null arrays included, as `count()` does. The job runs under
+    * its own SQL execution id, so listeners see it as a query. */
+  def foldExactVectorSum(df: DataFrame): (Array[Double], Long) = {
+    require(df.schema.map(_.dataType) match {
+      case Seq(ArrayType(DoubleType, _)) => true
+      case _ => false
+    }, s"one array<double> column expected, got ${df.schema.simpleString}")
+    val qe = df.queryExecution
+    val parts = SQLExecution.withNewExecutionId(qe, Some("foldExactVectorSum")) {
+      qe.toRdd.mapPartitions { rows =>
+        val acc = new FixedPointVec
+        var n = 0L
+        rows.foreach { r =>
+          n += 1
+          if (!r.isNullAt(0)) acc.add(r.getArray(0).toDoubleArray())
+        }
+        Iterator.single((acc.toBytes, n))
+      }.collect()
+    }
+    val acc = new FixedPointVec
+    parts.foreach { case (bytes, _) => acc.merge(FixedPointVec.fromBytes(bytes)) }
+    (if (acc.dim < 0) null else acc.toDoubles, parts.map(_._2).sum)
+  }
 }

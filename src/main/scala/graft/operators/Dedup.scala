@@ -1013,8 +1013,8 @@ object Dedup {
         posexplode(Text.shinglesOfTokens(col("__toks"), k))
           .as(Seq("pos", "g")))
       .select(col(id), col("pos"), xxhash64(col("g")).as("h"))
-    // Renamed join keys (dh/ch) sidestep self-join ambiguity: dupStats
-    // and canonPos both derive from `grams`.
+    // Renamed join keys (dh/ch/rid) sidestep self-join ambiguity: every
+    // frame joined here derives from `toks`.
     val dupStats = grams.groupBy(col("h"))
       .agg(count(lit(1)).as("tot"), min(col(id)).as("cd"))
       .filter(col("tot") >= 2)
@@ -1027,12 +1027,11 @@ object Dedup {
       .join(dupStats, col("h") === col("dh")).drop("dh")
       .join(canonPos, col("h") === col("ch")).drop("ch")
       .filter(!(col(id) === col("cd") && col("pos") === col("cp")))
-      .select(col(id),
+      .select(col(id).as("rid"),
         explode(sequence(col("pos"), col("pos") + lit(k - 1))).as("rp"))
       .distinct()
     val kept = tokPos.join(removedPos,
-      tokPos(id) === removedPos(id) && col("pos") === col("rp"),
-      "left_anti")
+      col(id) === col("rid") && col("pos") === col("rp"), "left_anti")
     val rebuilt = kept.groupBy(col(id))
       .agg(count(lit(1)).as("n_kept"),
         array_join(transform(

@@ -92,11 +92,11 @@ object Lm {
     * trick with an engine-portable hash, so the DuckDB oracle builds
     * bit-identical features. Featurization is pure scan-stage HOF
     * work (no shuffle); training is [[ML.logisticRegression]]'s
-    * exact-decimal allreduce-per-iteration loop (one partial/final
-    * aggregate per iteration, O(dim) to the driver); scoring bakes the
-    * learned weights back as literals — one more scan, margin summed
-    * in fixed index order, so the whole train+score run is
-    * deterministic and engine-exact to 6 dp.
+    * exact-decimal allreduce-per-iteration loop (one per-partition
+    * fold job per iteration, O(dim) to the driver); scoring bakes the
+    * learned weights back as one array literal — one more scan, the
+    * margin the same `graft_dot` kernel in fixed index order, so the
+    * whole train+score run is deterministic and engine-exact to 6 dp.
     *
     * Returns (id, score, keep) for every input document. */
   def qualityClassifier(docs: DataFrame, id: String, text: String,
@@ -121,9 +121,7 @@ object Lm {
               / size(col("__bk")).cast("double"))).as("x"))
     val w = ML.logisticRegression(feats, "x", "y", dim, iters, lr)
       .head().getSeq[Double](0)
-    val margin = (0 until dim)
-      .map(j => element_at(col("x"), j + 1) * lit(w(j)))
-      .reduce(_ + _)
+    val margin = graft.functions.VectorFunctions.dot(col("x"), typedLit(w.toArray))
     val score = lit(1.0) / (lit(1.0) + exp(-margin))
     feats.select(col(id), round(score, 6).as("score"),
       (score >= 0.5).cast("int").as("keep"))

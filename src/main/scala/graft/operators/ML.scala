@@ -261,55 +261,42 @@ object ML {
 
   /** The reference's flagship iterative pattern
     * (examples/logistic_regression.jl:35-47): batch gradient descent,
-    * w replicated, one gradient-reduce per iteration. Here: features
-    * stay an array column; the per-component gradient is D codegen'd
-    * `sum` aggregates (Spark's treeAggregate ≈ HPAT's MPI_Allreduce);
-    * w returns to the driver each step and re-enters the plan as a
-    * literal (≈ broadcast). Returns final weights as one row. */
+    * w replicated, one gradient allreduce per iteration. Here: the
+    * (x, y) rows are cached once, spread over the cores; each step is
+    * ONE job that folds the gradient exactly inside every partition
+    * ([[graft.functions.ExactSumFunctions.foldExactVectorSum]]) and
+    * returns only the merged fixed-point sums (≈ MPI_Allreduce); w
+    * re-enters the next step's plan as an array literal (≈ broadcast).
+    * The row count rides on each fold, so no `count()` job runs.
+    * Returns final weights as one row. */
   def logisticRegression(df: DataFrame, features: String, label: String,
                          dim: Int, iters: Int, lr: Double): DataFrame = {
     val spark = df.sparkSession
-    val data = df.select(col(features).cast("array<double>").as("x"),
-      col(label).cast("double").as("y"))
+    val data = Frames.spread(df.select(
+        col(features).cast("array<double>").as("x"),
+        col(label).cast("double").as("y")))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     var w = Array.fill(dim)(0.0)
-    val n = data.count().toDouble
     for (_ <- 1 to iters) {
-      // One codegen'd partial/final aggregate per iteration — the
-      // reference's allreduce-per-iteration shape (SURVEY §3 entry
-      // point 2). Weights ride in a broadcast one-row table rather than
-      // as literals: the generated code is then IDENTICAL across
-      // iterations (only the broadcast data changes), so Janino
-      // compiles the loop body once, not `iters` times. Margin and
-      // error are plain arithmetic (no interpreted HOF lambdas);
-      // `err` is staged so the D gradient sums share one value.
-      val wDf = spark.createDataFrame(Seq(Tuple1(w.toSeq))).toDF("__w")
       // Margin and gradient scaling are the native vector kernels
-      // (graft_dot / graft_scale): the earlier unrolled
-      // element_at-chains were bit-identical but ~2·dim expression
-      // nodes each, and Catalyst re-analyzed/optimized those ~190-node
-      // trees EVERY iteration (~0.27 s/iter of driver time at dim=64,
-      // independent of data size). The kernels keep the tree O(1) —
-      // same IEEE per-row arithmetic (index-order loop, 0.0 seed ≡
-      // the left-associated chain), so the descent trajectory and the
-      // oracle compare are unchanged.
-      val margin = graft.functions.VectorFunctions.dot(col("x"), col("__w"))
-      val err = (lit(1.0) / (lit(1.0) + exp(-margin)) - col("y")).as("err")
+      // (graft_dot / graft_scale): an index-order loop from a 0.0 seed,
+      // the same IEEE per-row arithmetic as the left-associated
+      // element_at chain the oracle mirrors, in an O(1) expression
+      // tree. Spark's Exp is StrictMath.exp, so the sigmoid is the same
+      // on every JVM. The array literal is a codegen reference object:
+      // the generated code is identical every step and compiles once.
+      val margin = graft.functions.VectorFunctions.dot(col("x"), typedLit(w))
+      val err = lit(1.0) / (lit(1.0) + exp(-margin)) - col("y")
       // Per-row products stay double (deterministic per row); the
-      // cross-row sum is exact decimal so the gradient — and therefore
-      // the whole descent trajectory — is independent of partition
-      // order and engine summation order (oracle-checkable). One
-      // native whole-vector exact sum replaces D separate
-      // Decimal-buffered aggregates (same per-element rounding, same
-      // result bits — ExactSumSpec).
-      val grad = data.crossJoin(broadcast(wDf))
-        .select(col("x"), err)
-        .select(graft.functions.VectorFunctions
-          .scale(col("x"), col("err")).as("p"))
-        .agg(graft.functions.ExactSumFunctions.exactVectorSum(col("p"))
-          .as("grad"))
-        .head().getSeq[Double](0)
-      w = w.zip(grad).map { case (wi, gi) => wi - lr * gi / n }
+      // cross-row sum is exact decimal, so the gradient — and the whole
+      // descent trajectory — is independent of partitioning and of
+      // summation order (oracle-checkable). `n` counts every row, as
+      // `count()` does.
+      val (grad, n) = graft.functions.ExactSumFunctions.foldExactVectorSum(
+        data.select(graft.functions.VectorFunctions.scale(col("x"), err)))
+      // a step with no complete row has no gradient and leaves w as is
+      if (grad != null)
+        w = w.zip(grad).map { case (wi, gi) => wi - lr * gi / n.toDouble }
     }
     data.unpersist(true)
     spark.createDataFrame(Seq(Tuple1(w.toSeq))).toDF("weights")

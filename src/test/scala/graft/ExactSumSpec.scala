@@ -1,8 +1,10 @@
 package graft
 
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DoubleType, StructField, StructType}
 
-import graft.functions.ExactSumFunctions.exactVectorSum
+import graft.functions.ExactSumFunctions.{exactVectorSum, foldExactVectorSum}
 
 /** VectorExactSum must be indistinguishable from the decimal-cast form
   * `sum(cast(v as decimal(27,18)))` per dimension — the contract that
@@ -74,5 +76,28 @@ class ExactSumSpec extends SparkSpec {
   test("empty input evaluates to null like a decimal sum") {
     val df = Seq(Tuple1(Seq(1.0))).toDF("x").filter(lit(false))
     assert(df.agg(exactVectorSum(col("x"))).head().isNullAt(0))
+  }
+
+  test("per-partition fold matches the aggregate bit-exactly, counts every row") {
+    val rnd = new scala.util.Random(11)
+    val rows = Seq.fill(400)(Row(Seq.fill(6)(rnd.nextGaussian() * 1e3))) :+
+      Row(null)
+    val schema = StructType(Seq(StructField("x", ArrayType(DoubleType))))
+    def frame(rs: Seq[Row], parts: Int) =
+      spark.createDataFrame(spark.sparkContext.parallelize(rs, parts), schema)
+    def bits(v: Seq[Double]) = v.map(java.lang.Double.doubleToRawLongBits)
+    Seq(1, 3, 8).foreach { parts =>
+      // `parts` filled partitions plus one empty one
+      val df = frame(rows, parts).union(frame(Nil, 1))
+      assert(df.rdd.getNumPartitions == parts + 1)
+      val agg = df.agg(exactVectorSum(col("x"))).head().getSeq[Double](0)
+      val (fold, n) = foldExactVectorSum(df)
+      assert(n == rows.size, s"$parts partitions")
+      assert(bits(fold.toSeq) == bits(agg), s"$parts partitions")
+    }
+    // no non-null array: a null sum, as the aggregate gives, but the
+    // null row still counts
+    val (none, n) = foldExactVectorSum(frame(Seq(Row(null)), 2))
+    assert(none == null && n == 1)
   }
 }

@@ -131,4 +131,24 @@ class MLSpec extends SparkSpec {
       .head().getSeq[Double](0)
     assert(w(0) > 0.5, s"w=$w should point toward the positive class")
   }
+
+  test("logisticRegression descent is bit-pinned for any input partitioning") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(20261019)
+    val rows = Seq.fill(300) {
+      val x = Seq.fill(8)(rnd.nextGaussian())
+      (x, if (x(0) - 0.5 * x(3) + 0.3 * rnd.nextGaussian() > 0) 1.0 else 0.0)
+    }
+    val df = rows.toDF("x", "y")
+    def bits(parts: Int): Seq[String] =
+      ML.logisticRegression(df.repartition(parts), "x", "y", dim = 8,
+        iters = 5, lr = 0.5).head().getSeq[Double](0)
+        .map(d => java.lang.Long.toHexString(java.lang.Double.doubleToRawLongBits(d)))
+    // raw weight bits, recorded from the earlier loop that ran one
+    // exact-sum aggregate per step
+    val pinned = Seq("3fe7387de6c95baf", "3fab8beb88c2a3e5", "3f9655ceaf8321df",
+      "bfcfa074bb70bf1b", "bf8a9d88a247a09b", "bfb94807c0a481bc",
+      "3fa397ab78e0f6e0", "bfac67edf4b10df2")
+    Seq(1, 3, 8).foreach(p => assert(bits(p) == pinned, s"$p partitions"))
+  }
 }

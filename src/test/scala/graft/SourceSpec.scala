@@ -244,8 +244,17 @@ class SourceSpec extends SparkSpec {
     val legacy = new java.io.File("/tmp").listFiles().filter(f =>
       f.getName.startsWith("graft_io_") && f.lastModified() >= t0)
     assert(legacy.isEmpty, legacy.mkString(", "))
-    // the delete the exit hook runs removes the root and all under it
-    Scratch.deleteRecursively(Scratch.root)
-    assert(!Files.exists(Scratch.root))
+    // the delete the exit hook runs removes a tree and all under it,
+    // without following a symlink out of it (on a private tree: the
+    // shared root must outlive this suite)
+    val tree = scratchDir("graft_del_")
+    val outside = scratchDir("graft_keep_")
+    Files.write(outside.resolve("kept"), Array[Byte](1))
+    Files.write(Files.createDirectories(tree.resolve("a/b")).resolve("f"),
+      Array[Byte](2))
+    Files.createSymbolicLink(tree.resolve("a/link"), outside)
+    Scratch.deleteRecursively(tree)
+    assert(!Files.exists(tree))
+    assert(Files.exists(outside.resolve("kept")))
   }
 }

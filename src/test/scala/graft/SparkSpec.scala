@@ -19,9 +19,9 @@ abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
 
   /** A fresh directory under the run's scratch root, deleted with it
-    * when the JVM exits; the root is remade if a spec deleted it. */
+    * when the JVM exits. */
   def scratchDir(prefix: String): Path =
-    Files.createTempDirectory(Files.createDirectories(Scratch.root), prefix)
+    Files.createTempDirectory(Scratch.root, prefix)
 
   /** Run `body` with the given session confs set, restoring each
     * previous value (or unsetting it) afterwards — the session is
