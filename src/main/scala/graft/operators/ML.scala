@@ -3,17 +3,21 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** ML kernel bridge — the reference's library surface re-expressed on
-  * spark.ml plus closed-form / iterative dataflow variants.
+import graft.functions.ExactSumFunctions.exactVectorSum
+
+/** ML kernels — one engine-native implementation per reference call.
   *
   * Reference surface (/root/reference/src/api.jl:6,32-55):
   * `Kmeans(points, k, iters)`, `LinearRegression(points, responses)`,
   * `NaiveBayes(points, responses, classes)`; DistributedPass swaps in
   * Intel DAAL distributed kernels (partial results gathered to rank 0,
   * model broadcast back — src/cgen-hpat-pattern-match-daal.jl:28-471).
-  * spark.ml's implementations have the same partial/merge topology
-  * (treeAggregate of sufficient statistics → driver solve → broadcast),
-  * so the bridge is a thin feature-column adapter.
+  * Each kernel here has that topology as plain DataFrame plans:
+  * [[kmeansLloyd]], [[olsExact]] and [[naiveBayes]] fold exact-decimal
+  * partials in one aggregate, the driver finalizes the k·dim (or five)
+  * numbers, and the model re-enters the next plan as literals. The
+  * exact sums make every fit independent of partitioning and summation
+  * order, so each has a DuckDB oracle.
   *
   * `transposeHcat` replaces the reference's `__hpat_transpose_hcat`
   * fusion (src/domain-pass.jl:590-617): instead of materializing a D×N
@@ -27,31 +31,6 @@ object ML {
     * test/tables_transpose_hcat.jl:20). */
   def transposeHcat(df: DataFrame, cols: Seq[String], out: String): DataFrame =
     df.withColumn(out, array(cols.map(c => col(c).cast("double")): _*))
-
-  private def toVec(arr: Column): Column =
-    org.apache.spark.ml.functions.array_to_vector(arr.cast("array<double>"))
-
-  /** `Kmeans(points, k, iters)` → (cluster, size, centroid). Seeded and
-    * deterministic for a fixed input. */
-  def kmeans(df: DataFrame, features: String, k: Int, iters: Int,
-             seed: Long = 42L): DataFrame = {
-    val spark = df.sparkSession
-    val fv = df.withColumn("__fv", toVec(col(features)))
-    // Random init: the reference's DAAL bridge seeds from the first
-    // local rows (no k-means|| equivalent), and the parallel init alone
-    // schedules more jobs than `iters` lloyd steps.
-    val model = new org.apache.spark.ml.clustering.KMeans()
-      .setK(k).setMaxIter(iters).setSeed(seed).setInitMode("random")
-      .setFeaturesCol("__fv")
-      .fit(fv)
-    val sizes = model.transform(fv)
-      .groupBy(col(model.getPredictionCol).as("cluster"))
-      .agg(count(lit(1)).as("size"))
-    val centroids = spark.createDataFrame(
-      model.clusterCenters.zipWithIndex.toSeq
-        .map { case (c, i) => (i, c.toArray) }).toDF("cluster", "centroid")
-    sizes.join(centroids, "cluster")
-  }
 
   /** Engine-native distributed Lloyd k-means — the same partial/merge
     * topology the reference's DAAL bridge generates (local partials →
@@ -101,7 +80,7 @@ object ML {
       // row per cell per partition.
       val sums = assigned(centroids)
         .groupBy(col("cell"))
-        .agg(graft.functions.ExactSumFunctions.exactVectorSum(col("x")).as("s"),
+        .agg(exactVectorSum(col("x")).as("s"),
           count(lit(1)).as("n"))
         .collect()
       val byCell = sums.map(r => r.getInt(0) -> r).toMap
@@ -135,19 +114,6 @@ object ML {
       .localCheckpoint(true)
     data.unpersist(true)
     res
-  }
-
-  /** `LinearRegression(points, responses)` via spark.ml (normal-equation
-    * solver: one pass of sufficient statistics, driver-side solve —
-    * the DAAL topology). Returns one row: (coefficients, intercept). */
-  def linearRegression(df: DataFrame, features: String, label: String): DataFrame = {
-    val spark = df.sparkSession
-    val fv = df.withColumn("__fv", toVec(col(features)))
-    val m = new org.apache.spark.ml.regression.LinearRegression()
-      .setSolver("normal").setFeaturesCol("__fv").setLabelCol(label)
-      .fit(fv)
-    spark.createDataFrame(Seq((m.coefficients.toArray, m.intercept)))
-      .toDF("coefficients", "intercept")
   }
 
   /** Closed-form single-feature OLS from EXACT decimal sufficient
@@ -210,44 +176,66 @@ object ML {
       .drop("__n", "__sx", "__sy", "__sxx", "__sxy", "__den")
   }
 
+  /** Gaussian NB sufficient statistics, the DAAL partial step: per
+    * class `y`, the count `n` and the per-dim Σv (`sv`) and Σv² (`ssv`)
+    * as whole-vector native exact sums, independent of partition and
+    * summation order. */
+  private def nbStats(df: DataFrame, features: String, label: String): DataFrame = {
+    val x = col(features).cast("array<double>")
+    df.groupBy(col(label).cast("int").as("y")).agg(count(lit(1)).as("n"),
+      exactVectorSum(x).as("sv"), exactVectorSum(transform(x, v => v * v)).as("ssv"))
+  }
+
   /** `NaiveBayes(points, responses, classes)` — Gaussian NB (features
-    * may be negative, e.g. embeddings). Returns per-row predictions. */
+    * may be negative, e.g. embeddings). The k [[nbStats]] rows are
+    * gathered to the driver and finalized unrounded in
+    * [[naiveBayesExact]]'s op order. One narrow projection then scores
+    * each class, ln(prior) + Σ_d [−½·ln(2π·v) − (x_d − μ_d)²/(2v)] with
+    * the spark.ml/scikit-learn smoothing v = var + 1e-9·max(var) (a
+    * zero-variance dimension stays finite), expanded to
+    * K − x²·(1/2v) + x·(μ/v) so a class costs two native dot kernels;
+    * the DuckDB oracle's unexpanded form differs by ~1e-13, far below
+    * the fixtures' smallest best-vs-second gap (1.6e-4). The argmax
+    * takes the lowest class on a tie. Returns (id, label, prediction: int). */
   def naiveBayes(df: DataFrame, features: String, label: String,
                  id: String): DataFrame = {
-    val fv = df.withColumn("__fv", toVec(col(features)))
-      .withColumn("__lbl", col(label).cast("double"))
-    val m = new org.apache.spark.ml.classification.NaiveBayes()
-      .setModelType("gaussian").setFeaturesCol("__fv").setLabelCol("__lbl")
-      .fit(fv)
-    m.transform(fv)
-      .select(col(id), col(label),
-        col(m.getPredictionCol).cast("int").as("prediction"))
+    import graft.functions.VectorFunctions.dot
+    val stats = nbStats(df, features, label).collect()
+    val total = stats.map(_.getLong(1)).sum.toDouble
+    val classes = stats.filterNot(_.isNullAt(0)).sortBy(_.getInt(0)).toSeq
+    val fit = classes.map { r => // (n, mean, variance) per class
+      val (n, s, ss) = (r.getLong(1).toDouble, r.getSeq[Double](2), r.getSeq[Double](3))
+      (n, s.map(_ / n), s.indices.map(d => ss(d) / n - (s(d) / n) * (s(d) / n)))
+    }
+    val eps = 1e-9 * fit.flatMap(_._3).max
+    val scores = fit.map { case (n, mu, variance) =>
+      val v = variance.map(_ + eps)
+      val k = math.log(n / total) - v.indices.map(d =>
+        0.5 * math.log(2 * math.Pi * v(d)) + mu(d) * mu(d) / (2 * v(d))).sum
+      lit(k) - dot(col("__x2"), typedLit(v.map(vd => 1 / (2 * vd)))) +
+        dot(col("__x"), typedLit(v.indices.map(d => mu(d) / v(d))))
+    }
+    // x, x² and the scores are each computed once per row (read twice
+    // below, so not inlined); array_position finds the FIRST max.
+    df.select(col(id), col(label),
+        col(features).cast("array<double>").as("__x"))
+      .withColumn("__x2", transform(col("__x"), v => v * v))
+      .select(col(id), col(label), array(scores: _*).as("__s"))
+      .select(col(id), col(label), element_at(typedLit(classes.map(_.getInt(0))),
+        array_position(col("__s"), array_max(col("__s"))).cast("int")).as("prediction"))
   }
 
   /** Engine-native Gaussian Naive Bayes FIT — the DAAL-bridge topology
-    * (local partials → gather → master finalize) as one distributed
-    * aggregate: per (class, dim), count + exact-decimal Σv and Σv² (so
-    * the sufficient statistics are independent of partition/summation
-    * order), then the fixed double op sequence mean = s/n,
-    * var = ss/n − (s/n)², prior = n/total. Deterministic and
-    * DuckDB-oracle-checkable, unlike the float-accumulating library
-    * path ([[naiveBayes]], kept for the per-row prediction surface).
-    * Returns (y, dim, prior, mean, variance) rounded to 6dp — the
-    * variance subtraction cancels a few digits, so ulp-level agreement
-    * through the cancellation is not asserted (same rationale as
-    * [[olsExact]]). */
+    * (local partials → gather → master finalize): the [[nbStats]]
+    * aggregate exploded per (class, dim), then the fixed double op
+    * sequence mean = s/n, var = ss/n − (s/n)², prior = n/total.
+    * Deterministic and DuckDB-oracle-checkable. Returns
+    * (y, dim, prior, mean, variance) rounded to 6dp — the variance
+    * subtraction cancels a few digits, so ulp-level agreement through
+    * the cancellation is not asserted (same rationale as [[olsExact]]). */
   def naiveBayesExact(df: DataFrame, features: String, label: String): DataFrame = {
-    val pts = df.select(col(label).cast("int").as("y"),
-      col(features).cast("array<double>").as("x"))
-    val total = pts.count().toDouble // O(1) driver scalar for the prior
-    // Whole-vector native exact sums (Σv, Σv² per dim in one pass,
-    // no |rows|·dim explode); per-element v·v stays a double product
-    // before rounding, as before.
-    pts.groupBy(col("y"))
-      .agg(count(lit(1)).as("n"),
-        graft.functions.ExactSumFunctions.exactVectorSum(col("x")).as("sv"),
-        graft.functions.ExactSumFunctions
-          .exactVectorSum(transform(col("x"), v => v * v)).as("ssv"))
+    val total = df.count().toDouble // O(1) driver scalar for the prior
+    nbStats(df, features, label)
       .select(col("y"), col("n"),
         posexplode(arrays_zip(col("sv"), col("ssv"))).as(Seq("dim", "z")))
       .select(col("y"), col("dim"), col("n"),

@@ -145,10 +145,9 @@ object Pca {
   }
 
   /** Oracle-replayable PC1 twin: `iters` power iterations on the
-    * (oracled) covariance, the same native-twin discipline as
-    * `q_ml_kmeans_native`/`q_ml_nb_native` — the Jacobi [[fit]] stays
-    * the production solve, this twin exists so the eigen path has a
-    * driver-green differential. Each iteration is one DataFrame
+    * (oracled) covariance — the Jacobi [[fit]] stays the production
+    * solve, this twin exists so the eigen path has a driver-green
+    * differential. Each iteration is one DataFrame
     * aggregate (matvec: Σ_j cov_ij·v_j staged DECIMAL(27,18), order-
     * free) with the current 64-vector broadcast as a literal — the
     * one-allreduce-per-iteration topology of the logreg kernel — and

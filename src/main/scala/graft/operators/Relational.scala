@@ -225,16 +225,6 @@ final case class Table(df: DataFrame) {
   def rename(from: String, to: String): Table =
     Table(df.withColumnRenamed(from, to))
 
-  /** `__hpat_arr_rebalance` — re-balance skewed post-filter/join output
-    * to equal chunks (reference src/distributed-pass.jl:1276-1334, done
-    * there with pairwise Isend/Irecv). Spark: round-robin repartition;
-    * under AQE, skewed shuffle outputs are usually rebalanced for free,
-    * so this is only for explicit staging before e.g. ML kernels. */
-  def rebalance(n: Int = 0): Table = {
-    val parts = if (n > 0) n else df.sparkSession.sparkContext.defaultParallelism
-    Table(df.repartition(parts))
-  }
-
   /** Checkpoint passthrough (reference's hpat_checkpoint pass,
     * src/HPAT.jl:246-260, rebuilt on lineage + reliable checkpoint). */
   def checkpoint(eager: Boolean = true): Table = Table(df.checkpoint(eager))

@@ -7,9 +7,9 @@ import graft.Tables
 import graft.functions.VectorFunctions.squaredDistanceSql
 import graft.operators.ML
 
-/** ML-kernel queries (reference §2.9 surface). Closed-form OLS is
-  * oracle-matched; the spark.ml kernels are seeded-deterministic but not
-  * SQL-expressible → rows-only + MLSpec golden tests.
+/** ML-kernel queries (reference §2.9 surface). Each hash-matches a
+  * DuckDB mirror of its kernel: the fits fold exact-decimal sufficient
+  * statistics, so they do not depend on summation order.
   */
 object MLQueries {
 
@@ -22,12 +22,20 @@ object MLQueries {
     * decimal-exact component sum, cast to double, by the count), so the
     * compare is bit-exact. */
   private def kmeansNativeOracle(k: Int, iters: Int, dim: Int): String = {
-    s"""WITH ${kmeansCtePrefix(k, iters, dim)}
+    s"""WITH ${materialized(kmeansCtePrefix(k, iters, dim))}
        |SELECT c.cell AS cluster, CAST(COALESCE(n.cnt, 0) AS BIGINT) AS size
        |FROM c$iters c LEFT JOIN (
        | SELECT cell, COUNT(*) AS cnt FROM a${iters + 1} GROUP BY cell) n
        | ON c.cell = n.cell""".stripMargin
   }
+
+  /** Pins each CTE of a chain to one evaluation. DuckDB's
+    * small-cardinality heuristic inlines a CTE at every reference, and
+    * each unrolled k-means step reads the previous centroids twice, so
+    * an inlined chain re-expands exponentially with the iteration count
+    * (at 10 iterations it opens more files than the process may). */
+  private[queries] def materialized(ctes: String): String =
+    ctes.replace(" AS (", " AS MATERIALIZED (")
 
   /** The kmeansLloyd CTE chain (everything after `WITH `): `pts`, `c0`,
     * `a1..a$iters`/`c1..c$iters`, and the final full-corpus assignment
@@ -127,6 +135,24 @@ object MLQueries {
        |FROM w$iters, range(1, ${dim + 1}) r(dim)""".stripMargin
   }
 
+  /** DuckDB mirror of the Gaussian NB statistics (everything after
+    * `WITH `): `pts(vec_id, label, y, x)`, the row total `tot(t)`, and
+    * per (class, 1-based dim) the count and the decimal-exact Σv and
+    * Σv² cast to double, `st(y, dim, n, s, ss)`. Shared by the fit and
+    * predict oracles. */
+  private val nbStatsCtes: String =
+    """pts AS (
+      | SELECT vec_id, label, CAST(label AS INT) AS y,
+      |  list_transform(embedding, v -> CAST(v AS DOUBLE)) AS x
+      | FROM embeddings),
+      |tot AS (SELECT CAST(COUNT(*) AS DOUBLE) AS t FROM pts),
+      |st AS (
+      | SELECT y, dim,
+      |  CAST(COUNT(*) AS BIGINT) AS n,
+      |  CAST(SUM(CAST(x[dim] AS DECIMAL(27,18))) AS DOUBLE) AS s,
+      |  CAST(SUM(CAST(x[dim] * x[dim] AS DECIMAL(27,18))) AS DOUBLE) AS ss
+      | FROM pts, range(1, 65) r(dim) GROUP BY y, dim)""".stripMargin
+
   val specs: Seq[QuerySpec] = Seq(
 
     // Closed-form OLS: l_extendedprice ~ l_quantity from exact decimal
@@ -187,11 +213,12 @@ object MLQueries {
 
     // Kmeans(points, k, iters) on the embeddings table.
     QuerySpec("q_ml_kmeans", (s, dir) =>
-      ML.kmeans(Tables.load(s, dir, "embeddings"), "embedding",
-        k = 8, iters = 10)
-        .select(col("cluster"), col("size"))),
+      ML.kmeansLloyd(Tables.load(s, dir, "embeddings"), "embedding",
+        "vec_id", k = 8, iters = 10)
+        .select(col("cluster"), col("size")),
+      Some(kmeansNativeOracle(k = 8, iters = 10, dim = 64))),
 
-    // Engine-native Lloyd k-means (no spark.ml): deterministic init,
+    // The same Lloyd kernel at 5 iterations: deterministic init,
     // codegen'd assignment, partial-aggregated centroid update.
     QuerySpec("q_ml_kmeans_native", (s, dir) =>
       ML.kmeansLloyd(Tables.load(s, dir, "embeddings"), "embedding",
@@ -200,37 +227,42 @@ object MLQueries {
       Some(kmeansNativeOracle(k = 8, iters = 5, dim = 64))),
 
     // NaiveBayes(points, responses, classes) — gaussian, per-row preds.
+    // The oracle scores the textbook form of ML.naiveBayes's score from
+    // the shared statistics; the argmax takes the lowest class on a tie.
     QuerySpec("q_ml_nb", (s, dir) =>
       ML.naiveBayes(Tables.load(s, dir, "embeddings"),
-        "embedding", "label", "vec_id")),
+        "embedding", "label", "vec_id"),
+      Some(
+        s"""WITH $nbStatsCtes,
+           |m AS (
+           | SELECT y, dim, ln(n / t) AS lp, s / n AS mu,
+           |  var + CAST(1e-9 AS DOUBLE) * max(var) OVER () AS v
+           | FROM (SELECT *, ss / n - (s / n) * (s / n) AS var
+           |  FROM st, tot WHERE y IS NOT NULL) t),
+           |sc AS (
+           | SELECT p.vec_id, p.label, m.y, any_value(m.lp) + SUM(
+           |   -0.5 * ln(2 * pi() * m.v)
+           |   - (p.x[m.dim] - m.mu) * (p.x[m.dim] - m.mu) / (2 * m.v)) AS score
+           | FROM pts p, m GROUP BY p.vec_id, p.label, m.y)
+           |SELECT vec_id, label, y AS prediction FROM sc
+           |QUALIFY ROW_NUMBER() OVER (
+           | PARTITION BY vec_id ORDER BY score DESC, y) = 1""".stripMargin)),
 
     // Engine-native Gaussian NB fit: exact-decimal sufficient
     // statistics → (prior, mean, variance) per (class, dim),
-    // oracle-exact (the library path above stays rows-only: spark.ml
-    // accumulates in floats, so its params are summation-order noise
-    // at the ulp level).
+    // oracle-exact.
     QuerySpec("q_ml_nb_native", (s, dir) =>
       ML.naiveBayesExact(Tables.load(s, dir, "embeddings"),
         "embedding", "label"),
       // Same op order as naiveBayesExact: decimal-exact s/ss, then
       // mean = s/n, var = ss/n - (s/n)^2, prior = n/total, ROUND 6dp.
       Some(
-        """WITH pts AS (
-          | SELECT CAST(label AS INT) AS y,
-          |  list_transform(embedding, v -> CAST(v AS DOUBLE)) AS x
-          | FROM embeddings),
-          |tot AS (SELECT CAST(COUNT(*) AS DOUBLE) AS t FROM pts),
-          |st AS (
-          | SELECT y, dim,
-          |  CAST(COUNT(*) AS BIGINT) AS n,
-          |  CAST(SUM(CAST(x[dim] AS DECIMAL(27,18))) AS DOUBLE) AS s,
-          |  CAST(SUM(CAST(x[dim] * x[dim] AS DECIMAL(27,18))) AS DOUBLE) AS ss
-          | FROM pts, range(1, 65) r(dim) GROUP BY y, dim)
-          |SELECT y, CAST(dim - 1 AS INT) AS dim,
-          | ROUND(n / t, 6) + 0.0 AS prior,
-          | ROUND(s / n, 6) + 0.0 AS mean,
-          | ROUND(ss / n - (s / n) * (s / n), 6) + 0.0 AS variance
-          |FROM st, tot""".stripMargin)),
+        s"""WITH $nbStatsCtes
+           |SELECT y, CAST(dim - 1 AS INT) AS dim,
+           | ROUND(n / t, 6) + 0.0 AS prior,
+           | ROUND(s / n, 6) + 0.0 AS mean,
+           | ROUND(ss / n - (s / n) * (s / n), 6) + 0.0 AS variance
+           |FROM st, tot""".stripMargin)),
 
     // Monte-Carlo Pi (reference README.md:88-105 benchmark): a pure
     // generated-parfor + reduction, no table input. The point stream is

@@ -7,6 +7,7 @@ import graft.Tables
 import graft.functions.VectorFunctions.{cosineSql, dotSql,
   squaredDistanceSql}
 import graft.operators.Similarity
+import MLQueries.materialized
 
 /** Similarity-search queries over the `embeddings` fixture. The query
   * set is the first 16 vectors (broadcast-small, per the ANN contract);
@@ -25,14 +26,9 @@ object SimilarityQueries {
     * candidate cut, exact-cosine re-rank to k=10. */
   private def pqOracle(m: Int, ksub: Int, ds: Int, iters: Int,
                        kCand: Int, k: Int): String = {
-    // AS MATERIALIZED: with 8 parallel 13-CTE k-means chains DuckDB's
-    // small-cardinality inlining heuristic re-expands shared CTEs
-    // exponentially (hangs/OOMs at sf0.001); materialization pins each
-    // CTE to one evaluation.
     val chains = (0 until m).map { j =>
-      MLQueries.kmeansCtePrefix(ksub, iters, ds, prefix = s"s${j}_",
-        xExpr = s"list_slice(embedding, ${j * ds + 1}, ${(j + 1) * ds})")
-        .replace(" AS (", " AS MATERIALIZED (")
+      materialized(MLQueries.kmeansCtePrefix(ksub, iters, ds, prefix = s"s${j}_",
+        xExpr = s"list_slice(embedding, ${j * ds + 1}, ${(j + 1) * ds})"))
     }.mkString(",\n")
     val nbrJoins = (0 until m).map { j =>
       val a = s"s${j}_a${iters + 1}"
@@ -82,10 +78,9 @@ object SimilarityQueries {
   private def ivfPqOracle(nCells: Int, m: Int, ksub: Int, ds: Int,
                           iters: Int, nprobe: Int, kCand: Int,
                           k: Int): String = {
-    def mat(s: String) = s.replace(" AS (", " AS MATERIALIZED (")
-    val cellChain = mat(MLQueries.kmeansCtePrefix(nCells, iters, 64))
+    val cellChain = materialized(MLQueries.kmeansCtePrefix(nCells, iters, 64))
     val subChains = (0 until m).map { j =>
-      mat(MLQueries.kmeansCtePrefix(ksub, iters, ds, prefix = s"s${j}_",
+      materialized(MLQueries.kmeansCtePrefix(ksub, iters, ds, prefix = s"s${j}_",
         xExpr = s"list_slice(embedding, ${j * ds + 1}, ${(j + 1) * ds})"))
     }.mkString(",\n")
     val nbrJoins = (0 until m).map { j =>
@@ -164,8 +159,7 @@ object SimilarityQueries {
     val nSuperExpr =
       s"greatest(4, CAST(ceil(sqrt($nCellsExpr)) AS INT))"
     val modExpr = s"(CASE WHEN $nExpr > 1024 THEN 8 ELSE 1 END)"
-    def mat(s: String) = s.replace(" AS (", " AS MATERIALIZED (")
-    val supChain = mat(MLQueries.kmeansCteGeneric(nSuperExpr,
+    val supChain = materialized(MLQueries.kmeansCteGeneric(nSuperExpr,
       iters, dim, prefix = "sup_", table = "smp"))
     // cell→super map from the iteration's INCOMING cells `src`: every
     // super eligible (matches the driver-side nearestIdx over the full

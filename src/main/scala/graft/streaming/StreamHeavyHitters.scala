@@ -133,10 +133,4 @@ object StreamHeavyHitters {
     core(df.select(group.cast("string"), item.cast("string"),
       order.cast("long")).as[(String, String, Long)], capacity, k)
   }
-
-  /** Streaming form: running top-k per group each trigger
-    * (OutputMode.Update recommended downstream). */
-  def topKStream(ds: Dataset[(String, String, Long)], capacity: Int,
-                 k: Int): Dataset[Hit] =
-    core(ds, capacity, k)
 }

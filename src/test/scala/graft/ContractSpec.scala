@@ -17,12 +17,11 @@ class ContractSpec extends SparkSpec {
   }
 
   test("only the golden-twin queries lack a DuckDB oracle") {
-    // These five are checked by golden specs instead (TextSpec,
-    // DedupSpec, MLSpec, PcaSpec); any other query without an oracle
-    // lost it.
+    // These three are checked by golden specs instead (TextSpec,
+    // DedupSpec, PcaSpec); any other query without an oracle lost it.
     val noOracle = SparkEntry.registry.filter(_.oracle.isEmpty).map(_.name)
     assert(noOracle.toSet == Set("q_compress", "q_dedup_simhash",
-      "q_ml_kmeans", "q_ml_nb", "q_ml_pca"))
+      "q_ml_pca"))
   }
 
   test("entry (driver smoke) returns rows") {

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import graft.operators.ML
 
-/** Golden tests for the ML kernel bridge on small separable data. */
+/** Golden tests for the ML kernels on small separable data. */
 class MLSpec extends SparkSpec {
 
   test("transposeHcat builds per-row feature arrays") {
@@ -58,16 +58,6 @@ class MLSpec extends SparkSpec {
       !plan.toLowerCase.contains("sortaggregate"))
   }
 
-  test("kmeans separates two obvious blobs") {
-    import spark.implicits._
-    val pts = (1 to 50).map(i => Seq(0.0 + i * 0.001, 0.0)) ++
-      (1 to 50).map(i => Seq(10.0 + i * 0.001, 10.0))
-    val df = pts.map(Tuple1(_)).toDF("embedding")
-    val r = ML.kmeans(df, "embedding", k = 2, iters = 10)
-      .select("size").collect().map(_.getLong(0)).sorted.toSeq
-    assert(r == Seq(50L, 50L))
-  }
-
   test("kmeansLloyd separates blobs, deterministic across runs") {
     import spark.implicits._
     val pts = (1 to 50).map(i => (i.toLong, Seq(0.0 + i * 0.001, 0.0))) ++
@@ -105,6 +95,17 @@ class MLSpec extends SparkSpec {
     val acc = preds.filter(col("label") === col("prediction")).count().toDouble /
       preds.count()
     assert(acc == 1.0)
+  }
+
+  test("naiveBayes: identical class statistics tie to the lower class") {
+    import spark.implicits._
+    // labels 7 and 3 each hold x ∈ {0, 2}: equal priors (½), means (1)
+    // and variances (1), so every row scores the two classes equally
+    val df = Seq((1L, Seq(0.0), 7), (2L, Seq(2.0), 7),
+      (3L, Seq(0.0), 3), (4L, Seq(2.0), 3)).toDF("vec_id", "embedding", "label")
+    val got = ML.naiveBayes(df, "embedding", "label", "vec_id")
+      .orderBy("vec_id").collect().map(r => (r.getLong(0), r.getInt(2))).toSeq
+    assert(got == Seq((1L, 3), (2L, 3), (3L, 3), (4L, 3)))
   }
 
   test("naiveBayesExact: hand-computed priors/means/variances") {

@@ -22,6 +22,13 @@ class RelationalSpec extends SparkSpec {
   test("filter userid>2 → ([3],[3.1]) (filter_test1.jl:33-34)") {
     val got = t1.filter(col("userid") > 2).df.collect()
     assert(got.map(r => (r.getLong(0), r.getDouble(1))).toSeq == Seq((3L, 3.1)))
+    // the IN-list form keeps listed keys only: a null key matches no
+    // list, not even one holding null
+    val withNull = Table(Seq((Some(1L), 1.1), (None, 2.1), (Some(3L), 3.1),
+      (Some(4L), 4.2)).toDF("userid", "val2"))
+    val in = withNull.filterIn("userid", Seq(3L, 4L, null)).df.collect()
+      .map(r => (r.getLong(0), r.getDouble(1))).sorted.toSeq
+    assert(in == Seq((3L, 3.1), (4L, 4.2)))
   }
 
   test("join dup-key multiplicity → ([1,1,3],[7.1,7.1,8.3]) (join_test1.jl:35-36)") {
