@@ -11,7 +11,7 @@ import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggreg
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.graftbridge.Bridge
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType}
 
 /** Exact element-wise sum of `array<double>` columns in 128-bit fixed
   * point — the engine's exact-decimal-sum contract (each element
@@ -84,7 +84,7 @@ case class VectorExactSum(
 
 /** Per-dimension 128-bit signed fixed-point accumulator (scale 1e18).
   * `lo` is the unsigned low limb, `hi` the signed high limb. */
-final class FixedPointVec {
+final class FixedPointVec extends Serializable {
   var dim: Int = -1
   var hi: Array[Long] = _
   var lo: Array[Long] = _
@@ -187,33 +187,59 @@ object ExactSumFunctions {
   def exactVectorSum(arr: Column): Column =
     Bridge.column(VectorExactSum(Bridge.expression(arr)).toAggregateExpression())
 
-  /** [[exactVectorSum]] of a one-column `array<double>` frame, plus its
-    * row count, as ONE job with no exchange: each partition folds its
-    * rows into one [[FixedPointVec]], only the 128-bit limbs and the
-    * count return, and the driver merges them. The sum is bit-identical
-    * to the aggregate's (exact, so order-free; a null array adds
-    * nothing; null when no array is non-null). The count covers every
-    * row, null arrays included, as `count()` does. The job runs under
-    * its own SQL execution id, so listeners see it as a query. */
-  def foldExactVectorSum(df: DataFrame): (Array[Double], Long) = {
+  /** [[exactVectorSum]] and `count` per dense int key, as ONE job with
+    * no exchange, over a frame of (key: int, x: array<double>). Each
+    * partition folds its rows into a lazily filled array of per-key
+    * [[FixedPointVec]]s and ships only the keys it touched; the driver
+    * merges each task's partials as they arrive, so it holds one
+    * k×dim accumulator. Slot `key` of the result is the key's
+    * (sum, count), bit-identical to `groupBy(key).agg(exactVectorSum(x),
+    * count(lit(1)))`: exact, so order-free; a null array adds nothing
+    * but counts; the sum is null when no array is non-null, and an
+    * untouched key reads (null, 0). A row whose key is null or outside
+    * 0..k-1 (NearestCell's -1 for a NaN vector) joins no key. The job
+    * runs under its own SQL execution id, so listeners see it as a
+    * query. */
+  def foldExactVectorSumByKey(df: DataFrame, k: Int): Array[(Array[Double], Long)] = {
     require(df.schema.map(_.dataType) match {
-      case Seq(ArrayType(DoubleType, _)) => true
+      case Seq(IntegerType, ArrayType(DoubleType, _)) => true
       case _ => false
-    }, s"one array<double> column expected, got ${df.schema.simpleString}")
+    }, s"(int, array<double>) columns expected, got ${df.schema.simpleString}")
     val qe = df.queryExecution
-    val parts = SQLExecution.withNewExecutionId(qe, Some("foldExactVectorSum")) {
+    val sums = SQLExecution.withNewExecutionId(qe, Some("foldExactVectorSumByKey")) {
       qe.toRdd.mapPartitions { rows =>
-        val acc = new FixedPointVec
-        var n = 0L
+        val part = new Array[KeyedSum](k)
         rows.foreach { r =>
-          n += 1
-          if (!r.isNullAt(0)) acc.add(r.getArray(0).toDoubleArray())
+          val key = if (r.isNullAt(0)) -1 else r.getInt(0)
+          if (key >= 0 && key < k) {
+            if (part(key) == null) part(key) = new KeyedSum
+            part(key).n += 1
+            if (!r.isNullAt(1)) part(key).sum.add(r.getArray(1).toDoubleArray())
+          }
         }
-        Iterator.single((acc.toBytes, n))
-      }.collect()
+        Iterator.single(part)
+      }.fold(new Array[KeyedSum](k)) { (acc, part) =>
+        var key = 0
+        while (key < k) {
+          if (acc(key) == null) acc(key) = part(key)
+          else if (part(key) != null) {
+            acc(key).sum.merge(part(key).sum)
+            acc(key).n += part(key).n
+          }
+          key += 1
+        }
+        acc
+      }
     }
-    val acc = new FixedPointVec
-    parts.foreach { case (bytes, _) => acc.merge(FixedPointVec.fromBytes(bytes)) }
-    (if (acc.dim < 0) null else acc.toDoubles, parts.map(_._2).sum)
+    sums.map { s =>
+      if (s == null) (null, 0L)
+      else (if (s.sum.dim < 0) null else s.sum.toDoubles, s.n)
+    }
   }
+}
+
+/** One key's partial of [[ExactSumFunctions.foldExactVectorSumByKey]]. */
+private final class KeyedSum extends Serializable {
+  val sum = new FixedPointVec
+  var n = 0L
 }

@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** Shared lineage-truncation helpers for iterative builders.
   *
@@ -93,10 +94,11 @@ private[graft] object Frames {
   /** Drop the blocks behind previously tracked checkpoint RDD ids.
     * Async on purpose: freed rounds are never referenced again, and
     * RDD blocks are keyed by unique rdd id — a late drop cannot be
-    * plan-matched onto by anything (unlike CacheManager entries). */
+    * plan-matched onto by anything (unlike CacheManager entries). The
+    * drop bypasses `RDD.unpersist`, which would log a "cannot be
+    * recomputed" WARN for every freed checkpoint. */
   def free(df: DataFrame, ids: Set[Int]): Unit = {
     val sc = df.sparkSession.sparkContext
-    sc.getPersistentRDDs.filter(kv => ids.contains(kv._1))
-      .values.foreach(_.unpersist(false))
+    ids.intersect(sc.getPersistentRDDs.keySet).foreach(Bridge.unpersistRDD(sc, _))
   }
 }

@@ -3,7 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.functions.ExactSumFunctions.exactVectorSum
+import graft.functions.ExactSumFunctions.{exactVectorSum, foldExactVectorSumByKey}
+import graft.functions.VectorFunctions.nearestCell
 
 /** ML kernels — one engine-native implementation per reference call.
   *
@@ -12,10 +13,11 @@ import graft.functions.ExactSumFunctions.exactVectorSum
   * `NaiveBayes(points, responses, classes)`; DistributedPass swaps in
   * Intel DAAL distributed kernels (partial results gathered to rank 0,
   * model broadcast back — src/cgen-hpat-pattern-match-daal.jl:28-471).
-  * Each kernel here has that topology as plain DataFrame plans:
-  * [[kmeansLloyd]], [[olsExact]] and [[naiveBayes]] fold exact-decimal
-  * partials in one aggregate, the driver finalizes the k·dim (or five)
-  * numbers, and the model re-enters the next plan as literals. The
+  * Each kernel here has that topology: [[olsExact]] and [[naiveBayes]]
+  * fold exact-decimal partials in one aggregate, [[lloyd]] (under
+  * [[kmeansLloyd]]) and [[logisticRegression]] in one per-partition
+  * fold per step; the driver finalizes the k·dim (or five) numbers,
+  * and the model re-enters the next plan as literals. The
   * exact sums make every fit independent of partitioning and summation
   * order, so each has a DuckDB oracle.
   *
@@ -32,88 +34,56 @@ object ML {
   def transposeHcat(df: DataFrame, cols: Seq[String], out: String): DataFrame =
     df.withColumn(out, array(cols.map(c => col(c).cast("double")): _*))
 
-  /** Engine-native distributed Lloyd k-means — the same partial/merge
-    * topology the reference's DAAL bridge generates (local partials →
-    * gather → master update → broadcast,
-    * src/cgen-hpat-pattern-match-daal.jl:28-471) expressed as pure
-    * DataFrame ops, with no opaque library:
-    *  - init: the k rows with the smallest `id` (deterministic, like
-    *    the DAAL bridge seeding from the first local rows);
-    *  - assign: k-way broadcast join + native codegen'd
-    *    [[graft.functions.SquaredDistance]], argmin via min_by with a
-    *    (dist, cell) tiebreak — fully whole-stage-codegen;
-    *  - update: posexplode to (cell, dim, value) and one hash
-    *    aggregate — map-side partial sums, the shuffle carries
-    *    k·dim·partitions rows; new centroids (k·dim doubles) return to
-    *    the driver and re-enter as the next broadcast (the allreduce
-    *    shape, SURVEY §3 entry point 3).
-    * Deterministic for a fixed input. Returns (cluster, size,
-    * centroid). */
+  /** The (`__id`, `x`: array<double>) points [[lloyd]] reads. */
+  private[graft] def points(df: DataFrame, id: String, features: String): DataFrame =
+    df.select(col(id).as("__id"), col(features).cast("array<double>").as("x"))
+
+  /** The one Lloyd loop, in the reference's DAAL topology (local
+    * partials → gather → master update → broadcast,
+    * src/cgen-hpat-pattern-match-daal.jl:28-471). `data` is
+    * [[points]]; the caller caches it. The seeds are the non-null
+    * vectors of the k smallest ids. Each step is ONE exact fold
+    * ([[graft.functions.ExactSumFunctions.foldExactVectorSumByKey]]) of
+    * (`assign(centroids)`, x): `assign` is a codegen'd kernel carrying
+    * the centroid matrix as a reference object, so no join and no
+    * exchange runs, and the step compiles once. The means divide the
+    * exact-decimal sums, so the trajectory does not depend on
+    * partitioning (DuckDB-replayable). A null vector joins no cell; an
+    * empty cell keeps its centroid. */
+  private[graft] def lloyd(data: DataFrame, k: Int, iters: Int,
+                           assign: Array[Array[Double]] => Column): Array[Array[Double]] = {
+    var centroids = data.filter(col("x").isNotNull).orderBy(col("__id")).limit(k)
+      .collect().map(_.getSeq[Double](1).toArray)
+    for (_ <- 1 to iters) {
+      val sums = foldExactVectorSumByKey(
+        data.select(assign(centroids), col("x")), centroids.length)
+      centroids = centroids.indices.map { cell =>
+        val (s, n) = sums(cell)
+        if (s == null) centroids(cell) else s.map(_ / n)
+      }.toArray
+    }
+    centroids
+  }
+
+  /** `Kmeans(points, k, iters)`: [[lloyd]] with the flat
+    * [[graft.functions.NearestCell]] assignment, then one more fold
+    * under the final centroids for the cell sizes. Returns the k rows
+    * (cluster, size, centroid) as a local frame; an empty cell has
+    * size 0 and a null vector counts in no cell. Deterministic for a
+    * fixed input. */
   def kmeansLloyd(df: DataFrame, features: String, id: String,
                   k: Int, iters: Int): DataFrame = {
     val spark = df.sparkSession
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types._
-    val data = df.select(col(id).as("__id"),
-      col(features).cast("array<double>").as("x"))
+    val data = points(df, id, features)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-
-    var centroids = data.orderBy(col("__id")).limit(k)
-      .collect().map(_.getSeq[Double](1).toArray)
-    // assignment = ONE narrow codegen'd projection (the native
-    // NearestCell kernel carries the centroid matrix in the codegen
-    // references array — no join, no explode, one compile for all
-    // iterations)
-    def assigned(cs: Array[Array[Double]]) = data
-      .withColumn("cell",
-        graft.functions.VectorFunctions.nearestCell(col("x"), cs))
-
-    for (_ <- 1 to iters) {
-      // Exact-decimal component sums (the olsExact trick): the update
-      // is then independent of partition/summation order, so the whole
-      // 5-iteration run is bit-reproducible and DuckDB-oracle-checkable
-      // (q_ml_kmeans_native unrolls these iterations as CTEs). The
-      // whole-vector native aggregate ([[graft.functions
-      // .VectorExactSum]], same per-element decimal(27,18) rounding in
-      // 128-bit fixed point) sums all dims in one pass — no
-      // |rows|·dim posexplode, and the shuffle carries one 2·dim-long
-      // row per cell per partition.
-      val sums = assigned(centroids)
-        .groupBy(col("cell"))
-        .agg(exactVectorSum(col("x")).as("s"),
-          count(lit(1)).as("n"))
-        .collect()
-      val byCell = sums.map(r => r.getInt(0) -> r).toMap
-      centroids = centroids.indices.map { cell =>
-        byCell.get(cell) match {
-          case Some(r) =>
-            val n = r.getLong(2)
-            r.getSeq[Double](1).map(_ / n).toArray
-          case None => centroids(cell) // empty cell keeps its centroid
-        }
-      }.toArray
-    }
-    val out = assigned(centroids)
-      .groupBy(col("cell").as("cluster"))
-      .agg(count(lit(1)).as("size"))
-    val cent = spark.createDataFrame(
-      spark.sparkContext.parallelize(
-        centroids.toSeq.zipWithIndex.map { case (c, i) => Row(i, c.toSeq) }, 1),
-      StructType(Seq(StructField("cluster", IntegerType, nullable = false),
-        StructField("centroid", ArrayType(DoubleType, containsNull = false)))))
-    // k-row result: materialize it as an eager localCheckpoint (no
-    // CacheManager entry to leak or plan-match onto — the same
-    // lifecycle the dedup pipelines use), then blocking-drop the big
-    // staging cache. Left join from the centroid side so an empty cell
-    // survives with size 0 — consumers (e.g. the IVF index build)
-    // always see a dense 0..k-1 cluster set. Callers' legacy
-    // `unpersist()` calls on the result are harmless no-ops.
-    val res = cent.join(out, Seq("cluster"), "left")
-      .select(col("cluster"), coalesce(col("size"), lit(0L)).as("size"),
-        col("centroid"))
-      .localCheckpoint(true)
+    val assign = (cs: Array[Array[Double]]) => nearestCell(col("x"), cs)
+    val centroids = lloyd(data, k, iters, assign)
+    // sizes only: a null array counts without summing
+    val sizes = foldExactVectorSumByKey(data.select(assign(centroids),
+      lit(null).cast("array<double>")), centroids.length).map(_._2)
     data.unpersist(true)
-    res
+    spark.createDataFrame(centroids.indices.map(i => (i, sizes(i), centroids(i).toSeq)))
+      .toDF("cluster", "size", "centroid")
   }
 
   /** Closed-form single-feature OLS from EXACT decimal sufficient
@@ -252,7 +222,8 @@ object ML {
     * w replicated, one gradient allreduce per iteration. Here: the
     * (x, y) rows are cached once, spread over the cores; each step is
     * ONE job that folds the gradient exactly inside every partition
-    * ([[graft.functions.ExactSumFunctions.foldExactVectorSum]]) and
+    * ([[graft.functions.ExactSumFunctions.foldExactVectorSumByKey]],
+    * under the one key 0) and
     * returns only the merged fixed-point sums (≈ MPI_Allreduce); w
     * re-enters the next step's plan as an array literal (≈ broadcast).
     * The row count rides on each fold, so no `count()` job runs.
@@ -280,8 +251,8 @@ object ML {
       // descent trajectory — is independent of partitioning and of
       // summation order (oracle-checkable). `n` counts every row, as
       // `count()` does.
-      val (grad, n) = graft.functions.ExactSumFunctions.foldExactVectorSum(
-        data.select(graft.functions.VectorFunctions.scale(col("x"), err)))
+      val (grad, n) = foldExactVectorSumByKey(
+        data.select(lit(0), graft.functions.VectorFunctions.scale(col("x"), err)), 1)(0)
       // a step with no complete row has no gradient and leaves w as is
       if (grad != null)
         w = w.zip(grad).map { case (wi, gi) => wi - lr * gi / n.toDouble }

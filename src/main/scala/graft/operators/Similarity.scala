@@ -156,31 +156,24 @@ object Similarity {
   /** Build an IVF index over `corpus` with `nCells` k-means cells.
     *
     * Index build = the engine-native deterministic
-    * [[graft.operators.ML.kmeansLloyd]] (codegen'd assignment,
-    * partial-aggregated update — an IVF index needs balanced-ish cells,
-    * not converged clusters, so few iterations suffice and no opaque
-    * library sits in the index path), then ONE narrow codegen'd
-    * assignment pass over the corpus and a hash-repartition by cell.
+    * [[graft.operators.ML.lloyd]] (codegen'd assignment, one exact fold
+    * per step — an IVF index needs balanced-ish cells, not converged
+    * clusters, so few iterations suffice and no opaque library sits in
+    * the index path), then ONE narrow codegen'd assignment pass over
+    * the corpus and a hash-repartition by cell.
     * The expensive part runs exactly once per corpus; [[probeIvf]]
     * touches only the probed cells. */
   def buildIvfIndex(corpus: DataFrame, id: String, vec: String,
                     nCells: Int = 16, iters: Int = 5): IvfIndex = {
     val spark = corpus.sparkSession
-    val kmResult = graft.operators.ML
-      .kmeansLloyd(corpus.select(col(id), col(vec)), vec, id,
-        k = nCells, iters = iters)
-    // Re-index cells by POSITION in cluster-id order: kmeansLloyd ids
-    // are already dense, but position-indexing makes the
-    // matrix↔centroid-table correspondence true by construction rather
-    // than by contract.
-    val centroidRows = kmResult.collect()
-      .map(r => (r.getInt(0), r.getSeq[Double](2).toSeq))
-      .sortBy(_._1).zipWithIndex
-      .map { case ((_, c), pos) => (pos, c) }
-    kmResult.unpersist(false)
-    val matrix = centroidRows.map(_._2.toArray)
-    val centroids = broadcast(
-      spark.createDataFrame(centroidRows.toSeq).toDF("cell", "centroid"))
+    val pts = ML.points(corpus, id, vec)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val matrix = ML.lloyd(pts, nCells, iters,
+      graft.functions.VectorFunctions.nearestCell(col("x"), _))
+    pts.unpersist(true)
+    val centroids = broadcast(spark.createDataFrame(
+        matrix.toSeq.zipWithIndex.map { case (c, i) => (i, c.toSeq) })
+      .toDF("cell", "centroid"))
     // assignment = one narrow codegen'd projection (same NearestCell
     // kernel the index build used); partitioned by cell so every probe
     // join is co-located on the index side (hash partitioning survives
@@ -437,46 +430,20 @@ object Similarity {
   }
 
   /** Train the cell layer with super-restricted Lloyd — the scale-safe
-    * replacement for a flat k-means with k ∝ corpus. Cells seed from
-    * the first nCells sample rows by id; each iteration
+    * replacement for a flat k-means with k ∝ corpus: [[ML.lloyd]] over
+    * the [[ML.points]] `sample`, whose every step
     *   1. maps every cell centroid to its nearest (fixed) super —
     *      O(k·√k) driver work, never corpus-sized;
     *   2. assigns each sample row through [[graft.functions
-    *      .NearestCellHier]] — O(√k) per row instead of O(k);
-    *   3. updates centroids with the exact-decimal vector sum (empty
-    *      cells keep their centroid), so the whole trajectory is
-    *      bit-reproducible and SQL-replayable.
+    *      .NearestCellHier]] — O(√k) per row instead of O(k).
     * Returns (cellMatrix, cellToSuper-of-final-cells). */
-  private[graft] def trainHierCells(sample: DataFrame, id: String, vec: String,
+  private[graft] def trainHierCells(sample: DataFrame,
                                     superMatrix: Array[Array[Double]],
                                     nCells: Int,
                                     iters: Int): (Array[Array[Double]], Array[Int]) = {
-    val data = sample.select(col(id).as("__id"),
-      col(vec).cast("array<double>").as("x"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var cells = data.orderBy(col("__id")).limit(nCells)
-      .collect().map(_.getSeq[Double](1).toArray)
-    for (_ <- 1 to iters) {
-      val members = groupMembers(
-        cells.map(nearestIdx(_, superMatrix)), superMatrix.length)
-      val sums = data
-        .withColumn("cell", graft.functions.VectorFunctions
-          .nearestCellHier(col("x"), superMatrix, cells, members))
-        .groupBy(col("cell"))
-        .agg(graft.functions.ExactSumFunctions.exactVectorSum(col("x")).as("s"),
-          count(lit(1)).as("n"))
-        .collect()
-      val byCell = sums.map(r => r.getInt(0) -> r).toMap
-      cells = cells.indices.map { cell =>
-        byCell.get(cell) match {
-          case Some(r) =>
-            val n = r.getLong(2)
-            r.getSeq[Double](1).map(_ / n).toArray
-          case None => cells(cell)
-        }
-      }.toArray
-    }
-    data.unpersist(false)
+    val cells = ML.lloyd(sample, nCells, iters, cs =>
+      graft.functions.VectorFunctions.nearestCellHier(col("x"), superMatrix, cs,
+        groupMembers(cs.map(nearestIdx(_, superMatrix)), superMatrix.length)))
     (cells, cells.map(nearestIdx(_, superMatrix)))
   }
 
@@ -494,12 +461,26 @@ object Similarity {
     }
   }
 
+  /** The cached [[ML.points]] of [[trainingSample]], read by both
+    * levels of a hierarchical build. The projection is this builder's
+    * own frame, so unpersisting it never evicts a caller's cached
+    * corpus (the sample may be `corpus` itself). */
+  private def trainingPoints(corpus: DataFrame, id: String, vec: String,
+                             n: Long, nCells: Int): DataFrame =
+    ML.points(trainingSample(corpus, id, n, nCells), id, vec)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+
+  /** The [[supersFor]](nCells) super-cells: flat [[ML.lloyd]], 5 steps. */
+  private def trainSupers(samp: DataFrame, nCells: Int): Array[Array[Double]] =
+    ML.lloyd(samp, supersFor(nCells), 5,
+      graft.functions.VectorFunctions.nearestCell(col("x"), _))
+
   /** Build a corpus-adaptively-sized two-level IVF index, scale-safely:
     * nCells = [[cellsFor]](count) cells under [[supersFor]](nCells)
     * super-cells, with
-    *   - supers trained by [[graft.operators.ML.kmeansLloyd]] on the
-    *     deterministic [[sampleModFor]] training sample (flat Lloyd is
-    *     fine here — nSuper is O(√k));
+    *   - supers trained by flat [[graft.operators.ML.lloyd]] on the
+    *     deterministic [[sampleModFor]] training sample, cached once
+    *     for both levels (flat Lloyd is fine here — nSuper is O(√k));
     *   - cells trained by [[trainHierCells]] on the same sample with
     *     super-restricted assignment (O(sample·√k) per pass, not
     *     O(n·k) — the flat adaptive build measured Θ(n²/64) total);
@@ -522,25 +503,10 @@ object Similarity {
     require(nCells <= MaxLiteralCells,
       s"nCells=$nCells exceeds MaxLiteralCells=$MaxLiteralCells — " +
         "use buildHierIvfTableIndex (distributed centroid state) at this scale")
-    val nSuper = supersFor(nCells)
-    // trainingSample returns `corpus` ITSELF when the gate is degenerate
-    // (n small, or starved ids) — persist/unpersist only a frame this
-    // builder owns, or a caller's own cached corpus gets evicted.
-    val sampRaw = trainingSample(corpus, id, n, nCells)
-    val ownSample = sampRaw ne corpus
-    val samp = if (ownSample)
-      sampRaw.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else sampRaw
-    val supKm = graft.operators.ML
-      .kmeansLloyd(samp.select(col(id), col(vec)), vec, id,
-        k = nSuper, iters = 5)
-    val superMatrix = supKm.collect()
-      .map(r => (r.getInt(0), r.getSeq[Double](2).toArray))
-      .sortBy(_._1).map(_._2)
-    supKm.unpersist(false)
-    val (cells, c2s) = trainHierCells(samp, id, vec, superMatrix,
-      nCells, iters = 5)
-    if (ownSample) samp.unpersist(false)
+    val samp = trainingPoints(corpus, id, vec, n, nCells)
+    val superMatrix = trainSupers(samp, nCells)
+    val (cells, c2s) = trainHierCells(samp, superMatrix, nCells, iters = 5)
+    samp.unpersist(false)
     val members = groupMembers(c2s, superMatrix.length)
     val (assigned, assignedIds) = Frames.checkpointTracked(
       corpus.select(col(id), col(vec))
@@ -627,19 +593,17 @@ object Similarity {
     * super-restricted assignment, same exact-decimal update — the
     * per-iteration map/assign/update are joins and aggregates instead
     * of driver arrays, and results are bit-identical to the literal
-    * trainer (equality law in SimilaritySpec). Returns the checkpointed
+    * trainer (equality law in SimilaritySpec). `sample` is the
+    * caller-cached [[ML.points]]. Returns the checkpointed
     * cell table plus its checkpoint-block RDD ids (for the owning
     * index's release()). */
-  private[graft] def trainHierCellsTable(sample: DataFrame, id: String,
-                                         vec: String,
+  private[graft] def trainHierCellsTable(sample: DataFrame,
                                          superMatrix: Array[Array[Double]],
                                          nCells: Int,
                                          iters: Int): (DataFrame, Set[Int]) = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val data = sample.select(col(id).as("__rid"),
-      col(vec).cast("array<double>").as("x"))
-      .persist(lvl)
-    // Seeds: first nCells sample rows by id, position-indexed. The
+    val data = sample.select(col("__id").as("__rid"), col("x"))
+    // Seeds: first nCells non-null sample rows by id, position-indexed
+    // (as [[ML.lloyd]] seeds). The
     // unpartitioned window runs over the LIMITED set (≤ nCells rows) —
     // the dictionary-sized exception, like labelFit.
     // Every round's cell table is an EAGER localCheckpoint (flat
@@ -650,7 +614,7 @@ object Similarity {
     // the moment their successor is materialized.
     val w = Window.orderBy(col("__rid"))
     var (cells, cellIds) = Frames.checkpointTracked(
-      data.orderBy(col("__rid")).limit(nCells)
+      data.filter(col("x").isNotNull).orderBy(col("__rid")).limit(nCells)
         .select((row_number().over(w) - 1).as("cell"),
           col("x").as("centroid")))
     for (_ <- 1 to iters) {
@@ -677,7 +641,6 @@ object Similarity {
         .repartition(sample.sparkSession.sparkContext.defaultParallelism,
           col("sup")))
     Frames.free(cells, cellIds)
-    data.unpersist(true)
     (out, outIds)
   }
 
@@ -693,23 +656,11 @@ object Similarity {
     val spark = corpus.sparkSession
     val n = corpus.count()
     val nCells = cellsFor(n)
-    val nSuper = supersFor(nCells)
-    // Same sample-ownership rule as [[buildHierIvfIndex]].
-    val sampRaw = trainingSample(corpus, id, n, nCells)
-    val ownSample = sampRaw ne corpus
-    val samp = if (ownSample)
-      sampRaw.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else sampRaw
-    val supKm = graft.operators.ML
-      .kmeansLloyd(samp.select(col(id), col(vec)), vec, id,
-        k = nSuper, iters = 5)
-    val superMatrix = supKm.collect()
-      .map(r => (r.getInt(0), r.getSeq[Double](2).toArray))
-      .sortBy(_._1).map(_._2)
-    supKm.unpersist(false)
-    val (cellsDf, cellIds) = trainHierCellsTable(samp, id, vec, superMatrix,
+    val samp = trainingPoints(corpus, id, vec, n, nCells)
+    val superMatrix = trainSupers(samp, nCells)
+    val (cellsDf, cellIds) = trainHierCellsTable(samp, superMatrix,
       nCells, iters = 5)
-    if (ownSample) samp.unpersist(true)
+    samp.unpersist(true)
     val rows = corpus.select(col(id).as("__rid"),
       col(vec).cast("array<double>").as("x"), col(vec).as("cv"))
     // Eager checkpoint, not persist: the assignment plan nests the
@@ -969,14 +920,13 @@ object Similarity {
 
   /** Train a PQ index: the vector is split into `m` contiguous `ds`-dim
     * subspaces; each subspace gets its own `ksub`-cell codebook from
-    * the engine-native deterministic [[graft.operators.ML.kmeansLloyd]]
+    * the engine-native deterministic [[graft.operators.ML.lloyd]]
     * (exact-decimal updates ⇒ the whole build is bit-reproducible and
     * DuckDB-oracle-checkable), then ONE narrow codegen'd pass encodes
-    * every corpus row as its m nearest-subcentroid positions.
-    * kmeansLloyd keeps empty cells dense (0..ksub-1), so a code IS the
-    * cluster id — no position remapping. Build cost: m small Lloyd runs
-    * (each a few scans of one ds-dim slice) + one encode scan, paid
-    * once per corpus. */
+    * every corpus row as its m nearest-subcentroid positions. A code
+    * is a centroid's position in its codebook. Build cost: m small
+    * Lloyd runs (each a few scans of one ds-dim slice of the cached
+    * vectors) + one encode scan, paid once per corpus. */
   def buildPqIndex(corpus: DataFrame, id: String, vec: String,
                    m: Int = 8, ksub: Int = 16, iters: Int = 5): PqIndex = {
     val spark = corpus.sparkSession
@@ -987,15 +937,9 @@ object Similarity {
       .select(col(id), col(vec).cast("array<double>").as("__x"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val codebooks: Array[Array[Array[Double]]] = (0 until m).toArray.map { j =>
-      val sub = base.select(col(id),
-        slice(col("__x"), j * ds + 1, ds).as("__sub"))
-      val km = graft.operators.ML
-        .kmeansLloyd(sub, "__sub", id, k = ksub, iters = iters)
-      val cb = km.collect()
-        .map(r => (r.getInt(0), r.getSeq[Double](2).toArray))
-        .sortBy(_._1).map(_._2)
-      km.unpersist(false)
-      cb
+      ML.lloyd(base.select(col(id).as("__id"),
+          slice(col("__x"), j * ds + 1, ds).as("x")), ksub, iters,
+        graft.functions.VectorFunctions.nearestCell(col("x"), _))
     }
     val codeCols = (0 until m).map { j =>
       graft.functions.VectorFunctions.nearestCell(

@@ -14,7 +14,8 @@ import graft.operators.ML
 object MLQueries {
 
   /** DuckDB mirror of [[ML.kmeansLloyd]] with the loop UNROLLED as
-    * chained CTEs — one assignment CTE per iteration under the previous
+    * chained CTEs over the non-null vectors (a null vector joins no
+    * cell) — one assignment CTE per iteration under the previous
     * centroids, one exact-decimal mean CTE per update, carrying empty
     * cells forward, then the final assignment counted per cell. Every
     * arithmetic step mirrors the Scala kernel's op order (distance
@@ -80,11 +81,13 @@ object MLQueries {
          | SELECT cell, c FROM ${prefix}c${i - 1}
          | WHERE cell NOT IN (SELECT cell FROM ${prefix}a$i))""".stripMargin
     val steps = (1 to iters).flatMap(i => Seq(assign(i), update(i)))
-    s"""${prefix}pts AS (SELECT $idCol AS vec_id, $xExpr AS x FROM $table),
+    s"""${prefix}pts AS (SELECT $idCol AS vec_id, $xExpr AS x FROM $table
+       | WHERE $xExpr IS NOT NULL),
        |${prefix}c0 AS (
        | SELECT CAST(ROW_NUMBER() OVER (ORDER BY $idCol) - 1 AS INT) AS cell,
        |  list_transform($xExpr, v -> CAST(v AS DOUBLE)) AS c
-       | FROM (SELECT * FROM $table ORDER BY $idCol LIMIT $kExpr) t),
+       | FROM (SELECT * FROM $table WHERE $xExpr IS NOT NULL
+       |  ORDER BY $idCol LIMIT $kExpr) t),
        |${steps.mkString(",\n")},
        |${assign(iters + 1)}""".stripMargin
   }

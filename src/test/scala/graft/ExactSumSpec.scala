@@ -2,9 +2,9 @@ package graft
 
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, DoubleType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, StructField, StructType}
 
-import graft.functions.ExactSumFunctions.{exactVectorSum, foldExactVectorSum}
+import graft.functions.ExactSumFunctions.{exactVectorSum, foldExactVectorSumByKey}
 
 /** VectorExactSum must be indistinguishable from the decimal-cast form
   * `sum(cast(v as decimal(27,18)))` per dimension — the contract that
@@ -80,24 +80,37 @@ class ExactSumSpec extends SparkSpec {
 
   test("per-partition fold matches the aggregate bit-exactly, counts every row") {
     val rnd = new scala.util.Random(11)
-    val rows = Seq.fill(400)(Row(Seq.fill(6)(rnd.nextGaussian() * 1e3))) :+
-      Row(null)
-    val schema = StructType(Seq(StructField("x", ArrayType(DoubleType))))
+    // keys 0..3 (key 3 holds only a null array), a null-key row, and a
+    // null array under key 0
+    val rows = Seq.fill(400)(Row(rnd.nextInt(3),
+      Seq.fill(6)(rnd.nextGaussian() * 1e3))) ++
+      Seq(Row(0, null), Row(3, null), Row(null, Seq.fill(6)(1.0)))
+    val schema = StructType(Seq(StructField("key", IntegerType),
+      StructField("x", ArrayType(DoubleType))))
     def frame(rs: Seq[Row], parts: Int) =
       spark.createDataFrame(spark.sparkContext.parallelize(rs, parts), schema)
-    def bits(v: Seq[Double]) = v.map(java.lang.Double.doubleToRawLongBits)
+    def bits(v: Seq[Double]) = Option(v).map(_.map(java.lang.Double.doubleToRawLongBits))
     Seq(1, 3, 8).foreach { parts =>
       // `parts` filled partitions plus one empty one
       val df = frame(rows, parts).union(frame(Nil, 1))
       assert(df.rdd.getNumPartitions == parts + 1)
-      val agg = df.agg(exactVectorSum(col("x"))).head().getSeq[Double](0)
-      val (fold, n) = foldExactVectorSum(df)
-      assert(n == rows.size, s"$parts partitions")
-      assert(bits(fold.toSeq) == bits(agg), s"$parts partitions")
+      val agg = df.filter(col("key").isNotNull).groupBy("key")
+        .agg(exactVectorSum(col("x")), count(lit(1))).collect()
+        .map(r => r.getInt(0) -> (bits(r.getSeq[Double](1)), r.getLong(2))).toMap
+      // one key past the last non-null one stays untouched
+      val fold = foldExactVectorSumByKey(df, 5)
+      assert(agg.keySet == Set(0, 1, 2, 3), s"$parts partitions")
+      agg.foreach { case (key, want) =>
+        val (sum, n) = fold(key)
+        assert((bits(Option(sum).map(_.toSeq).orNull), n) == want,
+          s"key $key, $parts partitions")
+      }
+      assert(fold(4) == ((null, 0L)))
     }
-    // no non-null array: a null sum, as the aggregate gives, but the
-    // null row still counts
-    val (none, n) = foldExactVectorSum(frame(Seq(Row(null)), 2))
-    assert(none == null && n == 1)
+    // no non-null array under the key: a null sum, as the aggregate
+    // gives, but the null rows still count (the one-key form logistic
+    // regression folds with)
+    val (none, n) = foldExactVectorSumByKey(frame(Seq(Row(0, null), Row(0, null)), 2), 1)(0)
+    assert(none == null && n == 2)
   }
 }

@@ -77,6 +77,22 @@ class MLSpec extends SparkSpec {
     assert(a.toSeq == run().toSeq)
   }
 
+  test("kmeansLloyd: a null vector seeds no cell and counts in none") {
+    import spark.implicits._
+    val pts = (1 to 30).map(i =>
+      (i.toLong, Option(Seq((i % 3) * 5.0 + i * 0.01, i * 0.1))))
+    def run(rows: Seq[(Long, Option[Seq[Double]])]) =
+      ML.kmeansLloyd(rows.toDF("id", "embedding"), "embedding", "id",
+          k = 3, iters = 4)
+        .orderBy("cluster").collect()
+        .map(r => (r.getInt(0), r.getLong(1), r.getSeq[Double](2).toList)).toSeq
+    // the null vector holds the smallest id, so a seed pick that took
+    // it would start from a null centroid
+    val got = run((0L, None) +: pts)
+    assert(got == run(pts))
+    assert(got.map(_._2).sum == 30)
+  }
+
   test("native sqDist matches scala reference") {
     import spark.implicits._
     val df = Seq((Seq(1.0, 2.0, 3.0), Seq(2.0, 0.0, 3.5))).toDF("a", "b")
