@@ -24,9 +24,4 @@ object Exact {
 
   /** Exact sum of a 2-decimal column, returned as double. */
   def dsum(c: Column): Column = sum(c.cast(Dec2)).cast("double")
-
-  /** Exact mean of a 2-decimal column, as double (sum exact, one
-    * final double division on both sides). */
-  def davg(c: Column): Column =
-    sum(c.cast(Dec2)).cast("double") / count(lit(1))
 }

@@ -740,65 +740,6 @@ case class ProbeCells(child: Expression, cents: Array[Array[Double]],
     copy(child = c)
 }
 
-/** Flattened `bs×bs` outer-product block (bi, bj) of one dense
-  * array<double>: `out[r·bs+c] = x[bi·bs+r] · x[bj·bs+c]` — the
-  * per-row kernel of the blocked Gram operator
-  * ([[graft.operators.Gemm.gram]]). One codegen'd loop per block
-  * replaces a slice + nested interpreted `transform` (O(bs²) lambda
-  * dispatches per block, per row). Each product is the same single
-  * IEEE multiply the HOF form evaluates, so results are bit-identical
-  * and the DuckDB oracles are unaffected. The array must have at least
-  * (max(bi,bj)+1)·bs elements; shorter inputs fail at runtime. */
-case class OuterBlock(child: Expression, bi: Int, bj: Int, bs: Int)
-  extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects array<double>, got ${t.simpleString}")
-  }
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  override def prettyName: String = "graft_outer_block"
-
-  override protected def nullSafeEval(input: Any): Any = {
-    val a = input.asInstanceOf[ArrayData]
-    val out = new Array[Double](bs * bs)
-    var r = 0
-    while (r < bs) {
-      val xi = a.getDouble(bi * bs + r)
-      var c = 0
-      while (c < bs) {
-        out(r * bs + c) = xi * a.getDouble(bj * bs + c)
-        c += 1
-      }
-      r += 1
-    }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val gad = classOf[org.apache.spark.sql.catalyst.util.GenericArrayData].getName
-      val out = ctx.freshName("out")
-      val r = ctx.freshName("r")
-      val c = ctx.freshName("c")
-      val xi = ctx.freshName("xi")
-      s"""
-         |double[] $out = new double[${bs * bs}];
-         |for (int $r = 0; $r < $bs; $r++) {
-         |  double $xi = $a.getDouble(${bi * bs} + $r);
-         |  for (int $c = 0; $c < $bs; $c++) {
-         |    $out[$r * $bs + $c] = $xi * $a.getDouble(${bj * bs} + $c);
-         |  }
-         |}
-         |${ev.value} = new $gad($out);
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(c: Expression): OuterBlock =
-    copy(child = c)
-}
-
 /** Dense `bs×bs` block multiply `X·Y` of two row-major flattened
   * array<double> blocks — the local BLAS-3 kernel of
   * [[graft.operators.Gemm.multiplyBlocked]]. Loop order (r, k, c) with
@@ -944,11 +885,6 @@ object VectorFunctions {
                  nprobe: Int): Column =
     Bridge.column(ProbeCells(
       Bridge.expression(a.cast("array<double>")), cents, nprobe))
-
-  /** Column-API entry for [[OuterBlock]]. */
-  def outerBlock(x: Column, bi: Int, bj: Int, bs: Int): Column =
-    Bridge.column(OuterBlock(
-      Bridge.expression(x.cast("array<double>")), bi, bj, bs))
 
   /** Column-API entry for [[BlockMultiply]]. */
   def blockMultiply(x: Column, y: Column, bs: Int): Column =

@@ -23,7 +23,7 @@ import org.apache.spark.sql.functions._
   *    at any corpus size, engine-portable (the [[Sampling]] md5-prefix
   *    discipline), one (id, bucket) hash aggregate.
   *  - standardization = sufficient statistics (2·dim exact-decimal
-  *    sums, KiB at any corpus size) collected once, then a
+  *    sums, KiB at any corpus size) gathered in one exact fold, then a
   *    literal-baked codegen'd projection — the [[Pca]] shape.
   */
 object Encode {
@@ -81,27 +81,25 @@ object Encode {
   /** Per-dimension standardization of an array column: `out(i) =
     * (x(i) − mean_i) / std_i`, zero-variance dimensions map to 0.
     *
-    * One distributed pass computes exact-decimal component sums of x
-    * and x·x ([[graft.functions.ExactSumExpressions VectorExactSum]] —
-    * order-free, so mean/std are bit-reproducible under any partition
-    * layout); the 2·dim-double stats are collected (KiB regardless of
-    * corpus size, like the ML weight reductions) and baked into one
+    * One exact fold
+    * ([[graft.functions.ExactSumFunctions.foldExactVectorSumByKey]]
+    * under the key 0) gathers the component sums of `x ++ x²` and the
+    * row count — order-free, so mean/std are bit-reproducible under any
+    * partition layout; the 2·dim-double stats (KiB regardless of
+    * corpus size, like the ML weight reductions) are baked into one
     * codegen'd literal projection. Population variance is computed as
     * `E[x²] − mean²` in a fixed IEEE op order — cancellation makes the
     * last ~3 digits engine-specific, so oracle comparisons round to
     * 6dp (the decimal-sum convention). */
   def standardScale(df: DataFrame, vec: String, out: String): DataFrame = {
     val xd = col(vec).cast("array<double>")
-    val stats = df.select(xd.as("__x"))
-      .select(
-        graft.functions.ExactSumFunctions.exactVectorSum(col("__x")).as("s"),
-        graft.functions.ExactSumFunctions.exactVectorSum(
-          zip_with(col("__x"), col("__x"), (a, b) => a * b)).as("s2"),
-        count(lit(1)).as("n"))
-      .head()
-    val n = stats.getLong(2).toDouble
-    val mean = stats.getSeq[Double](0).map(_ / n)
-    val ex2 = stats.getSeq[Double](1).map(_ / n)
+    val (s, count) = graft.functions.ExactSumFunctions.foldExactVectorSumByKey(
+      df.select(xd.as("x")).select(lit(0),
+        concat(col("x"), transform(col("x"), v => v * v))), 1)(0)
+    val n = count.toDouble
+    val dim = s.length / 2
+    val mean = s.take(dim).toSeq.map(_ / n)
+    val ex2 = s.drop(dim).toSeq.map(_ / n)
     // Clamp: E[x²] − mean² can be a tiny negative for a constant /
     // near-constant dimension (catastrophic cancellation of the rounded
     // doubles); without it sqrt yields NaN instead of the documented

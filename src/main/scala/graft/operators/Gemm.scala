@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.ExactSumFunctions
@@ -38,6 +38,10 @@ import graft.functions.ExactSumFunctions
   * distributed GEMM moves without replicating a side; when one operand
   * fits in memory Catalyst/AQE picks a broadcast join and the big side
   * is never shuffled at all.
+  *
+  * The Gram matrix is not blocked: `XᵀX` of a tall-skinny X is a
+  * KiB-sized statistic the driver reads, so [[gram]] gathers it in one
+  * exact fold, the DAAL topology of the ML kernels.
   */
 object Gemm {
 
@@ -98,50 +102,26 @@ object Gemm {
       .agg(ExactSumFunctions.exactVectorSum(col("p")).as("m"))
   }
 
-  /** Gram matrix `XᵀX` of an `array<numeric>` feature column (`dim`
-    * known, `bs | dim`) — the reference's `points·pointsʼ` gemm-reduce
-    * pattern (src/distributed-pass.jl:699-820) done blockwise. Each row
-    * contributes its rank-1 outer product split into (dim/bs)² blocks;
-    * blocks combine with the exact vector sum. Every multiplication is
-    * a single correctly-rounded double product (no local dot
-    * accumulation), so the result equals
-    * `SUM(CAST(x[i]*x[j] AS DECIMAL(27,18)))` per cell bit-for-bit
-    * under Spark's cast semantics, and is partition-order-free.
+  /** Gram matrix `XᵀX` of an `array<numeric>` feature column — the
+    * reference's `points·pointsʼ` gemm-reduce pattern
+    * (src/distributed-pass.jl:699-820), a reduce to one rank, not a
+    * distributed result: [[Pca.stats]]'s one exact fold, returned as
+    * the local (i, j, val) frame of the full dim×dim matrix. Every cell
+    * is an exact decimal sum of single correctly-rounded double products
+    * (no local dot accumulation), so it equals
+    * `SUM(CAST(x[i]*x[j] AS DECIMAL(27,18)))` bit-for-bit under Spark's
+    * cast semantics, and is partition-order-free.
     * (Cross-engine caveat: DuckDB's double→decimal cast rounds the
     * binary value where Java rounds the shortest decimal repr, so the
     * 18th fractional digit of individual products can differ — oracle
-    * compares round to 6dp, like every decimal-sum oracle here.)
-    *
-    * Plan shape: explode to (dim/bs)² block rows per input row (still
-    * the scan stage), partial ObjectHashAggregate map-side, one
-    * shuffle of (dim/bs)² × partitions pre-aggregated block rows —
-    * the allreduce topology; nothing driver-side. Returns (i, j, val),
-    * the full dense dim×dim result. */
-  def gram(df: DataFrame, features: String, dim: Int, bs: Int): DataFrame = {
-    require(dim % bs == 0, s"bs=$bs must divide dim=$dim")
-    val nb = dim / bs
-    val x = col(features).cast("array<double>")
-    // native codegen'd per-block outer product (same IEEE multiplies
-    // as the slice+transform HOF form, minus its per-element
-    // interpreted lambda dispatch)
-    val blockRows = for { bi <- 0 until nb; bj <- 0 until nb }
-      yield struct(lit(bi).as("bi"), lit(bj).as("bj"),
-        graft.functions.VectorFunctions.outerBlock(col("x"), bi, bj, bs)
-          .as("p"))
-    // Spread rows to all cores before the O(dim²)-per-row projection:
-    // a small single-split input would otherwise run the entire
-    // outer-product + partial-aggregate stage on one task (at 100 TB
-    // the scan has ample splits and this is a cheap row-level
-    // round-robin of the narrow feature column).
-    Frames.spread(df).select(x.as("x"))
-      .select(explode(array(blockRows: _*)).as("b"))
-      .select(col("b.bi").as("bi"), col("b.bj").as("bj"), col("b.p").as("p"))
-      .groupBy("bi", "bj")
-      .agg(ExactSumFunctions.exactVectorSum(col("p")).as("m"))
-      .select(col("bi"), col("bj"), posexplode(col("m")).as(Seq("pos", "v")))
-      .select(
-        (col("bi") * bs + (col("pos") / bs).cast("int")).as("i"),
-        (col("bj") * bs + col("pos") % bs).as("j"),
-        col("v").as("val"))
+    * compares round to 6dp, like every decimal-sum oracle here.) */
+  def gram(df: DataFrame, features: String, dim: Int): DataFrame =
+    cells(df.sparkSession, Pca.stats(df, features, dim)._3, "val")
+
+  /** A driver-held square matrix as a local (i, j, `name`) frame. */
+  private[operators] def cells(spark: SparkSession, m: Array[Array[Double]],
+                               name: String): DataFrame = {
+    import spark.implicits._
+    (for (i <- m.indices; j <- m.indices) yield (i, j, m(i)(j))).toDF("i", "j", name)
   }
 }

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.functions.ExactSumFunctions.{exactVectorSum, foldExactVectorSumByKey}
+import graft.functions.ExactSumFunctions.foldExactVectorSumByKey
 import graft.functions.VectorFunctions.nearestCell
 
 /** ML kernels — one engine-native implementation per reference call.
@@ -13,10 +13,11 @@ import graft.functions.VectorFunctions.nearestCell
   * `NaiveBayes(points, responses, classes)`; DistributedPass swaps in
   * Intel DAAL distributed kernels (partial results gathered to rank 0,
   * model broadcast back — src/cgen-hpat-pattern-match-daal.jl:28-471).
-  * Each kernel here has that topology: [[olsExact]] and [[naiveBayes]]
-  * fold exact-decimal partials in one aggregate, [[lloyd]] (under
-  * [[kmeansLloyd]]) and [[logisticRegression]] in one per-partition
-  * fold per step; the driver finalizes the k·dim (or five) numbers,
+  * Each kernel here has that topology: [[olsExact]] sums exact-decimal
+  * partials in one aggregate, [[naiveBayes]] folds them per partition
+  * in one job, and [[lloyd]] (under [[kmeansLloyd]]) and
+  * [[logisticRegression]] in one such fold per step; the driver
+  * finalizes the k·dim (or five) numbers,
   * and the model re-enters the next plan as literals. The
   * exact sums make every fit independent of partitioning and summation
   * order, so each has a DuckDB oracle.
@@ -146,20 +147,45 @@ object ML {
       .drop("__n", "__sx", "__sy", "__sxx", "__sxy", "__den")
   }
 
-  /** Gaussian NB sufficient statistics, the DAAL partial step: per
-    * class `y`, the count `n` and the per-dim Σv (`sv`) and Σv² (`ssv`)
-    * as whole-vector native exact sums, independent of partition and
-    * summation order. */
-  private def nbStats(df: DataFrame, features: String, label: String): DataFrame = {
-    val x = col(features).cast("array<double>")
-    df.groupBy(col(label).cast("int").as("y")).agg(count(lit(1)).as("n"),
-      exactVectorSum(x).as("sv"), exactVectorSum(transform(x, v => v * v)).as("ssv"))
+  /** One class's Gaussian NB fit: label (None for the null label), row
+    * count and per-dim mean and population variance. */
+  private final case class NbClass(y: Option[Int], n: Long,
+                                   mean: Array[Double], variance: Array[Double])
+
+  /** Gaussian NB fit in the DAAL topology: ONE exact fold
+    * ([[graft.functions.ExactSumFunctions.foldExactVectorSumByKey]])
+    * keyed by class over `x ++ x²` gives each class's count, Σx and Σx²
+    * (exact, so independent of partition and summation order); the
+    * driver finalizes mean = s/n, var = ss/n − (s/n)². A null label
+    * folds into the spare slot `classes` and counts in the total; a
+    * class with no rows (or only null vectors) yields nothing; a
+    * non-null label outside 0..classes-1 fails. Returns (total rows,
+    * classes in label order, the null label last). */
+  private def nbFit(df: DataFrame, features: String, label: String,
+                    classes: Int): (Long, Seq[NbClass]) = {
+    val y = col(label).cast("int")
+    val slot = when(y.isNull, classes).when(y >= 0 && y < classes, y)
+      .otherwise(classes + 1)
+    val slots = foldExactVectorSumByKey(
+      df.select(slot.as("k"), col(features).cast("array<double>").as("x"))
+        .select(col("k"), concat(col("x"), transform(col("x"), v => v * v))),
+      classes + 2)
+    require(slots(classes + 1)._2 == 0,
+      s"naive Bayes: $label outside 0..${classes - 1} in ${slots(classes + 1)._2} rows")
+    val fit = (0 to classes).collect { case k if slots(k)._1 != null =>
+      val (s, n) = slots(k)
+      val nD = n.toDouble
+      val d = s.length / 2
+      val mean = Array.tabulate(d)(i => s(i) / nD)
+      NbClass(if (k < classes) Some(k) else None, n, mean,
+        Array.tabulate(d)(i => s(d + i) / nD - mean(i) * mean(i)))
+    }
+    (slots.map(_._2).sum, fit)
   }
 
   /** `NaiveBayes(points, responses, classes)` — Gaussian NB (features
-    * may be negative, e.g. embeddings). The k [[nbStats]] rows are
-    * gathered to the driver and finalized unrounded in
-    * [[naiveBayesExact]]'s op order. One narrow projection then scores
+    * may be negative, e.g. embeddings) over labels 0..classes-1. The
+    * [[nbFit]] of each class enters one narrow projection that scores
     * each class, ln(prior) + Σ_d [−½·ln(2π·v) − (x_d − μ_d)²/(2v)] with
     * the spark.ml/scikit-learn smoothing v = var + 1e-9·max(var) (a
     * zero-variance dimension stays finite), expanded to
@@ -168,22 +194,17 @@ object ML {
     * the fixtures' smallest best-vs-second gap (1.6e-4). The argmax
     * takes the lowest class on a tie. Returns (id, label, prediction: int). */
   def naiveBayes(df: DataFrame, features: String, label: String,
-                 id: String): DataFrame = {
+                 classes: Int, id: String): DataFrame = {
     import graft.functions.VectorFunctions.dot
-    val stats = nbStats(df, features, label).collect()
-    val total = stats.map(_.getLong(1)).sum.toDouble
-    val classes = stats.filterNot(_.isNullAt(0)).sortBy(_.getInt(0)).toSeq
-    val fit = classes.map { r => // (n, mean, variance) per class
-      val (n, s, ss) = (r.getLong(1).toDouble, r.getSeq[Double](2), r.getSeq[Double](3))
-      (n, s.map(_ / n), s.indices.map(d => ss(d) / n - (s(d) / n) * (s(d) / n)))
-    }
-    val eps = 1e-9 * fit.flatMap(_._3).max
-    val scores = fit.map { case (n, mu, variance) =>
-      val v = variance.map(_ + eps)
-      val k = math.log(n / total) - v.indices.map(d =>
-        0.5 * math.log(2 * math.Pi * v(d)) + mu(d) * mu(d) / (2 * v(d))).sum
+    val (total, all) = nbFit(df, features, label, classes)
+    val fit = all.filter(_.y.isDefined)
+    val eps = 1e-9 * fit.flatMap(_.variance).max
+    val scores = fit.map { c =>
+      val v = c.variance.map(_ + eps)
+      val k = math.log(c.n.toDouble / total) - v.indices.map(d =>
+        0.5 * math.log(2 * math.Pi * v(d)) + c.mean(d) * c.mean(d) / (2 * v(d))).sum
       lit(k) - dot(col("__x2"), typedLit(v.map(vd => 1 / (2 * vd)))) +
-        dot(col("__x"), typedLit(v.indices.map(d => mu(d) / v(d))))
+        dot(col("__x"), typedLit(v.indices.map(d => c.mean(d) / v(d))))
     }
     // x, x² and the scores are each computed once per row (read twice
     // below, so not inlined); array_position finds the FIRST max.
@@ -191,30 +212,26 @@ object ML {
         col(features).cast("array<double>").as("__x"))
       .withColumn("__x2", transform(col("__x"), v => v * v))
       .select(col(id), col(label), array(scores: _*).as("__s"))
-      .select(col(id), col(label), element_at(typedLit(classes.map(_.getInt(0))),
+      .select(col(id), col(label), element_at(typedLit(fit.map(_.y.get)),
         array_position(col("__s"), array_max(col("__s"))).cast("int")).as("prediction"))
   }
 
-  /** Engine-native Gaussian Naive Bayes FIT — the DAAL-bridge topology
-    * (local partials → gather → master finalize): the [[nbStats]]
-    * aggregate exploded per (class, dim), then the fixed double op
-    * sequence mean = s/n, var = ss/n − (s/n)², prior = n/total.
-    * Deterministic and DuckDB-oracle-checkable. Returns
-    * (y, dim, prior, mean, variance) rounded to 6dp — the variance
-    * subtraction cancels a few digits, so ulp-level agreement through
-    * the cancellation is not asserted (same rationale as [[olsExact]]). */
-  def naiveBayesExact(df: DataFrame, features: String, label: String): DataFrame = {
-    val total = df.count().toDouble // O(1) driver scalar for the prior
-    nbStats(df, features, label)
-      .select(col("y"), col("n"),
-        posexplode(arrays_zip(col("sv"), col("ssv"))).as(Seq("dim", "z")))
-      .select(col("y"), col("dim"), col("n"),
-        col("z.sv").as("s"), col("z.ssv").as("ss"))
-      .select(col("y"), col("dim"),
-        round(col("n") / lit(total), 6).as("prior"),
-        round(col("s") / col("n"), 6).as("mean"),
-        round(col("ss") / col("n") - (col("s") / col("n")) * (col("s") / col("n")), 6)
-          .as("variance"))
+  /** Engine-native Gaussian Naive Bayes FIT: the [[nbFit]] of each
+    * class (the null label's included) as a local frame of
+    * (y, dim, prior, mean, variance) with prior = n/total, rounded to
+    * 6dp — the variance subtraction cancels a few digits, so
+    * ulp-level agreement through the cancellation is not asserted (same
+    * rationale as [[olsExact]]). Deterministic and DuckDB-oracle-checkable. */
+  def naiveBayesExact(df: DataFrame, features: String, label: String,
+                      classes: Int): DataFrame = {
+    val spark = df.sparkSession
+    import spark.implicits._
+    val (total, fit) = nbFit(df, features, label, classes)
+    fit.flatMap(c => c.mean.indices.map(d =>
+        (c.y, d, c.n.toDouble / total, c.mean(d), c.variance(d))))
+      .toDF("y", "dim", "prior", "mean", "variance")
+      .select(col("y"), col("dim"), round(col("prior"), 6).as("prior"),
+        round(col("mean"), 6).as("mean"), round(col("variance"), 6).as("variance"))
   }
 
   /** The reference's flagship iterative pattern

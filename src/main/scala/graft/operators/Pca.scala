@@ -1,15 +1,19 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.functions.ExactSumFunctions.foldExactVectorSumByKey
+
 /** Tall-skinny PCA over an embedding column — the dimensionality
-  * reduction a 100 TB embedding corpus can actually afford: ONE
-  * distributed pass builds the exact d×d Gram matrix and coordinate
-  * sums (d = 64 here, so the sufficient statistics are KiB-sized no
-  * matter how many rows flow through), the d×d eigenproblem is solved
-  * on the driver — the same sufficient-statistics-then-local-solve
-  * topology as [[ML.olsExact]]'s normal equations — and the projection
+  * reduction a 100 TB embedding corpus can actually afford: ONE exact
+  * fold ([[stats]]) gathers the row count, coordinate sums and the
+  * exact d×d Gram matrix in the reference's DAAL topology (local
+  * partials, one gather, the driver's master step; d = 64 here, so the
+  * statistics are KiB-sized no matter how many rows flow through), the
+  * d×d eigenproblem is solved on the driver — the same
+  * sufficient-statistics-then-local-solve topology as
+  * [[ML.olsExact]]'s normal equations — and the projection
   * is a narrow codegen'd pass with the mean/components baked in as
   * literals. Nothing iterative ever touches the corpus.
   *
@@ -28,35 +32,51 @@ object Pca {
   final case class PcaModel(mean: Array[Double], eigenvalues: Array[Double],
                             components: Array[Array[Double]])
 
-  /** Exact per-coordinate sums (decimal-staged) and the row count, in
-    * one aggregate pass. */
-  private def sumsAndCount(df: DataFrame, vec: String,
-                           dim: Int): (Array[Double], Long) = {
-    val x = col(vec).cast("array<double>")
-    val aggs = (0 until dim).map(d =>
-      sum(element_at(x, d + 1).cast("decimal(27,18)")).cast("double")
-        .as(s"s$d")) :+ count(lit(1)).as("n")
-    val r = df.agg(aggs.head, aggs.tail: _*).head()
-    ((0 until dim).map(d => r.getDouble(d)).toArray, r.getLong(dim))
+  /** The Gram family's sufficient statistics (n, Σx, XᵀX) of an
+    * `array<numeric>` column, in ONE exact fold
+    * ([[graft.functions.ExactSumFunctions.foldExactVectorSumByKey]]
+    * under the key 0) over the rows spread to every core (a small
+    * single-split input would otherwise run the O(dim²)-per-row
+    * products on one task). Each row
+    * contributes `x ++ [x_i·x_j for i ≤ j]`, the upper triangle only;
+    * the driver mirrors it into the full matrix (IEEE multiplication
+    * commutes, so a mirrored cell keeps its bits). Every cell is the
+    * exact decimal sum of single correctly-rounded double products,
+    * `SUM(CAST(x_i·x_j AS DECIMAL(27,18)))` cast back to double,
+    * independent of partitioning and order. `n` counts every row; a
+    * null vector adds nothing to the sums (no non-null vector: zeros). */
+  def stats(df: DataFrame, vec: String,
+            dim: Int): (Long, Array[Double], Array[Array[Double]]) = {
+    val upper = (x: Column) => flatten(transform(sequence(lit(1), lit(dim)),
+      i => transform(slice(x, i, lit(dim + 1) - i), xj => element_at(x, i) * xj)))
+    val (s0, n) = foldExactVectorSumByKey(
+      Frames.spread(df.select(col(vec).cast("array<double>").as("x")))
+        .select(lit(0), concat(col("x"), upper(col("x")))), 1)(0)
+    val s = Option(s0).getOrElse(new Array[Double](dim + dim * (dim + 1) / 2))
+    val gram = Array.ofDim[Double](dim, dim)
+    var p = dim
+    for (i <- 0 until dim; j <- i until dim) {
+      gram(i)(j) = s(p); gram(j)(i) = s(p); p += 1
+    }
+    (n, s.take(dim), gram)
   }
 
-  /** Covariance matrix as (i, j, cov) rows:
+  /** (means, covariance matrix) from [[stats]]:
     * `cov_ij = gram_ij/n − (sum_i/n)·(sum_j/n)` — every term an exact
     * decimal sum cast to double, then a fixed IEEE op sequence, so a
-    * SQL mirror reproduces it bit-for-bit (before the caller's 6dp
-    * cut). */
-  def covariance(df: DataFrame, vec: String, dim: Int,
-                 bs: Int = 16): DataFrame = {
-    val (sums, n) = sumsAndCount(df, vec, dim)
+    * SQL mirror reproduces it bit-for-bit. */
+  private def meanAndCov(df: DataFrame, vec: String,
+                         dim: Int): (Array[Double], Array[Array[Double]]) = {
+    val (n, sums, gram) = stats(df, vec, dim)
     val nD = n.toDouble
     val means = sums.map(_ / nD)
-    val meanLit = array(means.toIndexedSeq.map(lit): _*)
-    Gemm.gram(df, vec, dim, bs)
-      .select(col("i"), col("j"),
-        (col("val") / lit(nD) -
-          element_at(meanLit, col("i") + 1) *
-            element_at(meanLit, col("j") + 1)).as("cov"))
+    (means, Array.tabulate(dim, dim)((i, j) => gram(i)(j) / nD - means(i) * means(j)))
   }
+
+  /** Covariance matrix as a local (i, j, cov) frame of [[meanAndCov]]'s
+    * cells (before the caller's 6dp cut). */
+  def covariance(df: DataFrame, vec: String, dim: Int): DataFrame =
+    Gemm.cells(df.sparkSession, meanAndCov(df, vec, dim)._2, "cov")
 
   /** Cyclic Jacobi eigendecomposition of a symmetric matrix — exact
     * enough at d≤a few hundred, deterministic (fixed sweep order, fixed
@@ -129,17 +149,8 @@ object Pca {
 
   /** Fit: one distributed pass for the sufficient statistics, local
     * eigen solve, top-k components kept. */
-  def fit(df: DataFrame, vec: String, dim: Int, k: Int,
-          bs: Int = 16): PcaModel = {
-    val (sums, n) = sumsAndCount(df, vec, dim)
-    val nD = n.toDouble
-    val means = sums.map(_ / nD)
-    val covRows = Gemm.gram(df, vec, dim, bs).collect()
-    val c = Array.ofDim[Double](dim, dim)
-    covRows.foreach { r =>
-      val i = r.getInt(0); val j = r.getInt(1)
-      c(i)(j) = r.getDouble(2) / nD - means(i) * means(j)
-    }
+  def fit(df: DataFrame, vec: String, dim: Int, k: Int): PcaModel = {
+    val (means, c) = meanAndCov(df, vec, dim)
     val (vals, vecs) = jacobiEigen(c)
     PcaModel(means, vals.take(k), vecs.take(k))
   }
@@ -147,11 +158,8 @@ object Pca {
   /** Oracle-replayable PC1 twin: `iters` power iterations on the
     * (oracled) covariance — the Jacobi [[fit]] stays the production
     * solve, this twin exists so the eigen path has a driver-green
-    * differential. Each iteration is one DataFrame
-    * aggregate (matvec: Σ_j cov_ij·v_j staged DECIMAL(27,18), order-
-    * free) with the current 64-vector broadcast as a literal — the
-    * one-allreduce-per-iteration topology of the logreg kernel — and
-    * the norm's squares are staged through the SAME
+    * differential. Each iteration's matvec Σ_j cov_ij·v_j and the
+    * norm's squares are staged through the SAME
     * `BigDecimal.valueOf(·).setScale(18, HALF_UP)` rounding Spark's
     * double→decimal cast uses, so all `iters` steps are
     * bit-reproducible and an unrolled SQL chain replays them.
@@ -161,11 +169,10 @@ object Pca {
     * sign-canonicalized (largest-|component| positive, ties to the
     * lowest index), and its Rayleigh quotient vᵀCv. */
   def powerIterationPc1(df: DataFrame, vec: String, dim: Int,
-                        iters: Int, bs: Int = 16): DataFrame = {
+                        iters: Int): DataFrame = {
     val spark = df.sparkSession
-    // ONE distributed pass (the covariance sufficient statistic) and
-    // ONE O(d²) collect; the `iters` matvec/norm/Rayleigh steps run
-    // driver-local on the collected d×d matrix. The earlier form ran
+    // ONE exact fold ([[stats]]); the `iters` matvec/norm/Rayleigh
+    // steps run driver-local on the d×d covariance. The earlier form ran
     // each matvec as its own DataFrame aggregate over the persisted
     // cov frame — 8 cluster-wide barrier jobs plus 8 plan compilations
     // for arithmetic over 4096 doubles (measured: ~1.3 s of the
@@ -188,10 +195,7 @@ object Pca {
       JBD.valueOf(x).setScale(18, RoundingMode.HALF_UP)
     def decSum(xs: Iterator[Double]): Double =
       xs.foldLeft(JBD.ZERO)((acc, x) => acc.add(decStage(x))).doubleValue()
-    val c = Array.ofDim[Double](dim, dim)
-    covariance(df, vec, dim, bs).collect().foreach { r =>
-      c(r.getInt(0))(r.getInt(1)) = r.getDouble(2)
-    }
+    val c = meanAndCov(df, vec, dim)._2
     var v = Array.fill(dim)(1.0)
     for (_ <- 1 to iters) {
       // w_i = Σ_j stage18(cov_ij · v_j), summed exactly, cast back —

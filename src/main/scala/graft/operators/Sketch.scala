@@ -44,10 +44,11 @@ object Sketch {
 
   /** Rank: leading zeros + 1 within a 60-bit window after the bucket
     * byte (bin() emits no leading zeros in Spark or DuckDB, so rank =
-    * 61 − bit-length; an all-zero window gives the max rank 61). */
+    * 61 − bit-length; an all-zero window, whose bin() is "0", gives the
+    * max rank 61). */
   def rho(key: Column): Column = {
     val v = conv(substring(h(key), 3, 15), 16, 10).cast("long")
-    (lit(61) - length(ltrim(bin(v), "0"))).cast("int")
+    when(v === 0, 61).otherwise(lit(61) - length(bin(v))).cast("int")
   }
 
   /** Per-group approximate distinct count of `key` as column `out`

@@ -28,8 +28,9 @@ object LinalgQueries {
 
   val specs: Seq[QuerySpec] = Seq(
 
-    // Gram matrix XᵀX of the embedding corpus via per-row blocked
-    // outer products + exact vector sum — the gemm-reduce pattern.
+    // Gram matrix XᵀX of the embedding corpus — the gemm-reduce
+    // pattern, one exact fold of each row's upper-triangle products
+    // (Pca.stats), mirrored to the full matrix on the driver.
     // Output rounded to 6dp: the engines' double→decimal(27,18) casts
     // round differently in the 18th fractional digit (shortest-repr
     // HALF_UP vs binary-value round-nearest), so per-product 1e-18
@@ -41,7 +42,7 @@ object LinalgQueries {
     // BigDecimal round (no signed zero there) — caught by the sf0.1
     // audit on one cancellation cell.
     QuerySpec("q_gemm_gram", (s, dir) =>
-      Gemm.gram(Tables.load(s, dir, "embeddings"), "embedding", dim, bs)
+      Gemm.gram(Tables.load(s, dir, "embeddings"), "embedding", dim)
         .select(col("i"), col("j"),
           (round(col("val"), 6) + lit(0.0)).as("val")),
       // Exact mirror: each cell is the exact decimal sum of the
@@ -63,7 +64,7 @@ object LinalgQueries {
     // cancellation cells).
     QuerySpec("q_ml_cov", (s, dir) =>
       graft.operators.Pca.covariance(
-        Tables.load(s, dir, "embeddings"), "embedding", dim, bs)
+        Tables.load(s, dir, "embeddings"), "embedding", dim)
         .select(col("i"), col("j"),
           (round(col("cov"), 6) + lit(0.0)).as("cov")),
       // Mirror of Pca.covariance's op order: exact decimal sums → double
@@ -159,7 +160,7 @@ object LinalgQueries {
     // SQL-expressible, so rows-only; PcaSpec pins the algebra laws.
     QuerySpec("q_ml_pca", (s, dir) => {
       val e = Tables.load(s, dir, "embeddings")
-      val model = graft.operators.Pca.fit(e, "embedding", dim, k = 2, bs)
+      val model = graft.operators.Pca.fit(e, "embedding", dim, k = 2)
       graft.operators.Pca.project(e, "vec_id", "embedding", model)
         .select(col("vec_id"), round(col("pc1"), 6).as("pc1"),
           round(col("pc2"), 6).as("pc2"))

@@ -229,12 +229,13 @@ object MLQueries {
         .select(col("cluster"), col("size")),
       Some(kmeansNativeOracle(k = 8, iters = 5, dim = 64))),
 
-    // NaiveBayes(points, responses, classes) — gaussian, per-row preds.
+    // NaiveBayes(points, responses, classes) — gaussian, per-row preds
+    // over the fixture's labels 0..9.
     // The oracle scores the textbook form of ML.naiveBayes's score from
     // the shared statistics; the argmax takes the lowest class on a tie.
     QuerySpec("q_ml_nb", (s, dir) =>
       ML.naiveBayes(Tables.load(s, dir, "embeddings"),
-        "embedding", "label", "vec_id"),
+        "embedding", "label", classes = 10, "vec_id"),
       Some(
         s"""WITH $nbStatsCtes,
            |m AS (
@@ -256,7 +257,7 @@ object MLQueries {
     // oracle-exact.
     QuerySpec("q_ml_nb_native", (s, dir) =>
       ML.naiveBayesExact(Tables.load(s, dir, "embeddings"),
-        "embedding", "label"),
+        "embedding", "label", classes = 10),
       // Same op order as naiveBayesExact: decimal-exact s/ss, then
       // mean = s/n, var = ss/n - (s/n)^2, prior = n/total, ROUND 6dp.
       Some(

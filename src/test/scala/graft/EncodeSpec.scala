@@ -70,4 +70,27 @@ class EncodeSpec extends SparkSpec {
     assert(math.abs(scaled.sum) < 1e-12)
     assert(math.abs(scaled.map(x => x * x).sum / 4 - 1.0) < 1e-12)
   }
+
+  test("standardScale bits: same on 1 and 7 partitions, equal to the decimal-cast sums") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(11)
+    val df = Seq.tabulate(30)(i =>
+      (i.toLong, Seq.fill(3)(rnd.nextGaussian() * 2.0 + 1.0))).toDF("id", "v")
+    def scaled(parts: Int) = Encode.standardScale(df.repartition(parts), "v", "s")
+      .collect().map(r => r.getLong(0) -> r.getSeq[Double](2)).toMap
+    def dec(c: org.apache.spark.sql.Column) =
+      sum(c.cast("decimal(27,18)")).cast("double")
+    val r = df.agg(count(lit(1)).cast("double"), (0 until 3).flatMap { d =>
+      val x = element_at(col("v"), d + 1); Seq(dec(x), dec(x * x)) }: _*).head()
+    val n = r.getDouble(0)
+    val mean = (0 until 3).map(d => r.getDouble(1 + 2 * d) / n)
+    val std = (0 until 3).map(d =>
+      math.sqrt(math.max(0.0, r.getDouble(2 + 2 * d) / n - mean(d) * mean(d))))
+    val want = df.collect().map { row =>
+      row.getLong(0) -> row.getSeq[Double](1).indices.map(d =>
+        (row.getSeq[Double](1)(d) - mean(d)) / std(d))
+    }.toMap
+    assert(scaled(1) == want)
+    assert(scaled(7) == want)
+  }
 }

@@ -86,6 +86,16 @@ class LayoutSketchSpec extends SparkSpec {
     assert(est(a) == est(dup))
   }
 
+  test("HLL rank is 61 minus the bit length of the hash window; null stays null") {
+    import spark.implicits._
+    val df = ((1L to 2000L).map(Option(_)) :+ None).toDF("k")
+    val v = conv(substring(md5(col("k").cast("string")), 3, 15), 16, 10).cast("long")
+    val want = (lit(61) - length(regexp_replace(bin(v), "^0+", ""))).cast("int")
+    val rows = df.select(Sketch.rho(col("k")), want).collect()
+    assert(rows.forall(r => r.get(0) == r.get(1)))
+    assert(rows.count(_.isNullAt(0)) == 1)
+  }
+
   test("HLL aggregate shuffles registers, not keys (partial aggregate)") {
     import spark.implicits._
     val df = (1L to 5000L).toDF("k").withColumn("g", lit("all"))

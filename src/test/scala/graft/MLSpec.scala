@@ -107,7 +107,7 @@ class MLSpec extends SparkSpec {
       (i.toLong, Seq(1.0 + (i % 5) * 0.01, 1.0), 0)) ++
       (41 to 80).map(i => (i.toLong, Seq(-1.0 - (i % 5) * 0.01, -1.0), 1))
     val df = rows.toDF("vec_id", "embedding", "label")
-    val preds = ML.naiveBayes(df, "embedding", "label", "vec_id")
+    val preds = ML.naiveBayes(df, "embedding", "label", classes = 2, "vec_id")
     val acc = preds.filter(col("label") === col("prediction")).count().toDouble /
       preds.count()
     assert(acc == 1.0)
@@ -119,7 +119,7 @@ class MLSpec extends SparkSpec {
     // and variances (1), so every row scores the two classes equally
     val df = Seq((1L, Seq(0.0), 7), (2L, Seq(2.0), 7),
       (3L, Seq(0.0), 3), (4L, Seq(2.0), 3)).toDF("vec_id", "embedding", "label")
-    val got = ML.naiveBayes(df, "embedding", "label", "vec_id")
+    val got = ML.naiveBayes(df, "embedding", "label", classes = 8, "vec_id")
       .orderBy("vec_id").collect().map(r => (r.getLong(0), r.getInt(2))).toSeq
     assert(got == Seq((1L, 3), (2L, 3), (3L, 3), (4L, 3)))
   }
@@ -130,13 +130,33 @@ class MLSpec extends SparkSpec {
     val df = Seq(
       (1L, Seq(1.0, 10.0), 0), (2L, Seq(3.0, 10.0), 0),
       (3L, Seq(6.0, -2.0), 1)).toDF("vec_id", "embedding", "label")
-    val got = ML.naiveBayesExact(df, "embedding", "label")
+    val got = ML.naiveBayesExact(df, "embedding", "label", classes = 2)
       .orderBy("y", "dim").collect()
       .map(r => (r.getInt(0), r.getInt(1), r.getDouble(2), r.getDouble(3),
         r.getDouble(4))).toSeq
     assert(got == Seq(
       (0, 0, 0.666667, 2.0, 1.0), (0, 1, 0.666667, 10.0, 0.0),
       (1, 0, 0.333333, 6.0, 0.0), (1, 1, 0.333333, -2.0, 0.0)))
+  }
+
+  test("naive Bayes label domain: null label counts, empty class absent, outside fails") {
+    import spark.implicits._
+    // class 0: x ∈ {1, 3}; a null label holds x = 5; class 2 has no rows
+    val df = Seq((1L, Seq(1.0), Some(0)), (2L, Seq(3.0), Some(0)),
+      (3L, Seq(5.0), None)).toDF("vec_id", "embedding", "label")
+    val got = ML.naiveBayesExact(df, "embedding", "label", classes = 3)
+      .collect().map(r => (Option(r.get(0)), r.getInt(1), r.getDouble(2),
+        r.getDouble(3), r.getDouble(4))).toSet
+    assert(got == Set((Some(0), 0, 0.666667, 2.0, 1.0), (None, 0, 0.333333, 5.0, 0.0)))
+    // naiveBayes predicts the labelled classes only
+    val preds = ML.naiveBayes(df, "embedding", "label", classes = 3, "vec_id")
+      .collect().map(_.getInt(2)).toSet
+    assert(preds == Set(0))
+    val bad = Seq((1L, Seq(1.0), 0), (2L, Seq(3.0), 3))
+      .toDF("vec_id", "embedding", "label")
+    val e = intercept[IllegalArgumentException](
+      ML.naiveBayesExact(bad, "embedding", "label", classes = 3))
+    assert(e.getMessage.contains("label outside 0..2"), e.getMessage)
   }
 
   test("logisticRegression learns a separating direction") {

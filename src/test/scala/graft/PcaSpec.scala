@@ -18,7 +18,7 @@ class PcaSpec extends SparkSpec {
       (i.toLong, Seq((t - 2.0 * w).toFloat, (2.0 * t + w).toFloat))
     }
     val df = pts.toDF("id", "v")
-    val m = Pca.fit(df, "v", dim = 2, k = 2, bs = 1)
+    val m = Pca.fit(df, "v", dim = 2, k = 2)
     val n1 = math.sqrt(m.components(0).map(x => x * x).sum)
     val c1 = m.components(0).map(_ / n1)
     assert(math.abs(c1(0) - 1.0 / math.sqrt(5)) < 1e-3)
@@ -61,8 +61,8 @@ class PcaSpec extends SparkSpec {
       val t = (i - 19.5) / 4.0
       (i.toLong, Seq(10.0 * t, math.sin(i.toDouble), math.cos(3.0 * i)))
     }.toDF("id", "embedding")
-    val pm = Pca.fit(planted, "embedding", dim = 3, k = 1, bs = 3)
-    val prow = Pca.powerIterationPc1(planted, "embedding", dim = 3, iters = 8, bs = 3)
+    val pm = Pca.fit(planted, "embedding", dim = 3, k = 1)
+    val prow = Pca.powerIterationPc1(planted, "embedding", dim = 3, iters = 8)
       .collect().sortBy(_.getInt(0))
     val pv = prow.map(_.getDouble(1))
     val pdot = pv.zip(pm.components(0)).map { case (a, b) => a * b }.sum
@@ -98,5 +98,27 @@ class PcaSpec extends SparkSpec {
       assert(math.abs(varc - m.eigenvalues(c)) < 1e-6 * (1 + varc),
         s"pc${c + 1} var $varc vs λ ${m.eigenvalues(c)}")
     }
+  }
+
+  test("covariance bits: same on 1, 3 and 8 partitions, equal to the decimal-cast sums") {
+    import spark.implicits._
+    val dim = 5
+    val rnd = new scala.util.Random(7)
+    val df = Seq.tabulate(40)(i =>
+      (i.toLong, Seq.fill(dim)(rnd.nextGaussian() * 3.0))).toDF("id", "v")
+    def cov(parts: Int) = Pca.covariance(df.repartition(parts), "v", dim)
+      .collect().map(r => (r.getInt(0), r.getInt(1)) -> r.getDouble(2)).toMap
+    // the statistics as plain decimal aggregates over the same rows
+    def dec(c: org.apache.spark.sql.Column) =
+      sum(c.cast("decimal(27,18)")).cast("double")
+    val x = (d: Int) => element_at(col("v"), d + 1)
+    val aggs = (0 until dim).map(d => dec(x(d))) ++
+      (for (i <- 0 until dim; j <- 0 until dim) yield dec(x(i) * x(j)))
+    val r = df.agg(count(lit(1)).cast("double"), aggs: _*).head()
+    val n = r.getDouble(0)
+    val mean = Array.tabulate(dim)(d => r.getDouble(1 + d) / n)
+    val want = (for (i <- 0 until dim; j <- 0 until dim) yield (i, j) ->
+      (r.getDouble(1 + dim + i * dim + j) / n - mean(i) * mean(j))).toMap
+    for (parts <- Seq(1, 3, 8)) assert(cov(parts) == want, s"$parts partitions")
   }
 }

@@ -47,43 +47,6 @@ class VectorExpressionSpec extends SparkSpec {
     assert(math.abs(r - 1.0) < 1e-15)
   }
 
-  test("OuterBlock matches the slice+transform HOF form bit-exactly") {
-    import spark.implicits._
-    import org.apache.spark.sql.functions.{flatten, slice, transform}
-    val dim = 8; val bs = 4
-    val df = Seq.tabulate(20)(i =>
-      Tuple1(Seq.tabulate(dim)(d => math.sin(i * dim + d))))
-      .toDF("x")
-    for (bi <- 0 until dim / bs; bj <- 0 until dim / bs) {
-      def hof = {
-        val si = slice(col("x"), bi * bs + 1, bs)
-        val sj = slice(col("x"), bj * bs + 1, bs)
-        flatten(transform(si, xi => transform(sj, xj => xi * xj)))
-      }
-      val rows = df.select(
-        graft.functions.VectorFunctions.outerBlock(col("x"), bi, bj, bs)
-          .as("native"), hof.as("hof")).collect()
-      rows.foreach { r =>
-        assert(r.getSeq[Double](0) == r.getSeq[Double](1),
-          s"block ($bi,$bj)")
-      }
-    }
-  }
-
-  test("OuterBlock interpreted eval agrees with the codegen path") {
-    import org.apache.spark.sql.catalyst.InternalRow
-    import org.apache.spark.sql.catalyst.util.GenericArrayData
-    import org.apache.spark.sql.catalyst.expressions.BoundReference
-    import org.apache.spark.sql.types.{ArrayType, DoubleType}
-    val x = Array.tabulate(8)(d => 0.1 * d - 0.3)
-    val expr = graft.functions.OuterBlock(
-      BoundReference(0, ArrayType(DoubleType), nullable = false), 1, 0, 4)
-    val got = expr.eval(InternalRow(new GenericArrayData(x)))
-      .asInstanceOf[GenericArrayData].toDoubleArray()
-    val want = for (r <- 0 until 4; c <- 0 until 4) yield x(4 + r) * x(c)
-    assert(got.toSeq == want)
-  }
-
   test("StripVectorCasts: float embeddings reach the kernels uncast") {
     import org.apache.spark.sql.catalyst.expressions.Cast
     import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType}

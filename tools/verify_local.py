@@ -8,6 +8,8 @@ outDir/oracle_sql.json (run via tools/run_verify.sh). For each query:
 run the oracle SQL in DuckDB against the same parquet tables, compare
 to the Spark result as a sorted-row multiset with columns sorted by
 name (the driver's documented compare), report match/mismatch.
+SPARK_GRAFT_VERIFY_ONLY=q_a,q_b, the variable that restricts
+graft.Verify's dump, restricts the check to the named queries too.
 """
 import glob
 import json
@@ -42,6 +44,11 @@ def main():
     out_dir = sys.argv[2] if len(sys.argv) > 2 else "/tmp/graft_verify"
     with open(os.path.join(out_dir, "oracle_sql.json")) as f:
         oracles = json.load(f)
+    only = {n.strip() for n in
+            os.environ.get("SPARK_GRAFT_VERIFY_ONLY", "").split(",")
+            if n.strip()}
+    if only:
+        oracles = {k: v for k, v in oracles.items() if k in only}
 
     con = duckdb.connect()
     for t in TABLES:
@@ -52,7 +59,8 @@ def main():
 
     results = {}
     names = sorted(d for d in os.listdir(out_dir)
-                   if os.path.isdir(os.path.join(out_dir, d)))
+                   if os.path.isdir(os.path.join(out_dir, d))
+                   and (not only or d in only))
     import time
     t_start = time.time()
     for name in names:
