@@ -51,7 +51,7 @@ object Bpe {
     * kernels on top of it (each is one linear in-stage pass per word —
     * no shuffle, no action), so a step costs ONE Spark job (the pair
     * argmax) instead of two (argmax + vocab persist). The chain is
-    * collapsed into a fresh checkpointed vocab every `RematEvery`
+    * collapsed into a fresh staged vocab every `RematEvery`
     * merges, bounding both the per-step kernel depth (≤ RematEvery
     * re-applied merges over the vocab — in-stage work, ≪ one job's
     * fixed cost) and the codegen'd expression size. */
@@ -73,7 +73,9 @@ object Bpe {
     vocab0.count()
 
     var base = vocab0                      // last materialized vocab
-    var baseIds = Set.empty[Int]           // its checkpoint blocks (if any)
+    // vocab0 is cached; every later base is staged
+    def releaseBase(): Unit =
+      if (base eq vocab0) vocab0.unpersist(true) else Frames.free(base)
     var pending = Vector.empty[(String, String)] // merges applied lazily
     val merges = Seq.newBuilder[(Int, String, String, Long)]
     for (step <- 1 to k) {
@@ -90,23 +92,20 @@ object Bpe {
         merges += ((step, a, b, weight))
         pending = pending :+ ((a, b))
         if (pending.size >= RematEvery && step < k) {
-          val (next, ids) = Frames.checkpointTracked(
+          val next = Frames.stage(
             base.select(applyMerges(col("sym"), pending).as("sym"),
               col("n")))
-          if (baseIds.nonEmpty) Frames.free(base, baseIds)
           // The first rematerialization supersedes vocab0 as the base:
-          // drop its blocks NOW instead of at loop end, so peak pinned
+          // drop its blocks NOW instead of at loop end, so peak
           // storage holds one vocab, not the char-level one alongside
-          // every later checkpointed base (ADVICE r7).
-          else vocab0.unpersist(true)
+          // every later staged base (ADVICE r7).
+          releaseBase()
           base = next
-          baseIds = ids
           pending = Vector.empty
         }
       }
     }
-    if (baseIds.nonEmpty) Frames.free(base, baseIds)
-    else vocab0.unpersist(true)
+    releaseBase()
     val out = merges.result()
     spark.createDataFrame(out).toDF("step", "left", "right", "weight")
   }

@@ -29,24 +29,11 @@ import graft.functions.Text
   */
 object Dedup {
 
-  /** Materialize `out` as an eager localCheckpoint (near-dup pair sets
-    * are tiny relative to the corpus), then BLOCKING-drop the big
-    * staged caches so repeated dedup calls in one session don't
-    * accumulate persisted shingle/signature tables. Checkpoint rather
-    * than persist on purpose: a persisted result is a CacheManager
-    * entry keyed on the analyzed plan that the caller must remember to
-    * release, and a later identical call's persist would plan-match
-    * onto it mid-drop (the q_pagerank repeat-execution storm was
-    * exactly this lifecycle). A checkpointed frame has no cache key —
-    * repeat calls can never cross-match — and its blocks are reclaimed
-    * by the ContextCleaner once the caller drops the frame; a caller's
-    * legacy `result.unpersist()` is a harmless no-op. */
-  private def materializeAndRelease(out: DataFrame,
-                                    staged: DataFrame*): DataFrame = {
-    val mat = out.localCheckpoint(true)
-    staged.foreach(_.unpersist(true))
-    mat
-  }
+  // Every pair-set result is [[Frames.stage]]d and its big input
+  // caches are BLOCKING-dropped, so repeated dedup calls in one session
+  // don't accumulate shingle/signature tables, and a later identical
+  // call's persist cannot plan-match onto a result mid-drop (the
+  // q_pagerank repeat-execution storm was exactly this lifecycle).
 
   /** Drop every row whose bucket (the `keys` tuple) holds more than
     * `maxBucket` members — the LSH/fingerprint hot-bucket cap, as a
@@ -149,7 +136,8 @@ object Dedup {
                     k: Int = 3, numHashes: Int = 64,
                     bands: Int = 16, maxBucket: Int = 64): DataFrame = {
     val prepped = shingleBands(df, id, text, k, numHashes, bands)
-    materializeAndRelease(lshCandidatesFrom(prepped, id, maxBucket), prepped)
+    try Frames.stage(lshCandidatesFrom(prepped, id, maxBucket))
+    finally prepped.unpersist(true)
   }
 
   private def lshCandidatesFrom(prepped: DataFrame, id: String,
@@ -187,7 +175,7 @@ object Dedup {
       .withColumn("jaccard", jaccard(col("sh_a"), col("sh_b")))
       .filter(col("jaccard") >= threshold)
       .select(col("id_a"), col("id_b"), col("jaccard"))
-    materializeAndRelease(pairs, prepped)
+    try Frames.stage(pairs) finally prepped.unpersist(true)
   }
 
   /** Cross-corpus MinHash+LSH near-dup join — dedup a NEW corpus (B,
@@ -220,9 +208,7 @@ object Dedup {
       .withColumn("jaccard", jaccard(col("sh_a"), col("sh_b")))
       .filter(col("jaccard") >= threshold)
       .select(col("id_a"), col("id_b"), col("jaccard"))
-    val out = materializeAndRelease(pairs, pa)
-    pb.unpersist(true)
-    out
+    try Frames.stage(pairs) finally { pa.unpersist(true); pb.unpersist(true) }
   }
 
   /** Exact n-gram Jaccard dedup WITHOUT sketching, by PREFIX FILTERING
@@ -285,7 +271,7 @@ object Dedup {
       .withColumn("jaccard", jaccard(col("sh_a"), col("sh_b")))
       .filter(col("jaccard") >= threshold)
       .select(col("id_a"), col("id_b"), col("jaccard"))
-    materializeAndRelease(pairs, sh)
+    try Frames.stage(pairs) finally sh.unpersist(true)
   }
 
   private def d(c: Column): Column = c.cast("double")
@@ -344,7 +330,7 @@ object Dedup {
       .withColumn("hamming", hammingChunks(col("sig_a"), col("sig_b")))
       .filter(col("hamming") <= maxHamming)
       .select(col("id_a"), col("id_b"), col("hamming"))
-    materializeAndRelease(pairs, withSig)
+    try Frames.stage(pairs) finally withSig.unpersist(true)
   }
 
   /** SimHash near-dup: candidates share at least one equal 16-bit chunk
@@ -500,7 +486,8 @@ object Dedup {
       .groupBy(col(s"a.$id").as("id_a"), col(s"b.$id").as("id_b"))
       .agg(count(lit(1)).as("n_shared"))
       .filter(col("n_shared") >= minShared)
-    materializeAndRelease(pairs, fps, capped)
+    try Frames.stage(pairs)
+    finally { fps.unpersist(true); capped.unpersist(true) }
   }
 
   /** Winnow-candidate near-dup with exact verification: fingerprint
@@ -591,7 +578,8 @@ object Dedup {
       .withColumn("jaccard", jaccard(col("sh_a"), col("sh_b")))
       .filter(col("jaccard") >= threshold)
       .select(col("id_a"), col("id_b"), col("jaccard"))
-    materializeAndRelease(out, sh, fpsSized, capped)
+    try Frames.stage(out)
+    finally Seq(sh, fpsSized, capped).foreach(_.unpersist(true))
   }
 
   // ---------------------------------------------------- embedding near-dup
@@ -669,26 +657,24 @@ object Dedup {
     * join + one aggregate shuffle, plus an O(1) changed-count to the
     * driver (the allreduce-loop shape the iterative ML kernels use).
     *
-    * Each round's label table is an EAGER `localCheckpoint`: without
-    * lineage truncation the analyzed plan re-embeds the previous
-    * round's plan three times (propagate join, union, changed-count
-    * join), i.e. grows exponentially in rounds and OOMs the driver
-    * around round ~12 — data-size-independent, purely a plan
-    * pathology. The checkpoint materializes O(|nodes|) rows per round,
-    * the same floor any iterative CC pays. Fully deterministic — min
-    * is order-free.
+    * Each round's label table is staged: without lineage truncation
+    * the analyzed plan re-embeds the previous round's plan three times
+    * (propagate join, union, changed-count join), i.e. grows
+    * exponentially in rounds and OOMs the driver around round ~12 —
+    * data-size-independent, purely a plan pathology. Staging
+    * materializes O(|nodes|) rows per round, the same floor any
+    * iterative CC pays. Fully deterministic — min is order-free.
     *
     * Round cost discipline (a first cut of this loop benched 3× worse
     * for reasons invisible in the plan): (a) the changed-count rides
-    * IN the checkpointed table — the previous round's label is
-    * carried through the aggregate join, so counting changes is a
-    * scan of already-materialized local blocks, not a second
-    * join-shuffle job; (b) each round's checkpoint is explicitly
-    * unpersisted once its successor exists — localCheckpoint pins its
-    * blocks until context-cleaner GC, so a loop that never frees them
-    * accretes every round's O(|nodes|) blocks in executor memory,
-    * evicting useful cache and inflating GC (observed: first bench
-    * rep 2.5× slower than steady state purely from leaked rounds). */
+    * IN the staged table — the previous round's label is carried
+    * through the aggregate join, so counting changes is a scan of
+    * already-materialized local blocks, not a second join-shuffle
+    * job; (b) each round is freed once its successor exists — a loop
+    * that leaves its rounds to the ContextCleaner accretes every
+    * round's O(|nodes|) blocks in executor memory, evicting useful
+    * cache and inflating GC (observed: first bench rep 2.5× slower
+    * than steady state purely from leaked rounds). */
   /** Partition-local union-find contraction: one NARROW pass over the
     * edge partitions (zero shuffle) that collapses every connected set
     * visible inside a partition to its minimum member, emitting one
@@ -776,16 +762,10 @@ object Dedup {
     val edges = star.select(col("u"), col("lbl").as("v"))
       .union(star.select(col("lbl").as("u"), col("u").as("v")))
       .filter(col("u") =!= col("v"))
-    // Track each round's checkpoint blocks (rdd ids that appear across
-    // the localCheckpoint call) so the PREVIOUS round can be freed the
-    // moment the next round is materialized (shared [[Frames]] helper).
-    def checkpointTracked(df: DataFrame): (DataFrame, Set[Int]) =
-      Frames.checkpointTracked(df)
-    def free(ids: Set[Int]): Unit = Frames.free(star, ids)
     // Initial labels fold the contraction in: min over (identity,
     // local star roots) — most components are already fully labeled
     // here and the loop only reconciles across partitions.
-    var (labels, labelIds) = checkpointTracked(
+    var labels = Frames.stage(
       nodes.select(col(id).as("u"), col(id).as("lbl"))
         .union(star)
         .groupBy("u").agg(min("lbl").as("lbl")))
@@ -811,8 +791,8 @@ object Dedup {
       // Carry the previous label through the aggregate: min(lbl) is the
       // new label, and since labels itself feeds the union, max-over-
       // nothing never happens; `old` arrives via a left join that reuses
-      // the aggregate's partitioning. One checkpointed job per round.
-      val (next, nextIds) = checkpointTracked(
+      // the aggregate's partitioning. One staged job per round.
+      val next = Frames.stage(
         labels.union(viaEdge)
           .groupBy("u").agg(min("lbl").as("lbl"))
           .join(labels.select(col("u"), col("lbl").as("__old")),
@@ -822,13 +802,12 @@ object Dedup {
       // was absent from `nodes` — by definition changed.
       changed = next
         .filter(col("__old").isNull || col("lbl") =!= col("__old")).count()
-      free(labelIds)
+      Frames.free(labels)
       labels = next.select(col("u"), col("lbl"))
-      labelIds = nextIds
     }
     star.unpersist(true)
     val out = labels.select(col("u").as(id), col("lbl").as("cluster"))
-    // Caller gets a plan over the final checkpoint; those blocks stay
+    // Caller gets a plan over the final stage; those blocks stay
     // (freeing them would hollow out the result) — they are one
     // round's O(|nodes|) rows, reclaimed by the context cleaner.
     out

@@ -1,40 +1,51 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.graftbridge.Bridge
 
-/** Shared lineage-truncation helpers for iterative builders.
+/** The one staging policy for intermediate state, plus the shared
+  * partition-width helpers of iterative builders.
   *
-  * An iterative build whose round-N frame is derived from round N−1
-  * (k-means cell updates, label propagation) accretes a logical plan
-  * that nests every previous round. Even with each round persisted,
-  * every LATER action on the result re-runs analysis, optimization,
-  * and cache-lookup canonicalization over the WHOLE nested plan —
-  * driver-side planning cost that grows with rounds and with embedded
-  * literals, and is paid per use, at any data size (the table-path
-  * kNN index measured 2–6 s of pure planning per probe on a 32-row
-  * cell table this way). An EAGER `localCheckpoint` materializes the
-  * frame and replaces its plan with a flat LogicalRDD — planning
-  * becomes O(1), and the physical partitioning survives (Spark passes
-  * the plan's outputPartitioning into the LogicalRDD), so keyed joins
-  * against the checkpointed frame still skip their exchange.
+  * [[stage]] is a local checkpoint: the frame's rows go to executor
+  * blocks and its plan becomes one flat `LogicalRDD` leaf. Later
+  * actions plan in O(1) instead of re-analysing every earlier round (a
+  * persisted round still nests them all; the table-path kNN index
+  * measured 2–6 s of planning per probe that way), and the physical
+  * partitioning survives, so keyed joins against the staged frame skip
+  * their exchange. A staged frame has no CacheManager key: no later
+  * `persist` can plan-match onto it, and `spark.catalog.clearCache()`
+  * cannot drop it. The blocks assume no executor is lost.
   *
-  * Checkpoint blocks are pinned outside the CacheManager (an external
-  * `spark.catalog.clearCache()` cannot drop them) and are reclaimed
-  * by the ContextCleaner once the frame is unreachable; for prompt
-  * in-loop reuse, [[checkpointTracked]] returns the block-backing RDD
-  * ids so a superseded round can be freed with [[free]] the moment
-  * its successor is materialized. */
+  * Eager or lazy is the call site's choice, not a setting:
+  *  - eager (the default) for loop rounds and operator results: a round
+  *    must be materialised before its predecessor is freed;
+  *  - lazy for a training set that the next action reads in full: its
+  *    first job fills the blocks, so no separate job runs (a persist
+  *    would add AQE's table-cache stage in front of a spread set).
+  *
+  * [[free]] drops the blocks of the locally checkpointed leaves of a
+  * frame's own plan, so no RDD id is ever tracked beside the frame.
+  * Unfreed blocks go with the ContextCleaner once the frame is
+  * unreachable. */
 private[graft] object Frames {
 
-  /** Eagerly checkpoint `df`; returns the flat-plan frame plus the
-    * persistent-RDD ids that appeared across the call (the checkpoint
-    * blocks), for later [[free]]. */
-  def checkpointTracked(df: DataFrame): (DataFrame, Set[Int]) = {
-    val sc = df.sparkSession.sparkContext
-    val before = sc.getPersistentRDDs.keySet.toSet
-    val out = df.localCheckpoint(true)
-    (out, sc.getPersistentRDDs.keySet.toSet -- before)
+  /** Local checkpoint of `df`, materialised now when `eager`, else by
+    * the first job that reads it. */
+  def stage(df: DataFrame, eager: Boolean = true): DataFrame =
+    df.localCheckpoint(eager)
+
+  /** Drop the blocks behind every [[stage]]d leaf of each frame's plan.
+    * Pass staged frames or projections of them: any other frame's plan
+    * also reaches the stages it was built from. Async on purpose: RDD blocks are keyed by a unique rdd id, so a
+    * late drop cannot hit anything else, and bypassing `RDD.unpersist`
+    * skips the "cannot be recomputed" WARN it logs per checkpoint. */
+  def free(staged: DataFrame*): Unit = staged.foreach { df =>
+    df.queryExecution.logical.collectLeaves().foreach {
+      case r: LogicalRDD => Bridge.dropLocalCheckpoint(r.rdd)
+      case _ =>
+    }
   }
 
   /** Round-robin spread of a frame across the session's cores — ONLY
@@ -49,11 +60,18 @@ private[graft] object Frames {
     * Checking the physical partition count keeps the local fixture
     * behavior bit-for-bit (every caller feeds an order-free aggregate
     * or keyed exchange downstream) while letting a many-split corpus
-    * skip the exchange entirely. Deriving the RDD costs one physical
-    * planning of `df` (no job). */
+    * skip the exchange entirely. The count is read off `df`'s own
+    * physical plan, with no job and no SQL execution of its own: a plan
+    * without an exchange builds its RDD (one physical planning); an
+    * adaptive plan reports its planned output partitioning, since its
+    * coalesced count exists only after its shuffles run. */
   def spread(df: DataFrame): DataFrame = {
     val par = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions >= par) df else df.repartition(par)
+    val parts = df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.inputPlan.outputPartitioning.numPartitions
+      case p => p.execute().getNumPartitions
+    }
+    if (parts >= par) df else df.repartition(par)
   }
 
   /** Scale-adaptive width for an iterative loop's explicit keyed
@@ -89,16 +107,5 @@ private[graft] object Frames {
       .SQLConf.COALESCE_PARTITIONS_MIN_PARTITION_SIZE))
     val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
     ((bytes + target - 1) / target).min(BigInt(cap)).max(BigInt(1)).toInt
-  }
-
-  /** Drop the blocks behind previously tracked checkpoint RDD ids.
-    * Async on purpose: freed rounds are never referenced again, and
-    * RDD blocks are keyed by unique rdd id — a late drop cannot be
-    * plan-matched onto by anything (unlike CacheManager entries). The
-    * drop bypasses `RDD.unpersist`, which would log a "cannot be
-    * recomputed" WARN for every freed checkpoint. */
-  def free(df: DataFrame, ids: Set[Int]): Unit = {
-    val sc = df.sparkSession.sparkContext
-    ids.intersect(sc.getPersistentRDDs.keySet).foreach(Bridge.unpersistRDD(sc, _))
   }
 }

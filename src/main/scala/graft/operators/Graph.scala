@@ -14,7 +14,7 @@ import org.apache.spark.storage.StorageLevel
   * current rank vector on src (edges are pre-partitioned on src once
   * and the partitioning is reused every iteration) and one aggregate
   * shuffle keyed dst. State per iteration is the O(|nodes|) rank
-  * vector, persisted to truncate lineage — never the edge set.
+  * vector, staged to truncate lineage — never the edge set.
   *
   * Determinism (for the cross-engine differential): each contribution
   * rank/deg is one IEEE division, and the per-node reduce sums those
@@ -38,18 +38,14 @@ object Graph {
     * saving one join per iteration with identical results.
     *
     * Cache lifecycle (repeat-execution safety): every intermediate
-    * unpersist is BLOCKING and the returned frame is an eager
-    * `localCheckpoint`, so a pageRank call leaves ZERO CacheManager
+    * unpersist is BLOCKING and the returned frame is
+    * [[Frames.stage]]d, so a pageRank call leaves ZERO CacheManager
     * entries behind. The earlier form left `nodes` and the final rank
     * frame cached and dropped intra-loop frames asynchronously; in a
     * long-lived JVM a later identical call's `persist` then
-    * plan-matched onto entries whose blocks were mid-drop (the
-    * CacheManager keys on the analyzed plan), and one re-execution
-    * per process would intermittently pay a 10–30× recompute storm
-    * through the dead InMemoryRelations. LocalCheckpoint output has
-    * no CacheManager key (plain LogicalRDD), so repeat calls can
-    * never cross-match, and its blocks are reclaimed by the
-    * ContextCleaner once the caller drops the frame. */
+    * plan-matched onto entries whose blocks were mid-drop, and one
+    * re-execution per process would intermittently pay a 10–30×
+    * recompute storm through the dead InMemoryRelations. */
   def pageRank(edges: DataFrame, iters: Int,
                damping: Double = 0.85,
                danglingFree: Boolean = false): DataFrame = {
@@ -85,20 +81,9 @@ object Graph {
       if (danglingFree) nodes0
       else nodes0.persist(StorageLevel.MEMORY_AND_DISK)
 
-    // Every round's rank frame is an eager localCheckpoint via the
-    // shared [[Frames]] discipline, NOT a persist+count: a persisted
-    // round's logical plan still nests every previous round, so each
-    // later iteration re-ran analysis/optimization/cache-lookup
-    // canonicalization over the whole chain — measured ~1.5 s of pure
-    // DRIVER planning gaps across 3 iterations at sf0.1, a constant
-    // that grows with iteration count at ANY data size. The
-    // checkpointed frame is a flat LogicalRDD (planning O(1) per
-    // round, hash partitioning survives) with no CacheManager key —
-    // also strictly safer against the repeat-execution plan-match
-    // storm this loop was patched for.
-    var (ranks, rankIds) = Frames.checkpointTracked(
-      nodes.withColumn("rank", lit(1.0)))
-    var out: DataFrame = null
+    // Every round is [[Frames.stage]]d: persisted rounds cost ~1.5 s
+    // of driver planning across 3 iterations at sf0.1.
+    var ranks = Frames.stage(nodes.withColumn("rank", lit(1.0)))
     for (i <- 1 to iters) {
       val contribs = e
         .join(ranks.withColumnRenamed("node", "src"), "src")
@@ -112,25 +97,17 @@ object Graph {
       val rank = (lit(1.0 - damping) +
         lit(damping) * coalesce(col("in_rank"), lit(0.0)))
       // The LAST round folds the output rounding into its own
-      // checkpoint — the separate `out` materialization was one more
+      // stage — a separate `out` materialization was one more
       // full pass + job over the rank frame for a single round() (the
       // VERDICT #1 job-count trim).
-      if (i < iters) {
-        val (next, nextIds) = Frames.checkpointTracked(
-          withAllNodes.select(col("node"), rank.as("rank")))
-        Frames.free(ranks, rankIds)
-        ranks = next
-        rankIds = nextIds
-      } else {
-        out = withAllNodes
-          .select(col("node"), round(rank, 6).as("rank"))
-          .localCheckpoint(true)
-        Frames.free(ranks, rankIds)
-      }
+      val next = Frames.stage(withAllNodes.select(col("node"),
+        (if (i < iters) rank else round(rank, 6)).as("rank")))
+      Frames.free(ranks)
+      ranks = next
     }
     if (!danglingFree) nodes.unpersist(true)
     e.unpersist(true)
-    out
+    ranks
   }
 
   /** DuckDB mirror: `edgesSql` must yield (src, dst); generates one
@@ -215,9 +192,9 @@ object Graph {
     * shuffle volume is frontier-sized — never graph-sized — and a
     * node is expanded exactly once, at its minimal hop. Early-exits
     * when the frontier empties (one O(1) driver count per round, the
-    * allreduce-loop shape). Each round's frontier is an eager
-    * `localCheckpoint`, so the settled set is a union of checkpointed
-    * leaves — plan depth grows with rounds but nothing recomputes.
+    * allreduce-loop shape). Each round's frontier is staged, so the
+    * settled set is a union of staged leaves — plan depth grows with
+    * rounds but nothing recomputes.
     * Returns (node, dist ≤ maxHops); unreachable nodes are absent.
     * Pass symmetric edges for undirected semantics. */
   def hopDistance(edges: DataFrame, sources: DataFrame,
@@ -227,8 +204,8 @@ object Graph {
     val pairs = edges.select(col("src"), col("dst"))
     val e = pairs.repartition(Frames.loopWidth(pairs), col("src"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    var settled = sources.select(col("node")).distinct()
-      .withColumn("dist", lit(0)).localCheckpoint(true)
+    var settled = Frames.stage(sources.select(col("node")).distinct()
+      .withColumn("dist", lit(0)))
     var frontier = settled.select(col("node"))
     var h = 0
     var frontierEmpty = frontier.isEmpty
@@ -243,16 +220,15 @@ object Graph {
       // round); the fused aggregate pays one, map-side partial (dup
       // candidates collapse before the exchange), with identical
       // output. Loop control is an emptiness probe over the
-      // just-checkpointed blocks (limit-1, not a full count — the
+      // just-staged blocks (limit-1, not a full count — the
       // count's value was never used beyond > 0).
       val cand = frontier.join(e, frontier("node") === e("src"))
         .select(col("dst").as("node"), lit(1).as("__side"))
-      val next = cand
+      val next = Frames.stage(cand
         .union(settled.select(col("node"), lit(0).as("__side")))
         .groupBy(col("node")).agg(min(col("__side")).as("__m"))
         .filter(col("__m") === 1)
-        .select(col("node"), lit(h).as("dist"))
-        .localCheckpoint(true)
+        .select(col("node"), lit(h).as("dist")))
       frontierEmpty = next.isEmpty
       settled = settled.union(next)
       frontier = next.select(col("node"))
@@ -294,18 +270,13 @@ object Graph {
     *
     * Returns a single row (n_triangles). */
   def triangleCount(edges: DataFrame): DataFrame = {
-    // `und` and `orient` are eager local checkpoints ([[Frames]]
-    // discipline): the edge set feeds degree (twice, via the union),
-    // the degree join (again), and `orient` feeds the adjacency
-    // aggregate plus BOTH sides of the wedge join — referenced lazily,
-    // the one logical DAG replicated the normalize/self-join subtree
-    // ~8× (a ~250-operator physical plan whose Exchange reuse saved
-    // the recompute but whose planning alone was driver-visible, and
-    // whose duplicated aggregates were not reused). Checkpointed, each
-    // stage is computed exactly once and every consumer reads a flat
-    // LogicalRDD. Blocks are O(m) pairs of longs, reclaimed by the
-    // ContextCleaner when the result frame is dropped.
-    val (und, undIds) = Frames.checkpointTracked(edges
+    // `und` and `orient` are staged: the edge set feeds degree (twice,
+    // via the union) and the degree join, and `orient` feeds the
+    // adjacency aggregate plus BOTH sides of the wedge join —
+    // referenced lazily, the one logical DAG replicated the
+    // normalize/self-join subtree ~8× (a ~250-operator physical plan
+    // whose duplicated aggregates were not reused).
+    val und = Frames.stage(edges
       .select(least(col("src"), col("dst")).as("u"),
         greatest(col("src"), col("dst")).as("v"))
       .filter(col("u") =!= col("v")).distinct())
@@ -317,27 +288,24 @@ object Graph {
       .join(deg.select(col("n").as("v"), col("d").as("dv")), Seq("v"))
     val uFirst = col("du") < col("dv") ||
       (col("du") === col("dv") && col("u") < col("v"))
-    val (orient, orientIds) = Frames.checkpointTracked(keyed.select(
+    val orient = Frames.stage(keyed.select(
       when(uFirst, col("u")).otherwise(col("v")).as("a"),
       when(uFirst, col("v")).otherwise(col("u")).as("b")))
-    Frames.free(und, undIds)
+    Frames.free(und)
     // Out-adjacency lists are O(√m) long by construction, so no group
     // blows up the task heap; nodes with no out-list (graph-global
     // maxima) can close no triangle and drop out of the inner join.
     val adj = orient.groupBy(col("a"))
       .agg(collect_list(col("b")).as("nbrs"))
-    // The 1-row result is materialized EAGERLY (trivial checkpoint) so
-    // orient's O(m) blocks can be freed right here instead of waiting
-    // for the ContextCleaner to GC the RDD — repeated calls in a
-    // long-lived session no longer accumulate pinned blocks that an
-    // external clearCache cannot drop (ADVICE r7).
-    val res = orient
+    // The 1-row result is staged so orient's O(m) blocks are freed
+    // here: repeated calls in a long-lived session no longer pile up
+    // blocks that an external clearCache cannot drop (ADVICE r7).
+    val res = Frames.stage(orient
       .join(adj.select(col("a"), col("nbrs").as("na")), Seq("a"))
       .join(adj.select(col("a").as("b"), col("nbrs").as("nb")), Seq("b"))
       .select(size(array_intersect(col("na"), col("nb"))).as("t"))
-      .agg(coalesce(sum(col("t")), lit(0L)).as("n_triangles"))
-      .localCheckpoint(true)
-    Frames.free(orient, orientIds)
+      .agg(coalesce(sum(col("t")), lit(0L)).as("n_triangles")))
+    Frames.free(orient)
     res
   }
 }

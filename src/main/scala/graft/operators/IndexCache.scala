@@ -14,10 +14,10 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
   * from the listing the read already made (no I/O). A file rewritten in
   * place changes only those stamps: the lookup misses and releases the
   * stale entry. [[clear]] is the one reset (`clearCache()` cannot touch
-  * the indexes' local checkpoints). */
+  * the indexes' staged frames). */
 object IndexCache {
 
-  /** A built index; `release()` drops the checkpoint blocks it owns. */
+  /** A built index; `release()` frees the staged frames it owns. */
   trait Index { def release(): Unit }
 
   private final case class Entry(build: String, frames: Seq[DataFrame],

@@ -42,7 +42,7 @@ object ML {
   /** The one Lloyd loop, in the reference's DAAL topology (local
     * partials → gather → master update → broadcast,
     * src/cgen-hpat-pattern-match-daal.jl:28-471). `data` is
-    * [[points]]; the caller caches it. The seeds are the non-null
+    * [[points]]; the caller stages it. The seeds are the non-null
     * vectors of the k smallest ids. Each step is ONE exact fold
     * ([[graft.functions.ExactSumFunctions.foldExactVectorSumByKey]]) of
     * (`assign(centroids)`, x): `assign` is a codegen'd kernel carrying
@@ -75,14 +75,13 @@ object ML {
   def kmeansLloyd(df: DataFrame, features: String, id: String,
                   k: Int, iters: Int): DataFrame = {
     val spark = df.sparkSession
-    val data = points(df, id, features)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val data = Frames.stage(points(df, id, features), eager = false)
     val assign = (cs: Array[Array[Double]]) => nearestCell(col("x"), cs)
     val centroids = lloyd(data, k, iters, assign)
     // sizes only: a null array counts without summing
     val sizes = foldExactVectorSumByKey(data.select(assign(centroids),
       lit(null).cast("array<double>")), centroids.length).map(_._2)
-    data.unpersist(true)
+    Frames.free(data)
     spark.createDataFrame(centroids.indices.map(i => (i, sizes(i), centroids(i).toSeq)))
       .toDF("cluster", "size", "centroid")
   }
@@ -237,7 +236,7 @@ object ML {
   /** The reference's flagship iterative pattern
     * (examples/logistic_regression.jl:35-47): batch gradient descent,
     * w replicated, one gradient allreduce per iteration. Here: the
-    * (x, y) rows are cached once, spread over the cores; each step is
+    * (x, y) rows are staged once, spread over the cores; each step is
     * ONE job that folds the gradient exactly inside every partition
     * ([[graft.functions.ExactSumFunctions.foldExactVectorSumByKey]],
     * under the one key 0) and
@@ -248,10 +247,9 @@ object ML {
   def logisticRegression(df: DataFrame, features: String, label: String,
                          dim: Int, iters: Int, lr: Double): DataFrame = {
     val spark = df.sparkSession
-    val data = Frames.spread(df.select(
+    val data = Frames.stage(Frames.spread(df.select(
         col(features).cast("array<double>").as("x"),
-        col(label).cast("double").as("y")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        col(label).cast("double").as("y"))), eager = false)
     var w = Array.fill(dim)(0.0)
     for (_ <- 1 to iters) {
       // Margin and gradient scaling are the native vector kernels
@@ -274,7 +272,7 @@ object ML {
       if (grad != null)
         w = w.zip(grad).map { case (wi, gi) => wi - lr * gi / n.toDouble }
     }
-    data.unpersist(true)
+    Frames.free(data)
     spark.createDataFrame(Seq(Tuple1(w.toSeq))).toDF("weights")
   }
 }

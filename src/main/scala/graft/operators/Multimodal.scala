@@ -243,13 +243,10 @@ object Multimodal {
     val hashes = media.select(col("media_id"),
         graft.functions.MediaFunctions.phash64(col("bytes")).as("h"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // Result = eager localCheckpoint, staging cache blocking-dropped:
-    // no CacheManager entry outlives the call (repeat executions can
-    // neither plan-match a half-dropped entry nor skip the compute —
-    // the same lifecycle the dedup pipelines use).
-    val out = hashPairs(hashes, maxHamming).localCheckpoint(true)
-    hashes.unpersist(true)
-    out
+    // Staged result, blocking-dropped hashes: the dedup pipelines'
+    // lifecycle.
+    try Frames.stage(hashPairs(hashes, maxHamming))
+    finally hashes.unpersist(true)
   }
 
   /** The banding/verify stage of [[phashDedup]] over precomputed

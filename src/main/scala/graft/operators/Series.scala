@@ -37,25 +37,11 @@ object Series {
 
   private val PID = "__graft_pid"
 
-  /** Materialize `out` as an EAGER LOCAL CHECKPOINT, then
-    * blocking-drop the pinned staging cache so repeated series ops
-    * don't accumulate persisted inputs. The result must stay
-    * materialized — its offsets/halos are only valid against the exact
-    * partition contents they were computed from — and a checkpoint is
-    * strictly safer than the previous persist+count: recomputation is
-    * impossible (the lineage is truncated, so a re-sampled range
-    * partitioning can never misalign the offsets), there is no
-    * CacheManager key for a later identical call to plan-match onto
-    * mid-drop (the q_pagerank repeat-execution storm class), and the
-    * op leaves zero cache entries behind. Blocks are reclaimed by the
-    * ContextCleaner when the caller drops the frame; a caller's legacy
-    * `unpersist()` is a harmless no-op. */
-  private def materializeAndRelease(out: DataFrame,
-                                    staged: DataFrame): DataFrame = {
-    val mat = out.localCheckpoint(true)
-    staged.unpersist(true)
-    mat
-  }
+  // Every result is [[Frames.stage]]d before its persisted input is
+  // blocking-dropped: the offsets/halos are only valid against the
+  // exact partition contents they were computed from, and staging
+  // truncates the lineage, so a re-sampled range partitioning can
+  // never misalign them.
 
   /** Running (inclusive) prefix sum of `value` in the global order of
     * `order`, added as column `out`. Exact if `value` is a decimal.
@@ -102,12 +88,12 @@ object Series {
     // re-sample different range boundaries and misalign the offsets).
     val w = Window.partitionBy(col(PID)).orderBy(order)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    materializeAndRelease(
+    try Frames.stage(
       parted
         .join(broadcast(offDf), PID)
         .withColumn(out, sum(value).over(w) + col("__graft_off"))
-        .drop(PID, "__graft_off"),
-      parted)
+        .drop(PID, "__graft_off"))
+    finally parted.unpersist(true)
   }
 
   /** Contiguous global row ids 0..n−1 in `order`-ascending order — the
@@ -138,13 +124,13 @@ object Series {
     }
     val offDf = spark.createDataFrame(offsets.toSeq).toDF(PID, "__graft_off")
     val w = Window.partitionBy(col(PID)).orderBy(order)
-    materializeAndRelease(
+    try Frames.stage(
       parted
         .join(broadcast(offDf), PID)
         .withColumn(out,
           row_number().over(w).cast("long") - 1L + col("__graft_off"))
-        .drop(PID, "__graft_off"),
-      parted)
+        .drop(PID, "__graft_off"))
+    finally parted.unpersist(true)
   }
 
   /** 3-point stencil `f(x[-1], x[0], x[+1])` — radius-1 special case of
@@ -255,12 +241,12 @@ object Series {
       (radius to 1 by -1).map(lagCol) ++ Seq(value) ++ (1 to radius).map(leadCol)
     val anyOob = ((radius to 1 by -1).map(lagCol) ++ (1 to radius).map(leadCol))
       .map(_.isNull).reduce(_ || _)
-    materializeAndRelease(
+    try Frames.stage(
       parted
         .join(broadcast(haloDf), PID)
         .withColumn(out, when(anyOob, value).otherwise(f(neighbors)))
-        .drop(PID, "__prev", "__next"),
-      parted)
+        .drop(PID, "__prev", "__next"))
+    finally parted.unpersist(true)
   }
 
   /** As-of join: for every left row, the single most recent right row of

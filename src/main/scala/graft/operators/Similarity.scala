@@ -128,17 +128,14 @@ object Similarity {
     * assignment kernel from the probe table). Built once, probed many
     * times; `assigned.write.partitionBy("cell")` would persist it.
     *
-    * `assigned` is hash-partitioned by cell and is an EAGER LOCAL
-    * CHECKPOINT, not a persist: with no CacheManager key, no later
-    * build can plan-match onto a half-dropped InMemoryRelation,
-    * `clearCache()` cannot unpin it, and a query using it leaves no
-    * CacheManager entry. [[release]] drops its blocks (the `pinned`
-    * RDD ids); else the ContextCleaner does once it is unreachable. */
+    * `assigned` is hash-partitioned by cell and [[Frames.stage]]d, so
+    * no later build can plan-match onto a half-dropped
+    * InMemoryRelation and a query using it leaves no CacheManager
+    * entry. [[release]] frees it. */
   final case class IvfIndex(
       assigned: DataFrame,           // (neighbor_id, cv, cell)
       centroids: DataFrame,          // (cell, centroid), broadcast-small
-      matrix: Array[Array[Double]],
-      pinned: Set[Int] = Set.empty) extends IndexCache.Index {
+      matrix: Array[Array[Double]]) extends IndexCache.Index {
     /** Per-cell member counts for the skew salt — fixed once the index
       * is built/appended, so they are computed at most once per index
       * instance (recomputing per probe call cost one extra Spark job
@@ -150,7 +147,7 @@ object Similarity {
         .foreach(r => if (!r.isNullAt(0)) counts(r.getInt(0)) = r.getLong(1))
       counts
     }
-    def release(): Unit = Frames.free(assigned, pinned)
+    def release(): Unit = Frames.free(assigned)
   }
 
   /** Build an IVF index over `corpus` with `nCells` k-means cells.
@@ -166,25 +163,23 @@ object Similarity {
   def buildIvfIndex(corpus: DataFrame, id: String, vec: String,
                     nCells: Int = 16, iters: Int = 5): IvfIndex = {
     val spark = corpus.sparkSession
-    val pts = ML.points(corpus, id, vec)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val pts = Frames.stage(ML.points(corpus, id, vec), eager = false)
     val matrix = ML.lloyd(pts, nCells, iters,
       graft.functions.VectorFunctions.nearestCell(col("x"), _))
-    pts.unpersist(true)
+    Frames.free(pts)
     val centroids = broadcast(spark.createDataFrame(
         matrix.toSeq.zipWithIndex.map { case (c, i) => (i, c.toSeq) })
       .toDF("cell", "centroid"))
     // assignment = one narrow codegen'd projection (same NearestCell
     // kernel the index build used); partitioned by cell so every probe
-    // join is co-located on the index side (hash partitioning survives
-    // the checkpoint).
-    val (assigned, assignedIds) = Frames.checkpointTracked(
+    // join is co-located on the index side.
+    val assigned = Frames.stage(
       corpus.select(col(id), col(vec))
         .withColumn("cell", graft.functions.VectorFunctions
           .nearestCell(col(vec), matrix))
         .select(col(id).as("neighbor_id"), col(vec).as("cv"), col("cell"))
         .repartition(spark.sparkContext.defaultParallelism, col("cell")))
-    IvfIndex(assigned, centroids, matrix, assignedIds)
+    IvfIndex(assigned, centroids, matrix)
   }
 
   /** Probe a built [[IvfIndex]]: each query visits its `nprobe` closest
@@ -461,14 +456,12 @@ object Similarity {
     }
   }
 
-  /** The cached [[ML.points]] of [[trainingSample]], read by both
-    * levels of a hierarchical build. The projection is this builder's
-    * own frame, so unpersisting it never evicts a caller's cached
-    * corpus (the sample may be `corpus` itself). */
+  /** The lazily staged [[ML.points]] of [[trainingSample]], read by
+    * both levels of a hierarchical build. */
   private def trainingPoints(corpus: DataFrame, id: String, vec: String,
                              n: Long, nCells: Int): DataFrame =
-    ML.points(trainingSample(corpus, id, n, nCells), id, vec)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    Frames.stage(ML.points(trainingSample(corpus, id, n, nCells), id, vec),
+      eager = false)
 
   /** The [[supersFor]](nCells) super-cells: flat [[ML.lloyd]], 5 steps. */
   private def trainSupers(samp: DataFrame, nCells: Int): Array[Array[Double]] =
@@ -506,9 +499,9 @@ object Similarity {
     val samp = trainingPoints(corpus, id, vec, n, nCells)
     val superMatrix = trainSupers(samp, nCells)
     val (cells, c2s) = trainHierCells(samp, superMatrix, nCells, iters = 5)
-    samp.unpersist(false)
+    Frames.free(samp)
     val members = groupMembers(c2s, superMatrix.length)
-    val (assigned, assignedIds) = Frames.checkpointTracked(
+    val assigned = Frames.stage(
       corpus.select(col(id), col(vec))
         .withColumn("cell", graft.functions.VectorFunctions
           .nearestCellHier(col(vec), superMatrix, cells, members))
@@ -517,8 +510,7 @@ object Similarity {
     val centroids = broadcast(spark.createDataFrame(
         cells.toSeq.zipWithIndex.map { case (c, i) => (i, c.toSeq) })
       .toDF("cell", "centroid"))
-    HierIvfIndex(IvfIndex(assigned, centroids, cells, assignedIds),
-      superMatrix, c2s)
+    HierIvfIndex(IvfIndex(assigned, centroids, cells), superMatrix, c2s)
   }
 
   /** The beyond-[[MaxLiteralCells]] index shape: cell centroids are a
@@ -530,17 +522,14 @@ object Similarity {
     * equality law), so the two paths are one index family with two
     * state layouts.
     *
-    * Both state frames are EAGER LOCAL CHECKPOINTS, not persists: a
-    * persisted 5-iteration build still nests every iteration in its
-    * plan, and each later probe re-planned it (2–6 s of driver time
-    * per action, at any n). A checkpoint makes planning O(1), keeps
-    * the hash partitioning (the pick and candidate joins skip their
-    * exchange) and is immune to `clearCache()`. [[release]] drops the
-    * blocks (the `pinned` RDD ids). */
+    * Both state frames are [[Frames.stage]]d: a persisted 5-iteration
+    * build still nests every iteration in its plan, and each later
+    * probe re-planned it (2–6 s of driver time per action, at any n);
+    * staged, the pick and candidate joins also skip their exchange.
+    * [[release]] frees both. */
   final case class HierIvfTableIndex(assigned: DataFrame,
                                      cells: DataFrame,
-                                     superMatrix: Array[Array[Double]],
-                                     pinned: Set[Int] = Set.empty)
+                                     superMatrix: Array[Array[Double]])
       extends IndexCache.Index {
     /** (total rows, biggest cell) for the salt-engage check — fixed at
       * build time, memoized so repeated probes against one index pay
@@ -551,7 +540,7 @@ object Similarity {
       if (stats.isNullAt(0)) (0L, 0L)
       else (stats.getLong(0), stats.getLong(1))
     }
-    def release(): Unit = Frames.free(assigned, pinned)
+    def release(): Unit = Frames.free(assigned, cells)
   }
 
   /** Assign rows to cells through the super layer with DISTRIBUTED cell
@@ -594,26 +583,18 @@ object Similarity {
     * per-iteration map/assign/update are joins and aggregates instead
     * of driver arrays, and results are bit-identical to the literal
     * trainer (equality law in SimilaritySpec). `sample` is the
-    * caller-cached [[ML.points]]. Returns the checkpointed
-    * cell table plus its checkpoint-block RDD ids (for the owning
-    * index's release()). */
+    * caller-staged [[ML.points]]. Returns the staged cell table. */
   private[graft] def trainHierCellsTable(sample: DataFrame,
                                          superMatrix: Array[Array[Double]],
                                          nCells: Int,
-                                         iters: Int): (DataFrame, Set[Int]) = {
+                                         iters: Int): DataFrame = {
     val data = sample.select(col("__id").as("__rid"), col("x"))
     // Seeds: first nCells non-null sample rows by id, position-indexed
     // (as [[ML.lloyd]] seeds). The
     // unpartitioned window runs over the LIMITED set (≤ nCells rows) —
     // the dictionary-sized exception, like labelFit.
-    // Every round's cell table is an EAGER localCheckpoint (flat
-    // LogicalRDD), NOT a persist: round N's plan would otherwise nest
-    // rounds 1..N−1, and each round's planning (plus every later use
-    // of the result) pays analysis + optimization over the whole
-    // chain — the [[Frames]] discipline. Superseded rounds are freed
-    // the moment their successor is materialized.
     val w = Window.orderBy(col("__rid"))
-    var (cells, cellIds) = Frames.checkpointTracked(
+    var cells = Frames.stage(
       data.filter(col("x").isNotNull).orderBy(col("__rid")).limit(nCells)
         .select((row_number().over(w) - 1).as("cell"),
           col("x").as("centroid")))
@@ -625,23 +606,22 @@ object Similarity {
       val sums = assigned.groupBy(col("cell"))
         .agg(graft.functions.ExactSumFunctions.exactVectorSum(col("x")).as("s"),
           count(lit(1)).as("n"))
-      val (next, nextIds) = Frames.checkpointTracked(
+      val next = Frames.stage(
         cells.join(sums, Seq("cell"), "left")
           .select(col("cell"),
             when(col("n").isNull, col("centroid"))
               .otherwise(transform(col("s"), v => v / col("n")))
               .as("centroid")))
-      Frames.free(cells, cellIds)
+      Frames.free(cells)
       cells = next
-      cellIds = nextIds
     }
-    val (out, outIds) = Frames.checkpointTracked(
+    val out = Frames.stage(
       cells.withColumn("sup", graft.functions.VectorFunctions
           .nearestCell(col("centroid"), superMatrix))
         .repartition(sample.sparkSession.sparkContext.defaultParallelism,
           col("sup")))
-    Frames.free(cells, cellIds)
-    (out, outIds)
+    Frames.free(cells)
+    out
   }
 
   /** [[buildHierIvfIndex]]'s distributed-state twin for corpora whose
@@ -658,23 +638,18 @@ object Similarity {
     val nCells = cellsFor(n)
     val samp = trainingPoints(corpus, id, vec, n, nCells)
     val superMatrix = trainSupers(samp, nCells)
-    val (cellsDf, cellIds) = trainHierCellsTable(samp, superMatrix,
-      nCells, iters = 5)
-    samp.unpersist(true)
+    val cellsDf = trainHierCellsTable(samp, superMatrix, nCells, iters = 5)
+    Frames.free(samp)
     val rows = corpus.select(col(id).as("__rid"),
       col(vec).cast("array<double>").as("x"), col(vec).as("cv"))
-    // Eager checkpoint, not persist: the assignment plan nests the
-    // corpus scan + sup join; a persisted frame would re-plan it on
-    // every probe (see the HierIvfTableIndex scaladoc). Partitioning
-    // by cell survives the checkpoint, so candidate joins stay
-    // co-located.
-    val (assigned, assignedIds) = Frames.checkpointTracked(
+    // Staged: a persisted frame would re-plan the corpus scan + sup
+    // join on every probe (see the HierIvfTableIndex scaladoc).
+    val assigned = Frames.stage(
       assignHierTable(rows, "x", Seq("cv"),
           superMatrix, cellsDf)
         .select(col("__rid").as("neighbor_id"), col("cv"), col("cell"))
         .repartition(spark.sparkContext.defaultParallelism, col("cell")))
-    HierIvfTableIndex(assigned, cellsDf, superMatrix,
-      cellIds ++ assignedIds)
+    HierIvfTableIndex(assigned, cellsDf, superMatrix)
   }
 
   /** The two-stage pick of [[knnJoinHierTable]]: (query_id, qv, cell)
@@ -823,17 +798,11 @@ object Similarity {
         .nearestCell(col(vec), index.matrix))
       .select(col(id).as("neighbor_id"), col(vec).as("cv"), col("cell"))
       .repartition(spark.sparkContext.defaultParallelism, col("cell"))
-    // The merged segment is its own eager checkpoint. The BASE index's
-    // blocks are NOT freed here — the base may be shared by callers
-    // that still probe it (a freed local checkpoint cannot recompute);
-    // the returned index's release() carries BOTH id sets so releasing
-    // the merged index reclaims the superseded base too (the
-    // cachedAppendedIndex path builds the base privately, so nothing
-    // else holds it).
-    val (merged, mergedIds) = Frames.checkpointTracked(
-      index.assigned.union(newRows))
-    IvfIndex(merged, index.centroids, index.matrix,
-      index.pinned ++ mergedIds)
+    // The merged segment is staged on its own. The BASE index is NOT
+    // released here — callers may still probe it (a freed stage cannot
+    // recompute).
+    IvfIndex(Frames.stage(index.assigned.union(newRows)), index.centroids,
+      index.matrix)
   }
 
   /** One-shot convenience: build + probe + release. Prefer
@@ -844,12 +813,9 @@ object Similarity {
               id: String, vec: String, k: Int,
               nCells: Int = 16, nprobe: Int = 4): DataFrame = {
     val index = buildIvfIndex(corpus, id, vec, nCells)
-    val out = probeIvf(index, queries, id, vec, k, nprobe)
-    // Materialize (eager checkpoint — no CacheManager entry for the
-    // caller to leak) before releasing the index blocks the plan reads.
-    val res = out.localCheckpoint(true)
-    index.release()
-    res
+    // staged before the index blocks its plan reads are released
+    try Frames.stage(probeIvf(index, queries, id, vec, k, nprobe))
+    finally index.release()
   }
 
   /** Symmetric per-vector int8 quantization: `scale = max|v|/127`,
@@ -912,10 +878,9 @@ object Similarity {
     * storage once, rebuild never. Call [[release]] when done. */
   final case class PqIndex(codes: DataFrame,
                            codebooks: Array[Array[Array[Double]]],
-                           m: Int, ksub: Int, ds: Int,
-                           pinned: Set[Int] = Set.empty)
+                           m: Int, ksub: Int, ds: Int)
       extends IndexCache.Index {
-    def release(): Unit = Frames.free(codes, pinned)
+    def release(): Unit = Frames.free(codes)
   }
 
   /** Train a PQ index: the vector is split into `m` contiguous `ds`-dim
@@ -933,9 +898,9 @@ object Similarity {
     val dim = corpus.select(size(col(vec)).as("d")).head().getInt(0)
     require(dim % m == 0, s"vector dim $dim not divisible by m=$m subspaces")
     val ds = dim / m
-    val base = corpus
-      .select(col(id), col(vec).cast("array<double>").as("__x"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val base = Frames.stage(
+      corpus.select(col(id), col(vec).cast("array<double>").as("__x")),
+      eager = false)
     val codebooks: Array[Array[Array[Double]]] = (0 until m).toArray.map { j =>
       ML.lloyd(base.select(col(id).as("__id"),
           slice(col("__x"), j * ds + 1, ds).as("x")), ksub, iters,
@@ -945,11 +910,11 @@ object Similarity {
       graft.functions.VectorFunctions.nearestCell(
         slice(col("__x"), j * ds + 1, ds), codebooks(j))
     }
-    val (codes, codeIds) = Frames.checkpointTracked(base
+    val codes = Frames.stage(base
       .select(col(id).as("neighbor_id"), array(codeCols: _*).as("codes"))
       .transform(Frames.spread))
-    base.unpersist(true)
-    PqIndex(codes, codebooks, m, ksub, ds, codeIds)
+    Frames.free(base)
+    PqIndex(codes, codebooks, m, ksub, ds)
   }
 
   /** Probe a built [[PqIndex]]: asymmetric-distance (ADC) scan + exact
@@ -1012,10 +977,9 @@ object Similarity {
                               centroids: DataFrame,
                               matrix: Array[Array[Double]],
                               codebooks: Array[Array[Array[Double]]],
-                              m: Int, ksub: Int, ds: Int,
-                              pinned: Set[Int] = Set.empty)
+                              m: Int, ksub: Int, ds: Int)
       extends IndexCache.Index {
-    def release(): Unit = Frames.free(codes, pinned)
+    def release(): Unit = Frames.free(codes)
   }
 
   /** Combine a built coarse index and a built PQ index over the SAME
@@ -1024,12 +988,12 @@ object Similarity {
   def composeIvfPq(ivf: IvfIndex, pq: PqIndex): IvfPqIndex = {
     val spark = ivf.assigned.sparkSession
     val par = spark.sparkContext.defaultParallelism
-    val (codes, codeIds) = Frames.checkpointTracked(
+    val codes = Frames.stage(
       ivf.assigned.select(col("neighbor_id"), col("cell"))
         .join(pq.codes, Seq("neighbor_id"))
         .repartition(par, col("cell")))
     IvfPqIndex(codes, ivf.centroids, ivf.matrix, pq.codebooks,
-      pq.m, pq.ksub, pq.ds, codeIds)
+      pq.m, pq.ksub, pq.ds)
   }
 
   /** Build IVF-PQ from scratch (both component indexes are private to
@@ -1103,8 +1067,11 @@ object Similarity {
 
   def cachedAppendedIndex(corpus: DataFrame, delta: DataFrame, id: String,
                           vec: String, nCells: Int = 16): IvfIndex =
-    IndexCache(s"appended|$id|$vec|$nCells", corpus, delta)(
-      appendToIndex(buildIvfIndex(corpus, id, vec, nCells), delta, id, vec))
+    IndexCache(s"appended|$id|$vec|$nCells", corpus, delta) {
+      // the base is private to the result, so it goes once merged
+      val base = buildIvfIndex(corpus, id, vec, nCells)
+      try appendToIndex(base, delta, id, vec) finally base.release()
+    }
 
   def cachedHierIvfIndex(corpus: DataFrame, id: String,
                          vec: String): HierIvfIndex =

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.Tables
+import graft.operators.Frames
 import graft.sources.{Scratch, TextIO}
 
 /** Source/sink round-trip queries — the §2.1 DataSource/DataSink surface.
@@ -273,16 +274,15 @@ object SourceQueries {
         .withColumn("day", to_date(timestamp_micros(expr("ts div 1000"))))
       TextIO.writePartitionedColumnar(
         events.repartition(col("day")), path, Seq("day"))
-      // The corrected day is STAGED once (eager checkpoint): both
-      // overwrite passes — the ingest and the idempotent re-run —
-      // write the same materialized blocks instead of each re-scanning
-      // events, re-filtering, and re-shuffling by day (§1.2 don't
-      // recompute; the backfill row paid that pipeline twice).
-      val corrected = events
+      // The corrected day is STAGED once: both overwrite passes — the
+      // ingest and the idempotent re-run — write the same materialized
+      // blocks instead of each re-scanning events, re-filtering, and
+      // re-shuffling by day (§1.2 don't recompute; the backfill row
+      // paid that pipeline twice).
+      val corrected = Frames.stage(events
         .filter(col("day") === to_date(lit("2024-01-12")))
         .withColumn("value", col("value") * 2)
-        .repartition(col("day"))
-        .localCheckpoint(true)
+        .repartition(col("day")))
       TextIO.overwritePartitions(corrected, path, Seq("day"))
       TextIO.overwritePartitions(corrected, path, Seq("day")) // re-run: no-op
       TextIO.readColumnar(s, path)

@@ -1,14 +1,14 @@
 package org.apache.spark.sql.graftbridge
 
-import org.apache.spark.SparkContext
+import org.apache.spark.rdd.{LocalRDDCheckpointData, RDD}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic.ExpressionUtils
 
 /** Minimal bridge into `private[sql]` Column↔Expression and
-  * LogicalPlan↔DataFrame conversion, plus `private[spark]` RDD block
-  * removal — the supported mechanisms for
+  * LogicalPlan↔DataFrame conversion, plus `private[spark]` removal of
+  * a local checkpoint's blocks — the supported mechanisms for
   * third-party native expressions and custom logical plans (the same
   * calls `functions._` and the Dataset API use internally). Lives in an
   * `org.apache.spark.sql` subpackage solely for access; contains no
@@ -20,8 +20,10 @@ object Bridge {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
   def analyzed(df: DataFrame): LogicalPlan = df.queryExecution.analyzed
-  /** Drop RDD `id`'s blocks asynchronously — what `RDD.unpersist` does,
-    * without the WARN it logs for every locally checkpointed RDD. */
-  def unpersistRDD(sc: SparkContext, id: Int): Unit =
-    sc.unpersistRDD(id, blocking = false)
+  /** Drop `rdd`'s blocks asynchronously if it is locally checkpointed
+    * — what `RDD.unpersist` does, without the WARN it logs for every
+    * locally checkpointed RDD. */
+  def dropLocalCheckpoint(rdd: RDD[_]): Unit =
+    if (rdd.checkpointData.exists(_.isInstanceOf[LocalRDDCheckpointData[_]]))
+      rdd.sparkContext.unpersistRDD(rdd.id, blocking = false)
 }

@@ -44,4 +44,20 @@ class ContractSpec extends SparkSpec {
     }
     assert(bad.isEmpty, s"non-portable oracle SQL in: ${bad.keys}")
   }
+
+  test("only Frames stages or reads persistent RDDs in src/main") {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala")
+    assert(java.nio.file.Files.isDirectory(root), root.toAbsolutePath)
+    val files = java.nio.file.Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+    assert(files.exists(_.endsWith("graft/operators/Frames.scala")))
+    val offenders = files
+      .filterNot(_.endsWith("graft/operators/Frames.scala"))
+      .filter { f =>
+        val src = new String(java.nio.file.Files.readAllBytes(f), "UTF-8")
+        src.contains("localCheckpoint") || src.contains("getPersistentRDDs")
+      }
+    assert(offenders.isEmpty, s"stage through Frames instead: ${offenders.mkString(", ")}")
+  }
 }

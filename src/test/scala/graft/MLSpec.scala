@@ -188,4 +188,22 @@ class MLSpec extends SparkSpec {
       "3fa397ab78e0f6e0", "bfac67edf4b10df2")
     Seq(1, 3, 8).foreach(p => assert(bits(p) == pinned, s"$p partitions"))
   }
+
+  test("logisticRegression runs the spread's map stage plus one job per step") {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    val df = (1 to 40).map(i => (Seq(i % 7 - 3.0, 1.0), (i % 2).toDouble))
+      .toDF("x", "y").coalesce(1)
+    val group = "graft-logreg-jobs"
+    sc.setJobGroup(group, "logisticRegression job count")
+    try ML.logisticRegression(df, "x", "y", dim = 2, iters = 3, lr = 0.5).collect()
+    finally sc.clearJobGroup()
+    // job starts reach the status store through the async listener bus
+    val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+    while (sc.statusTracker.getJobIdsForGroup(group).length < 4 &&
+        System.nanoTime() < deadline) Thread.sleep(50)
+    Thread.sleep(500)
+    val jobs = sc.statusTracker.getJobIdsForGroup(group)
+    assert(jobs.length == 1 + 3, s"jobs: ${jobs.sorted.mkString(", ")}")
+  }
 }
